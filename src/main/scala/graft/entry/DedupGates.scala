@@ -623,8 +623,7 @@ private[graft] object DedupGates {
         // 20-query batch and reads the banded scan
         val e = t(s, dir, "embeddings")
         val table = s"graft_lsh_bands_${dirSuffix(dir)}"
-        Similarity.ingestLsh(e, "vec_id", "embedding", table,
-          nPlanes = 4, nTables = 16, nBuckets = 8)
+        Lsh.ingest(e, table)
         Similarity.topKLshIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5)
       },
@@ -780,8 +779,7 @@ private[graft] object DedupGates {
         // — the hash match IS the bit-parity proof.
         val e = t(s, dir, "embeddings")
         val table = s"graft_pq_${dirSuffix(dir)}"
-        Similarity.ingestPq(e, "vec_id", "embedding", table,
-          m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
+        Pq.ingest(e, table)
         Similarity.topKPqIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nCandidates = 20)
       },
@@ -797,13 +795,7 @@ private[graft] object DedupGates {
         // semantics; codebook drift is the documented rebuild trigger.
         val e = t(s, dir, "embeddings")
         val table = s"graft_pq_app_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestPq(e.filter(col("vec_id") % 2 === 0),
-            "vec_id", "embedding", table,
-            m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          Similarity.appendPq(s, table, e.filter(col("vec_id") % 2 =!= 0),
-            "vec_id", "embedding")
-        }
+        builtAppended(s, table, Pq, e)
         Similarity.topKPqIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nCandidates = 20)
       },
@@ -831,8 +823,7 @@ private[graft] object DedupGates {
         // concurrent suites on different fixture dirs never race.
         val e = t(s, dir, "embeddings")
         val table = s"graft_ivf_corpus_${dirSuffix(dir)}"
-        Similarity.ingestIvf(e, "vec_id", "embedding", table,
-          nCentroids = 16, kmeansIters = 2, nBuckets = 8)
+        Ivf.ingest(e, table)
         Similarity.topKIvfIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nProbe = 4)
       },
@@ -850,13 +841,7 @@ private[graft] object DedupGates {
         // centroid drift is the documented rebuild trigger.
         val e = t(s, dir, "embeddings")
         val table = s"graft_ivf_app_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestIvf(e.filter(col("vec_id") % 2 === 0),
-            "vec_id", "embedding", table,
-            nCentroids = 16, kmeansIters = 2, nBuckets = 8)
-          Similarity.appendIvf(s, table, e.filter(col("vec_id") % 2 =!= 0),
-            "vec_id", "embedding")
-        }
+        builtAppended(s, table, Ivf, e)
         Similarity.topKIvfIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nProbe = 4)
       },
@@ -872,12 +857,7 @@ private[graft] object DedupGates {
         // batch-sized: hash + explode the batch, append bucketed files.
         val e = t(s, dir, "embeddings")
         val table = s"graft_lsh_app_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestLsh(e.filter(col("vec_id") % 2 === 0),
-            "vec_id", "embedding", table, nPlanes = 4, nTables = 16, nBuckets = 8)
-          Similarity.appendLsh(s, table, e.filter(col("vec_id") % 2 =!= 0),
-            "vec_id", "embedding")
-        }
+        builtAppended(s, table, Lsh, e)
         Similarity.topKLshIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5)
       },
@@ -893,16 +873,7 @@ private[graft] object DedupGates {
         // rows and burn probe ranks on duplicate candidates.
         val e = t(s, dir, "embeddings")
         val table = s"graft_lsh_str_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Seq(table, s"${table}_meta", s"${table}_commits")
-            .foreach(graft.ops.Bucketing.dropManaged(s, _))
-          val deliver = Similarity.lshSink(table, "vec_id", "embedding",
-            nPlanes = 4, nTables = 16, nBuckets = 8)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 0), 0L)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 1), 1L)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 1), 1L) // replayed
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 2), 2L)
-        }
+        builtStreamed(s, table, Lsh, e)
         Similarity.topKLshIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5)
       },
@@ -917,13 +888,7 @@ private[graft] object DedupGates {
         // the drift signal that triggers the documented rebuild.
         val e = t(s, dir, "embeddings")
         val table = s"graft_ivf_stats_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestIvf(e.filter(col("vec_id") % 2 === 0),
-            "vec_id", "embedding", table,
-            nCentroids = 16, kmeansIters = 2, nBuckets = 8)
-          Similarity.appendIvf(s, table, e.filter(col("vec_id") % 2 =!= 0),
-            "vec_id", "embedding")
-        }
+        builtAppended(s, table, Ivf, e)
         Similarity.ivfClusterStats(s, table)
       },
       ivfStatsOracleSql),
@@ -936,13 +901,7 @@ private[graft] object DedupGates {
         // after appends is exactly the documented rebuild trigger.
         val e = t(s, dir, "embeddings")
         val table = s"graft_pq_stats_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestPq(e.filter(col("vec_id") % 2 === 0),
-            "vec_id", "embedding", table,
-            m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          Similarity.appendPq(s, table, e.filter(col("vec_id") % 2 =!= 0),
-            "vec_id", "embedding")
-        }
+        builtAppended(s, table, Pq, e)
         Similarity.pqReconStats(s, table)
       },
       {
@@ -968,16 +927,7 @@ private[graft] object DedupGates {
         // them — the oracle has no duplicates.
         val e = t(s, dir, "embeddings")
         val table = s"graft_pq_str_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Seq(table, s"${table}_vectors", s"${table}_codebooks", s"${table}_commits")
-            .foreach(graft.ops.Bucketing.dropManaged(s, _))
-          val deliver = Similarity.pqSink(table, "vec_id", "embedding",
-            m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 0), 0L)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 1), 1L)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 1), 1L) // replayed
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 2), 2L)
-        }
+        builtStreamed(s, table, Pq, e)
         Similarity.topKPqIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nCandidates = 20)
       },
@@ -995,16 +945,7 @@ private[graft] object DedupGates {
         // top-k burns ranks on them — the oracle has no duplicates.
         val e = t(s, dir, "embeddings")
         val table = s"graft_ivf_str_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Seq(table, s"${table}_centroids", s"${table}_commits")
-            .foreach(graft.ops.Bucketing.dropManaged(s, _))
-          val deliver = Similarity.ivfSink(table, "vec_id", "embedding",
-            nCentroids = 16, kmeansIters = 2, nBuckets = 8)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 0), 0L)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 1), 1L)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 1), 1L) // replayed
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 2), 2L)
-        }
+        builtStreamed(s, table, Ivf, e)
         Similarity.topKIvfIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nProbe = 4)
       },
@@ -1058,8 +999,7 @@ private[graft] object DedupGates {
         // parity proof.
         val e = t(s, dir, "embeddings")
         val table = s"graft_rivfpq_${dirSuffix(dir)}"
-        Similarity.ingestIvfPqResidual(e, "vec_id", "embedding", table,
-          nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
+        Rivfpq.ingest(e, table)
         Similarity.topKIvfPqResidualIngested(s, table,
           e.filter(col("vec_id") < 20), "vec_id", "embedding",
           k = 5, nProbe = 4, nCandidates = 20)
@@ -1077,13 +1017,7 @@ private[graft] object DedupGates {
         // even half and serves the union.
         val e = t(s, dir, "embeddings")
         val table = s"graft_rivfpq_app_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestIvfPqResidual(e.filter(col("vec_id") % 2 === 0),
-            "vec_id", "embedding", table,
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          Similarity.appendIvfPqResidual(s, table,
-            e.filter(col("vec_id") % 2 =!= 0), "vec_id", "embedding")
-        }
+        builtAppended(s, table, Rivfpq, e)
         Similarity.topKIvfPqResidualIngested(s, table,
           e.filter(col("vec_id") < 20), "vec_id", "embedding",
           k = 5, nProbe = 4, nCandidates = 20)
@@ -1100,18 +1034,7 @@ private[graft] object DedupGates {
         // delivery is a commit-log no-op.
         val e = t(s, dir, "embeddings")
         val table = s"graft_rivfpq_str_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Seq(table, s"${table}_vectors", s"${table}_centroids",
-            s"${table}_cellbooks", s"${table}_commits", s"${table}_tombstones",
-            s"${table}_batches")
-            .foreach(graft.ops.Bucketing.dropManaged(s, _))
-          val deliver = Similarity.ivfpqResidualSink(table, "vec_id", "embedding",
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 0), 0L)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 1), 1L)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 1), 1L) // replayed
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 2), 2L)
-        }
+        builtStreamed(s, table, Rivfpq, e)
         Similarity.topKIvfPqResidualIngested(s, table,
           e.filter(col("vec_id") < 20), "vec_id", "embedding",
           k = 5, nProbe = 4, nCandidates = 20)
@@ -1127,12 +1050,7 @@ private[graft] object DedupGates {
         // union, serve the surviving even half).
         val e = t(s, dir, "embeddings")
         val table = s"graft_rivfpq_del_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestIvfPqResidual(e, "vec_id", "embedding", table,
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          Similarity.deleteFromIvfPqResidual(s, table,
-            e.filter(col("vec_id") % 2 =!= 0).select(col("vec_id").as("nn_id")))
-        }
+        builtDeleted(s, table, Rivfpq, e)()
         Similarity.topKIvfPqResidualIngested(s, table,
           e.filter(col("vec_id") < 20), "vec_id", "embedding",
           k = 5, nProbe = 4, nCandidates = 20)
@@ -1157,13 +1075,7 @@ private[graft] object DedupGates {
         // never collects books.
         val e = t(s, dir, "embeddings")
         val table = s"graft_rivfpq_sts_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestIvfPqResidual(e.filter(col("vec_id") % 2 === 0),
-            "vec_id", "embedding", table,
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          Similarity.appendIvfPqResidual(s, table,
-            e.filter(col("vec_id") % 2 =!= 0), "vec_id", "embedding")
-        }
+        builtAppended(s, table, Rivfpq, e)
         Similarity.ivfPqResidualCellStats(s, table)
       },
       rivfpqCellStatsSql(nCentroids = 16, m = 4, nCodes = 8,
@@ -1182,10 +1094,7 @@ private[graft] object DedupGates {
         // collects nothing book-sized).
         val e = t(s, dir, "embeddings")
         val table = s"graft_rivfpq_bt_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestIvfPqResidual(e, "vec_id", "embedding", table,
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-        }
+        builtBatches(s, table, Rivfpq)(e)
         Similarity.topKIvfPqResidualIngested(s, table,
           e.filter(col("vec_id") < 20), "vec_id", "embedding",
           k = 5, nProbe = 4, nCandidates = 20, maxLiteralBookRows = 0)
@@ -1203,8 +1112,7 @@ private[graft] object DedupGates {
         // the parity proof.
         val e = t(s, dir, "embeddings")
         val table = s"graft_ivfpq_${dirSuffix(dir)}"
-        Similarity.ingestIvfPq(e, "vec_id", "embedding", table,
-          nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
+        IvfPq.ingest(e, table)
         Similarity.topKIvfPqIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nProbe = 4, nCandidates = 20)
       },
@@ -1221,13 +1129,7 @@ private[graft] object DedupGates {
         // each parent family, composed.
         val e = t(s, dir, "embeddings")
         val table = s"graft_ivfpq_app_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestIvfPq(e.filter(col("vec_id") % 2 === 0),
-            "vec_id", "embedding", table,
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          Similarity.appendIvfPq(s, table, e.filter(col("vec_id") % 2 =!= 0),
-            "vec_id", "embedding")
-        }
+        builtAppended(s, table, IvfPq, e)
         Similarity.topKIvfPqIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nProbe = 4, nCandidates = 20)
       },
@@ -1242,17 +1144,7 @@ private[graft] object DedupGates {
         // sidecars, the replayed delivery is a commit-log no-op.
         val e = t(s, dir, "embeddings")
         val table = s"graft_ivfpq_str_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Seq(table, s"${table}_vectors", s"${table}_centroids",
-            s"${table}_codebooks", s"${table}_commits", s"${table}_tombstones")
-            .foreach(graft.ops.Bucketing.dropManaged(s, _))
-          val deliver = Similarity.ivfpqSink(table, "vec_id", "embedding",
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 0), 0L)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 1), 1L)
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 1), 1L) // replayed
-          deliver(e.filter(pmod(col("vec_id"), lit(3)) === 2), 2L)
-        }
+        builtStreamed(s, table, IvfPq, e)
         Similarity.topKIvfPqIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nProbe = 4, nCandidates = 20)
       },
@@ -1267,12 +1159,7 @@ private[graft] object DedupGates {
         // on union, serve the surviving even half).
         val e = t(s, dir, "embeddings")
         val table = s"graft_ivfpq_del_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestIvfPq(e, "vec_id", "embedding", table,
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          Similarity.deleteFromIvfPq(s, table,
-            e.filter(col("vec_id") % 2 =!= 0).select(col("vec_id").as("nn_id")))
-        }
+        builtDeleted(s, table, IvfPq, e)()
         Similarity.topKIvfPqIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nProbe = 4, nCandidates = 20)
       },
@@ -1291,12 +1178,7 @@ private[graft] object DedupGates {
         // (TombstoneSpec asserts deleted ids leave the files on disk).
         val e = t(s, dir, "embeddings")
         val table = s"graft_lsh_del_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestLsh(e, "vec_id", "embedding", table,
-            nPlanes = 4, nTables = 16, nBuckets = 8)
-          Similarity.deleteFromLsh(s, table,
-            e.filter(col("vec_id") % 2 =!= 0).select(col("vec_id").as("nn_id")))
-        }
+        builtDeleted(s, table, Lsh, e)()
         Similarity.topKLshIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5)
       },
@@ -1312,12 +1194,7 @@ private[graft] object DedupGates {
         // from deletion feed the same rebuild trigger as drift.
         val e = t(s, dir, "embeddings")
         val table = s"graft_ivf_del_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestIvf(e, "vec_id", "embedding", table,
-            nCentroids = 16, kmeansIters = 2, nBuckets = 8)
-          Similarity.deleteFromIvf(s, table,
-            e.filter(col("vec_id") % 2 =!= 0).select(col("vec_id").as("nn_id")))
-        }
+        builtDeleted(s, table, Ivf, e)()
         Similarity.topKIvfIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nProbe = 4)
       },
@@ -1332,12 +1209,7 @@ private[graft] object DedupGates {
         // LIVE rows only.
         val e = t(s, dir, "embeddings")
         val table = s"graft_pq_del_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestPq(e, "vec_id", "embedding", table,
-            m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          Similarity.deleteFromPq(s, table,
-            e.filter(col("vec_id") % 2 =!= 0).select(col("vec_id").as("nn_id")))
-        }
+        builtDeleted(s, table, Pq, e)()
         Similarity.topKPqIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nCandidates = 20)
       },
@@ -1356,14 +1228,7 @@ private[graft] object DedupGates {
         // shares the two-thirds oracle outright
         val e = t(s, dir, "embeddings")
         val table = s"graft_lsh_asof_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestLsh(e.filter(col("vec_id") % 3 === 0),
-            "vec_id", "embedding", table, nPlanes = 4, nTables = 16, nBuckets = 8)
-          Similarity.appendLsh(s, table, e.filter(col("vec_id") % 3 === 1),
-            "vec_id", "embedding")
-          Similarity.appendLsh(s, table, e.filter(col("vec_id") % 3 === 2),
-            "vec_id", "embedding")
-        }
+        builtThirds(s, table, Lsh, e)
         Similarity.topKLshIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, asOf = Some(1L))
       },
@@ -1376,15 +1241,7 @@ private[graft] object DedupGates {
         // with the serve side cut at the snapshot
         val e = t(s, dir, "embeddings")
         val table = s"graft_ivf_asof_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestIvf(e.filter(col("vec_id") % 3 === 0),
-            "vec_id", "embedding", table, nCentroids = 16, kmeansIters = 2,
-            nBuckets = 8)
-          Similarity.appendIvf(s, table, e.filter(col("vec_id") % 3 === 1),
-            "vec_id", "embedding")
-          Similarity.appendIvf(s, table, e.filter(col("vec_id") % 3 === 2),
-            "vec_id", "embedding")
-        }
+        builtThirds(s, table, Ivf, e)
         Similarity.topKIvfIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nProbe = 4, asOf = Some(1L))
       },
@@ -1398,15 +1255,7 @@ private[graft] object DedupGates {
         // codes AND rescore vectors of batches 0–1 only
         val e = t(s, dir, "embeddings")
         val table = s"graft_pq_asof_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestPq(e.filter(col("vec_id") % 3 === 0),
-            "vec_id", "embedding", table, m = 4, nCodes = 8, kmeansIters = 2,
-            nBuckets = 8)
-          Similarity.appendPq(s, table, e.filter(col("vec_id") % 3 === 1),
-            "vec_id", "embedding")
-          Similarity.appendPq(s, table, e.filter(col("vec_id") % 3 === 2),
-            "vec_id", "embedding")
-        }
+        builtThirds(s, table, Pq, e)
         Similarity.topKPqIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nCandidates = 20, asOf = Some(1L))
       },
@@ -1419,15 +1268,7 @@ private[graft] object DedupGates {
         // snapshot reads codes and rescore vectors of batches 0–1 only
         val e = t(s, dir, "embeddings")
         val table = s"graft_ivfpq_asof_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestIvfPq(e.filter(col("vec_id") % 3 === 0),
-            "vec_id", "embedding", table,
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          Similarity.appendIvfPq(s, table, e.filter(col("vec_id") % 3 === 1),
-            "vec_id", "embedding")
-          Similarity.appendIvfPq(s, table, e.filter(col("vec_id") % 3 === 2),
-            "vec_id", "embedding")
-        }
+        builtThirds(s, table, IvfPq, e)
         Similarity.topKIvfPqIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nProbe = 4, nCandidates = 20,
           asOf = Some(1L))
@@ -1449,15 +1290,7 @@ private[graft] object DedupGates {
         // per-cell codebook join exactly as the current view does.
         val e = t(s, dir, "embeddings")
         val table = s"graft_rivfpq_asof_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Similarity.ingestIvfPqResidual(e.filter(col("vec_id") % 3 === 0),
-            "vec_id", "embedding", table,
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          Similarity.appendIvfPqResidual(s, table,
-            e.filter(col("vec_id") % 3 === 1), "vec_id", "embedding")
-          Similarity.appendIvfPqResidual(s, table,
-            e.filter(col("vec_id") % 3 === 2), "vec_id", "embedding")
-        }
+        builtThirds(s, table, Rivfpq, e)
         Similarity.topKIvfPqResidualIngested(s, table,
           e.filter(col("vec_id") < 20), "vec_id", "embedding",
           k = 5, nProbe = 4, nCandidates = 20, asOf = Some(1L))
@@ -1484,13 +1317,10 @@ private[graft] object DedupGates {
         val e = t(s, dir, "embeddings")
         val table = s"graft_lsh_cmp_${dirSuffix(dir)}"
         builtOnce(s, table) {
-          Similarity.ingestLsh(e.filter(col("vec_id") % 3 === 0),
-            "vec_id", "embedding", table, nPlanes = 4, nTables = 16, nBuckets = 8)
-          Similarity.appendLsh(s, table, e.filter(col("vec_id") % 3 === 1),
-            "vec_id", "embedding")
-          Similarity.appendLsh(s, table, e.filter(col("vec_id") % 3 === 2),
-            "vec_id", "embedding")
-          Similarity.deleteFromLsh(s, table,
+          Lsh.ingest(e.filter(col("vec_id") % 3 === 0), table)
+          Lsh.append(s, table, e.filter(col("vec_id") % 3 === 1))
+          Lsh.append(s, table, e.filter(col("vec_id") % 3 === 2))
+          Lsh.index.delete(s, table,
             e.filter(col("vec_id") % 7 === 3).select(col("vec_id").as("nn_id")))
           graft.ops.Tombstones.purgeStampedRange(s, table,
             Seq(table -> "bucket"), "nn_id", bLo = 0L, bHi = 1L)
@@ -1527,8 +1357,7 @@ private[graft] object DedupGates {
         val e = t(s, dir, "embeddings")
         val table = s"graft_prb_ivf_${dirSuffix(dir)}"
         if (!s.catalog.tableExists(table))
-          Similarity.ingestIvf(e, "vec_id", "embedding", table,
-            nCentroids = 16, kmeansIters = 2, nBuckets = 8)
+          Ivf.ingest(e, table)
         Similarity.topKIvfIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nProbe = 4)
       },
@@ -1539,8 +1368,7 @@ private[graft] object DedupGates {
         val e = t(s, dir, "embeddings")
         val table = s"graft_prb_pq_${dirSuffix(dir)}"
         if (!s.catalog.tableExists(table))
-          Similarity.ingestPq(e, "vec_id", "embedding", table,
-            m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
+          Pq.ingest(e, table)
         Similarity.topKPqIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nCandidates = 20)
       },
@@ -1551,8 +1379,7 @@ private[graft] object DedupGates {
         val e = t(s, dir, "embeddings")
         val table = s"graft_prb_ivfpq_${dirSuffix(dir)}"
         if (!s.catalog.tableExists(table))
-          Similarity.ingestIvfPq(e, "vec_id", "embedding", table,
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
+          IvfPq.ingest(e, table)
         Similarity.topKIvfPqIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nProbe = 4, nCandidates = 20)
       },
@@ -1564,8 +1391,7 @@ private[graft] object DedupGates {
         val e = t(s, dir, "embeddings")
         val table = s"graft_prb_rivfpq_${dirSuffix(dir)}"
         if (!s.catalog.tableExists(table))
-          Similarity.ingestIvfPqResidual(e, "vec_id", "embedding", table,
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
+          Rivfpq.ingest(e, table)
         Similarity.topKIvfPqResidualIngested(s, table,
           e.filter(col("vec_id") < 20), "vec_id", "embedding",
           k = 5, nProbe = 4, nCandidates = 20)
@@ -1583,8 +1409,7 @@ private[graft] object DedupGates {
         val e = t(s, dir, "embeddings")
         val table = s"graft_prb_rivfpq_${dirSuffix(dir)}"
         if (!s.catalog.tableExists(table))
-          Similarity.ingestIvfPqResidual(e, "vec_id", "embedding", table,
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
+          Rivfpq.ingest(e, table)
         Similarity.topKIvfPqResidualIngested(s, table,
           e.filter(col("vec_id") < 20), "vec_id", "embedding",
           k = 5, nProbe = 4, nCandidates = 20, maxLiteralBookRows = 0)
@@ -1601,11 +1426,8 @@ private[graft] object DedupGates {
         val e = t(s, dir, "embeddings")
         val table = s"graft_prb_ivfpq_b2_${dirSuffix(dir)}"
         if (!s.catalog.tableExists(table)) {
-          Similarity.ingestIvfPq(e.filter(col("vec_id") % 2 === 0),
-            "vec_id", "embedding", table,
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          Similarity.appendIvfPq(s, table,
-            e.filter(col("vec_id") % 2 =!= 0), "vec_id", "embedding")
+          IvfPq.ingest(e.filter(col("vec_id") % 2 === 0), table)
+          IvfPq.append(s, table, e.filter(col("vec_id") % 2 =!= 0))
         }
         Similarity.topKIvfPqIngested(s, table, e.filter(col("vec_id") < 20),
           "vec_id", "embedding", k = 5, nProbe = 4, nCandidates = 20,

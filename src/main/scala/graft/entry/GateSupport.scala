@@ -144,6 +144,91 @@ private[graft] object GateSupport {
     }
   }
 
+  /** A persisted index family bound to one gate configuration: its
+    * descriptor, the fixture's id and value columns, and the ingest call
+    * with the gate's parameters — what the lifecycle twin gates script.
+    */
+  private[graft] final case class GateIndex(index: PersistedIndex[_],
+                                            idCol: String, valCol: String,
+                                            ingest: (DataFrame, String) => Unit) {
+    def append(s: SparkSession, table: String, df: DataFrame): Unit =
+      index.append(s, table, df, idCol, valCol)
+  }
+
+  // the eight persisted index families at the gate parameters
+  private[graft] val Ivf = GateIndex(Similarity.ivfIndex, "vec_id", "embedding",
+    Similarity.ingestIvf(_, "vec_id", "embedding", _, nCentroids = 16,
+      kmeansIters = 2, nBuckets = 8))
+  private[graft] val Lsh = GateIndex(Similarity.lshIndex, "vec_id", "embedding",
+    Similarity.ingestLsh(_, "vec_id", "embedding", _, nPlanes = 4,
+      nTables = 16, nBuckets = 8))
+  private[graft] val Pq = GateIndex(Similarity.pqIndex, "vec_id", "embedding",
+    Similarity.ingestPq(_, "vec_id", "embedding", _, m = 4, nCodes = 8,
+      kmeansIters = 2, nBuckets = 8))
+  private[graft] val IvfPq = GateIndex(Similarity.ivfpqIndex, "vec_id", "embedding",
+    Similarity.ingestIvfPq(_, "vec_id", "embedding", _, nCentroids = 16,
+      m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8))
+  private[graft] val Rivfpq = GateIndex(Similarity.rivfpqIndex, "vec_id", "embedding",
+    Similarity.ingestIvfPqResidual(_, "vec_id", "embedding", _,
+      nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8))
+  private[graft] val Bm25 = GateIndex(Retrieval.bm25Index, "doc_id", "text",
+    Retrieval.ingestBm25(_, "doc_id", "text", _, nBuckets = 8))
+  private[graft] val Decontam = GateIndex(Corpus.decontamIndex, "doc_id", "text",
+    Corpus.ingestDecontamIndex(_, "doc_id", "text", n = 8, _, nBuckets = 8))
+  private[graft] val Minhash = GateIndex(Dedup.minhashIndex, "doc_id", "text",
+    Dedup.ingestMinhashIndex(_, "doc_id", "text", n = 3, k = 16,
+      rowsPerBand = 4, maxDocFreq = Some(20), _, nBuckets = 8))
+
+  /** Build `table` once from ordered batches: ingest the first slice
+    * (batch 0), append each later one (batch 1, 2, …).
+    */
+  private[graft] def builtBatches(s: SparkSession, table: String, ix: GateIndex)
+                                 (slices: DataFrame*): Unit =
+    builtOnce(s, table) {
+      ix.ingest(slices.head, table)
+      slices.tail.foreach(ix.append(s, table, _))
+    }
+
+  /** The appended twin: even ids ingest, odd ids append. */
+  private[graft] def builtAppended(s: SparkSession, table: String, ix: GateIndex,
+                                   df: DataFrame): Unit =
+    builtBatches(s, table, ix)(df.filter(col(ix.idCol) % 2 === 0),
+      df.filter(col(ix.idCol) % 2 =!= 0))
+
+  /** The as-of twin: batches `id % 3` = 0, 1, 2 (probed as of batch 1). */
+  private[graft] def builtThirds(s: SparkSession, table: String, ix: GateIndex,
+                                 df: DataFrame): Unit =
+    builtBatches(s, table, ix)(
+      (0 until 3).map(r => df.filter(col(ix.idCol) % 3 === r)): _*)
+
+  /** The deleted twin: ingest `df`, then tombstone the ids of `gone`
+    * (by default the odd ids).
+    */
+  private[graft] def builtDeleted(s: SparkSession, table: String, ix: GateIndex,
+                                  df: DataFrame)
+                                 (gone: DataFrame = df.filter(col(ix.idCol) % 2 =!= 0))
+      : Unit =
+    builtOnce(s, table) {
+      ix.ingest(df, table)
+      ix.index.delete(s, table, gone.select(col(ix.idCol).as(ix.index.idCol)))
+    }
+
+  /** The streamed twin: the index's tables and lifecycle logs dropped,
+    * then `pmod(id, 3)` deliveries 0, 1, 1 (replayed), 2 through the
+    * exactly-once sink.
+    */
+  private[graft] def builtStreamed(s: SparkSession, table: String, ix: GateIndex,
+                                   df: DataFrame): Unit =
+    builtOnce(s, table) {
+      ix.index.catalog(table).foreach(Bucketing.dropManaged(s, _))
+      val deliver = ix.index.sink(table, ix.idCol, ix.valCol)(ix.ingest(_, table))
+      def slice(r: Int) = df.filter(pmod(col(ix.idCol), lit(3)) === r)
+      deliver(slice(0), 0L)
+      deliver(slice(1), 1L)
+      deliver(slice(1), 1L) // replayed
+      deliver(slice(2), 2L)
+    }
+
   private[graft] def rhSql(expr: String, mult: Long = 131L): String =
     // NULL input must stay NULL: DuckDB's list_prepend(7, NULL) yields
     // [7], which would fingerprint a NULL text as the seed value while

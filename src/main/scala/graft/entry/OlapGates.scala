@@ -1135,14 +1135,8 @@ private[graft] object OlapGates {
         // trigger, the centroid-drift trade made explicit).
         val d = t(s, dir, "documents")
         val table = s"graft_mh_app_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Dedup.ingestMinhashIndex(d.filter(col("doc_id") <= 125),
-            "doc_id", "text", n = 3, k = 16, rowsPerBand = 4,
-            maxDocFreq = Some(20), table, nBuckets = 8)
-          Dedup.appendMinhashIndex(s, table,
-            d.filter(col("doc_id") > 125 && col("doc_id") <= 250),
-            "doc_id", "text")
-        }
+        builtBatches(s, table, Minhash)(d.filter(col("doc_id") <= 125),
+          d.filter(col("doc_id") > 125 && col("doc_id") <= 250))
         Dedup.minhashLshIngested(s, table, d.filter(col("doc_id") > 250),
           "doc_id", "text", threshold = 0.3)
       },
@@ -1160,17 +1154,7 @@ private[graft] object OlapGates {
         // double-counts — this gate's oracle would catch it.
         val d = t(s, dir, "documents")
         val table = s"graft_mh_str_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Seq(table, s"${table}_shingles", s"${table}_flood", s"${table}_meta",
-            s"${table}_commits").foreach(Bucketing.dropManaged(s, _))
-          val idx = d.filter(col("doc_id") <= 250)
-          val deliver = Dedup.minhashSink(table, "doc_id", "text",
-            n = 3, k = 16, rowsPerBand = 4, maxDocFreq = Some(20), nBuckets = 8)
-          deliver(idx.filter(pmod(col("doc_id"), lit(3)) === 0), 0L)
-          deliver(idx.filter(pmod(col("doc_id"), lit(3)) === 1), 1L)
-          deliver(idx.filter(pmod(col("doc_id"), lit(3)) === 1), 1L) // replayed
-          deliver(idx.filter(pmod(col("doc_id"), lit(3)) === 2), 2L)
-        }
+        builtStreamed(s, table, Minhash, d.filter(col("doc_id") <= 250))
         Dedup.minhashLshIngested(s, table, d.filter(col("doc_id") > 250),
           "doc_id", "text", threshold = 0.3)
       },
@@ -1188,14 +1172,8 @@ private[graft] object OlapGates {
         // docs ≤ 250, index side restricted to the survivors).
         val d = t(s, dir, "documents")
         val table = s"graft_mh_del_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Dedup.ingestMinhashIndex(d.filter(col("doc_id") <= 250),
-            "doc_id", "text", n = 3, k = 16, rowsPerBand = 4,
-            maxDocFreq = Some(20), table, nBuckets = 8)
-          Dedup.deleteFromMinhashIndex(s, table,
-            d.filter(col("doc_id") <= 250 && col("doc_id") % 5 === 0)
-              .select(col("doc_id").as("doc")))
-        }
+        builtDeleted(s, table, Minhash, d.filter(col("doc_id") <= 250))(
+          d.filter(col("doc_id") <= 250 && col("doc_id") % 5 === 0))
         Dedup.minhashLshIngested(s, table, d.filter(col("doc_id") > 250),
           "doc_id", "text", threshold = 0.3)
       },
@@ -1214,17 +1192,9 @@ private[graft] object OlapGates {
         // the snapshot probe even though they sit in the same files.
         val d = t(s, dir, "documents")
         val table = s"graft_mh_asof_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Dedup.ingestMinhashIndex(d.filter(col("doc_id") <= 125),
-            "doc_id", "text", n = 3, k = 16, rowsPerBand = 4,
-            maxDocFreq = Some(20), table, nBuckets = 8)
-          Dedup.appendMinhashIndex(s, table,
-            d.filter(col("doc_id") > 125 && col("doc_id") <= 187),
-            "doc_id", "text")
-          Dedup.appendMinhashIndex(s, table,
-            d.filter(col("doc_id") > 187 && col("doc_id") <= 250),
-            "doc_id", "text")
-        }
+        builtBatches(s, table, Minhash)(d.filter(col("doc_id") <= 125),
+          d.filter(col("doc_id") > 125 && col("doc_id") <= 187),
+          d.filter(col("doc_id") > 187 && col("doc_id") <= 250))
         Dedup.minhashLshIngested(s, table, d.filter(col("doc_id") > 250),
           "doc_id", "text", threshold = 0.3, asOf = Some(1L))
       },

@@ -260,9 +260,8 @@ private[graft] object TextCorpusGates {
         // carry the SHA-256 dir digest (concurrent-suite discipline).
         import s.implicits._
         val table = s"graft_bm25_postings_${dirSuffix(dir)}"
-        Retrieval.ingestBm25(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          "doc_id", "text", table, nBuckets = 8)
+        Bm25.ingest(
+          t(s, dir, "documents").select(col("doc_id"), col("text")), table)
         Retrieval.bm25TopKIngested(s, table,
           bm25Queries.toDF("qid", "qtext"), "qid", "qtext", topK = 10)
       },
@@ -280,12 +279,7 @@ private[graft] object TextCorpusGates {
         import s.implicits._
         val table = s"graft_bm25_app_${dirSuffix(dir)}"
         val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        builtOnce(s, table) {
-          Retrieval.ingestBm25(d.filter(col("doc_id") % 2 === 0),
-            "doc_id", "text", table, nBuckets = 8)
-          Retrieval.appendBm25(d.filter(col("doc_id") % 2 =!= 0),
-            "doc_id", "text", table)
-        }
+        builtAppended(s, table, Bm25, d)
         Retrieval.bm25TopKIngested(s, table,
           bm25Queries.toDF("qid", "qtext"), "qid", "qtext", topK = 10)
       },
@@ -302,16 +296,8 @@ private[graft] object TextCorpusGates {
         // a sharp exactly-once check, not just a smoke test.
         import s.implicits._
         val table = s"graft_bm25_str_${dirSuffix(dir)}"
-        builtOnce(s, table) {
-          Seq(table, s"${table}_dl", s"${table}_stats", s"${table}_commits")
-            .foreach(Bucketing.dropManaged(s, _))
-          val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-          val deliver = Retrieval.bm25Sink(table, "doc_id", "text", nBuckets = 8)
-          deliver(d.filter(pmod(col("doc_id"), lit(3)) === 0), 0L)
-          deliver(d.filter(pmod(col("doc_id"), lit(3)) === 1), 1L)
-          deliver(d.filter(pmod(col("doc_id"), lit(3)) === 1), 1L) // replayed
-          deliver(d.filter(pmod(col("doc_id"), lit(3)) === 2), 2L)
-        }
+        builtStreamed(s, table, Bm25,
+          t(s, dir, "documents").select(col("doc_id"), col("text")))
         Retrieval.bm25TopKIngested(s, table,
           bm25Queries.toDF("qid", "qtext"), "qid", "qtext", topK = 10)
       },
@@ -332,11 +318,7 @@ private[graft] object TextCorpusGates {
         import s.implicits._
         val table = s"graft_bm25_del_${dirSuffix(dir)}"
         val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        builtOnce(s, table) {
-          Retrieval.ingestBm25(d, "doc_id", "text", table, nBuckets = 8)
-          Retrieval.deleteFromBm25(s, table,
-            d.filter(col("doc_id") % 2 =!= 0).select(col("doc_id").as("doc")))
-        }
+        builtDeleted(s, table, Bm25, d)()
         Retrieval.bm25TopKIngested(s, table,
           bm25Queries.toDF("qid", "qtext"), "qid", "qtext", topK = 10)
       },
@@ -356,14 +338,7 @@ private[graft] object TextCorpusGates {
         import s.implicits._
         val table = s"graft_bm25_asof_${dirSuffix(dir)}"
         val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        builtOnce(s, table) {
-          Retrieval.ingestBm25(d.filter(col("doc_id") % 3 === 0),
-            "doc_id", "text", table, nBuckets = 8)
-          Retrieval.appendBm25(d.filter(col("doc_id") % 3 === 1),
-            "doc_id", "text", table)
-          Retrieval.appendBm25(d.filter(col("doc_id") % 3 === 2),
-            "doc_id", "text", table)
-        }
+        builtThirds(s, table, Bm25, d)
         Retrieval.bm25TopKIngested(s, table,
           bm25Queries.toDF("qid", "qtext"), "qid", "qtext", topK = 10,
           asOf = Some(1L))
@@ -383,9 +358,8 @@ private[graft] object TextCorpusGates {
         import s.implicits._
         val table = s"graft_prb_bm25_${dirSuffix(dir)}"
         if (!s.catalog.tableExists(table))
-          Retrieval.ingestBm25(
-            t(s, dir, "documents").select(col("doc_id"), col("text")),
-            "doc_id", "text", table, nBuckets = 8)
+          Bm25.ingest(t(s, dir, "documents").select(col("doc_id"), col("text")),
+            table)
         Retrieval.bm25TopKIngested(s, table,
           bm25Queries.toDF("qid", "qtext"), "qid", "qtext", topK = 10)
       },
@@ -401,10 +375,8 @@ private[graft] object TextCorpusGates {
         val table = s"graft_prb_bm25_b2_${dirSuffix(dir)}"
         val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
         if (!s.catalog.tableExists(table)) {
-          Retrieval.ingestBm25(d.filter(col("doc_id") % 2 === 0),
-            "doc_id", "text", table, nBuckets = 8)
-          Retrieval.appendBm25(d.filter(col("doc_id") % 2 =!= 0),
-            "doc_id", "text", table)
+          Bm25.ingest(d.filter(col("doc_id") % 2 === 0), table)
+          Bm25.append(s, table, d.filter(col("doc_id") % 2 =!= 0))
         }
         Retrieval.bm25TopKIngested(s, table,
           bm25Queries.toDF("qid", "qtext"), "qid", "qtext", topK = 10,
@@ -506,9 +478,8 @@ private[graft] object TextCorpusGates {
         val bmT = s"graft_ctx_bm25_${dirSuffix(dir)}"
         val annT = s"graft_ctx_ivfpq_${dirSuffix(dir)}"
         builtOnce(s, bmT) {
-          Retrieval.ingestBm25(docs, "doc_id", "text", bmT, nBuckets = 8)
-          Similarity.ingestIvfPq(emb, "vec_id", "embedding", annT,
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
+          Bm25.ingest(docs, bmT)
+          IvfPq.ingest(emb, annT)
         }
         val queries = Seq((9001L, "spark window join"),
           (9002L, "hash merge sort"), (9003L, "customer query table"))
@@ -569,15 +540,10 @@ private[graft] object TextCorpusGates {
         val bmT = s"graft_ctxa_bm25_${dirSuffix(dir)}"
         val annT = s"graft_ctxa_ivfpq_${dirSuffix(dir)}"
         builtOnce(s, bmT) {
-          Retrieval.ingestBm25(docs.filter(col("doc_id") % 2 === 0),
-            "doc_id", "text", bmT, nBuckets = 8)
-          Retrieval.appendBm25(docs.filter(col("doc_id") % 2 =!= 0),
-            "doc_id", "text", bmT)
-          Similarity.ingestIvfPq(emb.filter(col("vec_id") % 2 === 0),
-            "vec_id", "embedding", annT,
-            nCentroids = 16, m = 4, nCodes = 8, kmeansIters = 2, nBuckets = 8)
-          Similarity.appendIvfPq(s, annT, emb.filter(col("vec_id") % 2 =!= 0),
-            "vec_id", "embedding")
+          Bm25.ingest(docs.filter(col("doc_id") % 2 === 0), bmT)
+          Bm25.append(s, bmT, docs.filter(col("doc_id") % 2 =!= 0))
+          IvfPq.ingest(emb.filter(col("vec_id") % 2 === 0), annT)
+          IvfPq.append(s, annT, emb.filter(col("vec_id") % 2 =!= 0))
         }
         val asOf0 = Some(0L)
         val queries = Seq((9001L, "spark window join"),
@@ -951,12 +917,8 @@ private[graft] object TextCorpusGates {
         val table = s"graft_decontam_${dirSuffix(dir)}"
         val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
           .union(Seq((99991L, Option.empty[String])).toDF("doc_id", "text"))
-        builtOnce(s, table) {
-          Corpus.ingestDecontamIndex(docs.filter(col("doc_id") % 74 === 0),
-            "doc_id", "text", n = 8, table, nBuckets = 8)
-          Corpus.appendDecontamIndex(s, table,
-            docs.filter(col("doc_id") % 37 === 0), "doc_id", "text")
-        }
+        builtBatches(s, table, Decontam)(docs.filter(col("doc_id") % 74 === 0),
+          docs.filter(col("doc_id") % 37 === 0))
         Corpus.decontaminateIngested(s, table, docs, "doc_id", "text")
       },
       decontamOracleSql),
@@ -975,13 +937,8 @@ private[graft] object TextCorpusGates {
         val table = s"graft_decontam_asof_${dirSuffix(dir)}"
         val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
           .union(Seq((99991L, Option.empty[String])).toDF("doc_id", "text"))
-        builtOnce(s, table) {
-          Corpus.ingestDecontamIndex(docs.filter(col("doc_id") % 37 === 0),
-            "doc_id", "text", n = 8, table, nBuckets = 8)
-          Corpus.appendDecontamIndex(s, table,
-            docs.filter(col("doc_id") % 5 === 3 && col("doc_id") % 37 =!= 0),
-            "doc_id", "text")
-        }
+        builtBatches(s, table, Decontam)(docs.filter(col("doc_id") % 37 === 0),
+          docs.filter(col("doc_id") % 5 === 3 && col("doc_id") % 37 =!= 0))
         Corpus.decontaminateIngested(s, table, docs, "doc_id", "text",
           asOf = Some(0L))
       },
@@ -1007,12 +964,8 @@ private[graft] object TextCorpusGates {
           .union(Seq((99991L, Option.empty[String])).toDF("doc_id", "text"))
         val keepSuite = col("doc_id") % 37 === 0
         val retractable = col("doc_id") % 5 === 3 && col("doc_id") % 37 =!= 0
-        builtOnce(s, table) {
-          Corpus.ingestDecontamIndex(docs.filter(keepSuite || retractable),
-            "doc_id", "text", n = 8, table, nBuckets = 8)
-          Corpus.deleteFromDecontamIndex(s, table,
-            docs.filter(retractable).select(col("doc_id").as("doc")))
-        }
+        builtDeleted(s, table, Decontam, docs.filter(keepSuite || retractable))(
+          docs.filter(retractable))
         Corpus.decontaminateIngested(s, table, docs, "doc_id", "text")
       },
       decontamOracleSql),

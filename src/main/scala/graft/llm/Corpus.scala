@@ -187,16 +187,11 @@ object Corpus {
                           n: Int, table: String, nBuckets: Int): Unit = {
     require(n > 0, "n must be positive")
     val spark = evalSet.sparkSession
-    // a rebuild starts with no deletes and a fresh snapshot timeline
-    graft.ops.Tombstones.clear(spark, table)
-    graft.ops.Snapshots.reset(spark, table)
-    val evalH = Dedup.docShinglesHashed(evalSet, idCol, textCol, n)
-      .select(col("h"), col("doc"))
-    graft.ops.Bucketing.writeBucketed(
-      graft.ops.Snapshots.stamp(evalH, 0L), table, "h", nBuckets)
     import spark.implicits._
-    graft.ops.Bucketing.writeSmall(Seq(n).toDF("n"), s"${table}_meta")
-    graft.ops.Snapshots.record(spark, table, 0L)
+    decontamIndex.ingest(spark, table, nBuckets,
+      Seq(Dedup.docShinglesHashed(evalSet, idCol, textCol, n)
+        .select(col("h"), col("doc"))),
+      Seq(Seq(n).toDF("n")))
   }
 
   /** Fold a NEW benchmark batch into an [[ingestDecontamIndex]] index —
@@ -216,26 +211,8 @@ object Corpus {
     */
   def appendDecontamIndex(spark: org.apache.spark.sql.SparkSession,
                           table: String, evalBatch: DataFrame,
-                          idCol: String, textCol: String): Unit = {
-    val meta = spark.table(s"${table}_meta").first()
-    val n = meta.getInt(meta.fieldIndex("n"))
-    graft.ops.Tombstones.requireNotTombstoned(spark, table,
-      evalBatch.select(col(idCol).as("doc")), "doc")
-    // localCheckpoint BEFORE the append (the appendMinhashIndex
-    // discipline): the anti-join's plan READS the very table the append
-    // writes into — materializing the batch-sized result first removes
-    // the read-from-write-target hazard (a mid-write file re-listing
-    // would re-read partial output and silently drop pairs)
-    val newH = Dedup.docShinglesHashed(evalBatch, idCol, textCol, n)
-      .select(col("h"), col("doc"))
-      .join(spark.table(table), Seq("h", "doc"), "left_anti")
-      .localCheckpoint()
-    val b = graft.ops.Snapshots.nextBatchId(spark, table, Seq(table))
-    graft.ops.Bucketing.appendBucketed(
-      graft.ops.Snapshots.stamp(newH, b), table, "h",
-      graft.ops.Bucketing.bucketCountOf(spark, table))
-    graft.ops.Snapshots.record(spark, table, b)
-  }
+                          idCol: String, textCol: String): Unit =
+    decontamIndex.append(spark, table, evalBatch, idCol, textCol)
 
   /** [[decontaminate]] against an [[ingestDecontamIndex]] index:
     * bit-identical verdicts (the distinct-h projection of the filtered
@@ -253,10 +230,8 @@ object Corpus {
                             textCol: String, minHits: Long = 1L,
                             asOf: Option[Long] = None): DataFrame = {
     require(minHits > 0, "minHits must be positive")
-    val meta = spark.table(s"${table}_meta").first()
-    val n = meta.getInt(meta.fieldIndex("n"))
-    val evalH = graft.ops.Tombstones.filterByParent(spark, table,
-        graft.ops.Snapshots.readAsOf(spark, table, table, asOf), "doc")
+    val (n, _) = decontamIndex.load(spark, table)
+    val evalH = decontamIndex.live(spark, table, asOf = asOf)
       .select(col("h")).distinct()
     val trainSh = Dedup.docShinglesHashed(train, idCol, textCol, n)
     val hits = trainSh.join(evalH, Seq("h"))
@@ -282,16 +257,36 @@ object Corpus {
     * physically.
     */
   def deleteFromDecontamIndex(spark: org.apache.spark.sql.SparkSession,
-                              table: String, ids: DataFrame): Unit = {
-    graft.ops.Tombstones.add(spark, table, ids, "doc"); ()
-  }
+                              table: String, ids: DataFrame): Unit =
+    decontamIndex.delete(spark, table, ids)
 
   /** Physical drop + tombstone clear for a decontamination index (a
     * per-bucket local rewrite of the h-bucketed relation).
     */
   def compactDecontamIndex(spark: org.apache.spark.sql.SparkSession,
                            table: String): Unit =
-    graft.ops.Tombstones.purge(spark, table, Seq(table -> "h"), "doc")
+    decontamIndex.compact(spark, table)
+
+  /** Decontam: the h-bucketed `(h, doc)` eval hash relation plus the
+    * n-gram order sidecar. An append is a SET fold: its pairs anti-join
+    * the persisted relation on BOTH columns, materialized BEFORE the
+    * append (the anti-join's plan READS the very table the append writes
+    * into — a mid-write file re-listing would re-read partial output and
+    * silently drop pairs).
+    */
+  private[graft] val decontamIndex =
+    graft.ops.PersistedIndex[(Int, DataFrame)]("DecontamIndex", "doc",
+      tables = Seq("" -> "h"), sidecars = Seq("_meta" -> None),
+      prepare = graft.ops.PersistedIndex.textRows,
+      load = (spark, table) => {
+        val meta = spark.table(s"${table}_meta").first()
+        (meta.getInt(meta.fieldIndex("n")), spark.table(table))
+      },
+      encode = { case (rows, (n, existing)) =>
+        Seq(Dedup.docShinglesHashed(rows, "doc", "text", n)
+          .select(col("h"), col("doc"))
+          .join(existing, Seq("h", "doc"), "left_anti")
+          .localCheckpoint()) })
 
   /** Contamination ATTRIBUTION report — the auditor view behind
     * [[decontaminate]]: for each (benchmark doc, training doc) pair

@@ -442,10 +442,6 @@ object Dedup {
                          nBuckets: Int): Unit = {
     require(k % rowsPerBand == 0, "k must be divisible by rowsPerBand")
     val spark = corpus.sparkSession
-    // a rebuild starts with no deletes (the Tombstones contract) and a
-    // fresh snapshot timeline (the Snapshots contract: this IS batch 0)
-    graft.ops.Tombstones.clear(spark, table)
-    graft.ops.Snapshots.reset(spark, table)
     val raw = docShinglesHashed(corpus, idCol, textCol, n, None)
       .localCheckpoint()
     val flood = maxDocFreq match {
@@ -453,26 +449,16 @@ object Dedup {
       case Some(cap) => raw.groupBy(col("h")).agg(count(lit(1)).as("df"))
         .filter(col("df") > cap).select(col("h"))
     }
-    graft.ops.Bucketing.writeBucketed(
-      graft.ops.Snapshots.stamp(raw.join(flood, Seq("h"), "left_anti"), 0L),
-      s"${table}_shingles", "h", nBuckets)
-    graft.ops.Bucketing.writeBucketed(
-      graft.ops.Snapshots.stamp(
-        bandKeys(spark.table(s"${table}_shingles")
-          .drop(graft.ops.Snapshots.BatchCol), k, rowsPerBand), 0L),
-      table, "bkey", nBuckets)
-    // the flood set is NOT written via writeSmall: writeSmall's
-    // contract is dimension-sized-by-contract, but a boilerplate-heavy
-    // corpus can push the flood set past broadcast size. Bucketing it
-    // by h — the probe's anti-join key — keeps minhashLshIngested's
-    // flood filter exchange-free on the index side regardless of size
-    // (only the batch side shuffles, and it is batch-sized).
-    graft.ops.Bucketing.writeBucketed(flood, s"${table}_flood", "h", nBuckets)
     import spark.implicits._
-    graft.ops.Bucketing.writeSmall(
-      Seq((n, k, rowsPerBand)).toDF("n", "k", "rows_per_band"),
-      s"${table}_meta")
-    graft.ops.Snapshots.record(spark, table, 0L)
+    // the flood set is NOT a writeSmall sidecar: writeSmall's contract
+    // is dimension-sized-by-contract, but a boilerplate-heavy corpus can
+    // push the flood set past broadcast size. Bucketing it by h — the
+    // probe's anti-join key — keeps minhashLshIngested's flood filter
+    // exchange-free on the index side regardless of size (only the batch
+    // side shuffles, and it is batch-sized).
+    minhashIndex.ingest(spark, table, nBuckets,
+      cappedIndexRows(raw, flood, k, rowsPerBand),
+      Seq(flood, Seq((n, k, rowsPerBand)).toDF("n", "k", "rows_per_band")))
   }
 
   /** Append a new batch into an [[ingestMinhashIndex]] index — the
@@ -497,29 +483,8 @@ object Dedup {
     */
   def appendMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                          table: String, batch: DataFrame,
-                         idCol: String, textCol: String): Unit = {
-    // a tombstoned doc must not silently re-enter (its band/shingle
-    // rows would be probe-invisible) — loud guard, zero-cost when
-    // nothing was deleted
-    graft.ops.Tombstones.requireNotTombstoned(spark, table,
-      batch.select(col(idCol).as("doc")), "doc")
-    val meta = spark.table(s"${table}_meta").first()
-    val n = meta.getInt(meta.fieldIndex("n"))
-    val k = meta.getInt(meta.fieldIndex("k"))
-    val rpb = meta.getInt(meta.fieldIndex("rows_per_band"))
-    val dsNew = docShinglesHashed(batch, idCol, textCol, n, None)
-      .join(spark.table(s"${table}_flood"), Seq("h"), "left_anti")
-      .localCheckpoint() // two consumers: shingle append + band append
-    val b = graft.ops.Snapshots.nextBatchId(spark, table,
-      Seq(table, s"${table}_shingles"))
-    graft.ops.Bucketing.appendBucketed(
-      graft.ops.Snapshots.stamp(dsNew, b), s"${table}_shingles", "h",
-      graft.ops.Bucketing.bucketCountOf(spark, s"${table}_shingles"))
-    graft.ops.Bucketing.appendBucketed(
-      graft.ops.Snapshots.stamp(bandKeys(dsNew, k, rpb), b), table, "bkey",
-      graft.ops.Bucketing.bucketCountOf(spark, table))
-    graft.ops.Snapshots.record(spark, table, b)
-  }
+                         idCol: String, textCol: String): Unit =
+    minhashIndex.append(spark, table, batch, idCol, textCol)
 
   /** Exactly-once streaming maintenance of a MinHash near-dup index —
     * [[graft.llm.Retrieval.bm25Sink]]'s sibling: the first delivered
@@ -536,28 +501,8 @@ object Dedup {
                   n: Int, k: Int, rowsPerBand: Int,
                   maxDocFreq: Option[Long], nBuckets: Int)
       : (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      graft.streaming.ExactlyOnce.once(spark, s"${table}_commits", batchId) {
-        // empty-first-delivery heal (the ivfSink/pqSink fix, and here
-        // the failure is SILENT rather than loud): an index ingested
-        // from an empty batch 0 froze its flood set over ZERO docs, so
-        // maxDocFreq would never be enforced for the index's life —
-        // every append would pass the empty anti-join uncapped. An
-        // index with no shingle rows has capped nothing and promised
-        // nothing, so re-ingesting on the first real batch (flood
-        // trains there) invalidates nothing.
-        if (!spark.catalog.tableExists(table))
-          ingestMinhashIndex(batch, idCol, textCol, n, k, rowsPerBand,
-            maxDocFreq, table, nBuckets)
-        else if (spark.table(s"${table}_shingles").limit(1).count() == 0L
-            && batch.limit(1).count() > 0L)
-          ingestMinhashIndex(batch, idCol, textCol, n, k, rowsPerBand,
-            maxDocFreq, table, nBuckets)
-        else appendMinhashIndex(spark, table, batch, idCol, textCol)
-      }
-      ()
-    }
+    minhashIndex.sink(table, idCol, textCol)(ingestMinhashIndex(_, idCol,
+      textCol, n, k, rowsPerBand, maxDocFreq, table, nBuckets))
 
   /** Near-dup admission of a new batch against an [[ingestMinhashIndex]]
     * index: the batch is shingle-hashed, filtered against the PERSISTED
@@ -586,20 +531,14 @@ object Dedup {
                          newBatch: DataFrame, idCol: String, textCol: String,
                          threshold: Double,
                          asOf: Option[Long] = None): DataFrame = {
-    val meta = spark.table(s"${table}_meta").first()
-    val n = meta.getInt(meta.fieldIndex("n"))
-    val k = meta.getInt(meta.fieldIndex("k"))
-    val rpb = meta.getInt(meta.fieldIndex("rows_per_band"))
     // the flood set is frozen at ingest (corpus-trained state), so every
     // snapshot admits under the same cap — the Snapshots contract
-    val flood = spark.table(s"${table}_flood")
+    val ((n, k, rpb), flood) = minhashIndex.load(spark, table)
     // tombstoned docs are excluded from both persisted relations — a
     // deleted document must neither generate candidates nor contribute
     // shingles to a Jaccard intersection; asOf additionally restricts
     // both to batches ≤ asOf (takedowns stay retroactive)
-    val dsOld = graft.ops.Tombstones.filterByParent(spark, table,
-      graft.ops.Snapshots.readAsOf(spark, s"${table}_shingles", table, asOf),
-      "doc")
+    val dsOld = minhashIndex.live(spark, table, "_shingles", asOf)
     // no broadcast hint: the flood set is usually tiny (shingles above
     // the cap) and Catalyst broadcasts it from table stats, but on a
     // boilerplate-heavy corpus it can grow past broadcast size — let
@@ -609,8 +548,7 @@ object Dedup {
       .localCheckpoint()
     val cand = bandKeys(dsNew, k, rpb)
       .select(col("doc").as("d_new"), col("bkey"), col("bkey2"))
-      .join(graft.ops.Tombstones.filterByParent(spark, table,
-          graft.ops.Snapshots.readAsOf(spark, table, table, asOf), "doc")
+      .join(minhashIndex.live(spark, table, asOf = asOf)
         .select(col("doc").as("d_old"), col("bkey"), col("bkey2")),
         Seq("bkey", "bkey2"))
       .select(col("d_new"), col("d_old")).distinct()
@@ -631,17 +569,52 @@ object Dedup {
     * rebuild remains the flood-refresh trigger.
     */
   def deleteFromMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                             table: String, ids: DataFrame): Unit = {
-    graft.ops.Tombstones.add(spark, table, ids, "doc"); ()
-  }
+                             table: String, ids: DataFrame): Unit =
+    minhashIndex.delete(spark, table, ids)
 
   /** Physical drop + tombstone clear for a MinHash index (band and
     * shingle tables; the flood set is doc-independent and untouched).
     */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                           table: String): Unit =
-    graft.ops.Tombstones.purge(spark, table,
-      Seq(table -> "bkey", s"${table}_shingles" -> "h"), "doc")
+    minhashIndex.compact(spark, table)
+
+  /** The two data tables of a MinHash index from a hashed-shingle
+    * relation: its shingles minus the flood set, materialized once
+    * (two consumers), and their band keys.
+    */
+  private def cappedIndexRows(shingles: DataFrame, flood: DataFrame, k: Int,
+                              rowsPerBand: Int): Seq[DataFrame] = {
+    val kept = shingles.join(flood, Seq("h"), "left_anti").localCheckpoint()
+    Seq(kept, bandKeys(kept, k, rowsPerBand))
+  }
+
+  /** MinHash: the h-bucketed capped `(doc, h)` shingles, the
+    * bkey-bucketed `(doc, bkey, bkey2)` bands, the h-bucketed flood set
+    * and the `(n, k, rows_per_band)` sidecar. The heal probes the
+    * shingle table: an index ingested from an empty batch 0 froze its
+    * flood set over ZERO docs, so maxDocFreq would never be enforced
+    * for the index's life — every append would pass the empty
+    * anti-join uncapped (a SILENT failure, where the quantizer families
+    * fail loudly). An index with no shingle rows has capped nothing and
+    * promised nothing, so re-ingesting on the first real batch
+    * invalidates nothing.
+    */
+  private[graft] val minhashIndex =
+    graft.ops.PersistedIndex[((Int, Int, Int), DataFrame)]("MinhashIndex", "doc",
+      tables = Seq("_shingles" -> "h", "" -> "bkey"),
+      sidecars = Seq("_flood" -> Some("h"), "_meta" -> None),
+      prepare = graft.ops.PersistedIndex.textRows,
+      load = (spark, table) => {
+        val meta = spark.table(s"${table}_meta").first()
+        ((meta.getInt(meta.fieldIndex("n")), meta.getInt(meta.fieldIndex("k")),
+          meta.getInt(meta.fieldIndex("rows_per_band"))),
+          spark.table(s"${table}_flood"))
+      },
+      encode = { case (rows, ((n, k, rpb), flood)) =>
+        cappedIndexRows(docShinglesHashed(rows, "doc", "text", n, None), flood,
+          k, rpb) },
+      trainedOn = Some("_shingles"))
 
   /** SimHash over token hashes: bit b of the signature is 1 iff the count
     * of tokens with bit b set exceeds half the token count. The rolling

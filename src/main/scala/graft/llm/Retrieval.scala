@@ -160,21 +160,9 @@ object Retrieval {
     */
   def ingestBm25(docs: DataFrame, idCol: String, textCol: String,
                  table: String, nBuckets: Int): Unit = {
-    val spark = docs.sparkSession
     val (tf, dl) = postings(docs, idCol, textCol)
-    // a rebuild starts with no deletes (the Tombstones contract) and a
-    // fresh snapshot timeline (the Snapshots contract: this IS batch 0)
-    graft.ops.Tombstones.clear(spark, table)
-    graft.ops.Snapshots.reset(spark, table)
-    graft.ops.Bucketing.writeBucketed(
-      graft.ops.Snapshots.stamp(tf, 0L), table, "term", nBuckets)
-    graft.ops.Bucketing.writeBucketed(
-      graft.ops.Snapshots.stamp(dl, 0L), s"${table}_dl", "doc", nBuckets)
-    graft.ops.Bucketing.writeSmall(
-      dl.agg(count(lit(1)).as("n"),
-        coalesce(sum(col("dl")), lit(0L)).as("sumdl")),
-      s"${table}_stats")
-    graft.ops.Snapshots.record(spark, table, 0L)
+    bm25Index.ingest(docs.sparkSession, table, nBuckets, Seq(tf, dl),
+      Seq(statsOf(dl)))
   }
 
   /** Append a new document batch into an [[ingestBm25]] index — the
@@ -200,34 +188,8 @@ object Retrieval {
     * ingest.
     */
   def appendBm25(batch: DataFrame, idCol: String, textCol: String,
-                 table: String): Unit = {
-    val spark = batch.sparkSession
-    // a tombstoned doc must not silently re-enter (its postings would
-    // be probe-invisible while the stats sidecar drifted) — loud guard,
-    // zero-cost when nothing was deleted
-    graft.ops.Tombstones.requireNotTombstoned(spark, table,
-      batch.select(col(idCol).as("doc")), "doc")
-    val (tf, dl0) = postings(batch, idCol, textCol)
-    val dl = dl0.localCheckpoint() // two consumers: stats + append
-    // read the old stats BEFORE the sidecar overwrite drops the table
-    val st = spark.table(s"${table}_stats").first()
-    val bs = dl.agg(count(lit(1)).as("n"),
-      coalesce(sum(col("dl")), lit(0L)).as("sumdl")).first()
-    val b = graft.ops.Snapshots.nextBatchId(spark, table,
-      Seq(table, s"${table}_dl"))
-    graft.ops.Bucketing.appendBucketed(
-      graft.ops.Snapshots.stamp(tf, b), table, "term",
-      graft.ops.Bucketing.bucketCountOf(spark, table))
-    graft.ops.Bucketing.appendBucketed(
-      graft.ops.Snapshots.stamp(dl, b), s"${table}_dl", "doc",
-      graft.ops.Bucketing.bucketCountOf(spark, s"${table}_dl"))
-    import spark.implicits._
-    graft.ops.Bucketing.writeSmall(
-      Seq((st.getLong(st.fieldIndex("n")) + bs.getLong(0),
-        st.getLong(st.fieldIndex("sumdl")) + bs.getLong(1))).toDF("n", "sumdl"),
-      s"${table}_stats")
-    graft.ops.Snapshots.record(spark, table, b)
-  }
+                 table: String): Unit =
+    bm25Index.append(batch.sparkSession, table, batch, idCol, textCol)
 
   /** Exactly-once streaming maintenance of a BM25 index — the full
     * loop: `docStream.writeStream.foreachBatch(Retrieval.bm25Sink(...))
@@ -244,15 +206,8 @@ object Retrieval {
     */
   def bm25Sink(table: String, idCol: String, textCol: String,
                nBuckets: Int): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      graft.streaming.ExactlyOnce.once(spark, s"${table}_commits", batchId) {
-        if (spark.catalog.tableExists(table))
-          appendBm25(batch, idCol, textCol, table)
-        else ingestBm25(batch, idCol, textCol, table, nBuckets)
-      }
-      ()
-    }
+    bm25Index.sink(table, idCol, textCol)(
+      ingestBm25(_, idCol, textCol, table, nBuckets))
 
   /** BM25 over an [[ingestBm25]] index: bit-identical scores and ranks
     * to [[bm25TopK]] on the same corpus (identical scoring half, and
@@ -278,10 +233,8 @@ object Retrieval {
     // tombstoned docs are excluded from BOTH posting relations, and the
     // stats sidecar was exactly recomputed at delete time — so the probe
     // is bit-identical to an ingest that never saw the deleted docs
-    val tf = graft.ops.Tombstones.filterByParent(spark, table,
-      graft.ops.Snapshots.readAsOf(spark, table, table, asOf), "doc")
-    val dl = graft.ops.Tombstones.filterByParent(spark, table,
-      graft.ops.Snapshots.readAsOf(spark, s"${table}_dl", table, asOf), "doc")
+    val tf = bm25Index.live(spark, table, asOf = asOf)
+    val dl = bm25Index.live(spark, table, "_dl", asOf)
     val (n, sumdl) = asOf match {
       case None =>
         val st = spark.table(s"${table}_stats").first()
@@ -290,8 +243,7 @@ object Retrieval {
         // the sidecar tracks the CURRENT view; a snapshot derives its
         // stats from its own length relation — exact integers, one
         // narrow batch-pruned aggregate
-        val st = dl.agg(count(lit(1)).as("n"),
-          coalesce(sum(col("dl")), lit(0L)).as("sumdl")).first()
+        val st = statsOf(dl).first()
         (st.getLong(0), st.getLong(1))
     }
     scoreBm25(tf, dl, n, sumdl,
@@ -321,27 +273,56 @@ object Retrieval {
     * retry). Idempotent by construction for the same reason.
     */
   def deleteFromBm25(spark: org.apache.spark.sql.SparkSession, table: String,
-                     ids: DataFrame): Unit = {
-    graft.ops.Tombstones.add(spark, table, ids, "doc")
-    // recount BEFORE the overwrite drops the table (first() materializes)
-    val live = graft.ops.Tombstones.filterByParent(spark, table,
-        spark.table(s"${table}_dl"), "doc")
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sumdl"))
-      .first()
-    import spark.implicits._
-    graft.ops.Bucketing.writeSmall(
-      Seq((live.getLong(0), live.getLong(1))).toDF("n", "sumdl"),
-      s"${table}_stats")
-  }
+                     ids: DataFrame): Unit = bm25Index.delete(spark, table, ids)
 
   /** Physically drop tombstoned docs from both BM25 posting tables and
     * clear the tombstone set (per-bucket local rewrites; the stats
     * sidecar was already adjusted at delete time).
     */
   def compactBm25(spark: org.apache.spark.sql.SparkSession,
-                  table: String): Unit =
-    graft.ops.Tombstones.purge(spark, table,
-      Seq(table -> "term", s"${table}_dl" -> "doc"), "doc")
+                  table: String): Unit = bm25Index.compact(spark, table)
+
+  /** The 1-row `(n, sumdl)` corpus stats of a length relation — exact
+    * integers.
+    */
+  private def statsOf(dl: DataFrame): DataFrame =
+    dl.agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sumdl"))
+
+  private def writeStats(spark: org.apache.spark.sql.SparkSession,
+                         table: String, n: Long, sumdl: Long): Unit = {
+    import spark.implicits._
+    graft.ops.Bucketing.writeSmall(Seq((n, sumdl)).toDF("n", "sumdl"),
+      s"${table}_stats")
+  }
+
+  /** BM25: the term-bucketed `(term, doc, tf)` postings, the
+    * doc-bucketed `(doc, dl)` lengths and the `(n, sumdl)` stats sidecar
+    * — no trained state (df derives from the postings at probe time).
+    * The length relation is materialized on append (two consumers: the
+    * append and the stats refresh). The stats stay exact: an append
+    * adds the batch's integers to the old row (read BEFORE the
+    * overwrite drops the table); a delete recounts them from the
+    * tombstone-filtered length table ([[deleteFromBm25]]).
+    */
+  private[graft] val bm25Index: graft.ops.PersistedIndex[Unit] =
+    graft.ops.PersistedIndex[Unit]("Bm25", "doc",
+      tables = Seq("" -> "term", "_dl" -> "doc"),
+      sidecars = Seq("_stats" -> None),
+      prepare = graft.ops.PersistedIndex.textRows, load = (_, _) => (),
+      encode = (rows, _) => {
+        val (tf, dl) = postings(rows, "doc", "text")
+        Seq(tf, dl.localCheckpoint())
+      },
+      afterAppend = (spark, table, data) => {
+        val st = spark.table(s"${table}_stats").first()
+        val bs = statsOf(data(1)).first()
+        writeStats(spark, table, st.getLong(st.fieldIndex("n")) + bs.getLong(0),
+          st.getLong(st.fieldIndex("sumdl")) + bs.getLong(1))
+      },
+      afterDelete = (spark, table) => {
+        val live = statsOf(bm25Index.live(spark, table, "_dl")).first()
+        writeStats(spark, table, live.getLong(0), live.getLong(1))
+      })
 
   /** Two-stage per-query top-k over (query_id, doc, score) — the
     * [[Similarity]] salted-merge discipline applied to retrieval: a

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.PersistedIndex
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (Array[Float]).
   *
@@ -588,13 +590,16 @@ object Similarity {
 
   /** The m per-subspace code assignments of the normalized vector in
     * `cv`, as an array<long> — the compressed representation a PQ store
-    * persists (m·log2(nCodes) meaningful bits per vector).
+    * persists (m·log2(nCodes) meaningful bits per vector). An
+    * empty-corpus index has no books and codes nothing.
     */
-  private def pqCodes(books: IndexedSeq[Seq[(Long, Seq[Double])]]): Column = {
-    val sub = books.head.head._2.length
-    array(books.indices.map(s =>
-      argminL2(slice(col("cv"), s * sub + 1, sub), books(s))): _*)
-  }
+  private def pqCodes(books: IndexedSeq[Seq[(Long, Seq[Double])]]): Column =
+    if (books.isEmpty) typedLit(Seq.empty[Long])
+    else {
+      val sub = books.head.head._2.length
+      array(books.indices.map(s =>
+        argminL2(slice(col("cv"), s * sub + 1, sub), books(s))): _*)
+    }
 
   /** Reconstruction of the full-dim approximation from the normalized
     * vector in `cv` directly (assign + look up in one expression):
@@ -676,27 +681,11 @@ object Similarity {
                m: Int, nCodes: Int, kmeansIters: Int, nBuckets: Int): Unit = {
     val c = normalizedCorpus(corpus, idCol, vecCol, kmeansIters)
     val books = pqCodebooks(c, m, nCodes, kmeansIters)
-    // empty corpus: write the empty tables with the contract schema and
-    // an empty sidecar — probes degrade to typed empty results, appends
-    // of real rows reject loudly (no quantizer to code against)
-    val codesCol =
-      if (books.isEmpty) typedLit(Seq.empty[Long]) else pqCodes(books)
-    val spark = corpus.sparkSession
-    graft.ops.Tombstones.clear(spark, table)
-    graft.ops.Snapshots.reset(spark, table)
-    graft.ops.Bucketing.writeBucketed(
-      graft.ops.Snapshots.stamp(
-        c.select(col("nn_id"), codesCol.as("codes")), 0L),
-      table, "nn_id", nBuckets)
-    graft.ops.Bucketing.writeBucketed(
-      graft.ops.Snapshots.stamp(c.select(col("nn_id"), col("cv")), 0L),
-      s"${table}_vectors", "nn_id", nBuckets)
-    import spark.implicits._
-    graft.ops.Bucketing.writeSmall(
-      books.zipWithIndex.flatMap { case (book, s) =>
-        book.map { case (cid, centv) => (s, cid, centv) }
-      }.toDF("s", "cid", "centv"), s"${table}_codebooks")
-    graft.ops.Snapshots.record(spark, table, 0L)
+    // empty corpus: empty tables with the contract schema and an empty
+    // sidecar — probes degrade to typed empty results, appends of real
+    // rows reject loudly (no quantizer to code against)
+    pqIndex.ingest(corpus.sparkSession, table, nBuckets,
+      pqIndex.encode(c, books), Seq(codebookRows(corpus.sparkSession, books)))
   }
 
   /** Append a new batch into an [[ingestPq]] index: the batch is
@@ -712,73 +701,22 @@ object Similarity {
     * distinct from index ids.
     */
   def appendPq(spark: org.apache.spark.sql.SparkSession, table: String,
-               batch: DataFrame, idCol: String, vecCol: String): Unit = {
-    val books = pqBooksOf(spark, table)
-    val c = graft.Partitioning.spread(batch)
-      .filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("nn_id"), normalize(col(vecCol)).as("cv"))
-    if (books.isEmpty) {
-      require(c.limit(1).count() == 0L,
-        s"appendPq: index '$table' has an empty codebook sidecar — an " +
-          "empty-corpus index defines no quantizer; rebuild with ingestPq")
-      return
-    }
-    // the batch is untrusted streaming input: a wrong-dim vector would
-    // be coded via silently-truncated dots (garbage codes, truncated
-    // rescore vectors) — reject loudly with a limit-1 probe, the
-    // writeWeightedEdges validation pattern. Batch-sized cost.
-    val dim = books.length * books.head.head._2.length
-    require(c.where(size(col("cv")) =!= lit(dim)).limit(1).count() == 0L,
-      s"appendPq: index '$table' codes $dim-dim vectors; batch contains " +
-        "a different length — rebuild with ingestPq or fix the batch")
-    graft.ops.Tombstones.requireNotTombstoned(spark, table, c, "nn_id")
-    val n = graft.ops.Bucketing.bucketCountOf(spark, table)
-    val b = graft.ops.Snapshots.nextBatchId(spark, table,
-      Seq(table, s"${table}_vectors"))
-    graft.ops.Bucketing.appendBucketed(
-      graft.ops.Snapshots.stamp(
-        c.select(col("nn_id"), pqCodes(books).as("codes")), b),
-      table, "nn_id", n)
-    graft.ops.Bucketing.appendBucketed(
-      graft.ops.Snapshots.stamp(c.select(col("nn_id"), col("cv")), b),
-      s"${table}_vectors", "nn_id",
-      graft.ops.Bucketing.bucketCountOf(spark, s"${table}_vectors"))
-    graft.ops.Snapshots.record(spark, table, b)
-  }
+               batch: DataFrame, idCol: String, vecCol: String): Unit =
+    pqIndex.append(spark, table, batch, idCol, vecCol)
 
   /** Exactly-once streaming maintenance of a PQ index — [[ivfSink]]'s
     * sibling: the first delivered batch builds the index ([[ingestPq]] —
     * codebooks train there and FREEZE), later batches are coded against
     * the frozen sidecar ([[appendPq]], batch-sized), and a RE-delivered
-    * batch id is a commit-log no-op (a doubled batch would append
-    * duplicate code and vector rows, and every probe top-k over them
-    * would burn ranks on duplicates). Codebook drift — rising
+    * batch id is a commit-log no-op. Codebook drift — rising
     * reconstruction error on fresh batches — remains the rebuild
     * trigger.
     */
   def pqSink(table: String, idCol: String, vecCol: String,
              m: Int, nCodes: Int, kmeansIters: Int, nBuckets: Int)
       : (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      graft.streaming.ExactlyOnce.once(spark, s"${table}_commits", batchId) {
-        // streams commonly deliver an EMPTY batch 0; training on it
-        // freezes an empty codebook sidecar, and appendPq would then
-        // reject every later real batch forever. The heal: an index
-        // whose quantizer is empty RE-ingests on the first non-empty
-        // delivery (the codebooks train there instead — an empty
-        // quantizer has coded nothing, so nothing is invalidated)
-        if (!spark.catalog.tableExists(table))
-          ingestPq(batch, idCol, vecCol, table, m, nCodes, kmeansIters,
-            nBuckets)
-        else if (spark.table(s"${table}_codebooks").limit(1).count() == 0L
-            && batch.limit(1).count() > 0L)
-          ingestPq(batch, idCol, vecCol, table, m, nCodes, kmeansIters,
-            nBuckets)
-        else appendPq(spark, table, batch, idCol, vecCol)
-      }
-      ()
-    }
+    pqIndex.sink(table, idCol, vecCol)(
+      ingestPq(_, idCol, vecCol, table, m, nCodes, kmeansIters, nBuckets))
 
   /** The codebook sidecar collected back into the literal form every
     * probe embeds in its plan — m × nCodes × sub doubles, bounded by
@@ -855,16 +793,13 @@ object Similarity {
                      k: Int, nCandidates: Int = 0, nSalts: Int = 0,
                      asOf: Option[Long] = None): DataFrame = {
     val books = pqBooksOf(spark, table)
-    val cvec = graft.ops.Tombstones.filterByParent(spark, table,
-      graft.ops.Snapshots.readAsOf(spark, s"${table}_vectors", table, asOf),
-      "nn_id")
+    val cvec = pqIndex.live(spark, table, "_vectors", asOf)
     if (books.isEmpty) {
       // empty-corpus index
       val (q, _) = prepQueries(queries, idCol, vecCol, nSalts = 1)
       return emptyTopKResult(cvec, q)
     }
-    val cq = graft.ops.Tombstones.filterByParent(spark, table,
-        graft.ops.Snapshots.readAsOf(spark, table, table, asOf), "nn_id")
+    val cq = pqIndex.live(spark, table, asOf = asOf)
       .select(col("nn_id"), pqReconstructCodes(books, col("codes")).as("dq"))
     pqServe(cq, cvec, queries, idCol, vecCol, k, nCandidates, nSalts)
   }
@@ -947,27 +882,9 @@ object Similarity {
     val c = normalizedCorpus(corpus, idCol, vecCol, kmeansIters)
     val cent = coarseQuantizer(c, nCentroids, kmeansIters)
     val books = pqCodebooks(c, m, nCodes, kmeansIters)
-    val codesCol =
-      if (books.isEmpty) typedLit(Seq.empty[Long]) else pqCodes(books)
     val spark = corpus.sparkSession
-    graft.ops.Tombstones.clear(spark, table)
-    graft.ops.Snapshots.reset(spark, table)
-    graft.ops.Bucketing.writeBucketed(
-      graft.ops.Snapshots.stamp(
-        assignClusters(c, cent).select(col("nn_id"), col("cluster"),
-          codesCol.as("codes")), 0L),
-      table, "cluster", nBuckets)
-    graft.ops.Bucketing.writeBucketed(
-      graft.ops.Snapshots.stamp(c.select(col("nn_id"), col("cv")), 0L),
-      s"${table}_vectors", "nn_id", nBuckets)
-    import spark.implicits._
-    graft.ops.Bucketing.writeSmall(
-      cent.toDF("cid", "centv"), s"${table}_centroids")
-    graft.ops.Bucketing.writeSmall(
-      books.zipWithIndex.flatMap { case (book, s) =>
-        book.map { case (cid, centv) => (s, cid, centv) }
-      }.toDF("s", "cid", "centv"), s"${table}_codebooks")
-    graft.ops.Snapshots.record(spark, table, 0L)
+    ivfpqIndex.ingest(spark, table, nBuckets, ivfpqIndex.encode(c, (cent, books)),
+      Seq(centroidRows(spark, cent), codebookRows(spark, books)))
   }
 
   /** Append a batch into an [[ingestIvfPq]] index: assignment and codes
@@ -981,37 +898,8 @@ object Similarity {
     * [[graft.ops.Tombstones]] contract).
     */
   def appendIvfPq(spark: org.apache.spark.sql.SparkSession, table: String,
-                  batch: DataFrame, idCol: String, vecCol: String): Unit = {
-    val cent: Seq[(Long, Seq[Double])] = spark.table(s"${table}_centroids")
-      .collect().toSeq.map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val books = pqBooksOf(spark, table)
-    val c = graft.Partitioning.spread(batch)
-      .filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("nn_id"), normalize(col(vecCol)).as("cv"))
-    if (books.isEmpty || cent.isEmpty) {
-      require(c.limit(1).count() == 0L,
-        s"appendIvfPq: index '$table' has an empty quantizer sidecar — an " +
-          "empty-corpus index defines no quantizer; rebuild with ingestIvfPq")
-      return
-    }
-    val dim = books.length * books.head.head._2.length
-    require(c.where(size(col("cv")) =!= lit(dim)).limit(1).count() == 0L,
-      s"appendIvfPq: index '$table' codes $dim-dim vectors; batch contains " +
-        "a different length — rebuild with ingestIvfPq or fix the batch")
-    graft.ops.Tombstones.requireNotTombstoned(spark, table, c, "nn_id")
-    val b = graft.ops.Snapshots.nextBatchId(spark, table,
-      Seq(table, s"${table}_vectors"))
-    graft.ops.Bucketing.appendBucketed(
-      graft.ops.Snapshots.stamp(
-        assignClusters(c, cent).select(col("nn_id"), col("cluster"),
-          pqCodes(books).as("codes")), b),
-      table, "cluster", graft.ops.Bucketing.bucketCountOf(spark, table))
-    graft.ops.Bucketing.appendBucketed(
-      graft.ops.Snapshots.stamp(c.select(col("nn_id"), col("cv")), b),
-      s"${table}_vectors", "nn_id",
-      graft.ops.Bucketing.bucketCountOf(spark, s"${table}_vectors"))
-    graft.ops.Snapshots.record(spark, table, b)
-  }
+                  batch: DataFrame, idCol: String, vecCol: String): Unit =
+    ivfpqIndex.append(spark, table, batch, idCol, vecCol)
 
   /** Serve a query batch against an [[ingestIvfPq]] index: both
     * sidecars ride the plan as literals, the probe reads ONLY the
@@ -1028,12 +916,9 @@ object Similarity {
     require(k >= 1 && nProbe >= 1, "k and nProbe must be positive")
     val nCand = if (nCandidates > 0) nCandidates else 4 * k
     require(nCand >= k, "nCandidates must be >= k")
-    val cent: Seq[(Long, Seq[Double])] = spark.table(s"${table}_centroids")
-      .collect().toSeq.map(r => r.getLong(0) -> r.getSeq[Double](1))
+    val cent = centroidsOf(spark, table)
     val books = pqBooksOf(spark, table)
-    val cvec = graft.ops.Tombstones.filterByParent(spark, table,
-      graft.ops.Snapshots.readAsOf(spark, s"${table}_vectors", table, asOf),
-      "nn_id")
+    val cvec = ivfpqIndex.live(spark, table, "_vectors", asOf)
     val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
     if (books.isEmpty || cent.isEmpty) return emptyTopKResult(cvec, q)
     val probes = ivfProbes(q, cent, nProbe)
@@ -1045,9 +930,8 @@ object Similarity {
     // unchanged (the join would drop the same rows); this moves the
     // drop from post-scan to the scan itself.
     val cells = probedCells(probes)
-    val coded = graft.ops.Tombstones.filterByParent(spark, table,
-        graft.ops.Snapshots.readAsOf(spark, table, table, asOf)
-          .where(col("cluster").isin(cells: _*)), "nn_id")
+    val coded = ivfpqIndex.live(spark, table, asOf = asOf)
+      .where(col("cluster").isin(cells: _*))
       .select(col("nn_id"), col("cluster"),
         pqReconstructCodes(books, col("codes")).as("dq"))
     val coarse = coded.join(broadcast(probes), Seq("cluster"))
@@ -1068,45 +952,26 @@ object Similarity {
     * delivered batch builds the index (BOTH quantizers train there and
     * FREEZE), later batches assign + code against the frozen sidecars
     * ([[appendIvfPq]], batch-sized), a RE-delivered batch id is a
-    * commit-log no-op, and an index whose quantizers trained on an
-    * empty batch 0 re-ingests on the first non-empty delivery (the
-    * empty-first-delivery heal — an empty quantizer has coded nothing,
-    * so nothing is invalidated).
+    * commit-log no-op, and an empty first delivery heals.
     */
   def ivfpqSink(table: String, idCol: String, vecCol: String,
                 nCentroids: Int, m: Int, nCodes: Int, kmeansIters: Int,
                 nBuckets: Int): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      graft.streaming.ExactlyOnce.once(spark, s"${table}_commits", batchId) {
-        if (!spark.catalog.tableExists(table))
-          ingestIvfPq(batch, idCol, vecCol, table, nCentroids, m, nCodes,
-            kmeansIters, nBuckets)
-        else if (spark.table(s"${table}_codebooks").limit(1).count() == 0L
-            && batch.limit(1).count() > 0L)
-          ingestIvfPq(batch, idCol, vecCol, table, nCentroids, m, nCodes,
-            kmeansIters, nBuckets)
-        else appendIvfPq(spark, table, batch, idCol, vecCol)
-      }
-      ()
-    }
+    ivfpqIndex.sink(table, idCol, vecCol)(ingestIvfPq(_, idCol, vecCol, table,
+      nCentroids, m, nCodes, kmeansIters, nBuckets))
 
   /** Logically delete ids from an [[ingestIvfPq]] index (probes exclude
     * them immediately; [[compactIvfPq]] drops them physically). Trained
     * state stays frozen — the append contract's mirror.
     */
   def deleteFromIvfPq(spark: org.apache.spark.sql.SparkSession, table: String,
-                      ids: DataFrame): Unit = {
-    graft.ops.Tombstones.add(spark, table, ids, "nn_id"); ()
-  }
+                      ids: DataFrame): Unit = ivfpqIndex.delete(spark, table, ids)
 
   /** Physically drop tombstoned rows from both IVF-PQ tables and clear
     * the tombstone set — a per-bucket local rewrite on each.
     */
   def compactIvfPq(spark: org.apache.spark.sql.SparkSession,
-                   table: String): Unit =
-    graft.ops.Tombstones.purge(spark, table,
-      Seq(table -> "cluster", s"${table}_vectors" -> "nn_id"), "nn_id")
+                   table: String): Unit = ivfpqIndex.compact(spark, table)
 
   // ------------------------------------------------ residual-coded IVF-PQ
 
@@ -1163,21 +1028,10 @@ object Similarity {
     val cent = coarseQuantizer(c, nCentroids, kmeansIters)
     val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
     if (cent.isEmpty) return emptyTopKResult(c, q)
-    val dim = cent.head._2.length
-    require(dim % m == 0, s"vector dim $dim not divisible by m=$m subspaces")
-    // ragged input would slice into silently-truncated residuals — the
-    // pqCodebooks guard, applied once up front (limit-1 short-circuit)
-    require(c.where(size(col("cv")) =!= lit(dim)).limit(1).count() == 0L,
-      s"topKIvfPqResidual requires uniform $dim-dim vectors; found a different length")
-    // (nn_id, cluster, rv): residual against the OWN cell's centroid —
-    // one IEEE subtraction per dimension, pinned across the training
-    // scans by normalizedCorpus' pinForReuse
+    val (resid, books) =
+      trainResidual(c, cent, m, nCodes, kmeansIters, "topKIvfPqResidual")
     val centMap = typedLit(cent.toMap)
-    val resid = assignClusters(c, cent)
-      .withColumn("rv", zip_with(col("cv"),
-        element_at(centMap, col("cluster")), (a, b) => a - b))
-    val books = residualCodebooks(resid, m, nCodes, kmeansIters, dim)
-    val sub = dim / m
+    val sub = cent.head._2.length / m
     // reconstruction: centroid + per-subspace codeword of the OWN cell's
     // codebook — assign + look up in one expression (pqReconstruct's
     // shape, cell-keyed)
@@ -1216,61 +1070,122 @@ object Similarity {
     val spark = corpus.sparkSession
     val c = normalizedCorpus(corpus, idCol, vecCol, math.max(kmeansIters, 1))
     val cent = coarseQuantizer(c, nCentroids, kmeansIters)
-    graft.ops.Tombstones.clear(spark, table)
-    graft.ops.Snapshots.reset(spark, table)
+    // empty corpus: contract-schema empty tables + empty sidecars —
+    // probes degrade to typed empty results, appends reject loudly
+    val books =
+      if (cent.isEmpty) IndexedSeq.empty[CellBook]
+      else trainResidual(c, cent, m, nCodes, kmeansIters, "ingestIvfPqResidual")._2
+    val sub = cent.headOption.fold(0)(_._2.length / m)
     import spark.implicits._
-    if (cent.isEmpty) {
-      // empty corpus: contract-schema empty tables + empty sidecars —
-      // probes degrade to typed empty results, appends reject loudly
-      graft.ops.Bucketing.writeBucketed(
-        graft.ops.Snapshots.stamp(c.select(col("nn_id"),
-          lit(0L).as("cluster"), typedLit(Seq.empty[Long]).as("codes")), 0L),
-        table, "cluster", nBuckets)
-      graft.ops.Bucketing.writeBucketed(
-        graft.ops.Snapshots.stamp(c.select(col("nn_id"), col("cv")), 0L),
-        s"${table}_vectors", "nn_id", nBuckets)
-      graft.ops.Bucketing.writeSmall(
-        Seq.empty[(Long, Seq[Double])].toDF("cid", "centv"),
-        s"${table}_centroids")
-      graft.ops.Bucketing.writeSmall(
-        Seq.empty[(Long, Int, Long, Seq[Double])].toDF("cluster", "s", "cid", "centv"),
-        s"${table}_cellbooks")
-      graft.ops.Snapshots.record(spark, table, 0L)
-      return
-    }
+    // the cellbooks sidecar is bucketed by the codes table's OWN cluster
+    // key: the table-path probe's (cluster, s, cid) lookup join then
+    // co-locates with the cluster-bucketed codes scan instead of
+    // shuffling it
+    rivfpqIndex.ingest(spark, table, nBuckets,
+      rivfpqIndex.encode(c, ResidualState(cent, residCodes(_, books, sub), false)),
+      Seq(centroidRows(spark, cent),
+        books.zipWithIndex.flatMap { case (book, s) =>
+          book.toSeq.flatMap { case (cl, cws) =>
+            cws.map { case (cid, v, _) => (cl, s, cid, v) } }
+        }.toDF("cluster", "s", "cid", "centv")))
+  }
+
+  /** The frozen state a residual append codes against: the centroids,
+    * the residual coder `(nn_id, cluster, rv) → (nn_id, cluster,
+    * codes)`, and whether the quantizer is empty.
+    */
+  private[graft] final case class ResidualState(cent: Centroids,
+                                                code: DataFrame => DataFrame,
+                                                untrained: Boolean)
+
+  /** Load a residual index's sidecars. The coder switches on the
+    * cellbooks size, as the probe does: the literal fold at or below
+    * `maxLiteralBookRows` rows (one collect, zero joins), the
+    * codebook-TABLE join above it — appends are where a production
+    * deployment codes every arriving batch, so the design-parameter-
+    * sized collect has to go here too. Bit-identical codes
+    * (AppendMaintenanceSpec pins the table parity). A centroid carried
+    * through an EMPTY cell at ingest (the k-means empty-cell rule keeps
+    * it) trained no per-cell codebook: a batch vector assigned there
+    * would get NULL codes and silently never surface in coarse ranking,
+    * so either coder rejects it loudly; the fix is a rebuild, whose
+    * seeds then cover the cell.
+    */
+  private def residualLoad(maxLiteralBookRows: Int)(
+      spark: org.apache.spark.sql.SparkSession, table: String): ResidualState = {
+    val cent = centroidsOf(spark, table)
+    val cbRows = spark.table(s"${table}_cellbooks")
+      .limit(maxLiteralBookRows + 1).collect()
+    val emptyCellMsg =
+      s"appendIvfPqResidual: index '$table' carries a centroid whose cell " +
+        "was empty at ingest (no per-cell codebook) and the batch assigns " +
+        "to it — rebuild with ingestIvfPqResidual so the books cover it"
+    def code(resid: DataFrame): DataFrame =
+      if (cbRows.length <= maxLiteralBookRows) {
+        val books = cellBooksFromRows(cbRows)
+        require(resid.where(!col("cluster")
+            .isInCollection(books.head.keySet.toSeq))
+          .limit(1).count() == 0L, emptyCellMsg)
+        residCodes(resid, books, cent.head._2.length / books.length)
+      } else {
+        val cb = spark.table(s"${table}_cellbooks")
+        require(resid.join(cb.select(col("cluster")).distinct(),
+            Seq("cluster"), "left_anti").limit(1).count() == 0L, emptyCellMsg)
+        val m = cb.agg(max(col("s"))).first().getInt(0) + 1
+        residCodesFromTable(spark, table, resid, m, cent.head._2.length / m)
+      }
+    ResidualState(cent, code, cent.isEmpty || cbRows.isEmpty)
+  }
+
+  /** The residual index: cluster-bucketed codes (empty-corpus rows keep
+    * the contract schema), id-bucketed rescore vectors, the centroid
+    * and per-cell codebook sidecars.
+    */
+  private[graft] val rivfpqIndex = PersistedIndex[ResidualState](
+    "IvfPqResidual", "nn_id",
+    tables = Seq("" -> "cluster", "_vectors" -> "nn_id"),
+    sidecars = Seq("_centroids" -> None, "_cellbooks" -> Some("cluster")),
+    prepare = vectorRows, load = residualLoad(65536),
+    encode = (c, st) => Seq(
+      if (st.cent.isEmpty) c.select(col("nn_id"), lit(0L).as("cluster"),
+        typedLit(Seq.empty[Long]).as("codes"))
+      else st.code(residualsOf(c, st.cent)),
+      c.select(col("nn_id"), col("cv"))),
+    untrained = _.untrained, dim = _.cent.headOption.map(_._2.length),
+    trainedOn = Some("_cellbooks"))
+
+  /** Train the per-cell residual codebooks over `c` under the non-empty
+    * `cent`, after the uniform-dimension guard: ragged input would slice
+    * into silently-truncated residuals (the [[pqCodebooks]] guard,
+    * applied once up front — limit-1 short-circuit). Returns the
+    * residual relation with the books.
+    */
+  private def trainResidual(c: DataFrame, cent: Centroids, m: Int, nCodes: Int,
+                            kmeansIters: Int, op: String)
+      : (DataFrame, IndexedSeq[CellBook]) = {
     val dim = cent.head._2.length
     require(dim % m == 0, s"vector dim $dim not divisible by m=$m subspaces")
     require(c.where(size(col("cv")) =!= lit(dim)).limit(1).count() == 0L,
-      s"ingestIvfPqResidual requires uniform $dim-dim vectors; found a different length")
-    val centMap = typedLit(cent.toMap)
-    val resid = assignClusters(c, cent)
-      .withColumn("rv", zip_with(col("cv"),
-        element_at(centMap, col("cluster")), (a, b) => a - b))
-    val books = residualCodebooks(resid, m, nCodes, kmeansIters, dim)
-    val sub = dim / m
-    val codesCol = array(books.indices.map(s =>
-      residArgmin(slice(col("rv"), s * sub + 1, sub), col("cluster"),
-        books(s))): _*)
-    graft.ops.Bucketing.writeBucketed(
-      graft.ops.Snapshots.stamp(
-        resid.select(col("nn_id"), col("cluster"), codesCol.as("codes")), 0L),
-      table, "cluster", nBuckets)
-    graft.ops.Bucketing.writeBucketed(
-      graft.ops.Snapshots.stamp(c.select(col("nn_id"), col("cv")), 0L),
-      s"${table}_vectors", "nn_id", nBuckets)
-    graft.ops.Bucketing.writeSmall(
-      cent.toDF("cid", "centv"), s"${table}_centroids")
-    // bucketed by the codes table's OWN cluster key: the table-path
-    // probe's (cluster, s, cid) lookup join then co-locates with the
-    // cluster-bucketed codes scan instead of shuffling it
-    graft.ops.Bucketing.writeBucketed(
-      books.zipWithIndex.flatMap { case (book, s) =>
-        book.toSeq.flatMap { case (cl, cws) =>
-          cws.map { case (cid, v, _) => (cl, s, cid, v) } }
-      }.toDF("cluster", "s", "cid", "centv"), s"${table}_cellbooks",
-      "cluster", nBuckets)
-    graft.ops.Snapshots.record(spark, table, 0L)
+      s"$op requires uniform $dim-dim vectors; found a different length")
+    val resid = residualsOf(c, cent)
+    (resid, residualCodebooks(resid, m, nCodes, kmeansIters, dim))
   }
+
+  /** `(nn_id, cv, cluster, rv)`: the residual against the OWN cell's
+    * centroid — one IEEE subtraction per dimension (pinned across the
+    * training scans by normalizedCorpus' pinForReuse).
+    */
+  private def residualsOf(c: DataFrame, cent: Centroids): DataFrame =
+    assignClusters(c, cent).withColumn("rv", zip_with(col("cv"),
+      element_at(typedLit(cent.toMap), col("cluster")), (a, b) => a - b))
+
+  /** Code a residual relation with the literal per-cell books. */
+  private def residCodes(resid: DataFrame, books: IndexedSeq[CellBook],
+                         sub: Int): DataFrame =
+    resid.select(col("nn_id"), col("cluster"),
+      array(books.indices.map(s =>
+        residArgmin(slice(col("rv"), s * sub + 1, sub), col("cluster"),
+          books(s))): _*).as("codes"))
 
   /** The per-cell codebook sidecar collected back into the
     * [[CellBook]]-per-subspace literal form (biases recomputed — exact
@@ -1279,10 +1194,6 @@ object Similarity {
     * probe below its size threshold; the probe's scale form joins the
     * TABLE instead ([[residReconFromTable]]) and never collects.
     */
-  private def cellBooksOf(spark: org.apache.spark.sql.SparkSession,
-                          table: String): IndexedSeq[CellBook] =
-    cellBooksFromRows(spark.table(s"${table}_cellbooks").collect())
-
   private def cellBooksFromRows(rows: Array[org.apache.spark.sql.Row])
       : IndexedSeq[CellBook] = {
     if (rows.isEmpty) return IndexedSeq.empty
@@ -1364,11 +1275,8 @@ object Similarity {
     */
   def ivfPqResidualCellStats(spark: org.apache.spark.sql.SparkSession,
                              table: String): DataFrame = {
-    val live = graft.ops.Tombstones.filterByParent(spark, table,
-      graft.ops.Snapshots.readAsOf(spark, table, table, None), "nn_id")
-    val vec = graft.ops.Tombstones.filterByParent(spark, table,
-      graft.ops.Snapshots.readAsOf(spark, s"${table}_vectors", table, None),
-      "nn_id")
+    val live = rivfpqIndex.live(spark, table)
+    val vec = rivfpqIndex.live(spark, table, "_vectors")
     val sse = aggregate(
       zip_with(col("cv"), col("dq"), (a, b) => (a - b) * (a - b)),
       lit(0.0d), (acc, x) => acc + x)
@@ -1399,74 +1307,9 @@ object Similarity {
   def appendIvfPqResidual(spark: org.apache.spark.sql.SparkSession,
                           table: String, batch: DataFrame, idCol: String,
                           vecCol: String,
-                          maxLiteralBookRows: Int = 65536): Unit = {
-    val cent: Seq[(Long, Seq[Double])] = spark.table(s"${table}_centroids")
-      .collect().toSeq.map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val cbRows = spark.table(s"${table}_cellbooks")
-      .limit(maxLiteralBookRows + 1).collect()
-    val c = graft.Partitioning.spread(batch)
-      .filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("nn_id"), normalize(col(vecCol)).as("cv"))
-    if (cent.isEmpty || cbRows.isEmpty) {
-      require(c.limit(1).count() == 0L,
-        s"appendIvfPqResidual: index '$table' has an empty quantizer sidecar — " +
-          "an empty-corpus index defines no quantizer; rebuild with ingestIvfPqResidual")
-      return
-    }
-    val dim = cent.head._2.length
-    require(c.where(size(col("cv")) =!= lit(dim)).limit(1).count() == 0L,
-      s"appendIvfPqResidual: index '$table' codes $dim-dim vectors; batch " +
-        "contains a different length — rebuild or fix the batch")
-    graft.ops.Tombstones.requireNotTombstoned(spark, table, c, "nn_id")
-    val centMap = typedLit(cent.toMap)
-    val resid = assignClusters(c, cent)
-      .withColumn("rv", zip_with(col("cv"),
-        element_at(centMap, col("cluster")), (a, b) => a - b))
-    // a centroid carried through an EMPTY cell at ingest (the k-means
-    // empty-cell rule keeps it) trained no per-cell codebook: coding a
-    // batch vector assigned there would produce NULL/dropped codes and
-    // the row would silently never surface in coarse ranking. Reject
-    // loudly (the dim-check contract); the fix is a rebuild, whose
-    // seeds then cover the cell
-    val emptyCellMsg =
-      s"appendIvfPqResidual: index '$table' carries a centroid whose cell " +
-        "was empty at ingest (no per-cell codebook) and the batch assigns " +
-        "to it — rebuild with ingestIvfPqResidual so the books cover it"
-    // coding path switches on the cellbooks size, as on the probe: the
-    // literal fold below the threshold (one collect, zero joins), the
-    // codebook-TABLE join above it — appends are where a production
-    // deployment codes every arriving batch, so the design-parameter-
-    // sized collect has to go here too. Bit-identical codes
-    // (AppendMaintenanceSpec pins the table parity).
-    val coded =
-      if (cbRows.length <= maxLiteralBookRows) {
-        val books = cellBooksFromRows(cbRows)
-        val sub = dim / books.length
-        require(resid.where(!col("cluster")
-            .isInCollection(books.head.keySet.toSeq))
-          .limit(1).count() == 0L, emptyCellMsg)
-        val codesCol = array(books.indices.map(s =>
-          residArgmin(slice(col("rv"), s * sub + 1, sub), col("cluster"),
-            books(s))): _*)
-        resid.select(col("nn_id"), col("cluster"), codesCol.as("codes"))
-      } else {
-        val cb = spark.table(s"${table}_cellbooks")
-        require(resid.join(cb.select(col("cluster")).distinct(),
-            Seq("cluster"), "left_anti").limit(1).count() == 0L, emptyCellMsg)
-        val m = cb.agg(max(col("s"))).first().getInt(0) + 1
-        residCodesFromTable(spark, table, resid, m, dim / m)
-      }
-    val b = graft.ops.Snapshots.nextBatchId(spark, table,
-      Seq(table, s"${table}_vectors"))
-    graft.ops.Bucketing.appendBucketed(
-      graft.ops.Snapshots.stamp(coded, b),
-      table, "cluster", graft.ops.Bucketing.bucketCountOf(spark, table))
-    graft.ops.Bucketing.appendBucketed(
-      graft.ops.Snapshots.stamp(c.select(col("nn_id"), col("cv")), b),
-      s"${table}_vectors", "nn_id",
-      graft.ops.Bucketing.bucketCountOf(spark, s"${table}_vectors"))
-    graft.ops.Snapshots.record(spark, table, b)
-  }
+                          maxLiteralBookRows: Int = 65536): Unit =
+    rivfpqIndex.copy(load = residualLoad(maxLiteralBookRows))
+      .append(spark, table, batch, idCol, vecCol)
 
   /** Code a residual relation `(nn_id, cluster, rv)` by JOINING the
     * cluster-keyed `_cellbooks` TABLE — [[residReconFromTable]]'s
@@ -1532,20 +1375,16 @@ object Similarity {
     require(k >= 1 && nProbe >= 1, "k and nProbe must be positive")
     val nCand = if (nCandidates > 0) nCandidates else 4 * k
     require(nCand >= k, "nCandidates must be >= k")
-    val cent: Seq[(Long, Seq[Double])] = spark.table(s"${table}_centroids")
-      .collect().toSeq.map(r => r.getLong(0) -> r.getSeq[Double](1))
+    val cent = centroidsOf(spark, table)
     val cbRows = spark.table(s"${table}_cellbooks")
       .limit(maxLiteralBookRows + 1).collect()
-    val cvec = graft.ops.Tombstones.filterByParent(spark, table,
-      graft.ops.Snapshots.readAsOf(spark, s"${table}_vectors", table, asOf),
-      "nn_id")
+    val cvec = rivfpqIndex.live(spark, table, "_vectors", asOf)
     val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
     if (cent.isEmpty || cbRows.isEmpty) return emptyTopKResult(cvec, q)
     val probes = ivfProbes(q, cent, nProbe)
     val cells = probedCells(probes)
-    val codesLive = graft.ops.Tombstones.filterByParent(spark, table,
-      graft.ops.Snapshots.readAsOf(spark, table, table, asOf)
-        .where(col("cluster").isin(cells: _*)), "nn_id")
+    val codesLive = rivfpqIndex.live(spark, table, asOf = asOf)
+      .where(col("cluster").isin(cells: _*))
     val coded =
       if (cbRows.length <= maxLiteralBookRows) {
         val books = cellBooksFromRows(cbRows)
@@ -1578,34 +1417,20 @@ object Similarity {
                         nCentroids: Int, m: Int, nCodes: Int,
                         kmeansIters: Int, nBuckets: Int)
       : (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      graft.streaming.ExactlyOnce.once(spark, s"${table}_commits", batchId) {
-        if (!spark.catalog.tableExists(table))
-          ingestIvfPqResidual(batch, idCol, vecCol, table, nCentroids, m,
-            nCodes, kmeansIters, nBuckets)
-        else if (spark.table(s"${table}_cellbooks").limit(1).count() == 0L
-            && batch.limit(1).count() > 0L)
-          ingestIvfPqResidual(batch, idCol, vecCol, table, nCentroids, m,
-            nCodes, kmeansIters, nBuckets)
-        else appendIvfPqResidual(spark, table, batch, idCol, vecCol)
-      }
-      ()
-    }
+    rivfpqIndex.sink(table, idCol, vecCol)(ingestIvfPqResidual(_, idCol,
+      vecCol, table, nCentroids, m, nCodes, kmeansIters, nBuckets))
 
   /** Logical delete / physical compaction for a residual IVF-PQ index —
     * the [[deleteFromIvfPq]]/[[compactIvfPq]] verbs on the same two
     * tables; frozen sidecars stay, as everywhere.
     */
   def deleteFromIvfPqResidual(spark: org.apache.spark.sql.SparkSession,
-                              table: String, ids: DataFrame): Unit = {
-    graft.ops.Tombstones.add(spark, table, ids, "nn_id"); ()
-  }
+                              table: String, ids: DataFrame): Unit =
+    rivfpqIndex.delete(spark, table, ids)
 
   def compactIvfPqResidual(spark: org.apache.spark.sql.SparkSession,
                            table: String): Unit =
-    graft.ops.Tombstones.purge(spark, table,
-      Seq(table -> "cluster", s"${table}_vectors" -> "nn_id"), "nn_id")
+    rivfpqIndex.compact(spark, table)
 
   /** Per-cell residual codebook: cluster → Seq of (cid, codeword,
     * −½‖codeword‖²) in ascending cid order — the augmented-bias form
@@ -1708,14 +1533,11 @@ object Similarity {
     * the rebuild trigger.
     */
   def deleteFromIvf(spark: org.apache.spark.sql.SparkSession, table: String,
-                    ids: DataFrame): Unit = {
-    graft.ops.Tombstones.add(spark, table, ids, "nn_id"); ()
-  }
+                    ids: DataFrame): Unit = ivfIndex.delete(spark, table, ids)
 
   /** Physical drop + tombstone clear for an IVF index. */
   def compactIvf(spark: org.apache.spark.sql.SparkSession,
-                 table: String): Unit =
-    graft.ops.Tombstones.purge(spark, table, Seq(table -> "cluster"), "nn_id")
+                 table: String): Unit = ivfIndex.compact(spark, table)
 
   /** Logically delete ids from an [[ingestLsh]] index. Band keys are a
     * pure per-vector function of the sidecar parameters — no frozen
@@ -1724,14 +1546,11 @@ object Similarity {
     * parameters; the delete gate shares the A-only oracle outright.
     */
   def deleteFromLsh(spark: org.apache.spark.sql.SparkSession, table: String,
-                    ids: DataFrame): Unit = {
-    graft.ops.Tombstones.add(spark, table, ids, "nn_id"); ()
-  }
+                    ids: DataFrame): Unit = lshIndex.delete(spark, table, ids)
 
   /** Physical drop + tombstone clear for an LSH index. */
   def compactLsh(spark: org.apache.spark.sql.SparkSession,
-                 table: String): Unit =
-    graft.ops.Tombstones.purge(spark, table, Seq(table -> "bucket"), "nn_id")
+                 table: String): Unit = lshIndex.compact(spark, table)
 
   /** Logically delete ids from an [[ingestPq]] index (codes AND rescore
     * vectors are excluded — both tables share the tombstone set).
@@ -1739,15 +1558,11 @@ object Similarity {
     * live rows remains the rebuild trigger.
     */
   def deleteFromPq(spark: org.apache.spark.sql.SparkSession, table: String,
-                   ids: DataFrame): Unit = {
-    graft.ops.Tombstones.add(spark, table, ids, "nn_id"); ()
-  }
+                   ids: DataFrame): Unit = pqIndex.delete(spark, table, ids)
 
   /** Physical drop + tombstone clear for a PQ index (both tables). */
   def compactPq(spark: org.apache.spark.sql.SparkSession,
-                table: String): Unit =
-    graft.ops.Tombstones.purge(spark, table,
-      Seq(table -> "nn_id", s"${table}_vectors" -> "nn_id"), "nn_id")
+                table: String): Unit = pqIndex.compact(spark, table)
 
   /** Maximal-marginal-relevance (MMR, Carbonell & Goldstein 1998)
     * diversified reranking: from a scored candidate list per query,
@@ -2256,19 +2071,8 @@ object Similarity {
   def ingestIvf(corpus: DataFrame, idCol: String, vecCol: String, table: String,
                 nCentroids: Int, kmeansIters: Int, nBuckets: Int): Unit = {
     val (c, cent) = quantizedCorpus(corpus, idCol, vecCol, nCentroids, kmeansIters)
-    // a rebuild starts with no deletes — a stale tombstone set would
-    // silently hide re-ingested rows from every probe — and a fresh
-    // snapshot timeline (this IS batch 0)
-    val spark = corpus.sparkSession
-    graft.ops.Tombstones.clear(spark, table)
-    graft.ops.Snapshots.reset(spark, table)
-    graft.ops.Bucketing.writeBucketed(
-      graft.ops.Snapshots.stamp(assignClusters(c, cent), 0L), table,
-      "cluster", nBuckets)
-    import spark.implicits._
-    graft.ops.Bucketing.writeSmall(
-      cent.toDF("cid", "centv"), s"${table}_centroids")
-    graft.ops.Snapshots.record(spark, table, 0L)
+    ivfIndex.ingest(corpus.sparkSession, table, nBuckets, ivfIndex.encode(c, cent),
+      Seq(centroidRows(corpus.sparkSession, cent)))
   }
 
   /** Append a new batch into an [[ingestIvf]] index — the maintenance
@@ -2295,31 +2099,8 @@ object Similarity {
     * index rows). Same single-writer contract as the ingest.
     */
   def appendIvf(spark: org.apache.spark.sql.SparkSession, table: String,
-                batch: DataFrame, idCol: String, vecCol: String): Unit = {
-    val cent: Seq[(Long, Seq[Double])] = spark.table(s"${table}_centroids")
-      .collect().toSeq.map(r => r.getLong(0) -> r.getSeq[Double](1))
-    val c = graft.Partitioning.spread(batch)
-      .filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("nn_id"), normalize(col(vecCol)).as("cv"))
-    if (cent.isEmpty) {
-      // an empty-corpus index defines no quantizer. Appending NOTHING
-      // to it is a legitimate no-op (the empty-pipeline degradation
-      // every gate promises); appending actual rows would write
-      // unassignable vectors — reject loudly, rebuild with ingestIvf
-      require(c.limit(1).count() == 0L,
-        s"appendIvf: index '$table' has an empty centroid sidecar — an " +
-          "empty-corpus index defines no quantizer; rebuild with ingestIvf")
-      return
-    }
-    // a tombstoned id must not silently re-enter (its rows would be
-    // probe-invisible) — loud guard, zero-cost when nothing was deleted
-    graft.ops.Tombstones.requireNotTombstoned(spark, table, c, "nn_id")
-    val b = graft.ops.Snapshots.nextBatchId(spark, table, Seq(table))
-    graft.ops.Bucketing.appendBucketed(
-      graft.ops.Snapshots.stamp(assignClusters(c, cent), b), table,
-      "cluster", graft.ops.Bucketing.bucketCountOf(spark, table))
-    graft.ops.Snapshots.record(spark, table, b)
-  }
+                batch: DataFrame, idCol: String, vecCol: String): Unit =
+    ivfIndex.append(spark, table, batch, idCol, vecCol)
 
   /** Exactly-once streaming maintenance of an IVF index —
     * [[graft.llm.Retrieval.bm25Sink]]'s sibling: the first delivered
@@ -2335,24 +2116,8 @@ object Similarity {
   def ivfSink(table: String, idCol: String, vecCol: String,
               nCentroids: Int, kmeansIters: Int, nBuckets: Int)
       : (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      graft.streaming.ExactlyOnce.once(spark, s"${table}_commits", batchId) {
-        // empty-first-delivery heal, as in [[pqSink]]: an index whose
-        // centroid sidecar is empty (trained on an empty batch 0)
-        // re-ingests on the first non-empty delivery instead of
-        // rejecting every real batch forever
-        if (!spark.catalog.tableExists(table))
-          ingestIvf(batch, idCol, vecCol, table, nCentroids, kmeansIters,
-            nBuckets)
-        else if (spark.table(s"${table}_centroids").limit(1).count() == 0L
-            && batch.limit(1).count() > 0L)
-          ingestIvf(batch, idCol, vecCol, table, nCentroids, kmeansIters,
-            nBuckets)
-        else appendIvf(spark, table, batch, idCol, vecCol)
-      }
-      ()
-    }
+    ivfIndex.sink(table, idCol, vecCol)(
+      ingestIvf(_, idCol, vecCol, table, nCentroids, kmeansIters, nBuckets))
 
   /** Serve a query batch against an [[ingestIvf]] index: the centroid
     * sidecar (nCentroids × dim by construction) is collected once and
@@ -2368,8 +2133,7 @@ object Similarity {
                       queries: DataFrame, idCol: String, vecCol: String,
                       k: Int, nProbe: Int = 4, nSalts: Int = 0,
                       asOf: Option[Long] = None): DataFrame = {
-    val cent: Seq[(Long, Seq[Double])] = spark.table(s"${table}_centroids")
-      .collect().toSeq.map(r => r.getLong(0) -> r.getSeq[Double](1))
+    val cent = centroidsOf(spark, table)
     val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
     if (cent.isEmpty) {
       // an index built over an EMPTY corpus has no centroids and no
@@ -2383,9 +2147,8 @@ object Similarity {
     // IN literal lets the cluster-bucketed scan prune files instead of
     // reading every cell and discarding post-join
     val cells = probedCells(probes)
-    val assign = graft.ops.Tombstones.filterByParent(spark, table,
-      graft.ops.Snapshots.readAsOf(spark, table, table, asOf)
-        .where(col("cluster").isin(cells: _*)), "nn_id")
+    val assign = ivfIndex.live(spark, table, asOf = asOf)
+      .where(col("cluster").isin(cells: _*))
     val scored = assign.join(broadcast(probes), Seq("cluster"))
       .filter(col("nn_id") =!= col("query_id"))
       .withColumn("score", graft.Num.r6(dot(col("cv"), col("qv"))))
@@ -2408,18 +2171,11 @@ object Similarity {
   def ingestLsh(corpus: DataFrame, idCol: String, vecCol: String, table: String,
                 nPlanes: Int, nTables: Int, nBuckets: Int): Unit = {
     require(nPlanes >= 1 && nTables >= 1, "nPlanes/nTables must be positive")
-    val c0 = graft.Partitioning.spread(corpus)
-      .select(col(idCol).as("nn_id"), normalize(col(vecCol)).as("cv"))
     val spark = corpus.sparkSession
-    graft.ops.Tombstones.clear(spark, table)
-    graft.ops.Snapshots.reset(spark, table)
-    graft.ops.Bucketing.writeBucketed(
-      graft.ops.Snapshots.stamp(tabled(c0, "cv", nPlanes, nTables), 0L),
-      table, "bucket", nBuckets)
     import spark.implicits._
-    graft.ops.Bucketing.writeSmall(
-      Seq((nPlanes, nTables)).toDF("nplanes", "ntables"), s"${table}_meta")
-    graft.ops.Snapshots.record(spark, table, 0L)
+    lshIndex.ingest(spark, table, nBuckets,
+      lshIndex.encode(vectorRows(corpus, idCol, vecCol), (nPlanes, nTables)),
+      Seq(Seq((nPlanes, nTables)).toDF("nplanes", "ntables")))
   }
 
   /** Append a new batch into an [[ingestLsh]] index — the maintenance
@@ -2435,19 +2191,8 @@ object Similarity {
     * distinct from index ids. Same single-writer contract.
     */
   def appendLsh(spark: org.apache.spark.sql.SparkSession, table: String,
-                batch: DataFrame, idCol: String, vecCol: String): Unit = {
-    val meta = spark.table(s"${table}_meta").first()
-    val nPlanes = meta.getInt(meta.fieldIndex("nplanes"))
-    val nTables = meta.getInt(meta.fieldIndex("ntables"))
-    val c = graft.Partitioning.spread(batch)
-      .select(col(idCol).as("nn_id"), normalize(col(vecCol)).as("cv"))
-    graft.ops.Tombstones.requireNotTombstoned(spark, table, c, "nn_id")
-    val b = graft.ops.Snapshots.nextBatchId(spark, table, Seq(table))
-    graft.ops.Bucketing.appendBucketed(
-      graft.ops.Snapshots.stamp(tabled(c, "cv", nPlanes, nTables), b),
-      table, "bucket", graft.ops.Bucketing.bucketCountOf(spark, table))
-    graft.ops.Snapshots.record(spark, table, b)
-  }
+                batch: DataFrame, idCol: String, vecCol: String): Unit =
+    lshIndex.append(spark, table, batch, idCol, vecCol)
 
   /** Exactly-once streaming maintenance of an LSH index — the fourth
     * and simplest sink of the family: band keys are a pure function of
@@ -2461,15 +2206,98 @@ object Similarity {
   def lshSink(table: String, idCol: String, vecCol: String,
               nPlanes: Int, nTables: Int, nBuckets: Int)
       : (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      graft.streaming.ExactlyOnce.once(spark, s"${table}_commits", batchId) {
-        if (spark.catalog.tableExists(table))
-          appendLsh(spark, table, batch, idCol, vecCol)
-        else ingestLsh(batch, idCol, vecCol, table, nPlanes, nTables, nBuckets)
-      }
-      ()
-    }
+    lshIndex.sink(table, idCol, vecCol)(
+      ingestLsh(_, idCol, vecCol, table, nPlanes, nTables, nBuckets))
+
+  // ------------------------------------------------ persisted index families
+
+  private type Centroids = Seq[(Long, Seq[Double])]
+  private type Books = IndexedSeq[Seq[(Long, Seq[Double])]]
+
+  /** The `(nn_id, cv)` relation every vector family codes: null vectors
+    * dropped (no similarity is defined), ids renamed, vectors
+    * normalized — [[normalizedCorpus]] without the training pin.
+    */
+  private def vectorRows(batch: DataFrame, idCol: String,
+                         vecCol: String): DataFrame =
+    normalizedCorpus(batch, idCol, vecCol, kmeansIters = 0)
+
+  /** The centroid sidecar as the literal every assignment embeds —
+    * nCentroids × dim, bounded by the index parameters.
+    */
+  private def centroidsOf(spark: org.apache.spark.sql.SparkSession,
+                          table: String): Centroids =
+    spark.table(s"${table}_centroids")
+      .collect().toSeq.map(r => r.getLong(0) -> r.getSeq[Double](1))
+
+  private def centroidRows(spark: org.apache.spark.sql.SparkSession,
+                           cent: Centroids): DataFrame = {
+    import spark.implicits._
+    cent.toDF("cid", "centv")
+  }
+
+  private def codebookRows(spark: org.apache.spark.sql.SparkSession,
+                           books: Books): DataFrame = {
+    import spark.implicits._
+    books.zipWithIndex.flatMap { case (book, s) =>
+      book.map { case (cid, centv) => (s, cid, centv) }
+    }.toDF("s", "cid", "centv")
+  }
+
+  /** IVF: the assigned corpus `(nn_id, cv, cluster)` bucketed by cluster
+    * plus the centroid sidecar.
+    */
+  private[graft] val ivfIndex = PersistedIndex[Centroids]("Ivf", "nn_id",
+    tables = Seq("" -> "cluster"), sidecars = Seq("_centroids" -> None),
+    prepare = vectorRows, load = centroidsOf,
+    encode = (c, cent) => Seq(assignClusters(c, cent)),
+    untrained = _.isEmpty, dim = _.headOption.map(_._2.length),
+    trainedOn = Some("_centroids"))
+
+  /** LSH: the banded relation `(nn_id, cv, tbl, bucket)` bucketed by
+    * bucket plus the `(nplanes, ntables)` sidecar — no corpus-trained
+    * state, so nothing to heal and no dimension to check.
+    */
+  private[graft] val lshIndex = PersistedIndex[(Int, Int)]("Lsh", "nn_id",
+    tables = Seq("" -> "bucket"), sidecars = Seq("_meta" -> None),
+    prepare = vectorRows,
+    load = (spark, table) => {
+      val meta = spark.table(s"${table}_meta").first()
+      (meta.getInt(meta.fieldIndex("nplanes")),
+        meta.getInt(meta.fieldIndex("ntables")))
+    },
+    encode = { case (c, (nPlanes, nTables)) =>
+      Seq(tabled(c, "cv", nPlanes, nTables)) })
+
+  /** PQ: id-bucketed `(nn_id, codes)` and `(nn_id, cv)` rescore tables
+    * plus the `(s, cid, centv)` codebook sidecar.
+    */
+  private[graft] val pqIndex = PersistedIndex[Books]("Pq", "nn_id",
+    tables = Seq("" -> "nn_id", "_vectors" -> "nn_id"),
+    sidecars = Seq("_codebooks" -> None),
+    prepare = vectorRows, load = pqBooksOf,
+    encode = (c, books) => Seq(
+      c.select(col("nn_id"), pqCodes(books).as("codes")),
+      c.select(col("nn_id"), col("cv"))),
+    untrained = _.isEmpty,
+    dim = books => books.headOption.map(books.length * _.head._2.length),
+    trainedOn = Some("_codebooks"))
+
+  /** IVF-PQ: cluster-bucketed `(nn_id, cluster, codes)`, id-bucketed
+    * rescore vectors, both quantizer sidecars.
+    */
+  private[graft] val ivfpqIndex = PersistedIndex[(Centroids, Books)](
+    "IvfPq", "nn_id",
+    tables = Seq("" -> "cluster", "_vectors" -> "nn_id"),
+    sidecars = Seq("_centroids" -> None, "_codebooks" -> None),
+    prepare = vectorRows,
+    load = (spark, table) => (centroidsOf(spark, table), pqBooksOf(spark, table)),
+    encode = { case (c, (cent, books)) => Seq(
+      assignClusters(c, cent).select(col("nn_id"), col("cluster"),
+        pqCodes(books).as("codes")),
+      c.select(col("nn_id"), col("cv"))) },
+    untrained = { case (cent, books) => cent.isEmpty || books.isEmpty },
+    dim = st => pqIndex.dim(st._2), trainedOn = Some("_codebooks"))
 
   /** Per-cluster membership counts of an [[ingestIvf]]/[[appendIvf]]
     * index — the CENTROID-DRIFT monitor the append contract names as
@@ -2487,8 +2315,7 @@ object Similarity {
                       table: String): DataFrame =
     spark.table(s"${table}_centroids")
       .select(col("cid").as("cluster"))
-      .join(graft.ops.Tombstones.filterByParent(spark, table,
-          graft.ops.Snapshots.readAsOf(spark, table, table, None), "nn_id")
+      .join(ivfIndex.live(spark, table)
         .groupBy(col("cluster"))
         .agg(count(lit(1)).as("n")), Seq("cluster"), "left")
       .select(col("cluster"), coalesce(col("n"), lit(0L)).as("n_members"))
@@ -2505,11 +2332,8 @@ object Similarity {
                       queries: DataFrame, idCol: String, vecCol: String,
                       k: Int, nSalts: Int = 0,
                       asOf: Option[Long] = None): DataFrame = {
-    val meta = spark.table(s"${table}_meta").first()
-    val nPlanes = meta.getInt(meta.fieldIndex("nplanes"))
-    val nTables = meta.getInt(meta.fieldIndex("ntables"))
-    val banded = graft.ops.Tombstones.filterByParent(spark, table,
-      graft.ops.Snapshots.readAsOf(spark, table, table, asOf), "nn_id")
+    val (nPlanes, nTables) = lshIndex.load(spark, table)
+    val banded = lshIndex.live(spark, table, asOf = asOf)
     val (q0, salts) = prepQueries(queries, idCol, vecCol, nSalts, floor = 1L)
     val matched = banded
       .join(broadcast(tabled(q0, "qv", nPlanes, nTables)), Seq("tbl", "bucket"))

@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   * BOTH the `<parent>_batches` sidecar (one row per completed batch —
   * batches-per-deployment-sized) AND the stamped data tables, so a
   * crashed append's id is never reused ([[nextBatchId]]'s contract).
-  * The streaming sinks route through the same ingest/append paths, so
-  * streamed indexes snapshot identically; note the snapshot sequence is
+  * Every family stamps and records through [[PersistedIndex]], whose
+  * sink routes through the same ingest/append verbs, so streamed
+  * indexes snapshot identically; note the snapshot sequence is
   * this sidecar's, not the stream's commit-log batch ids (a replayed
   * stream batch is a commit-log no-op and consumes no snapshot id).
   *
@@ -128,9 +129,9 @@ object Snapshots {
       .format("parquet").saveAsTable(bt)
   }
 
-  /** Drop the batch history — every `ingest*` rebuild calls this before
-    * re-stamping from 0 (a rebuilt index starts a fresh timeline; stale
-    * history would mislabel the new batch 0 rows).
+  /** Drop the batch history — [[PersistedIndex.ingest]] calls this on
+    * every rebuild before re-stamping from 0 (a rebuilt index starts a
+    * fresh timeline; stale history would mislabel the new batch 0 rows).
     */
   def reset(spark: SparkSession, parent: String): Unit =
     Bucketing.dropManaged(spark, batchesTable(parent))

@@ -84,9 +84,9 @@ object Tombstones {
     else rel
   }
 
-  /** LOUD guard for the append paths: a tombstoned id that re-appends
-    * writes rows every probe silently hides — the batch looks ingested
-    * and is invisible, the worst failure class. Callers pass the
+  /** LOUD guard for [[PersistedIndex.append]]: a tombstoned id that
+    * re-appends writes rows every probe silently hides — the batch looks
+    * ingested and is invisible, the worst failure class. Callers pass the
     * incoming batch's id relation; cost is one batch-sized semi-join
     * probe, and ZERO when no delete has ever happened (no tombstone
     * table — the overwhelmingly common case).
@@ -103,10 +103,10 @@ object Tombstones {
         "purge (compact) or rebuild (ingest) before re-admitting deleted ids")
   }
 
-  /** Drop the tombstone set of `parent` — every `ingest*` rebuild calls
-    * this (a rebuilt index starts with no deletes; a stale tombstone
-    * table would silently hide re-ingested rows), and [[purge]] calls
-    * it after the physical drop.
+  /** Drop the tombstone set of `parent` — [[PersistedIndex.ingest]]
+    * calls this on every rebuild (a rebuilt index starts with no
+    * deletes; a stale tombstone table would silently hide re-ingested
+    * rows), and [[purge]] calls it after the physical drop.
     */
   def clear(spark: SparkSession, parent: String): Unit =
     Bucketing.dropManaged(spark, tableOf(parent))
