@@ -171,7 +171,7 @@ object Scaling {
     }
 
     // SPARK_GRAFT_PARTSCALE: comma-separated queries to RE-time with
-    // spark.sql.shuffle.partitions scaled ∝ factor (32·f) — the one
+    // the shuffle-partition count scaled ∝ factor (32·f) — the one
     // knob a real cluster scales with executor count but the local
     // harness otherwise pins, separating "the plan scales" from "the
     // partition count scales" (e.g. how much of plain pageRank's
@@ -193,10 +193,10 @@ object Scaling {
       emit("scaling", f, dir, timeSet(only, dir, f, ""))
 
       if (partScale.nonEmpty) {
-        val base = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", (base.toInt * f).toString)
+        val base = Partitioning.shufflePartitions(spark)
+        spark.conf.set("spark.sql.shuffle.partitions", (base * f).toString)
         try emit("scaling_partscaled", f, dir, timeSet(partScale, dir, f, " partscaled"))
-        finally spark.conf.set("spark.sql.shuffle.partitions", base)
+        finally spark.conf.set("spark.sql.shuffle.partitions", base.toString)
       }
 
       // SPARK_GRAFT_CLUSTERED=1: time the LSH-candidate operators against

@@ -729,31 +729,26 @@ object Dedup {
                           maxIter: Int = 25): DataFrame = {
     // materialize the (possibly expensive) pair pipeline ONCE before the
     // bidirectional union references it twice — without this the whole
-    // upstream candidate-generation DAG runs double
-    val p = pairs.select(col(d1).as("a"), col(d2).as("b")).localCheckpoint()
-    // SCALE-ADAPTIVE key partition count (guide §2): the keyed claims
-    // below pin the per-round joins at plain hash(·, n) — a layout AQE
-    // neither coalesces nor re-plans to broadcast — so a count fixed at
-    // spark.sql.shuffle.partitions would run every round of a 25-pair
-    // dedup graph as 32-task SMJ stages (measured +30% on the cc
-    // composites at sf0.1). Derive n from the materialized pair count
-    // (the count reads the checkpoint — no recompute): ~250k edge rows
-    // per partition, capped at the session's shuffle parallelism, so
-    // tiny graphs run single-task rounds and corpus-scale graphs keep
-    // full parallelism.
-    val keyParts = Some(math.min(
-      pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong,
-      p.count() * 2L / 250000L + 1L).toInt)
+    // upstream candidate-generation DAG runs double. The sized checkpoint
+    // reports the pairs actually materialized, so the edge relation's
+    // size estimate below is grounded in rows, not in the candidate
+    // joins' product estimate
+    val p = org.apache.spark.sql.GraftBridge.localCheckpointSized(
+      pairs.select(col(d1).as("a"), col(d2).as("b")))
     // the static edge relation is KEYED on dst — the per-round join key
     // — through the partitioning-preserving checkpoint (the Graph.scala
     // iterate pattern, guide §2.4): a plain localCheckpoint degrades to
     // UnknownPartitioning under AQE, so every propagation round would
     // re-Exchange + re-Sort the |E|-sized edge list the materialization
-    // already laid out
-    val edges = graft.Partitioning.checkpointKeyed(
-      p.select(col("a").as("src"), col("b").as("dst"))
-        .union(p.select(col("b").as("src"), col("a").as("dst")))
-        .distinct(), "dst", keyParts)
+    // already laid out. Its count is Partitioning.partsFor of the
+    // distinct edge relation, so a tiny dedup graph runs single-task
+    // rounds; the labels below are keyed at the SAME count to stay
+    // aligned.
+    val distinctEdges = p.select(col("a").as("src"), col("b").as("dst"))
+      .union(p.select(col("b").as("src"), col("a").as("dst")))
+      .distinct()
+    val keyParts = Some(graft.Partitioning.partsFor(distinctEdges))
+    val edges = graft.Partitioning.checkpointKeyed(distinctEdges, "dst", keyParts)
     // iteration 1 fused into initialization: with identity labels the
     // first round's neighbor-min is exactly groupBy(src).min(dst) over
     // the bidirectional edge list (which also enumerates every node),

@@ -30,19 +30,20 @@ object Bucketing {
     * contract — joins co-locate only across tables sharing (key, n).
     *
     * The input is CLUSTERED to one partition per bucket before the
-    * write (`cluster = true`, the default): a bucketed write fans each
-    * input task out into one file per bucket it holds rows for, so an
-    * unclustered write emits up to tasks × buckets files — the
-    * many-small-files problem of guide §6 (slower scans, and
-    * files-per-bucket > 1 forfeits the merge join's sort elision).
-    * `repartition(n, key)` uses the SAME hash+pmod placement as the
-    * bucket-id assignment, so each write task holds exactly one whole
-    * bucket and emits exactly one file — the Iceberg
+    * write: a bucketed write fans each input task out into one file per
+    * bucket it holds rows for, so an unclustered write emits up to
+    * tasks × buckets files — the many-small-files problem of guide §6
+    * (slower scans, and files-per-bucket > 1 forfeits the merge join's
+    * sort elision). `repartition(n, key)` uses the SAME hash+pmod
+    * placement as the bucket-id assignment, so each write task holds
+    * exactly one whole bucket and emits exactly one file — the Iceberg
     * `write.distribution-mode=hash` trade: one exchange at ingest buys
-    * every later scan/join the compacted layout. Compaction paths pass
-    * `cluster = false`: their input is a forced bucketed scan already
-    * holding one partition per bucket, and the exchange-free local
-    * rewrite is the point of that path.
+    * every later scan/join the compacted layout. Input ALREADY laid out
+    * by the bucket key at `n` pays nothing: Spark drops a
+    * `repartition(n, key)` whose child already has that hash layout, so
+    * a compaction over a forced bucketed scan, or an aggregation by the
+    * key over a bucketed scan, rewrites bucket-locally with no exchange
+    * (pinned in PartitioningSpec).
     *
     * SINGLE WRITER PER TABLE NAME: the drop + location-delete +
     * saveAsTable sequence below is not atomic, so two concurrent
@@ -53,20 +54,17 @@ object Bucketing {
     * tables) and running same-dir suites sequentially. Concurrent
     * writers of DIFFERENT names are safe.
     */
-  def writeBucketed(df: DataFrame, table: String, key: String, nBuckets: Int,
-                    cluster: Boolean = true): Unit = {
+  def writeBucketed(df: DataFrame, table: String, key: String, nBuckets: Int): Unit = {
     require(nBuckets > 0, "nBuckets must be positive")
     dropManaged(df.sparkSession, table)
-    clustered(df, key, nBuckets, cluster).write.mode("overwrite")
-      .bucketBy(nBuckets, key).sortBy(key)
-      .format("parquet").saveAsTable(table)
+    write(df, "overwrite", table, key, nBuckets)
   }
 
-  private def clustered(df: DataFrame, key: String, nBuckets: Int,
-                        cluster: Boolean): DataFrame =
-    if (cluster)
-      df.repartition(nBuckets, org.apache.spark.sql.functions.col(key))
-    else df
+  private def write(df: DataFrame, mode: String, table: String, key: String,
+                    nBuckets: Int): Unit =
+    df.repartition(nBuckets, org.apache.spark.sql.functions.col(key))
+      .write.mode(mode).bucketBy(nBuckets, key).sortBy(key)
+      .format("parquet").saveAsTable(table)
 
   /** DROP TABLE IF EXISTS plus default-location cleanup. A managed-table
     * dir left behind by a previous JVM is invisible to this JVM's fresh
@@ -91,12 +89,9 @@ object Bucketing {
     * (a `foreachBatch` sink can call this per micro-batch). Same
     * single-writer-per-table contract as [[writeBucketed]].
     */
-  def appendBucketed(df: DataFrame, table: String, key: String, nBuckets: Int,
-                     cluster: Boolean = true): Unit = {
+  def appendBucketed(df: DataFrame, table: String, key: String, nBuckets: Int): Unit = {
     require(nBuckets > 0, "nBuckets must be positive")
-    clustered(df, key, nBuckets, cluster).write.mode("append")
-      .bucketBy(nBuckets, key).sortBy(key)
-      .format("parquet").saveAsTable(table)
+    write(df, "append", table, key, nBuckets)
   }
 
   /** The bucket count a [[writeBucketed]] table was written with, read
@@ -132,10 +127,11 @@ object Bucketing {
     * EXCHANGE-FREE by the bucketed layout: the scan of a bucketed table
     * yields one partition per bucket (all of a bucket's files merged),
     * so each write task holds exactly one whole bucket and emits exactly
-    * one file — a per-bucket local rewrite, no shuffle (BucketingSpec
-    * asserts the no-Exchange plan and content identity). The rewrite
-    * goes to a staging table first, then swaps via catalog rename —
-    * never a read-from-self overwrite. Same single-writer contract.
+    * one file — a per-bucket local rewrite, no shuffle (the writer's
+    * clustering is elided: PartitioningSpec asserts the exchange-free
+    * plan, AppendMaintenanceSpec content identity). The rewrite goes to
+    * a staging table first, then swaps via catalog rename — never a
+    * read-from-self overwrite. Same single-writer contract.
     */
   def compactBucketed(spark: SparkSession, table: String, key: String): Unit =
     compactBucketedWith(spark, table, key, identity)
@@ -146,14 +142,13 @@ object Bucketing {
     * re-keying — the output is written bucketed on the SAME key) so the
     * per-bucket locality claim still holds; a broadcast anti-join
     * preserves the bucketed scan's one-partition-per-bucket shape, a
-    * shuffling transform would merely degrade output file counts, never
-    * correctness.
+    * shuffling transform would merely cost the writer a clustering
+    * exchange, never correctness.
     */
   def compactBucketedWith(spark: SparkSession, table: String, key: String,
                           transform: DataFrame => DataFrame): Unit =
     compactBucketedStaged(spark, table, key) { (tmp, n) =>
-      writeBucketed(transform(spark.table(table)), tmp, key, n,
-        cluster = false)
+      writeBucketed(transform(spark.table(table)), tmp, key, n)
     }
 
   /** The staged-publish skeleton [[compactBucketedWith]] and

@@ -65,9 +65,16 @@ object Graph {
     * @return (node: long, rank: double) — ranks on the 1e-6 grid, sum ≈ 1.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, damping: Double = 0.85d, tol: Double = 0.0d): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
+               iters: Int, damping: Double = 0.85d, tol: Double = 0.0d): DataFrame =
+    pageRankCounted(edges, srcCol, dstCol, iters, damping, tol)._1
+
+  /** [[pageRank]] plus the number of iterations actually run — the
+    * observable GraphSpec's convergence pins assert against.
+    */
+  private[graft] def pageRankCounted(edges: DataFrame, srcCol: String, dstCol: String,
+                                     iters: Int, damping: Double = 0.85d,
+                                     tol: Double = 0.0d): (DataFrame, Int) = {
+    val e = longEdges(edges, srcCol, dstCol)
     // deg-attach stays the join form DELIBERATELY (measured this
     // round): a single-pass window rewrite (repartition(P, src) +
     // count over partitionBy(src)) halves the edge-DAG evaluations on
@@ -76,19 +83,7 @@ object Graph {
     // where the window pays a full |E| sort+buffer per call. Bench:
     // graph_pagerank 3.25 s → 5.80 s with the window form; reverted.
     val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-    iterate(graft.Partitioning.checkpointKeyed(e.join(deg, "src"), "src"), iters, damping, tol)._1
-  }
-
-  /** [[pageRank]] plus the number of iterations actually run — the
-    * observable GraphSpec's convergence pins assert against.
-    */
-  private[graft] def pageRankCounted(edges: DataFrame, srcCol: String, dstCol: String,
-                                     iters: Int, damping: Double = 0.85d,
-                                     tol: Double = 0.0d): (DataFrame, Int) = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-    iterate(graft.Partitioning.checkpointKeyed(e.join(deg, "src"), "src"), iters, damping, tol)
+    iterate(e.join(deg, "src"), iters, damping, tol)
   }
 
   /** Write the degree-annotated edge relation `(src, dst, deg)` as a
@@ -100,8 +95,7 @@ object Graph {
     */
   def writeEdges(edges: DataFrame, srcCol: String, dstCol: String,
                  table: String, nBuckets: Int): Unit = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
+    val e = longEdges(edges, srcCol, dstCol)
     val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
     Bucketing.writeBucketed(e.join(deg, "src"), table, "src", nBuckets)
   }
@@ -126,18 +120,16 @@ object Graph {
   def ingestEdges(edges: DataFrame, srcCol: String, dstCol: String,
                   logTable: String, degTable: String, nBuckets: Int): Unit = {
     val spark = edges.sparkSession
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
+    val e = longEdges(edges, srcCol, dstCol)
     if (spark.catalog.tableExists(logTable))
       Bucketing.appendBucketed(e, logTable, "src", nBuckets)
     else
       Bucketing.writeBucketed(e, logTable, "src", nBuckets)
     val deg = spark.table(logTable).groupBy("src")
       .agg(count(lit(1)).cast("double").as("deg"))
-    // cluster = false: the aggregation over the src-bucketed log scan
-    // is already one-partition-per-bucket — re-clustering would add a
-    // redundant exchange for a layout the rows already have
-    Bucketing.writeBucketed(deg, degTable, "src", nBuckets, cluster = false)
+    // the aggregation over the src-bucketed log scan is already
+    // one-partition-per-bucket, so the writer's clustering is elided
+    Bucketing.writeBucketed(deg, degTable, "src", nBuckets)
   }
 
   /** PageRank over an [[ingestEdges]] log: the log⋈degrees join is
@@ -196,14 +188,10 @@ object Graph {
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
                        wCol: String, iters: Int, damping: Double = 0.85d,
                        tol: Double = 0.0d): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"),
-        floor(col(wCol).cast("double") * lit(1000000.0d) + lit(0.5d))
-          .cast("long").as("wmu"))
+    val e = microEdges(edges, srcCol, dstCol, wCol)
       .where(col("wmu") > 0L)
     val deg = e.groupBy("src").agg(sum(col("wmu")).as("degmu"))
-    iterate(graft.Partitioning.checkpointKeyed(e.join(deg, "src"), "src"),
-      iters, damping, tol,
+    iterate(e.join(deg, "src"), iters, damping, tol,
       contrib = col("rank") * col("wmu").cast("double")
         / col("degmu").cast("double"))._1
   }
@@ -224,10 +212,7 @@ object Graph {
     */
   def writeWeightedEdges(edges: DataFrame, srcCol: String, dstCol: String,
                          wCol: String, table: String, nBuckets: Int): Unit = {
-    val e0 = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"),
-      floor(col(wCol).cast("double") * lit(1000000.0d) + lit(0.5d))
-        .cast("long").as("wmu"))
+    val e0 = microEdges(edges, srcCol, dstCol, wCol)
     require(e0.where(col("wmu") < 0L).limit(1).count() == 0L,
       "writeWeightedEdges requires non-negative edge weights")
     val e = e0.where(col("wmu") > 0L)
@@ -256,10 +241,7 @@ object Graph {
                           wCol: String, logTable: String, degTable: String,
                           nBuckets: Int): Unit = {
     val spark = edges.sparkSession
-    val e0 = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"),
-      floor(col(wCol).cast("double") * lit(1000000.0d) + lit(0.5d))
-        .cast("long").as("wmu"))
+    val e0 = microEdges(edges, srcCol, dstCol, wCol)
     require(e0.where(col("wmu") < 0L).limit(1).count() == 0L,
       "ingestWeightedEdges requires non-negative edge weights")
     val e = e0.where(col("wmu") > 0L)
@@ -369,10 +351,12 @@ object Graph {
                            iters: Int, damping: Double = 0.85d): DataFrame = {
     require(iters >= 1, "iters must be at least 1")
     require(damping > 0.0d && damping < 1.0d, "damping must be in (0, 1)")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
+    val e = longEdges(edges, srcCol, dstCol)
     val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-    val eDeg = graft.Partitioning.checkpointKeyed(e.join(deg, "src"), "src")
+    // nodes are keyed at the edges' count so the per-round joins align
+    val withDeg = e.join(deg, "src")
+    val keyParts = Some(graft.Partitioning.partsFor(withDeg))
+    val eDeg = graft.Partitioning.checkpointKeyed(withDeg, "src", keyParts)
     val sd = seeds.select(col(seedCol).cast("long").as("node")).distinct()
       .pipe(graft.Partitioning.checkpointKeep)
     val nS = sd.count()
@@ -386,7 +370,7 @@ object Graph {
       .distinct()
       .join(sd.select(col("node"), lit(true).as("__s")), Seq("node"), "left")
       .select(col("node"), coalesce(col("__s"), lit(false)).as("seed"))
-      .pipe(graft.Partitioning.checkpointKeyed(_, "node"))
+      .pipe(graft.Partitioning.checkpointKeyed(_, "node", keyParts))
     val danglingNodes = nodes
       .join(eDeg.select(col("src").as("node")), Seq("node"), "left_anti")
       .pipe(graft.Partitioning.checkpointKeep)
@@ -440,9 +424,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int): DataFrame = {
     require(iters >= 1, "iters must be at least 1")
-    val e = graft.Partitioning.checkpointKeyed(
-      edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")), "src")
+    val e = graft.Partitioning.checkpointKeyed(longEdges(edges, srcCol, dstCol), "src")
     var labels = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
@@ -463,6 +445,17 @@ object Graph {
     labels
   }
 
+  /** `(src, dst)` cast to long: the edge shape every operator runs on. */
+  private def longEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+
+  /** [[longEdges]] plus the weight in exact integer micro-units,
+    * `wmu = floor(w·1e6 + 0.5)` — the weighted family's grid. */
+  private def microEdges(edges: DataFrame, srcCol: String, dstCol: String,
+                         wCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"),
+      floor(col(wCol).cast("double") * lit(1000000.0d) + lit(0.5d)).cast("long").as("wmu"))
+
   /** Shared iteration loop over a degree-annotated edge relation
     * `(src, dst, deg)`. Returns (ranks, iterations actually run).
     *
@@ -474,26 +467,29 @@ object Graph {
     * `prev` column, and the round's L1 delta is one 1-row aggregate
     * over the checkpointed result. The loop stops when delta < tol.
     */
-  private def iterate(eDeg: DataFrame, iters: Int, damping: Double,
+  private def iterate(edges: DataFrame, iters: Int, damping: Double,
                       tol: Double = 0.0d,
                       contrib: Column = col("rank") / col("deg"),
                       keyParts: Option[Int] = None): (DataFrame, Int) = {
     require(iters >= 1, "iters must be at least 1")
     require(damping > 0.0d && damping < 1.0d, "damping must be in (0, 1)")
     require(tol >= 0.0d, "tol must be non-negative")
-    // keyed at the session's shuffle-partition count: every iteration
-    // LEFT-joins nodes on `node` against the contribution aggregate —
-    // a keyed claim pins the join (and therefore each round's OUTPUT)
-    // at plain hash(node, P), which the next round's rank-side join
-    // reuses through the node->src alias (zero rank-side exchange)
-    // keyParts aligns the node/rank keying with a BUCKETED edge
-    // relation's bucket count so the co-location cascade below holds
-    // for the bucketed/ingested twins too (a mismatched count would
-    // re-exchange the rank side to the bucket count every round)
+    // `keyParts` is a BUCKETED edge relation's bucket count (already
+    // keyed on src by its layout); an unbucketed one is keyed on src
+    // here at Partitioning.partsFor. The nodes are keyed at the SAME
+    // count: every iteration LEFT-joins nodes on `node` against the
+    // contribution aggregate — a keyed claim pins the join (and
+    // therefore each round's OUTPUT) at plain hash(node, P), which the
+    // next round's rank-side join reuses through the node->src alias
+    // (zero rank-side exchange; a mismatched count would re-exchange
+    // the rank side every round)
+    val parts = keyParts.getOrElse(graft.Partitioning.partsFor(edges))
+    val eDeg = if (keyParts.isDefined) edges
+      else graft.Partitioning.checkpointKeyed(edges, "src", Some(parts))
     val nodes = graft.Partitioning.checkpointKeyed(
       eDeg.select(col("src").as("node"))
         .union(eDeg.select(col("dst").as("node")))
-        .distinct(), "node", keyParts)
+        .distinct(), "node", Some(parts))
     val n = nodes.count()
     if (n == 0L) return (nodes.withColumn("rank", lit(0.0d)), 0)
 
@@ -574,9 +570,7 @@ object Graph {
     */
   def bfs(edges: DataFrame, srcCol: String, dstCol: String,
           sources: DataFrame, sourceCol: String, maxHops: Int): DataFrame = {
-    val e = graft.Partitioning.checkpointKeyed(
-      edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")), "src")
+    val e = graft.Partitioning.checkpointKeyed(longEdges(edges, srcCol, dstCol), "src")
     bfsLoop(e, sources, sourceCol, maxHops)
   }
 
@@ -653,10 +647,7 @@ object Graph {
     */
   def sssp(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
            sources: DataFrame, sourceCol: String, maxIters: Int): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"),
-        floor(col(wCol).cast("double") * lit(1000000.0d) + lit(0.5d))
-          .cast("long").as("wmu"))
+    val e = microEdges(edges, srcCol, dstCol, wCol)
       .where(col("wmu").isNotNull)
       .pipe(graft.Partitioning.checkpointKeyed(_, "src"))
     require(e.where(col("wmu") < 0L).limit(1).count() == 0L,

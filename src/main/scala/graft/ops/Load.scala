@@ -104,23 +104,6 @@ object Load {
   def writePartitioned(df: DataFrame, path: String, cols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(cols: _*).parquet(path)
 
-  /** Bucketed-table sink: persist with `bucketBy(n, cols)` (+ in-bucket
-    * sort) so REPEATED joins/aggregations on the bucket key skip their
-    * shuffle entirely — both sides arrive hash-partitioned on disk.
-    * This is the layout for fact-to-fact joins too big to broadcast and
-    * too frequent to re-shuffle per query: pay one shuffle at write
-    * time, amortize it over every read. The bucket count is the
-    * PERMANENT parallelism of the key space — size it to the target
-    * cluster (hundreds-plus at 100 TB), not the current job.
-    */
-  def writeBucketed(df: DataFrame, table: String, cols: Seq[String],
-                    nBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(nBuckets, cols.head, cols.tail: _*)
-      .sortBy(cols.head, cols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-
   /** Range-sorted parquet sink: `repartitionByRange(n, cols)` +
     * `sortWithinPartitions(cols)` so every output file covers a DISJOINT
     * range of the sort key and row-group min/max statistics prune at

@@ -184,17 +184,15 @@ object Snapshots {
         df.join(broadcast(c), Seq(BatchCol), "left_semi")
       }
       val inRange = col(BatchCol).between(bLo, bHi)
-      // cluster = false: the forced bucketed scan already hands each
-      // write task one whole bucket — the exchange-free local rewrite
-      // IS this path's contract
-      Bucketing.writeBucketed(transform(rows.where(inRange)), tmp, key, n,
-        cluster = false)
+      // the forced bucketed scan already hands each write task one whole
+      // bucket, so the writers' clustering is elided — the exchange-free
+      // local rewrite IS this path's contract
+      Bucketing.writeBucketed(transform(rows.where(inRange)), tmp, key, n)
       val rest = rows.where(!inRange).select(col(BatchCol)).distinct()
         .collect().map(_.getLong(0)).sorted
       rest.foreach { b =>
         Bucketing.appendBucketed(
-          transform(rows.where(col(BatchCol) === b)), tmp, key, n,
-          cluster = false)
+          transform(rows.where(col(BatchCol) === b)), tmp, key, n)
       }
     }
   }

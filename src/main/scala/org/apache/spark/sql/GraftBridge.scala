@@ -15,7 +15,7 @@ object GraftBridge {
   /** For plans that are pure NARROW chains (project/filter/generate/
     * alias) over a single file scan: the scan's size in bytes, from
     * catalog/file-listing metadata only. `None` for anything wider — a
-    * shuffle upstream already redistributes to shuffle.partitions, and
+    * shuffle upstream already redistributes the rows, and
     * local/in-memory relations have no file size. Never touches
     * `Dataset.rdd`, so nothing is materialized (with AQE, `df.rdd`
     * executes all upstream query stages at plan-build time).
@@ -50,6 +50,45 @@ object GraftBridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
       .sparkSession.sessionState.conf.filesMaxPartitionBytes
 
+  /** Catalyst's size estimate for `df` (`optimizedPlan.stats.sizeInBytes`;
+    * metadata only, optimizing a plan runs no job) in units of the
+    * session's `spark.sql.adaptive.advisoryPartitionSizeInBytes`, rounded
+    * up.
+    */
+  def advisoryPartitions(df: Dataset[Row]): BigInt = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val advisory = ds.sparkSession.sessionState.conf
+      .getConf(internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES).max(1L)
+    (ds.queryExecution.optimizedPlan.stats.sizeInBytes + advisory - 1) / advisory
+  }
+
+  /** `df.localCheckpoint(eager = true)` whose relation reports its
+    * materialized size as its statistics: the row count the eager
+    * materialization counts anyway, times the output row width. The
+    * plain checkpoint reports the UPSTREAM plan's estimate instead,
+    * which for a join is the product of its inputs — so a relation of a
+    * few thousand near-dup pairs would estimate at tens of GB. Layout
+    * and lineage semantics are the plain checkpoint's (unknown
+    * partitioning, lineage truncated).
+    */
+  def localCheckpointSized(df: Dataset[Row]): Dataset[Row] = {
+    val (ds, rdd, rows) = checkpointed(df)
+    val out = ds.queryExecution.analyzed.output
+    val size = catalyst.plans.logical.statsEstimation.EstimationUtils.getOutputSize(out, rows)
+    classic.Dataset.ofRows(ds.sparkSession, execution.LogicalRDD(out, rdd,
+      catalyst.plans.physical.UnknownPartitioning(0), Nil, isStreaming = false)(
+      ds.sparkSession, Some(catalyst.plans.logical.Statistics(size))))
+  }
+
+  /** The eager local checkpoint both helpers share: `df`'s rows,
+    * materialized with lineage truncated, and their count. */
+  private def checkpointed(df: Dataset[Row]) = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val rdd = ds.queryExecution.executedPlan.execute().map(_.copy())
+    rdd.localCheckpoint()
+    (ds, rdd, BigInt(rdd.count()))
+  }
+
   /** Eager local checkpoint that KEEPS the materialized plan's output
     * partitioning (and sort order) visible to Catalyst.
     *
@@ -80,19 +119,21 @@ object GraftBridge {
     * checkpoint level, lineage truncated, recompute-on-block-loss NOT
     * possible past the checkpoint (same trade the existing call sites
     * already accepted).
+    *
+    * `keyedOn` names the column a keyed checkpoint was hash-partitioned
+    * by: a 1-partition result then claims hash(key, 1) instead of the
+    * SinglePartition Catalyst planned it as (see below).
     */
-  def localCheckpointKeepPartitioning(df: Dataset[Row]): Dataset[Row] = {
+  def localCheckpointKeepPartitioning(df: Dataset[Row],
+                                      keyedOn: Option[String] = None): Dataset[Row] = {
     import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
     import org.apache.spark.sql.catalyst.plans.physical.{CoalescedHashPartitioning, HashPartitioning, Partitioning, PartitioningCollection, SinglePartition, UnknownPartitioning}
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    val (ds, internalRdd, _) = checkpointed(df)
     val session = ds.sparkSession
     val qe = ds.queryExecution
     val physical = qe.executedPlan
-    val internalRdd = physical.execute().map(_.copy())
-    internalRdd.localCheckpoint()
-    internalRdd.count() // eager, like localCheckpoint(true)
     // after execution the adaptive wrapper's executedPlan IS the final
     // plan — the one whose partitioning the materialized rows carry
     val finalPlan = physical match {
@@ -128,11 +169,18 @@ object GraftBridge {
           c.copy(from = h.asInstanceOf[HashPartitioning]))
       case pc: PartitioningCollection =>
         pc.partitionings.flatMap(remapped).headOption
-      // a 1-partition layout (scale-adaptive keyed checkpoints on tiny
-      // inputs: Catalyst rewrites repartition-by-expr with n = 1 to
-      // SinglePartition) — references nothing, satisfies every
-      // clustered distribution, trivially sound to claim
-      case SinglePartition => Some(SinglePartition)
+      // a 1-partition layout (keyed checkpoints on tiny inputs: Catalyst
+      // plans repartition-by-expr with n = 1 as SinglePartition) —
+      // references nothing, satisfies every clustered distribution,
+      // trivially sound to claim. For a KEYED checkpoint, hash(key, 1)
+      // holds for the same rows and is the claim a join can align on:
+      // EnsureRequirements never picks a SinglePartition side as the
+      // layout to shuffle the other side to, and re-exchanges BOTH
+      // sides of a join between two of them
+      case SinglePartition =>
+        val key = keyedOn.flatMap(k =>
+          logicalOut.find(a => session.sessionState.conf.resolver(a.name, k)))
+        Some(key.map(a => HashPartitioning(Seq(a), 1)).getOrElse(SinglePartition))
       case _ => None
     }
     val partitioning = remapped(finalPlan.outputPartitioning)

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.{EtlLeaf, EtlObj}
-import graft.ops.Load
+import graft.ops.{Bucketing, Load}
 
 /** S8/S9: relational load split + parent-then-child ordering + the
   * fixed-width flat-file sink (reference: src/main/etl.js:758-829).
@@ -62,8 +62,8 @@ class LoadSpec extends AnyFunSuite {
   test("writeBucketed: joining two co-bucketed tables needs no shuffle") {
     val a = (1L to 100L).map(i => (i, s"a$i")).toDF("k", "av")
     val b = (1L to 100L).map(i => (i, i * 2.0)).toDF("k", "bv")
-    Load.writeBucketed(a, "bkt_a", Seq("k"), nBuckets = 4)
-    Load.writeBucketed(b, "bkt_b", Seq("k"), nBuckets = 4)
+    Bucketing.writeBucketed(a, "bkt_a", "k", nBuckets = 4)
+    Bucketing.writeBucketed(b, "bkt_b", "k", nBuckets = 4)
     // force the sort-merge path (at real fact-table sizes broadcast is
     // off the table anyway) so the bucketed layout is what's under test
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
