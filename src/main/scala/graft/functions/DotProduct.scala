@@ -31,15 +31,9 @@ case class DotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += x.getDouble(i) * y.getDouble(i); i += 1 }
-    acc
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.sequential(a.asInstanceOf[ArrayData].toDoubleArray(),
+      b.asInstanceOf[ArrayData].toDoubleArray())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -62,6 +56,19 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
+  /** THE dot kernel: sequential left-to-right sum from 0.0 over the
+    * common prefix of `x` and `y`. The interpreted expression path and
+    * the in-task MMR fold ([[graft.llm.Similarity.diversifyMmr]]) both
+    * call it; the generated Java loop is the same sum, term for term.
+    */
+  def sequential(x: Array[Double], y: Array[Double]): Double = {
+    val n = math.min(x.length, y.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += x(i) * y(i); i += 1 }
+    acc
+  }
+
   /** Column-level entry point (no session required). */
   def dot(a: Column, b: Column): Column =
     GraftBridge.column(DotProduct(

@@ -1581,18 +1581,18 @@ object Similarity {
     * Scale shape: the candidate relation is (queries × N) rows —
     * broadcast-scale by contract (it came out of a top-N) — so the ONE
     * corpus-touching operation is the broadcast join fetching candidate
-    * vectors; every selection round after that joins per-query-bounded
-    * relations (≤ N candidates × < k selected) with no corpus-scale
-    * window or exchange anywhere. Each of the k rounds' selected set is
-    * pinned so plan depth stays linear in k. Greedy MMR is inherently
-    * sequential in k — that is the algorithm, not a Spark limitation;
-    * k is output-context-sized (≤ tens) by contract.
+    * vectors. After it comes ONE exchange by query_id and an O(N·k)
+    * in-task fold per query: greedy MMR is inherently sequential in k,
+    * and with at most N candidates per query that sequence runs in
+    * memory instead of as k distributed rounds. k is
+    * output-context-sized (≤ tens) by contract.
     *
     * Float discipline: relevance and pairwise similarity enter as exact
     * micro-units (floor(x·1e6 + 0.5)); λ is micro-quantized ONCE and the
     * MMR objective is pure BIGINT arithmetic (λm·relm − (1e6−λm)·simm,
     * max 1e12 — no overflow, no float accumulation), ties to the lowest
-    * nn_id — bit-reproducible by construction.
+    * nn_id, a null score ranks last — bit-reproducible by construction.
+    * Similarities use the same dot kernel as `graft_dot`.
     *
     * @return (query_id, nn_id, score, rank) — score is the INPUT
     *         relevance; rank is the MMR selection order (1 = first pick)
@@ -1612,70 +1612,63 @@ object Similarity {
     * corpus scan + normalize: no normalization work, and the bucketed
     * layout lets the scan prune to candidate buckets in a
     * deployment with bucket pruning (PlanSpec asserts strictly fewer
-    * exchanges than the raw-corpus form). Tombstoned ids are excluded
-    * — a deleted vector must not resolve (the candidate contract then
-    * fails loudly, which is correct: the candidate list is stale).
+    * exchanges than the raw-corpus form). Ids tombstoned in the index
+    * (the root `asOf` names, else `vectorsTable` less its `_vectors`
+    * suffix) are excluded — a deleted vector must not resolve (the
+    * candidate contract then fails loudly, which is correct: the
+    * candidate list is stale).
     */
   def diversifyMmrIngested(spark: org.apache.spark.sql.SparkSession,
                            vectorsTable: String, candidates: DataFrame,
                            k: Int, lambda: Double,
-                           asOf: Option[(String, Long)] = None): DataFrame =
+                           asOf: Option[(String, Long)] = None): DataFrame = {
+    // the snapshot sidecar and the tombstone set live with the index
+    // root, not the satellite name
+    val root = asOf.map(_._1).getOrElse(vectorsTable.stripSuffix("_vectors"))
     diversifyMmrFrom(candidates,
-      graft.ops.Tombstones.filterByParent(spark, vectorsTable,
-        asOf match {
-          // (parent index root, batch): the vectors table's snapshot
-          // sidecar lives with its index root, not the satellite name
-          case Some((parent, b)) =>
-            graft.ops.Snapshots.readAsOf(spark, vectorsTable, parent, Some(b))
-          case None => spark.table(vectorsTable)
-        }, "nn_id"),
+      graft.ops.Tombstones.filterByParent(spark, root,
+        graft.ops.Snapshots.readAsOf(spark, vectorsTable, root, asOf.map(_._2)),
+        "nn_id"),
       k, lambda)
+  }
 
   /** The shared MMR core over a prepared normalized relation
     * `cvec (nn_id, cv)`. PIN COST: this call persists ONE
-    * MEMORY_AND_DISK plan (the candidate fetch; the candidate INPUT pin
-    * is released eagerly once the contract counts have materialized it
-    * into the joined cache) — droppable via
+    * MEMORY_AND_DISK plan — the candidate fetch, tracked for
     * [[graft.Partitioning.unpersistPins]] in long-lived serving
-    * sessions. Each selection round's remaining-pool relation is
-    * instead an EAGER lineage-truncating checkpoint
-    * ([[graft.Partitioning.checkpointKeep]]): round r's pool references
-    * round r−1's pool TWICE (the argmax pick and the pool update), so a
-    * cache-only pin leaves the logical plan doubling per round — 2^k
-    * copies of the candidate-fetch DAG, measured 64k plan lines / 7.3k
-    * Exchange nodes at k=5 — and Catalyst re-analyzes that tree on
-    * every action (guide §5: very large plans are driver-side,
-    * single-threaded cost; §3.3: materialize to truncate). The
-    * checkpoint bounds the plan at O(1) per round; pool relations are
-    * (queries × N)-bounded by contract, so the per-round materialization
-    * job is trivially small.
+    * sessions. The candidate INPUT pin is released eagerly once the
+    * contract counts have materialized it into the fetch's cache, and
+    * both are released when the contract check fails.
+    *
+    * The rerank itself is ONE exchange: the fetched candidates group by
+    * query_id, sorted by nn_id, and [[mmrFold]] runs the greedy per
+    * query inside one task. Per-query state is bounded by contract
+    * (≤ N candidates), so there is nothing to redistribute between
+    * rounds and no per-round plan to truncate.
     */
   private def diversifyMmrFrom(candidates: DataFrame, cvec: DataFrame,
                                k: Int, lambda: Double): DataFrame = {
     require(k >= 1, "k must be positive")
     require(lambda >= 0.0d && lambda <= 1.0d, "lambda must be in [0, 1]")
     val lm = math.floor(lambda * 1e6 + 0.5).toLong
-    val om = 1000000L - lm
-    def micro(c: Column): Column =
-      floor(c * lit(1000000.0d) + lit(0.5d)).cast("long")
     // candIn is pinned BEFORE the contract counts so its (often
     // expensive — a full retrieval) lineage evaluates exactly once;
     // both counts below then read caches
     val candIn = candidates.select(col("query_id"), col("nn_id"),
-        col("score"), micro(col("score")).as("relm"))
+        col("score"), floor(col("score") * lit(1000000.0d) + lit(0.5d))
+          .cast("long").as("relm"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = graft.Partitioning.trackPin(
-      cvec.join(broadcast(candIn), Seq("nn_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val cand = cvec.join(broadcast(candIn), Seq("nn_id"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // contract check, loud: every candidate id must resolve to exactly
     // one corpus vector — a silently-dropped candidate (id-space mixup,
     // wrong embedding table) would shrink the result below k with no
     // error, and a duplicated corpus id would rank one candidate twice.
     // The contract FAILURE path (stale candidates against a tombstoned
     // vector table — diversifyMmrIngested's documented loud failure)
-    // must not leak the untracked candIn pin: a long-lived serving
-    // session that catches the error and retries would otherwise
-    // accumulate cache linearly in retries
+    // must leak neither pin: a long-lived serving session that catches
+    // the error and retries would otherwise accumulate cache linearly
+    // in retries
     try {
       val nIn = candIn.count()
       val nGot = cand.count()
@@ -1683,49 +1676,71 @@ object Similarity {
         s"diversifyMmr: $nIn candidates resolved to $nGot corpus vectors — " +
           "candidate ids must match exactly one corpus row each")
     } catch {
-      case t: Throwable => candIn.unpersist(blocking = false); throw t
+      case t: Throwable =>
+        candIn.unpersist(blocking = false); cand.unpersist(blocking = false)
+        throw t
     }
+    graft.Partitioning.trackPin(cand)
     // the second count materialized `cand` in full, so candIn's cache
     // has no further reader — release it NOW instead of tracking it to
-    // unpersistPins (lineage stays intact for executor-loss recompute);
-    // this keeps the per-call pin count at k+1, not k+2
+    // unpersistPins (lineage stays intact for executor-loss recompute)
     candIn.unpersist(false)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("mmr").desc, col("nn_id").asc)
-    def argmaxPick(scored: DataFrame, r: Int): DataFrame =
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("query_id"), col("nn_id"), col("score"), col("cv"),
-          lit(r).as("rank"))
-    // the INCREMENTAL greedy (the textbook O(N·k) form): `rem` carries
-    // each remaining candidate's running max-similarity to the selected
-    // set, updated each round against ONLY the newest pick — one
-    // broadcast join of a 1-row-per-query relation, no anti-join, no
-    // re-aggregation over the whole selected set (which would be the
-    // O(N·k²) shape and k× the stages)
-    var pick = argmaxPick(cand.withColumn("mmr", col("relm")), 1)
-    var acc = pick.select(col("query_id"), col("nn_id"), col("score"), col("rank"))
-    var rem = cand
-    for (r <- 2 to k) {
-      val pv = pick.select(col("query_id"), col("nn_id").as("_pid"),
-        col("cv").as("pv"))
-      val simNew = micro(dot(col("cv"), col("pv")))
-      // the inner join also drops queries whose candidates are exhausted
-      // (no pick last round => nothing left to rank); the =!= filter
-      // removes exactly the newest pick from the remaining pool
-      rem = graft.Partitioning.checkpointKeep(
-        rem.join(broadcast(pv), Seq("query_id"))
-          .filter(col("nn_id") =!= col("_pid"))
-          .withColumn("ms",
-            if (r == 2) simNew else greatest(col("ms"), simNew))
-          .drop("pv", "_pid"))
-      pick = argmaxPick(
-        rem.withColumn("mmr", lit(lm) * col("relm") - lit(om) * col("ms")), r)
-      acc = acc.unionByName(
-        pick.select(col("query_id"), col("nn_id"), col("score"), col("rank")))
-    }
-    acc
+    cand.groupBy(col("query_id"))
+      .agg(sort_array(collect_list(struct(col("nn_id"), col("relm"),
+        col("score"), col("cv")))).as("items"))
+      .select(col("query_id"), col("items"),
+        posexplode(mmrFold(k, lm)(col("items"))))
+      .select(col("query_id"),
+        col("items")(col("col"))("nn_id").as("nn_id"),
+        col("items")(col("col"))("score").as("score"),
+        (col("pos") + 1).as("rank"))
   }
+
+  /** The per-query greedy MMR as a deterministic JVM fold — the
+    * incremental O(N·k) form: each remaining candidate carries its
+    * running max-similarity `ms` to the selected set, updated against
+    * ONLY the newest pick. Input: the query's (nn_id, relm, score, cv)
+    * structs sorted by nn_id; output: the positions picked, in
+    * selection order (≤ k; fewer when the candidates run out).
+    *
+    * Arithmetic (all exact integers after one rounding each):
+    *   - round 1 maximizes `relm`; later rounds maximize
+    *     `lm·relm − (1e6−lm)·ms` in Long;
+    *   - `ms` = max over picks of floor(dot(cv, pick)·1e6 + 0.5), the
+    *     dot being [[graft.functions.DotProduct.sequential]]; a null
+    *     vector contributes no similarity, and a candidate with none
+    *     yet has a null objective;
+    *   - a null objective (null score, or no similarity) ranks after
+    *     every non-null one; ties go to the lowest position (= nn_id);
+    *   - a pick removes every remaining candidate with its nn_id.
+    */
+  private def mmrFold(k: Int, lm: Long) =
+    udf((items: Seq[org.apache.spark.sql.Row]) => {
+      val n = items.length
+      val relm = items.map(r => if (r.isNullAt(1)) None else Some(r.getLong(1)))
+      val cv = items.map(r => if (r.isNullAt(3)) null else r.getSeq[Double](3).toArray)
+      val ms = Array.fill(n)(Option.empty[Long])
+      val live = Array.fill(n)(true)
+      val picks = scala.collection.mutable.ArrayBuffer.empty[Int]
+      // (objective, position): non-null first, then larger, then lower
+      val first = Ordering.by[(Option[Long], Int), (Boolean, Long, Int)] {
+        case (v, i) => (v.isEmpty, -v.getOrElse(0L), i)
+      }
+      while (picks.length < k && live.contains(true)) {
+        val best = (0 until n).filter(live(_)).map(i =>
+          (if (picks.isEmpty) relm(i)
+          else for (r <- relm(i); m <- ms(i)) yield lm * r - (1000000L - lm) * m, i))
+          .min(first)._2
+        picks += best
+        for (j <- 0 until n if items(j).get(0) == items(best).get(0)) live(j) = false
+        for (j <- 0 until n if live(j) && cv(j) != null && cv(best) != null) {
+          val s = math.floor(
+            graft.functions.DotProduct.sequential(cv(j), cv(best)) * 1e6 + 0.5).toLong
+          ms(j) = Some(ms(j).fold(s)(math.max(_, s)))
+        }
+      }
+      picks.toSeq
+    })
 
   /** Margin-based bitext mining (Artetxe & Schwenk 2019, the LASER /
     * CCMatrix parallel-corpus miner): candidate translation pairs

@@ -201,16 +201,44 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("similarity_topk_mmr: per-round checkpoints bound the plan — no exponential lineage") {
-    // round r's remaining pool references round r−1's pool twice (pick
-    // + update), so a cache-only pin left the logical plan doubling per
-    // round: 64,271 formatted lines / 7,306 Exchange nodes at k=5
+    // a k-round distributed MMR whose rounds each reference the previous
+    // pool twice (pick + update) doubles its logical plan per round:
+    // 64,271 formatted lines / 7,306 Exchange nodes at k=5
     // (plans/r20/_before/similarity_topk_mmr.txt) — driver-side
-    // planning cost that grows 2^k (guide §5, §3.3). The eager
-    // per-round checkpoint bounds it; assert well under the exponential
-    // regime so a reintroduced unbounded union fails loudly.
+    // planning cost that grows 2^k (guide §5, §3.3). The in-task fold
+    // has no rounds in the plan at all; assert well under the
+    // exponential regime so a reintroduced unbounded union fails loudly.
     val df = SparkEntry.queries("similarity_topk_mmr")(spark, dir)
     val lines = df.queryExecution.executedPlan.toString.linesIterator.size
     assert(lines < 2000, s"MMR plan must stay round-bounded, got $lines lines")
+  }
+
+  test("similarity_topk_mmr: one query_id exchange after the candidate fetch, no per-round checkpoint scans") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = SparkEntry.queries("similarity_topk_mmr")(spark, dir)
+    // the initial adaptive plan (exchanges placed, nothing run yet); the
+    // cached candidate fetch is a leaf scan in it (its own plan hangs
+    // off the InMemoryRelation), so everything collected below is the
+    // rerank over it
+    val rerank = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(rerank.collect { case s: InMemoryTableScanExec => s }.size == 1,
+      s"the rerank must read the one cached candidate fetch:\n$rerank")
+    val exchanges = rerank.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, s"exactly one exchange after the fetch:\n$rerank")
+    assert((exchanges.head.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+      case other => Seq(other.toString)
+    }) == Seq("query_id"), s"the one exchange must hash query_id:\n$rerank")
+    assert(rerank.collect { case s: RDDScanExec => s }.isEmpty,
+      s"no checkpoint scans in the rerank:\n$rerank")
+    graft.Partitioning.unpersistPins()
   }
 
   test("brute-force paths are the only nested-loop consumers") {
