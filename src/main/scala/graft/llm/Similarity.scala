@@ -226,10 +226,6 @@ object Similarity {
     }
   }
 
-  /** Brute-force cosine top-k: for each query vector, the k nearest corpus
-    * vectors (excluding itself when ids collide). Scores rounded to 6
-    * decimals; ties broken by corpus id so ordering is deterministic.
-    */
   /** Max-inner-product top-k (MIPS) — the recommendation-scoring
     * variant where vector MAGNITUDE matters (user·item affinity,
     * un-normalized retrieval heads): identical shape to [[topK]] but
@@ -301,14 +297,7 @@ object Similarity {
     require(nPlanes >= 1, "nPlanes must be positive")
     require(nTables >= 1, "nTables must be positive")
     val (c, q) = mipsAugmented(corpus, queries, idCol, vecCol)
-    val matched = tabled(c, "av", nPlanes, nTables)
-      .join(broadcast(tabled(q, "aq", nPlanes, nTables)), Seq("tbl", "bucket"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("score", graft.Num.r6(dot(col("cv"), col("qv"))))
-    // same pair via several tables: identical score, max() is pure dedup
-    val scored = matched.groupBy(col("query_id"), col("nn_id"))
-      .agg(max(col("score")).as("score"))
-    topKMerge(scored, k, nSalts)
+    lshProbe(tabled(c, "av", nPlanes, nTables), q, "aq", nPlanes, nTables, k, nSalts)
   }
 
   /** Sublinear MIPS, IVF variant: the same [[mipsAugmented]] reduction
@@ -334,19 +323,9 @@ object Similarity {
     val assign = aug.select(col("nn_id"), col("cv"),
       graft.functions.CentroidArgmax.argmax(normalize(col("av")), typedLit(cent))
         .as("cluster"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cid").asc)
-    val probes = q0.select(col("query_id"), col("qv"),
-        normalize(col("aq")).as("nq"), explode(typedLit(cent)).as("ct"))
-      .select(col("query_id"), col("qv"), col("nq"),
-        col("ct").getField("_1").as("cid"), col("ct").getField("_2").as("centv"))
-      .withColumn("sim", dot(col("nq"), col("centv")))
-      .withColumn("r", row_number().over(wq)).filter(col("r") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cid").as("cluster"))
-    val scored = assign.join(broadcast(probes), Seq("cluster"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("score", graft.Num.r6(dot(col("cv"), col("qv"))))
-    topKMerge(scored, k, nSalts)
+    // ranked by the normalized augmented query, scored by the raw one
+    val q = q0.withColumn("nq", normalize(col("aq")))
+    topKMerge(ivfScore(q, cent, nProbe, "cv", by = "nq")(_ => assign), k, nSalts)
   }
 
   /** Distinct (query_id, nn_id) candidate pairs [[topKMipsAnn]] would
@@ -358,15 +337,15 @@ object Similarity {
                          vecCol: String, nPlanes: Int, nTables: Int): DataFrame = {
     require(nPlanes >= 1 && nTables >= 1, "nPlanes/nTables must be positive")
     val (c, q) = mipsAugmented(corpus, queries, idCol, vecCol)
-    tabled(c.select(col("nn_id"), col("av")), "av", nPlanes, nTables)
-      .select(col("nn_id"), col("tbl"), col("bucket"))
-      .join(broadcast(tabled(q.select(col("query_id"), col("aq")), "aq", nPlanes, nTables)
-        .select(col("query_id"), col("tbl"), col("bucket"))), Seq("tbl", "bucket"))
-      .filter(col("nn_id") =!= col("query_id"))
+    bandedMatch(tabled(c, "av", nPlanes, nTables), q, "aq", nPlanes, nTables)
       .select(col("query_id"), col("nn_id")).distinct()
   }
 
-  /** `excludeSelf = false` switches off the `nn_id =!= query_id` filter
+  /** Brute-force cosine top-k: for each query vector, the k nearest corpus
+    * vectors (excluding itself when ids collide). Scores rounded to 6
+    * decimals; ties broken by corpus id so ordering is deterministic.
+    *
+    * `excludeSelf = false` switches off the `nn_id =!= query_id` filter
     * — required when corpus and queries are DIFFERENT relations whose id
     * spaces may overlap coincidentally (bitext mining's src/tgt sides:
     * line-aligned parallel corpora commonly number both sides
@@ -489,6 +468,9 @@ object Similarity {
     * broadcast-scale by construction. Recall < 1 like any PQ; raise
     * `nCandidates` (or m) to trade scan cost for recall.
     *
+    * Trains the codebooks in memory, codes the corpus with [[pqIndex]]'s
+    * encoding, then runs the [[topKPqIngested]] probe body.
+    *
     * @return (query_id, nn_id, score, rank) — score is the EXACT cosine
     */
   def topKPq(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
@@ -496,13 +478,8 @@ object Similarity {
              nCandidates: Int = 0, nSalts: Int = 0): DataFrame = {
     val c = normalizedCorpus(corpus, idCol, vecCol, kmeansIters)
     val books = pqCodebooks(c, m, nCodes, kmeansIters)
-    if (books.isEmpty) {
-      // empty corpus: no codebooks, no neighbors
-      val (q, _) = prepQueries(queries, idCol, vecCol, nSalts = 1)
-      return emptyTopKResult(c, q)
-    }
-    val cq = c.select(col("nn_id"), pqReconstruct(books).as("dq"))
-    pqServe(cq, c, queries, idCol, vecCol, k, nCandidates, nSalts)
+    pqProbe(books, pqIndex.encode(c, books), queries, idCol, vecCol, k,
+      nCandidates, nSalts)
   }
 
   /** Train the per-subspace Euclidean codebooks over a normalized corpus
@@ -601,23 +578,11 @@ object Similarity {
         argminL2(slice(col("cv"), s * sub + 1, sub), books(s))): _*)
     }
 
-  /** Reconstruction of the full-dim approximation from the normalized
-    * vector in `cv` directly (assign + look up in one expression):
-    * per subspace, the assigned codeword from the (m × nCodes × sub —
-    * literal-sized by definition) codebook map, concatenated in
-    * subspace order.
-    */
-  private def pqReconstruct(books: IndexedSeq[Seq[(Long, Seq[Double])]]): Column = {
-    val sub = books.head.head._2.length
-    concat(books.indices.map { s =>
-      element_at(typedLit(books(s).toMap),
-        argminL2(slice(col("cv"), s * sub + 1, sub), books(s)))
-    }: _*)
-  }
-
-  /** Reconstruction from a PERSISTED codes column (array<long>) — the
-    * [[topKPqIngested]] probe path, which never sees full vectors until
-    * the rescore.
+  /** Reconstruction of the full-dim approximation from a codes column
+    * (array<long>): per subspace, the coded codeword from the (m ×
+    * nCodes × sub — literal-sized by definition) codebook map,
+    * concatenated in subspace order. Every PQ-family probe reads codes,
+    * never full vectors, until the rescore.
     */
   private def pqReconstructCodes(books: IndexedSeq[Seq[(Long, Seq[Double])]],
                                  codes: Column): Column =
@@ -625,37 +590,55 @@ object Similarity {
       element_at(typedLit(books(s).toMap), element_at(codes, s + 1))
     }: _*)
 
-  /** The [[topKPq]] serving tail shared with [[topKPqIngested]]: coarse
-    * top-`nCandidates` over the reconstructed relation `cq (nn_id, dq)`,
-    * exact rescore against the full-precision relation `cvec (nn_id,
-    * cv)` for those candidates only.
+  /** The PQ probe body [[topKPq]] and [[topKPqIngested]] both run over
+    * their `(codes, cvec)` tables — in-memory encoded or persisted:
+    * reconstruct the codes, then [[pqServe]]. An empty-corpus index has
+    * no books and no neighbors.
+    */
+  private def pqProbe(books: Books, data: Seq[DataFrame], queries: DataFrame,
+                      idCol: String, vecCol: String, k: Int,
+                      nCandidates: Int, nSalts: Int): DataFrame = {
+    val Seq(codes, cvec) = data
+    if (books.isEmpty)
+      emptyTopKResult(cvec, prepQueries(queries, idCol, vecCol, nSalts = 1)._1)
+    else pqServe(codes.select(col("nn_id"),
+        pqReconstructCodes(books, col("codes")).as("dq")),
+      cvec, queries, idCol, vecCol, k, nCandidates, nSalts)
+  }
+
+  /** The linear-scan two-tier serve of [[topKSq8]] and the PQ probe:
+    * every query scores every reconstructed row of `cq (nn_id, dq)`,
+    * then the [[twoTier]] tail rescores against `cvec (nn_id, cv)`.
     */
   private def pqServe(cq: DataFrame, cvec: DataFrame, queries: DataFrame,
                       idCol: String, vecCol: String, k: Int,
                       nCandidates: Int, nSalts: Int): DataFrame = {
+    val tail = twoTier(k, nCandidates)
+    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
+    tail(cq.crossJoin(broadcast(q))
+      .filter(col("nn_id") =!= col("query_id"))
+      .withColumn("score", graft.Num.r6(dot(col("dq"), col("qv")))), cvec, q, salts)
+  }
+
+  /** The two-tier tail every compressed family ends in ([[topKSq8]],
+    * the PQ and IVF-PQ probes): keep the top `nCandidates` (default 4k)
+    * coarse `score`s per query, fetch full-precision vectors from `cvec
+    * (nn_id, cv)` for that (queries × nCandidates — broadcast-scale by
+    * construction) candidate set only, score exact cosines, rank. The
+    * arguments are checked when the tail is built: the IVF-PQ forms
+    * build it before training, so a bad budget fails before any job.
+    */
+  private def twoTier(k: Int, nCandidates: Int)
+      : (DataFrame, DataFrame, DataFrame, Int) => DataFrame = {
     require(k >= 1, "k must be positive")
     val nCand = if (nCandidates > 0) nCandidates else 4 * k
     require(nCand >= k, "nCandidates must be >= k")
-    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
-    val coarse = cq.crossJoin(broadcast(q))
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("score", graft.Num.r6(dot(col("dq"), col("qv"))))
-    val cand = topKMerge(coarse, nCand, salts).select(col("query_id"), col("nn_id"))
-    pqRescore(cand, cvec, q, k)
-  }
-
-  /** The candidate-bounded exact-rescore tail every two-tier family
-    * ends in ([[topKSq8]]/[[topKPq]]/[[topKIvfPq]] and their ingested
-    * twins): fetch full-precision vectors for the (queries ×
-    * nCandidates — broadcast-scale by construction) candidate set only,
-    * score exact cosines, rank.
-    */
-  private def pqRescore(cand: DataFrame, cvec: DataFrame, q: DataFrame,
-                        k: Int): DataFrame = {
-    val rescored = broadcast(cand).join(cvec, Seq("nn_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("score", graft.Num.r6(dot(col("cv"), col("qv"))))
-    topKMerge(rescored, k, nSalts = 1)
+    (coarse, cvec, q, salts) => {
+      val cand = topKMerge(coarse, nCand, salts).select(col("query_id"), col("nn_id"))
+      topKMerge(broadcast(cand).join(cvec, Seq("nn_id"))
+        .join(broadcast(q), Seq("query_id"))
+        .withColumn("score", graft.Num.r6(dot(col("cv"), col("qv")))), k, nSalts = 1)
+    }
   }
 
   /** Persist the PQ index ONCE — [[ingestIvf]]'s sibling for the
@@ -792,16 +775,8 @@ object Similarity {
                      queries: DataFrame, idCol: String, vecCol: String,
                      k: Int, nCandidates: Int = 0, nSalts: Int = 0,
                      asOf: Option[Long] = None): DataFrame = {
-    val books = pqBooksOf(spark, table)
-    val cvec = pqIndex.live(spark, table, "_vectors", asOf)
-    if (books.isEmpty) {
-      // empty-corpus index
-      val (q, _) = prepQueries(queries, idCol, vecCol, nSalts = 1)
-      return emptyTopKResult(cvec, q)
-    }
-    val cq = pqIndex.live(spark, table, asOf = asOf)
-      .select(col("nn_id"), pqReconstructCodes(books, col("codes")).as("dq"))
-    pqServe(cq, cvec, queries, idCol, vecCol, k, nCandidates, nSalts)
+    pqProbe(pqBooksOf(spark, table), liveData(pqIndex, spark, table, asOf),
+      queries, idCol, vecCol, k, nCandidates, nSalts)
   }
 
   // ------------------------------------------------------------- IVF-PQ
@@ -826,44 +801,81 @@ object Similarity {
     * on two axes — raise `nProbe` (cells) or `nCandidates` (rescore
     * pool); AnnRecallSpec pins the floor at the gate parameters.
     *
+    * Trains both quantizers in memory, codes the corpus with
+    * [[ivfpqIndex]]'s encoding, then runs the [[topKIvfPqIngested]]
+    * probe body.
+    *
     * @return (query_id, nn_id, score, rank) — score is the EXACT cosine
     */
   def topKIvfPq(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, k: Int, nCentroids: Int, nProbe: Int,
                 m: Int, nCodes: Int, kmeansIters: Int,
                 nCandidates: Int = 0, nSalts: Int = 0): DataFrame = {
-    require(k >= 1 && nProbe >= 1, "k and nProbe must be positive")
-    val nCand = if (nCandidates > 0) nCandidates else 4 * k
-    require(nCand >= k, "nCandidates must be >= k")
-    val c = normalizedCorpus(corpus, idCol, vecCol, kmeansIters)
-    val cent = coarseQuantizer(c, nCentroids, kmeansIters)
-    val books = pqCodebooks(c, m, nCodes, kmeansIters)
-    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
-    if (books.isEmpty) return emptyTopKResult(c, q)
-    val coded = assignClusters(c, cent)
-      .select(col("nn_id"), col("cluster"), pqReconstruct(books).as("dq"))
-    val probes = ivfProbes(q, cent, nProbe)
-    val coarse = coded.join(broadcast(probes), Seq("cluster"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("score", graft.Num.r6(dot(col("dq"), col("qv"))))
-    val cand = topKMerge(coarse, nCand, salts).select(col("query_id"), col("nn_id"))
-    pqRescore(cand, c, q, k)
+    val tail = twoTier(k, nCandidates)
+    require(nProbe >= 1, "nProbe must be positive")
+    val (c, cent) = quantizedCorpus(corpus, idCol, vecCol, nCentroids, kmeansIters)
+    val st = (cent, pqCodebooks(c, m, nCodes, kmeansIters))
+    ivfpqProbe(cent, ivfpqIndex.untrained(st), ivfpqIndex.encode(c, st),
+      pqCells(st._2), (codes, _) => codes, queries, idCol, vecCol, nProbe,
+      nSalts, tail)
   }
 
-  /** The query-side probe relation shared by the IVF family: rank the
-    * literal centroids per query (a window over queries × nCentroids
-    * rows only — never corpus-scale), keep the `nProbe` nearest.
+  /** The probe body every IVF-PQ top-k runs — global or residual codes,
+    * per-run or ingested — over its `(codes, cvec)` tables: `read`
+    * narrows the codes table to the probes' cells (the ingested forms'
+    * [[probedCells]] pruning; the per-run forms read their in-memory
+    * encoding whole), `recon` reconstructs `dq`, then the coarse scoring
+    * and the [[twoTier]] tail. An untrained (empty-corpus) quantizer has
+    * no neighbors.
     */
-  private def ivfProbes(q: DataFrame, cent: Seq[(Long, Seq[Double])],
-                        nProbe: Int): DataFrame = {
+  private def ivfpqProbe(cent: Centroids, untrained: Boolean, data: Seq[DataFrame],
+                         recon: DataFrame => DataFrame,
+                         read: (DataFrame, DataFrame) => DataFrame,
+                         queries: DataFrame, idCol: String, vecCol: String,
+                         nProbe: Int, nSalts: Int,
+                         tail: (DataFrame, DataFrame, DataFrame, Int) => DataFrame)
+      : DataFrame = {
+    val Seq(codes, cvec) = data
+    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
+    if (untrained) return emptyTopKResult(cvec, q)
+    tail(ivfScore(q, cent, nProbe, "dq")(probes => recon(read(codes, probes))),
+      cvec, q, salts)
+  }
+
+  /** `(nn_id, cluster, dq)` from a global-codebook codes relation. */
+  private def pqCells(books: Books)(codes: DataFrame): DataFrame =
+    codes.select(col("nn_id"), col("cluster"),
+      pqReconstructCodes(books, col("codes")).as("dq"))
+
+  /** The query-side probe relation shared by the IVF family: rank the
+    * literal centroids per query by the query column `by` (a window over
+    * queries × nCentroids rows only — never corpus-scale), keep the
+    * `nProbe` nearest.
+    */
+  private def ivfProbes(q: DataFrame, cent: Centroids, nProbe: Int,
+                        by: String): DataFrame = {
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("cid").asc)
-    q.select(col("query_id"), col("qv"), explode(typedLit(cent)).as("ct"))
-      .select(col("query_id"), col("qv"),
-        col("ct").getField("_1").as("cid"), col("ct").getField("_2").as("centv"))
-      .withColumn("sim", dot(col("qv"), col("centv")))
+    val keep = Seq("query_id", "qv", by).distinct.map(col)
+    q.select(keep :+ explode(typedLit(cent)).as("ct"): _*)
+      .select(keep :+ col("ct").getField("_1").as("cid")
+        :+ col("ct").getField("_2").as("centv"): _*)
+      .withColumn("sim", dot(col(by), col("centv")))
       .withColumn("r", row_number().over(wq)).filter(col("r") <= nProbe)
       .select(col("query_id"), col("qv"), col("cid").as("cluster"))
+  }
+
+  /** The IVF-family coarse scoring every IVF probe body runs, per-run or
+    * ingested: the probes ([[ivfProbes]]) ⋈ the coded cells `cells`
+    * returns for them, on cluster, self-pairs dropped, the cell column
+    * `vec` scored against the query.
+    */
+  private def ivfScore(q: DataFrame, cent: Centroids, nProbe: Int, vec: String,
+                       by: String = "qv")(cells: DataFrame => DataFrame): DataFrame = {
+    val probes = ivfProbes(q, cent, nProbe, by)
+    cells(probes).join(broadcast(probes), Seq("cluster"))
+      .filter(col("nn_id") =!= col("query_id"))
+      .withColumn("score", graft.Num.r6(dot(col(vec), col("qv"))))
   }
 
   /** Persist the composed IVF-PQ index ONCE: the cluster-bucketed
@@ -879,8 +891,7 @@ object Similarity {
   def ingestIvfPq(corpus: DataFrame, idCol: String, vecCol: String,
                   table: String, nCentroids: Int, m: Int, nCodes: Int,
                   kmeansIters: Int, nBuckets: Int): Unit = {
-    val c = normalizedCorpus(corpus, idCol, vecCol, kmeansIters)
-    val cent = coarseQuantizer(c, nCentroids, kmeansIters)
+    val (c, cent) = quantizedCorpus(corpus, idCol, vecCol, nCentroids, kmeansIters)
     val books = pqCodebooks(c, m, nCodes, kmeansIters)
     val spark = corpus.sparkSession
     ivfpqIndex.ingest(spark, table, nBuckets, ivfpqIndex.encode(c, (cent, books)),
@@ -913,39 +924,34 @@ object Similarity {
                         queries: DataFrame, idCol: String, vecCol: String,
                         k: Int, nProbe: Int, nCandidates: Int = 0,
                         nSalts: Int = 0, asOf: Option[Long] = None): DataFrame = {
-    require(k >= 1 && nProbe >= 1, "k and nProbe must be positive")
-    val nCand = if (nCandidates > 0) nCandidates else 4 * k
-    require(nCand >= k, "nCandidates must be >= k")
-    val cent = centroidsOf(spark, table)
-    val books = pqBooksOf(spark, table)
-    val cvec = ivfpqIndex.live(spark, table, "_vectors", asOf)
-    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
-    if (books.isEmpty || cent.isEmpty) return emptyTopKResult(cvec, q)
-    val probes = ivfProbes(q, cent, nProbe)
-    // literal CELL PRUNING: the probed cluster ids are (queries ×
-    // nProbe)-bounded by construction, so collecting them costs one
-    // tiny job and turns the cell restriction into an IN literal the
-    // bucketed scan can prune FILES with — a runtime join relation
-    // cannot prune a Spark bucketed scan, a literal can. Semantics
-    // unchanged (the join would drop the same rows); this moves the
-    // drop from post-scan to the scan itself.
-    val cells = probedCells(probes)
-    val coded = ivfpqIndex.live(spark, table, asOf = asOf)
-      .where(col("cluster").isin(cells: _*))
-      .select(col("nn_id"), col("cluster"),
-        pqReconstructCodes(books, col("codes")).as("dq"))
-    val coarse = coded.join(broadcast(probes), Seq("cluster"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("score", graft.Num.r6(dot(col("dq"), col("qv"))))
-    val cand = topKMerge(coarse, nCand, salts).select(col("query_id"), col("nn_id"))
-    pqRescore(cand, cvec, q, k)
+    val tail = twoTier(k, nCandidates)
+    require(nProbe >= 1, "nProbe must be positive")
+    val st @ (cent, books) = ivfpqIndex.load(spark, table)
+    ivfpqProbe(cent, ivfpqIndex.untrained(st), liveData(ivfpqIndex, spark, table, asOf),
+      pqCells(books), probedCells, queries, idCol, vecCol, nProbe, nSalts, tail)
   }
 
-  /** The distinct probed cluster ids as driver literals — bounded by
-    * min(nCentroids, queries × nProbe) by construction.
+  /** The live data tables of a persisted index in `tables` order — the
+    * read twin of the descriptor's `encode`, so a per-run probe and its
+    * ingested twin hand the same relations to one probe body.
     */
-  private def probedCells(probes: DataFrame): Seq[Any] =
-    probes.select(col("cluster")).distinct().collect().map(_.get(0)).toSeq
+  private def liveData[S](ix: PersistedIndex[S], spark: org.apache.spark.sql.SparkSession,
+                          table: String, asOf: Option[Long]): Seq[DataFrame] =
+    ix.tables.map { case (sfx, _) => ix.live(spark, table, sfx, asOf) }
+
+  /** Literal CELL PRUNING for the ingested IVF-family probes: the probed
+    * cluster ids are (queries × nProbe)-bounded by construction, so
+    * collecting them costs one tiny job and turns the cell restriction
+    * on the `cells` table into an IN literal the bucketed scan can prune
+    * FILES with — a runtime join relation cannot prune a Spark bucketed
+    * scan, a literal can. Semantics unchanged (the probe join would drop
+    * the same rows); this moves the drop from post-scan to the scan. The
+    * per-run forms read their in-memory encoding whole: pruning belongs
+    * to the bucketed read.
+    */
+  private def probedCells(cells: DataFrame, probes: DataFrame): DataFrame =
+    cells.where(col("cluster").isin(
+      probes.select(col("cluster")).distinct().collect().map(_.get(0)).toSeq: _*))
 
   /** Exactly-once streaming maintenance of an IVF-PQ index — the sixth
     * family's sink, same shape as [[pqSink]]/[[ivfSink]]: the first
@@ -1013,42 +1019,23 @@ object Similarity {
     * byte-reproducible on any engine (the oracle replays both chains
     * verbatim).
     *
+    * Trains both quantizers in memory, codes the residuals with
+    * [[rivfpqIndex]]'s encoding, then runs the
+    * [[topKIvfPqResidualIngested]] probe body (its literal-books path).
+    *
     * @return (query_id, nn_id, score, rank) — score is the EXACT cosine
     */
   def topKIvfPqResidual(corpus: DataFrame, queries: DataFrame, idCol: String,
                         vecCol: String, k: Int, nCentroids: Int, nProbe: Int,
                         m: Int, nCodes: Int, kmeansIters: Int,
                         nCandidates: Int = 0, nSalts: Int = 0): DataFrame = {
-    require(k >= 1 && nProbe >= 1, "k and nProbe must be positive")
-    require(m >= 1 && nCodes >= 1 && kmeansIters >= 0,
-      "m, nCodes must be positive; kmeansIters non-negative")
-    val nCand = if (nCandidates > 0) nCandidates else 4 * k
-    require(nCand >= k, "nCandidates must be >= k")
-    val c = normalizedCorpus(corpus, idCol, vecCol, math.max(kmeansIters, 1))
-    val cent = coarseQuantizer(c, nCentroids, kmeansIters)
-    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
-    if (cent.isEmpty) return emptyTopKResult(c, q)
-    val (resid, books) =
-      trainResidual(c, cent, m, nCodes, kmeansIters, "topKIvfPqResidual")
-    val centMap = typedLit(cent.toMap)
-    val sub = cent.head._2.length / m
-    // reconstruction: centroid + per-subspace codeword of the OWN cell's
-    // codebook — assign + look up in one expression (pqReconstruct's
-    // shape, cell-keyed)
-    val dqr = concat(books.indices.map { s =>
-      val plain = typedLit(books(s).map { case (cl, book) =>
-        cl -> book.map { case (cid, v, _) => cid -> v }.toMap })
-      element_at(element_at(plain, col("cluster")),
-        residArgmin(slice(col("rv"), s * sub + 1, sub), col("cluster"), books(s)))
-    }: _*)
-    val coded = resid.select(col("nn_id"), col("cluster"),
-      zip_with(element_at(centMap, col("cluster")), dqr, (a, b) => a + b).as("dq"))
-    val probes = ivfProbes(q, cent, nProbe)
-    val coarse = coded.join(broadcast(probes), Seq("cluster"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("score", graft.Num.r6(dot(col("dq"), col("qv"))))
-    val cand = topKMerge(coarse, nCand, salts).select(col("query_id"), col("nn_id"))
-    pqRescore(cand, c, q, k)
+    val tail = twoTier(k, nCandidates)
+    require(nProbe >= 1, "nProbe must be positive")
+    val (c, st, books) = trainResidual(corpus, idCol, vecCol, nCentroids, m,
+      nCodes, kmeansIters, "topKIvfPqResidual")
+    ivfpqProbe(st.cent, st.untrained, rivfpqIndex.encode(c, st),
+      _.select(col("nn_id"), col("cluster"), residRecon(st.cent, books).as("dq")),
+      (codes, _) => codes, queries, idCol, vecCol, nProbe, nSalts, tail)
   }
 
   /** Persist the residual-coded IVF-PQ index ONCE — [[ingestIvfPq]]'s
@@ -1068,22 +1055,17 @@ object Similarity {
                           table: String, nCentroids: Int, m: Int, nCodes: Int,
                           kmeansIters: Int, nBuckets: Int): Unit = {
     val spark = corpus.sparkSession
-    val c = normalizedCorpus(corpus, idCol, vecCol, math.max(kmeansIters, 1))
-    val cent = coarseQuantizer(c, nCentroids, kmeansIters)
     // empty corpus: contract-schema empty tables + empty sidecars —
     // probes degrade to typed empty results, appends reject loudly
-    val books =
-      if (cent.isEmpty) IndexedSeq.empty[CellBook]
-      else trainResidual(c, cent, m, nCodes, kmeansIters, "ingestIvfPqResidual")._2
-    val sub = cent.headOption.fold(0)(_._2.length / m)
+    val (c, st, books) = trainResidual(corpus, idCol, vecCol, nCentroids, m,
+      nCodes, kmeansIters, "ingestIvfPqResidual")
     import spark.implicits._
     // the cellbooks sidecar is bucketed by the codes table's OWN cluster
     // key: the table-path probe's (cluster, s, cid) lookup join then
     // co-locates with the cluster-bucketed codes scan instead of
     // shuffling it
-    rivfpqIndex.ingest(spark, table, nBuckets,
-      rivfpqIndex.encode(c, ResidualState(cent, residCodes(_, books, sub), false)),
-      Seq(centroidRows(spark, cent),
+    rivfpqIndex.ingest(spark, table, nBuckets, rivfpqIndex.encode(c, st),
+      Seq(centroidRows(spark, st.cent),
         books.zipWithIndex.flatMap { case (book, s) =>
           book.toSeq.flatMap { case (cl, cws) =>
             cws.map { case (cid, v, _) => (cl, s, cid, v) } }
@@ -1154,21 +1136,30 @@ object Similarity {
     untrained = _.untrained, dim = _.cent.headOption.map(_._2.length),
     trainedOn = Some("_cellbooks"))
 
-  /** Train the per-cell residual codebooks over `c` under the non-empty
-    * `cent`, after the uniform-dimension guard: ragged input would slice
-    * into silently-truncated residuals (the [[pqCodebooks]] guard,
-    * applied once up front — limit-1 short-circuit). Returns the
-    * residual relation with the books.
+  /** Train both residual quantizers over the normalized corpus — the
+    * cells, then the per-cell residual codebooks after the
+    * uniform-dimension guard: ragged input would slice into
+    * silently-truncated residuals (the [[pqCodebooks]] guard, applied
+    * once up front — limit-1 short-circuit). Returns the normalized
+    * corpus, the state [[rivfpqIndex]] encodes with, and the books. An
+    * empty corpus trains no quantizer and no books.
     */
-  private def trainResidual(c: DataFrame, cent: Centroids, m: Int, nCodes: Int,
+  private def trainResidual(corpus: DataFrame, idCol: String, vecCol: String,
+                            nCentroids: Int, m: Int, nCodes: Int,
                             kmeansIters: Int, op: String)
-      : (DataFrame, IndexedSeq[CellBook]) = {
-    val dim = cent.head._2.length
-    require(dim % m == 0, s"vector dim $dim not divisible by m=$m subspaces")
-    require(c.where(size(col("cv")) =!= lit(dim)).limit(1).count() == 0L,
-      s"$op requires uniform $dim-dim vectors; found a different length")
-    val resid = residualsOf(c, cent)
-    (resid, residualCodebooks(resid, m, nCodes, kmeansIters, dim))
+      : (DataFrame, ResidualState, IndexedSeq[CellBook]) = {
+    require(m >= 1 && nCodes >= 1 && kmeansIters >= 0,
+      "m, nCodes must be positive; kmeansIters non-negative")
+    val c = normalizedCorpus(corpus, idCol, vecCol, math.max(kmeansIters, 1))
+    val cent = coarseQuantizer(c, nCentroids, kmeansIters)
+    val dim = cent.headOption.fold(0)(_._2.length)
+    val books = if (cent.isEmpty) IndexedSeq.empty[CellBook] else {
+      require(dim % m == 0, s"vector dim $dim not divisible by m=$m subspaces")
+      require(c.where(size(col("cv")) =!= lit(dim)).limit(1).count() == 0L,
+        s"$op requires uniform $dim-dim vectors; found a different length")
+      residualCodebooks(residualsOf(c, cent), m, nCodes, kmeansIters, dim)
+    }
+    (c, ResidualState(cent, residCodes(_, books, dim / m), books.isEmpty), books)
   }
 
   /** `(nn_id, cv, cluster, rv)`: the residual against the OWN cell's
@@ -1178,6 +1169,19 @@ object Similarity {
   private def residualsOf(c: DataFrame, cent: Centroids): DataFrame =
     assignClusters(c, cent).withColumn("rv", zip_with(col("cv"),
       element_at(typedLit(cent.toMap), col("cluster")), (a, b) => a - b))
+
+  /** `dq = centroid + per-cell codewords` for a codes relation
+    * `(nn_id, cluster, codes)` with the literal per-cell books — the
+    * plan-literal twin of [[residReconFromTable]].
+    */
+  private def residRecon(cent: Centroids, books: IndexedSeq[CellBook]): Column = {
+    val dqr = concat(books.indices.map { s =>
+      val plain = typedLit(books(s).map { case (cl, book) =>
+        cl -> book.map { case (cid, v, _) => cid -> v }.toMap })
+      element_at(element_at(plain, col("cluster")), element_at(col("codes"), s + 1))
+    }: _*)
+    zip_with(element_at(typedLit(cent.toMap), col("cluster")), dqr, (a, b) => a + b)
+  }
 
   /** Code a residual relation with the literal per-cell books. */
   private def residCodes(resid: DataFrame, books: IndexedSeq[CellBook],
@@ -1372,38 +1376,19 @@ object Similarity {
                                 nSalts: Int = 0,
                                 asOf: Option[Long] = None,
                                 maxLiteralBookRows: Int = 65536): DataFrame = {
-    require(k >= 1 && nProbe >= 1, "k and nProbe must be positive")
-    val nCand = if (nCandidates > 0) nCandidates else 4 * k
-    require(nCand >= k, "nCandidates must be >= k")
+    val tail = twoTier(k, nCandidates)
+    require(nProbe >= 1, "nProbe must be positive")
     val cent = centroidsOf(spark, table)
     val cbRows = spark.table(s"${table}_cellbooks")
       .limit(maxLiteralBookRows + 1).collect()
-    val cvec = rivfpqIndex.live(spark, table, "_vectors", asOf)
-    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
-    if (cent.isEmpty || cbRows.isEmpty) return emptyTopKResult(cvec, q)
-    val probes = ivfProbes(q, cent, nProbe)
-    val cells = probedCells(probes)
-    val codesLive = rivfpqIndex.live(spark, table, asOf = asOf)
-      .where(col("cluster").isin(cells: _*))
-    val coded =
+    val recon: DataFrame => DataFrame =
       if (cbRows.length <= maxLiteralBookRows) {
         val books = cellBooksFromRows(cbRows)
-        val centMap = typedLit(cent.toMap)
-        val dqr = concat(books.indices.map { s =>
-          val plain = typedLit(books(s).map { case (cl, book) =>
-            cl -> book.map { case (cid, v, _) => cid -> v }.toMap })
-          element_at(element_at(plain, col("cluster")),
-            element_at(col("codes"), s + 1))
-        }: _*)
-        codesLive.select(col("nn_id"), col("cluster"),
-          zip_with(element_at(centMap, col("cluster")), dqr,
-            (a, b) => a + b).as("dq"))
-      } else residReconFromTable(spark, table, codesLive)
-    val coarse = coded.join(broadcast(probes), Seq("cluster"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("score", graft.Num.r6(dot(col("dq"), col("qv"))))
-    val cand = topKMerge(coarse, nCand, salts).select(col("query_id"), col("nn_id"))
-    pqRescore(cand, cvec, q, k)
+        _.select(col("nn_id"), col("cluster"), residRecon(cent, books).as("dq"))
+      } else residReconFromTable(spark, table, _)
+    ivfpqProbe(cent, cent.isEmpty || cbRows.isEmpty,
+      liveData(rivfpqIndex, spark, table, asOf), recon, probedCells,
+      queries, idCol, vecCol, nProbe, nSalts, tail)
   }
 
   /** Exactly-once streaming maintenance of a residual IVF-PQ index —
@@ -1419,18 +1404,6 @@ object Similarity {
       : (DataFrame, Long) => Unit =
     rivfpqIndex.sink(table, idCol, vecCol)(ingestIvfPqResidual(_, idCol,
       vecCol, table, nCentroids, m, nCodes, kmeansIters, nBuckets))
-
-  /** Logical delete / physical compaction for a residual IVF-PQ index —
-    * the [[deleteFromIvfPq]]/[[compactIvfPq]] verbs on the same two
-    * tables; frozen sidecars stay, as everywhere.
-    */
-  def deleteFromIvfPqResidual(spark: org.apache.spark.sql.SparkSession,
-                              table: String, ids: DataFrame): Unit =
-    rivfpqIndex.delete(spark, table, ids)
-
-  def compactIvfPqResidual(spark: org.apache.spark.sql.SparkSession,
-                           table: String): Unit =
-    rivfpqIndex.compact(spark, table)
 
   /** Per-cell residual codebook: cluster → Seq of (cid, codeword,
     * −½‖codeword‖²) in ascending cid order — the augmented-bias form
@@ -1599,9 +1572,12 @@ object Similarity {
     */
   def diversifyMmr(candidates: DataFrame, corpus: DataFrame, idCol: String,
                    vecCol: String, k: Int, lambda: Double): DataFrame =
-    diversifyMmrFrom(candidates,
-      graft.Partitioning.spread(corpus)
-        .select(col(idCol).as("nn_id"), normalize(col(vecCol)).as("cv")),
+    // normalize after the fetch: only the candidates' vectors are read
+    // by the rerank, so normalizing the rest of the corpus is wasted work
+    diversifyMmrFrom(candidates, candIn => graft.Partitioning.spread(corpus)
+        .select(col(idCol).as("nn_id"), col(vecCol).as("v"))
+        .join(broadcast(candIn), Seq("nn_id"))
+        .withColumn("cv", normalize(col("v"))).drop("v"),
       k, lambda)
 
   /** [[diversifyMmr]] against a PERSISTED normalized-vector table
@@ -1625,18 +1601,18 @@ object Similarity {
     // the snapshot sidecar and the tombstone set live with the index
     // root, not the satellite name
     val root = asOf.map(_._1).getOrElse(vectorsTable.stripSuffix("_vectors"))
-    diversifyMmrFrom(candidates,
-      graft.ops.Tombstones.filterByParent(spark, root,
-        graft.ops.Snapshots.readAsOf(spark, vectorsTable, root, asOf.map(_._2)),
-        "nn_id"),
+    diversifyMmrFrom(candidates, candIn => graft.ops.Tombstones.filterByParent(spark,
+        root, graft.ops.Snapshots.readAsOf(spark, vectorsTable, root, asOf.map(_._2)),
+        "nn_id").join(broadcast(candIn), Seq("nn_id")),
       k, lambda)
   }
 
-  /** The shared MMR core over a prepared normalized relation
-    * `cvec (nn_id, cv)`. PIN COST: this call persists ONE
-    * MEMORY_AND_DISK plan — the candidate fetch, tracked for
-    * [[graft.Partitioning.unpersistPins]] in long-lived serving
-    * sessions. The candidate INPUT pin is released eagerly once the
+  /** The shared MMR core over `fetch(candIn)`: the pinned candidates
+    * joined to their normalized vectors `cv` (the caller's broadcast
+    * join, so a raw corpus can normalize the fetched rows only). PIN
+    * COST: this call persists ONE MEMORY_AND_DISK plan — the candidate fetch,
+    * tracked for [[graft.Partitioning.unpersistPins]] in long-lived
+    * serving sessions. The candidate INPUT pin is released eagerly once the
     * contract counts have materialized it into the fetch's cache, and
     * both are released when the contract check fails.
     *
@@ -1646,7 +1622,7 @@ object Similarity {
     * (≤ N candidates), so there is nothing to redistribute between
     * rounds and no per-round plan to truncate.
     */
-  private def diversifyMmrFrom(candidates: DataFrame, cvec: DataFrame,
+  private def diversifyMmrFrom(candidates: DataFrame, fetch: DataFrame => DataFrame,
                                k: Int, lambda: Double): DataFrame = {
     require(k >= 1, "k must be positive")
     require(lambda >= 0.0d && lambda <= 1.0d, "lambda must be in [0, 1]")
@@ -1658,7 +1634,7 @@ object Similarity {
         col("score"), floor(col("score") * lit(1000000.0d) + lit(0.5d))
           .cast("long").as("relm"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = cvec.join(broadcast(candIn), Seq("nn_id"))
+    val cand = fetch(candIn)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // contract check, loud: every candidate id must resolve to exactly
     // one corpus vector — a silently-dropped candidate (id-space mixup,
@@ -1901,26 +1877,6 @@ object Similarity {
     topKMerge(scored, k, salts)
   }
 
-  /** LSH-bucketed ANN: candidates must share the query's hyperplane bucket;
-    * top-k within candidates. Approximate (recall < 1) but the candidate
-    * join is an equi-join on the bucket key — the 100 TB path.
-    */
-  /** IVF (inverted-file) ANN: a deterministic coarse quantizer — seeds
-    * are the `nCentroids` lowest-id corpus vectors, optionally refined by
-    * `kmeansIters` rounds of deterministic Lloyd's k-means
-    * ([[kmeansRefine]]) — partitions the corpus into inverted lists
-    * (each vector assigned to its max-cosine centroid, ties to the
-    * lowest centroid id); a query probes its `nProbe` nearest centroids
-    * and ranks only those lists.
-    *
-    * Scale shape: assignment is a NARROW fold over a one-row broadcast
-    * centroid array ([[assignClusters]] — no per-vector exchange, no
-    * window); candidate generation is an equi-join on the cluster id
-    * with the (tiny) probe side broadcast. Recall < 1 like any IVF;
-    * raise nProbe — or kmeansIters, see the recall@k spec — to trade
-    * cost for recall. Corpus ids must be unique: each row is assigned
-    * independently (the id is the output key).
-    */
   /** (nn_id, cv, cluster) assignment via a NARROW argmax: the centroids
     * travel as a PLAN LITERAL (they are O(nCentroids x dim) by
     * definition — broadcast-scale) and each corpus vector scans them in
@@ -2148,26 +2104,23 @@ object Similarity {
                       queries: DataFrame, idCol: String, vecCol: String,
                       k: Int, nProbe: Int = 4, nSalts: Int = 0,
                       asOf: Option[Long] = None): DataFrame = {
-    val cent = centroidsOf(spark, table)
+    ivfFlatProbe(centroidsOf(spark, table), liveData(ivfIndex, spark, table, asOf),
+      probedCells, queries, idCol, vecCol, k, nProbe, nSalts)
+  }
+
+  /** The IVF probe body [[topKIvf]] and [[topKIvfIngested]] both run over
+    * their assigned `(nn_id, cv, cluster)` table, `read` narrowing it to
+    * the probes' cells as on [[ivfpqProbe]]. An empty-corpus index has
+    * no centroids and no neighbors.
+    */
+  private def ivfFlatProbe(cent: Centroids, data: Seq[DataFrame],
+                           read: (DataFrame, DataFrame) => DataFrame,
+                           queries: DataFrame, idCol: String, vecCol: String,
+                           k: Int, nProbe: Int, nSalts: Int): DataFrame = {
+    val Seq(assign) = data
     val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
-    if (cent.isEmpty) {
-      // an index built over an EMPTY corpus has no centroids and no
-      // neighbors
-      return emptyTopKResult(
-        graft.ops.Snapshots.readAsOf(spark, table, table, asOf), q)
-    }
-    val probes = ivfProbes(q, cent, nProbe)
-    // literal cell pruning, as in [[topKIvfPqIngested]]: the probed
-    // cluster ids are (queries × nProbe)-bounded — collected once, the
-    // IN literal lets the cluster-bucketed scan prune files instead of
-    // reading every cell and discarding post-join
-    val cells = probedCells(probes)
-    val assign = ivfIndex.live(spark, table, asOf = asOf)
-      .where(col("cluster").isin(cells: _*))
-    val scored = assign.join(broadcast(probes), Seq("cluster"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("score", graft.Num.r6(dot(col("cv"), col("qv"))))
-    topKMerge(scored, k, salts)
+    if (cent.isEmpty) emptyTopKResult(assign, q)
+    else topKMerge(ivfScore(q, cent, nProbe, "cv")(read(assign, _)), k, salts)
   }
 
   /** Persist the multi-table LSH index ONCE — [[ingestIvf]]'s sibling
@@ -2348,56 +2301,64 @@ object Similarity {
                       k: Int, nSalts: Int = 0,
                       asOf: Option[Long] = None): DataFrame = {
     val (nPlanes, nTables) = lshIndex.load(spark, table)
-    val banded = lshIndex.live(spark, table, asOf = asOf)
-    val (q0, salts) = prepQueries(queries, idCol, vecCol, nSalts, floor = 1L)
-    val matched = banded
-      .join(broadcast(tabled(q0, "qv", nPlanes, nTables)), Seq("tbl", "bucket"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("score", graft.Num.r6(dot(col("cv"), col("qv"))))
-    val scored = matched.groupBy(col("query_id"), col("nn_id"))
-      .agg(max(col("score")).as("score"))
-    topKMerge(scored, k, salts)
+    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts, floor = 1L)
+    lshProbe(lshIndex.live(spark, table, asOf = asOf), q, "qv", nPlanes, nTables,
+      k, salts)
   }
 
+  /** The banded LSH probe body [[topKLsh]], [[topKLshIngested]] and
+    * [[topKMipsAnn]] all run: the [[bandedMatch]] candidates, `cv`
+    * scored against `qv`, ranked. A pair found by several tables scores
+    * identically, so max() is a pure dedup — a pair-keyed exchange paid
+    * only when there are several tables.
+    */
+  private def lshProbe(banded: DataFrame, q: DataFrame, qVec: String, nPlanes: Int,
+                       nTables: Int, k: Int, salts: Int,
+                       excludeSelf: Boolean = true): DataFrame = {
+    val scored = bandedMatch(banded, q, qVec, nPlanes, nTables, excludeSelf)
+      .withColumn("score", graft.Num.r6(dot(col("cv"), col("qv"))))
+    topKMerge(if (nTables == 1) scored
+              else scored.groupBy(col("query_id"), col("nn_id"))
+                .agg(max(col("score")).as("score")), k, salts)
+  }
+
+  /** The LSH candidate join: the banded corpus `(nn_id, …, tbl, bucket)`
+    * ⋈ the broadcast queries banded on their `qVec` column, on (tbl,
+    * bucket), self-pairs optionally dropped. The selectivity diagnostics
+    * ([[lshCandidatePairs]], [[mipsCandidatePairs]]) count exactly the
+    * join the probes run.
+    */
+  private def bandedMatch(banded: DataFrame, q: DataFrame, qVec: String, nPlanes: Int,
+                          nTables: Int, excludeSelf: Boolean = true): DataFrame = {
+    val m = banded.join(broadcast(tabled(q, qVec, nPlanes, nTables)), Seq("tbl", "bucket"))
+    if (excludeSelf) m.filter(col("nn_id") =!= col("query_id")) else m
+  }
+
+  /** IVF (inverted-file) ANN: a deterministic coarse quantizer — seeds
+    * are the `nCentroids` lowest-id corpus vectors, optionally refined by
+    * `kmeansIters` rounds of deterministic Lloyd's k-means
+    * ([[kmeansRefine]]) — partitions the corpus into inverted lists
+    * (each vector assigned to its max-cosine centroid, ties to the
+    * lowest centroid id); a query probes its `nProbe` nearest centroids
+    * and ranks only those lists. Trains in memory, then runs the
+    * [[topKIvfIngested]] probe body over [[ivfIndex]]'s encoding.
+    *
+    * Scale shape: assignment is a NARROW fold over a one-row broadcast
+    * centroid array ([[assignClusters]] — no per-vector exchange, no
+    * window); candidate generation is an equi-join on the cluster id
+    * with the (tiny) probe side broadcast. Recall < 1 like any IVF;
+    * raise nProbe — or kmeansIters, see the recall@k spec — to trade
+    * cost for recall. Corpus ids must be unique: each row is assigned
+    * independently (the id is the output key).
+    */
   def topKIvf(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
               k: Int, nCentroids: Int = 16, nProbe: Int = 4, nSalts: Int = 0,
               kmeansIters: Int = 0): DataFrame = {
     val (c, cent) = quantizedCorpus(corpus, idCol, vecCol, nCentroids, kmeansIters)
-    // assign each corpus vector to its best centroid: narrow map against
-    // the literal centroid array — never a per-vector shuffle or window
-    val assign = assignClusters(c, cent)
-    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cid").asc)
-    // probe selection: explode the literal centroids per query row —
-    // narrow, then a window over (queries x nCentroids) rows only
-    val probes = q.select(col("query_id"), col("qv"), explode(typedLit(cent)).as("ct"))
-      .select(col("query_id"), col("qv"),
-        col("ct").getField("_1").as("cid"), col("ct").getField("_2").as("centv"))
-      .withColumn("sim", dot(col("qv"), col("centv")))
-      .withColumn("r", row_number().over(wq)).filter(col("r") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cid").as("cluster"))
-    val scored = assign.join(broadcast(probes), Seq("cluster"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("score", graft.Num.r6(dot(col("cv"), col("qv"))))
-    topKMerge(scored, k, salts)
+    ivfFlatProbe(cent, ivfIndex.encode(c, cent), (assign, _) => assign, queries,
+      idCol, vecCol, k, nProbe, nSalts)
   }
 
-  /** `nTables > 1` switches on OR-amplified multi-table LSH (the
-    * classic Indyk–Motwani recall amplification): each table hashes
-    * with its own independent `nPlanes` hyperplanes (table t uses
-    * planes [t*nPlanes, (t+1)*nPlanes)), candidates are the UNION of
-    * same-bucket matches across tables, and a candidate found by
-    * several tables is deduplicated before the rank. Recall per true
-    * neighbor rises from p^b to 1-(1-p^b)^L while each table's bucket
-    * stays selective — the standard answer when one table's recall is
-    * data-limited (see AnnRecallSpec for the measured floors).
-    *
-    * Scale shape: the corpus side explodes nTables narrow bucket keys
-    * per vector (no shuffle); queries stay broadcast; the only new
-    * exchange is the candidate dedup, keyed on (query, candidate)
-    * pairs — candidate-sized, never corpus-sized.
-    */
   /** Explode `nTables` (tbl, bucket) keys per row — table t hashes with
     * its own independent planes [t*nPlanes, (t+1)*nPlanes). Shared by
     * [[topKLsh]] and [[lshCandidatePairs]] so the selectivity diagnostic
@@ -2424,45 +2385,42 @@ object Similarity {
   def lshCandidatePairs(corpus: DataFrame, queries: DataFrame, idCol: String,
                         vecCol: String, nPlanes: Int, nTables: Int = 1): DataFrame = {
     require(nTables >= 1, "nTables must be positive")
-    val c0 = graft.Partitioning.spread(corpus)
-      .select(col(idCol).as("nn_id"), normalize(col(vecCol)).as("cv"))
-    val q0 = queries.select(col(idCol).as("query_id"), normalize(col(vecCol)).as("qv"))
-    tabled(c0.select(col("nn_id"), col("cv")), "cv", nPlanes, nTables)
-      .select(col("nn_id"), col("tbl"), col("bucket"))
-      .join(broadcast(tabled(q0, "qv", nPlanes, nTables)
-        .select(col("query_id"), col("tbl"), col("bucket"))), Seq("tbl", "bucket"))
-      .filter(col("nn_id") =!= col("query_id"))
+    bandedMatch(lshIndex.encode(vectorRows(corpus, idCol, vecCol), (nPlanes, nTables)).head,
+        queries.select(col(idCol).as("query_id"), normalize(col(vecCol)).as("qv")),
+        "qv", nPlanes, nTables)
       .select(col("query_id"), col("nn_id")).distinct()
   }
 
-  /** `excludeSelf` as on [[topK]]: false for cross-set searches (bitext
+  /** LSH-bucketed ANN: candidates must share the query's hyperplane bucket;
+    * top-k within candidates. Approximate (recall < 1) but the candidate
+    * join is an equi-join on the bucket key — the 100 TB path. Bands the
+    * corpus in memory with [[lshIndex]]'s encoding, then runs the
+    * [[topKLshIngested]] probe body.
+    *
+    * `nTables > 1` switches on OR-amplified multi-table LSH (the
+    * classic Indyk–Motwani recall amplification): each table hashes
+    * with its own independent `nPlanes` hyperplanes (table t uses
+    * planes [t*nPlanes, (t+1)*nPlanes)), candidates are the UNION of
+    * same-bucket matches across tables, and a candidate found by
+    * several tables is deduplicated before the rank. Recall per true
+    * neighbor rises from p^b to 1-(1-p^b)^L while each table's bucket
+    * stays selective — the standard answer when one table's recall is
+    * data-limited (see AnnRecallSpec for the measured floors).
+    *
+    * Scale shape: the corpus side explodes nTables narrow bucket keys
+    * per vector (no shuffle); queries stay broadcast; the only new
+    * exchange is the candidate dedup, keyed on (query, candidate)
+    * pairs — candidate-sized, never corpus-sized.
+    *
+    * `excludeSelf` as on [[topK]]: false for cross-set searches (bitext
     * src/tgt sides) where overlapping id spaces must not drop pairs.
     */
   def topKLsh(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
               k: Int, nPlanes: Int = 8, nSalts: Int = 0,
               nTables: Int = 1, excludeSelf: Boolean = true): DataFrame = {
     require(nTables >= 1, "nTables must be positive")
-    def noSelf(df: DataFrame): DataFrame =
-      if (excludeSelf) df.filter(col("nn_id") =!= col("query_id")) else df
-    val c0 = graft.Partitioning.spread(corpus)
-      .select(col(idCol).as("nn_id"), normalize(col(vecCol)).as("cv"))
-    val (q0, salts) = prepQueries(queries, idCol, vecCol, nSalts, floor = 1L)
-    if (nTables == 1) {
-      val c = c0.withColumn("bucket", hyperplaneBucket(col("cv"), nPlanes))
-      val q = q0.withColumn("bucket", hyperplaneBucket(col("qv"), nPlanes))
-      val scored = noSelf(c.join(broadcast(q), Seq("bucket")))
-        .withColumn("score", graft.Num.r6(dot(col("cv"), col("qv"))))
-      topKMerge(scored, k, salts)
-    } else {
-      val matched = noSelf(tabled(c0, "cv", nPlanes, nTables)
-        .join(broadcast(tabled(q0, "qv", nPlanes, nTables)),
-          Seq("tbl", "bucket")))
-        .withColumn("score", graft.Num.r6(dot(col("cv"), col("qv"))))
-      // same pair found by several tables: identical score by
-      // construction, so max() is pure dedup (pair-keyed exchange)
-      val scored = matched.groupBy(col("query_id"), col("nn_id"))
-        .agg(max(col("score")).as("score"))
-      topKMerge(scored, k, salts)
-    }
+    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts, floor = 1L)
+    lshProbe(lshIndex.encode(vectorRows(corpus, idCol, vecCol), (nPlanes, nTables)).head,
+      q, "qv", nPlanes, nTables, k, salts, excludeSelf)
   }
 }

@@ -204,7 +204,8 @@ class PlanSpec extends AnyFunSuite {
     // a k-round distributed MMR whose rounds each reference the previous
     // pool twice (pick + update) doubles its logical plan per round:
     // 64,271 formatted lines / 7,306 Exchange nodes at k=5
-    // (plans/r20/_before/similarity_topk_mmr.txt) — driver-side
+    // (the round-20 plan dump of the k-round loop, no longer tracked;
+    // in git history up to commit 26fde53) — driver-side
     // planning cost that grows 2^k (guide §5, §3.3). The in-task fold
     // has no rounds in the plan at all; assert well under the
     // exponential regime so a reintroduced unbounded union fails loudly.
@@ -256,6 +257,27 @@ class PlanSpec extends AnyFunSuite {
     assert(ann.contains("BroadcastHashJoin"), ann.take(400))
     val ivf = plan("similarity_topk_mips_ivf")
     assert(ivf.contains("BroadcastHashJoin"), ivf.take(400))
+  }
+
+  test("per-run ANN gates: no more exchanges than before they shared the ingested probe bodies") {
+    // executed-plan (?<!Reused)Exchange counts at sf0.001 on this suite's
+    // session with an empty cache, taken at the commit before the per-run
+    // top-k forms ran their ingested twins' probe bodies; a change that
+    // adds a shuffle, a broadcast or a pinned side relation fails here.
+    // The cache is cleared per gate: a relation an earlier test cached
+    // would otherwise stand in for part of the plan
+    val ceiling = Seq("similarity_topk_ivf" -> 6, "similarity_topk_lsh" -> 4,
+      "similarity_topk_mlsh" -> 4, "similarity_topk_mips_ann" -> 4,
+      "similarity_topk_mips_ivf" -> 5, "similarity_topk_pq" -> 10,
+      "similarity_topk_sq8" -> 8, "similarity_topk_ivfpq" -> 11,
+      "similarity_topk_ivfpq_residual" -> 11)
+    for ((q, most) <- ceiling) {
+      graft.Partitioning.unpersistPins()
+      spark.catalog.clearCache()
+      val n = "(?<!Reused)Exchange".r.findAllIn(plan(q)).size
+      assert(n <= most, s"$q: $n exchanges in the executed plan, ceiling $most")
+    }
+    graft.Partitioning.unpersistPins()
   }
 
   test("q17/q20 correlated-aggregate shapes: broadcast join-backs, no cartesian") {
