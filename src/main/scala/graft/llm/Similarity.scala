@@ -316,6 +316,7 @@ object Similarity {
                      vecCol: String, k: Int, nCentroids: Int = 16,
                      nProbe: Int = 4, kmeansIters: Int = 2,
                      nSalts: Int = 1): DataFrame = {
+    requireProbes(nProbe)
     val (aug0, q0) = mipsAugmented(corpus, queries, idCol, vecCol)
     val aug = if (kmeansIters > 0) graft.Partitioning.pinForReuse(corpus, aug0) else aug0
     val cq = aug.select(col("nn_id"), normalize(col("av")).as("cv"))
@@ -812,7 +813,7 @@ object Similarity {
                 m: Int, nCodes: Int, kmeansIters: Int,
                 nCandidates: Int = 0, nSalts: Int = 0): DataFrame = {
     val tail = twoTier(k, nCandidates)
-    require(nProbe >= 1, "nProbe must be positive")
+    requireProbes(nProbe)
     val (c, cent) = quantizedCorpus(corpus, idCol, vecCol, nCentroids, kmeansIters)
     val st = (cent, pqCodebooks(c, m, nCodes, kmeansIters))
     ivfpqProbe(cent, ivfpqIndex.untrained(st), ivfpqIndex.encode(c, st),
@@ -846,6 +847,13 @@ object Similarity {
   private def pqCells(books: Books)(codes: DataFrame): DataFrame =
     codes.select(col("nn_id"), col("cluster"),
       pqReconstructCodes(books, col("codes")).as("dq"))
+
+  /** The probe-count guard every IVF-family top-k runs first, before
+    * any job and on an empty index too: `nProbe < 1` would keep no cell
+    * and silently return no rows.
+    */
+  private def requireProbes(nProbe: Int): Unit =
+    require(nProbe >= 1, "nProbe must be positive")
 
   /** The query-side probe relation shared by the IVF family: rank the
     * literal centroids per query by the query column `by` (a window over
@@ -925,7 +933,7 @@ object Similarity {
                         k: Int, nProbe: Int, nCandidates: Int = 0,
                         nSalts: Int = 0, asOf: Option[Long] = None): DataFrame = {
     val tail = twoTier(k, nCandidates)
-    require(nProbe >= 1, "nProbe must be positive")
+    requireProbes(nProbe)
     val st @ (cent, books) = ivfpqIndex.load(spark, table)
     ivfpqProbe(cent, ivfpqIndex.untrained(st), liveData(ivfpqIndex, spark, table, asOf),
       pqCells(books), probedCells, queries, idCol, vecCol, nProbe, nSalts, tail)
@@ -1030,7 +1038,7 @@ object Similarity {
                         m: Int, nCodes: Int, kmeansIters: Int,
                         nCandidates: Int = 0, nSalts: Int = 0): DataFrame = {
     val tail = twoTier(k, nCandidates)
-    require(nProbe >= 1, "nProbe must be positive")
+    requireProbes(nProbe)
     val (c, st, books) = trainResidual(corpus, idCol, vecCol, nCentroids, m,
       nCodes, kmeansIters, "topKIvfPqResidual")
     ivfpqProbe(st.cent, st.untrained, rivfpqIndex.encode(c, st),
@@ -1377,7 +1385,7 @@ object Similarity {
                                 asOf: Option[Long] = None,
                                 maxLiteralBookRows: Int = 65536): DataFrame = {
     val tail = twoTier(k, nCandidates)
-    require(nProbe >= 1, "nProbe must be positive")
+    requireProbes(nProbe)
     val cent = centroidsOf(spark, table)
     val cbRows = spark.table(s"${table}_cellbooks")
       .limit(maxLiteralBookRows + 1).collect()
@@ -2104,6 +2112,7 @@ object Similarity {
                       queries: DataFrame, idCol: String, vecCol: String,
                       k: Int, nProbe: Int = 4, nSalts: Int = 0,
                       asOf: Option[Long] = None): DataFrame = {
+    requireProbes(nProbe)
     ivfFlatProbe(centroidsOf(spark, table), liveData(ivfIndex, spark, table, asOf),
       probedCells, queries, idCol, vecCol, k, nProbe, nSalts)
   }
@@ -2354,6 +2363,7 @@ object Similarity {
   def topKIvf(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
               k: Int, nCentroids: Int = 16, nProbe: Int = 4, nSalts: Int = 0,
               kmeansIters: Int = 0): DataFrame = {
+    requireProbes(nProbe)
     val (c, cent) = quantizedCorpus(corpus, idCol, vecCol, nCentroids, kmeansIters)
     ivfFlatProbe(cent, ivfIndex.encode(c, cent), (assign, _) => assign, queries,
       idCol, vecCol, k, nProbe, nSalts)

@@ -27,6 +27,12 @@ import graft.Num
   * with [[Num.r6]] (the bit-identical floor-based formula the DuckDB
   * oracle uses), so float summation-order noise (~1e-17 relative) cannot
   * accumulate across iterations.
+  *
+  * Two loops serve the iterative operators: the PageRank loop
+  * ([[iterate]]) runs every PageRank form, personalized PageRank
+  * included, and the shortest-path loop ([[shortestPaths]]) runs BFS
+  * (unit steps) and SSSP (micro-unit weights). Label propagation and
+  * k-core keep their own rounds.
   */
 object Graph {
 
@@ -36,20 +42,20 @@ object Graph {
     * Multi-edges are weights: a (src, dst) pair appearing k times
     * contributes k shares of src's rank, and k counts toward src's
     * out-degree. Dangling nodes (no out-edges) redistribute their rank
-    * mass uniformly; the dangling set is computed ONCE (it is static)
-    * and the per-iteration mass aggregation is skipped entirely when the
-    * set is empty. The node count enters as one O(1) driver scalar (the
-    * teleport constant needs it inside literals), matching the k-means
-    * centroid idiom rather than a per-row driver loop.
+    * mass uniformly; the dangling flag is computed ONCE (it is static)
+    * on the keyed node relation and the per-iteration mass aggregation
+    * is skipped entirely when no node carries it. The node count enters
+    * as one O(1) driver scalar (the teleport constant needs it inside
+    * literals), matching the k-means centroid idiom rather than a
+    * per-row driver loop.
     *
     * `tol > 0` switches on tolerance-based termination — the standard
     * production control: stop as soon as the L1 rank delta
     * (Σ|rank_i − rank_{i−1}|) drops below `tol`, `iters` becoming the
     * cap. Cost per round: the previous rank rides the iteration's
-    * existing relation as one extra column (the contribution join bases
-    * on the rank relation instead of the bare node set — value-identical
-    * rows, see [[iterate]]) and the delta is ONE 1-row aggregate over
-    * the round's materialized ranks — no extra join, no extra shuffle.
+    * existing relation as one extra column (see [[iterate]]) and the
+    * delta is ONE 1-row aggregate over the round's materialized ranks —
+    * no extra join, no extra shuffle.
     * Choosing tol: the per-iteration 1e-6 grid rounding (the
     * cross-engine determinism contract) floors the reachable delta —
     * the rounded map sometimes has an exact fixed point (delta 0,
@@ -82,8 +88,7 @@ object Graph {
     // the join form never shuffles e before the keyed checkpoint —
     // where the window pays a full |E| sort+buffer per call. Bench:
     // graph_pagerank 3.25 s → 5.80 s with the window form; reverted.
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-    iterate(e.join(deg, "src"), iters, damping, tol)
+    iterate(withDeg(e, outDeg), iters, damping, tol)
   }
 
   /** Write the degree-annotated edge relation `(src, dst, deg)` as a
@@ -95,9 +100,8 @@ object Graph {
     */
   def writeEdges(edges: DataFrame, srcCol: String, dstCol: String,
                  table: String, nBuckets: Int): Unit = {
-    val e = longEdges(edges, srcCol, dstCol)
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-    Bucketing.writeBucketed(e.join(deg, "src"), table, "src", nBuckets)
+    Bucketing.writeBucketed(withDeg(longEdges(edges, srcCol, dstCol), outDeg),
+      table, "src", nBuckets)
   }
 
   /** Incremental edge ingest — the crawl-frontier twin of [[writeEdges]],
@@ -118,18 +122,29 @@ object Graph {
     * this layout's O(|V|) derived-table refresh.
     */
   def ingestEdges(edges: DataFrame, srcCol: String, dstCol: String,
-                  logTable: String, degTable: String, nBuckets: Int): Unit = {
-    val spark = edges.sparkSession
-    val e = longEdges(edges, srcCol, dstCol)
+                  logTable: String, degTable: String, nBuckets: Int): Unit =
+    ingestLog(longEdges(edges, srcCol, dstCol), logTable, degTable, nBuckets, outDeg)
+
+  /** The edge-log ingest of [[ingestEdges]] and [[ingestWeightedEdges]]:
+    * append `e` to the src-bucketed `logTable` (created at `nBuckets`),
+    * then rebuild `degTable` as `deg` per src over the whole log.
+    */
+  private def ingestLog(e: DataFrame, logTable: String, degTable: String,
+                        nBuckets: Int, deg: Column): Unit = {
+    val spark = e.sparkSession
+    // append with the CATALOG's bucket count, not the caller's — a
+    // config drift between the bootstrap and incremental jobs must be
+    // impossible by construction (the appendBm25/appendIvf discipline)
     if (spark.catalog.tableExists(logTable))
-      Bucketing.appendBucketed(e, logTable, "src", nBuckets)
-    else
-      Bucketing.writeBucketed(e, logTable, "src", nBuckets)
-    val deg = spark.table(logTable).groupBy("src")
-      .agg(count(lit(1)).cast("double").as("deg"))
-    // the aggregation over the src-bucketed log scan is already
-    // one-partition-per-bucket, so the writer's clustering is elided
-    Bucketing.writeBucketed(deg, degTable, "src", nBuckets)
+      Bucketing.appendBucketed(e, logTable, "src",
+        Bucketing.bucketCountOf(spark, logTable))
+    else Bucketing.writeBucketed(e, logTable, "src", nBuckets)
+    // degTable MUST share the log's bucket count or the co-located
+    // log⋈degrees join stops being exchange-free; the aggregation over
+    // the src-bucketed log scan is already one-partition-per-bucket,
+    // so the writer's clustering is elided
+    Bucketing.writeBucketed(spark.table(logTable).groupBy("src").agg(deg),
+      degTable, "src", Bucketing.bucketCountOf(spark, logTable))
   }
 
   /** PageRank over an [[ingestEdges]] log: the log⋈degrees join is
@@ -188,12 +203,8 @@ object Graph {
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
                        wCol: String, iters: Int, damping: Double = 0.85d,
                        tol: Double = 0.0d): DataFrame = {
-    val e = microEdges(edges, srcCol, dstCol, wCol)
-      .where(col("wmu") > 0L)
-    val deg = e.groupBy("src").agg(sum(col("wmu")).as("degmu"))
-    iterate(e.join(deg, "src"), iters, damping, tol,
-      contrib = col("rank") * col("wmu").cast("double")
-        / col("degmu").cast("double"))._1
+    val e = microEdges(edges, srcCol, dstCol, wCol).where(col("wmu") > 0L)
+    iterate(withDeg(e, outWeight), iters, damping, tol, contrib = weightedShare)._1
   }
 
   /** [[writeEdges]] for the WEIGHTED family: the micro-unit weighted
@@ -212,12 +223,9 @@ object Graph {
     */
   def writeWeightedEdges(edges: DataFrame, srcCol: String, dstCol: String,
                          wCol: String, table: String, nBuckets: Int): Unit = {
-    val e0 = microEdges(edges, srcCol, dstCol, wCol)
-    require(e0.where(col("wmu") < 0L).limit(1).count() == 0L,
-      "writeWeightedEdges requires non-negative edge weights")
-    val e = e0.where(col("wmu") > 0L)
-    val deg = e.groupBy("src").agg(sum(col("wmu")).as("degmu"))
-    Bucketing.writeBucketed(e.join(deg, "src"), table, "src", nBuckets)
+    val e = nonNegative(microEdges(edges, srcCol, dstCol, wCol), "writeWeightedEdges")
+      .where(col("wmu") > 0L)
+    Bucketing.writeBucketed(withDeg(e, outWeight), table, "src", nBuckets)
     val spark = edges.sparkSession
     import spark.implicits._
     Bucketing.writeSmall(
@@ -241,22 +249,8 @@ object Graph {
                           wCol: String, logTable: String, degTable: String,
                           nBuckets: Int): Unit = {
     val spark = edges.sparkSession
-    val e0 = microEdges(edges, srcCol, dstCol, wCol)
-    require(e0.where(col("wmu") < 0L).limit(1).count() == 0L,
-      "ingestWeightedEdges requires non-negative edge weights")
-    val e = e0.where(col("wmu") > 0L)
-    // append with the CATALOG's bucket count, not the caller's — a
-    // config drift between the bootstrap and incremental jobs must be
-    // impossible by construction (the appendBm25/appendIvf discipline)
-    if (spark.catalog.tableExists(logTable))
-      Bucketing.appendBucketed(e, logTable, "src",
-        Bucketing.bucketCountOf(spark, logTable))
-    else Bucketing.writeBucketed(e, logTable, "src", nBuckets)
-    // degTable MUST share the log's bucket count or the co-located
-    // log⋈degrees join stops being exchange-free
-    Bucketing.writeBucketed(
-      spark.table(logTable).groupBy("src").agg(sum(col("wmu")).as("degmu")),
-      degTable, "src", Bucketing.bucketCountOf(spark, logTable))
+    ingestLog(nonNegative(microEdges(edges, srcCol, dstCol, wCol), "ingestWeightedEdges")
+      .where(col("wmu") > 0L), logTable, degTable, nBuckets, outWeight)
     import spark.implicits._
     Bucketing.writeSmall(
       Seq((1000000L, true)).toDF("wmu_scale", "validated"),
@@ -275,9 +269,7 @@ object Graph {
                                tol: Double = 0.0d): DataFrame = {
     requireWeightedTable(spark, logTable)
     iterate(spark.table(logTable).join(spark.table(degTable), "src"),
-      iters, damping, tol,
-      contrib = col("rank") * col("wmu").cast("double")
-        / col("degmu").cast("double"),
+      iters, damping, tol, contrib = weightedShare,
       keyParts = Some(Bucketing.bucketCountOf(spark, logTable)))._1
   }
 
@@ -290,8 +282,8 @@ object Graph {
                    sources: DataFrame, sourceCol: String,
                    maxIters: Int): DataFrame = {
     requireWeightedTable(spark, logTable)
-    ssspLoop(spark.table(logTable).select(col("src"), col("dst"), col("wmu")),
-      sources, sourceCol, maxIters)
+    shortestPaths(spark.table(logTable).select(col("src"), col("dst"), col("wmu")),
+      col("wmu"), microDist, sources, sourceCol, maxIters)
   }
 
   /** Verify a table was written by [[writeWeightedEdges]] (sidecar
@@ -321,9 +313,7 @@ object Graph {
                                iters: Int, damping: Double = 0.85d,
                                tol: Double = 0.0d): DataFrame = {
     requireWeightedTable(spark, table)
-    iterate(spark.table(table), iters, damping, tol,
-      contrib = col("rank") * col("wmu").cast("double")
-        / col("degmu").cast("double"),
+    iterate(spark.table(table), iters, damping, tol, contrib = weightedShare,
       keyParts = Some(Bucketing.bucketCountOf(spark, table)))._1
   }
 
@@ -336,71 +326,21 @@ object Graph {
     * PPR convention); nodes outside every seed's reach legitimately
     * rank 0.
     *
-    * Same Spark shape as [[pageRank]]: per iteration one equi-join +
-    * one aggregation, dangling mass as a 1-row broadcast scalar,
-    * lineage truncated, every rank on the r6 grid. The update is
-    * written as `seedTp + d·(insum + seedDm)` — EXACTLY the standard
-    * formula's association — so PPR with seeds = all nodes is
-    * bit-identical to [[pageRank]] (GraphSpec asserts it, dangling
-    * case included).
+    * Runs the [[pageRank]] loop ([[iterate]]) with the seed relation:
+    * the keyed nodes carry a `seed` flag, the teleport and the dangling
+    * mass are masked to it, and the update keeps the standard formula's
+    * association `seedTp + d·(insum + seedDm)` — so PPR with seeds =
+    * all nodes is bit-identical to [[pageRank]] (GraphSpec asserts it,
+    * dangling case included).
     *
-    * @return (node: long, rank: double) — every node of edges ∪ seeds
+    * @return (node: long, rank: double) — every node of edges ∪ seeds;
+    *         empty when there are no seeds
     */
   def pageRankPersonalized(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, seedCol: String,
                            iters: Int, damping: Double = 0.85d): DataFrame = {
-    require(iters >= 1, "iters must be at least 1")
-    require(damping > 0.0d && damping < 1.0d, "damping must be in (0, 1)")
-    val e = longEdges(edges, srcCol, dstCol)
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-    // nodes are keyed at the edges' count so the per-round joins align
-    val withDeg = e.join(deg, "src")
-    val keyParts = Some(graft.Partitioning.partsFor(withDeg))
-    val eDeg = graft.Partitioning.checkpointKeyed(withDeg, "src", keyParts)
-    val sd = seeds.select(col(seedCol).cast("long").as("node")).distinct()
-      .pipe(graft.Partitioning.checkpointKeep)
-    val nS = sd.count()
-    // no seeds → nothing to personalize toward: empty ranking, the
-    // same graceful empty-input contract as pageRank on empty edges
-    if (nS == 0L) return sd.withColumn("rank", lit(0.0d))
-    val nSD = nS.toDouble
-    val nodes = eDeg.select(col("src").as("node"))
-      .union(eDeg.select(col("dst").as("node")))
-      .union(sd.select(col("node")))
-      .distinct()
-      .join(sd.select(col("node"), lit(true).as("__s")), Seq("node"), "left")
-      .select(col("node"), coalesce(col("__s"), lit(false)).as("seed"))
-      .pipe(graft.Partitioning.checkpointKeyed(_, "node", keyParts))
-    val danglingNodes = nodes
-      .join(eDeg.select(col("src").as("node")), Seq("node"), "left_anti")
-      .pipe(graft.Partitioning.checkpointKeep)
-    val hasDangling = danglingNodes.limit(1).count() > 0L
-    val tp = (1.0d - damping) / nSD
-    var ranks = nodes.select(col("node"), col("seed"),
-      when(col("seed"), lit(1.0d / nSD)).otherwise(lit(0.0d)).as("rank"))
-    var i = 0
-    while (i < iters) {
-      val contribs = eDeg
-        .join(ranks.select(col("node").as("src"), col("rank")), "src")
-        .groupBy(col("dst"))
-        .agg(sum(col("rank") / col("deg")).as("insum"))
-        .select(col("dst").as("node"), col("insum"))
-      val base = nodes.join(contribs, Seq("node"), "left")
-      val withDm =
-        if (hasDangling) {
-          val dm = ranks.join(danglingNodes, Seq("node"), "left_semi")
-            .agg(coalesce(sum("rank"), lit(0.0d)).as("dm"))
-          base.crossJoin(broadcast(dm))
-        } else base.withColumn("dm", lit(0.0d))
-      val newRank = Num.r6(
-        when(col("seed"), lit(tp)).otherwise(lit(0.0d)) +
-          lit(damping) * (coalesce(col("insum"), lit(0.0d)) +
-            when(col("seed"), col("dm") / lit(nSD)).otherwise(lit(0.0d))))
-      ranks = withDm.select(col("node"), col("seed"), newRank.as("rank"))
-      i += 1
-      if (i < iters) ranks = ranks.pipe(graft.Partitioning.checkpointKeep)
-    }
-    ranks.select(col("node"), col("rank"))
+    iterate(withDeg(longEdges(edges, srcCol, dstCol), outDeg), iters, damping,
+      seeds = Some(seeds.select(col(seedCol).cast("long").as("node"))))._1
   }
 
   /** Synchronous label propagation (community detection): every node
@@ -456,28 +396,71 @@ object Graph {
     edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"),
       floor(col(wCol).cast("double") * lit(1000000.0d) + lit(0.5d)).cast("long").as("wmu"))
 
-  /** Shared iteration loop over a degree-annotated edge relation
-    * `(src, dst, deg)`. Returns (ranks, iterations actually run).
+  /** `e` with negative `wmu` rejected loudly by one limit-1 probe. */
+  private def nonNegative(e: DataFrame, op: String): DataFrame = {
+    require(e.where(col("wmu") < 0L).limit(1).count() == 0L,
+      s"$op requires non-negative edge weights")
+    e
+  }
+
+  /** The edges joined to their per-src aggregate `deg`: [[outDeg]] or
+    * [[outWeight]]. */
+  private def withDeg(e: DataFrame, deg: Column): DataFrame =
+    e.join(e.groupBy("src").agg(deg), "src")
+
+  private def outDeg: Column = count(lit(1)).cast("double").as("deg")
+  private def outWeight: Column = sum(col("wmu")).as("degmu")
+
+  /** The weighted family's contribution: rank(s)·wµ/Wµ(s). */
+  private def weightedShare: Column =
+    col("rank") * col("wmu").cast("double") / col("degmu").cast("double")
+
+  /** SSSP's output distance: micro-units back to the 1e-6 grid. */
+  private def microDist: Column = Num.r6(col("d").cast("double") / lit(1000000.0d))
+
+  /** Distinct undirected pairs `(u, v)` with u < v: ids cast to long,
+    * self-loops dropped, both directions and duplicates collapsed. */
+  private def undirected(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    pairs.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+      .where(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
+      .distinct()
+
+  /** `(node, deg)` over undirected pairs `(u, v)`. */
+  private def degrees(p: DataFrame): DataFrame =
+    p.select(col("u").as("node")).union(p.select(col("v").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("deg"))
+
+  /** The PageRank loop, shared by every rank operator, over a
+    * degree-annotated edge relation `(src, dst, deg)`. Returns (ranks,
+    * iterations actually run).
     *
-    * With `tol > 0` the contribution join bases on the RANK relation
-    * (node, rank) instead of the bare node set — the same rows by
-    * construction (ranks are defined over exactly the node set every
-    * round), so the arithmetic and output are bit-identical to the
-    * fixed-count path; the previous rank simply rides along as the
-    * `prev` column, and the round's L1 delta is one 1-row aggregate
-    * over the checkpointed result. The loop stops when delta < tol.
+    * The keyed node relation is ONE groupBy(node) over the src side,
+    * the dst side and the optional `seeds` (PPR), carrying the static
+    * flags `dangling` (no src row) and `seed`; both ride the rank
+    * relation, so each round's dangling mass is a filter + sum over the
+    * ranks and the contribution join bases on the ranks themselves.
+    * The seed count and "any dangling" come from one aggregate job.
+    * Without `seeds` every node is a seed — the seed count is the node
+    * count, the masks fold away and the update is the global
+    * `teleport + d·(insum + dm/n)`.
+    *
+    * With `tol > 0` the previous rank rides along as `prev`, and the
+    * round's L1 delta is one 1-row aggregate over the checkpointed
+    * result. The loop stops when delta < tol.
     */
   private def iterate(edges: DataFrame, iters: Int, damping: Double,
                       tol: Double = 0.0d,
                       contrib: Column = col("rank") / col("deg"),
-                      keyParts: Option[Int] = None): (DataFrame, Int) = {
+                      keyParts: Option[Int] = None,
+                      seeds: Option[DataFrame] = None): (DataFrame, Int) = {
     require(iters >= 1, "iters must be at least 1")
     require(damping > 0.0d && damping < 1.0d, "damping must be in (0, 1)")
     require(tol >= 0.0d, "tol must be non-negative")
     // `keyParts` is a BUCKETED edge relation's bucket count (already
     // keyed on src by its layout); an unbucketed one is keyed on src
     // here at Partitioning.partsFor. The nodes are keyed at the SAME
-    // count: every iteration LEFT-joins nodes on `node` against the
+    // count: every iteration LEFT-joins the ranks on `node` against the
     // contribution aggregate — a keyed claim pins the join (and
     // therefore each round's OUTPUT) at plain hash(node, P), which the
     // next round's rank-side join reuses through the node->src alias
@@ -486,61 +469,62 @@ object Graph {
     val parts = keyParts.getOrElse(graft.Partitioning.partsFor(edges))
     val eDeg = if (keyParts.isDefined) edges
       else graft.Partitioning.checkpointKeyed(edges, "src", Some(parts))
+    // one row per endpoint or seed, tagged 0 = src, 1 = dst, 2 = seed
+    val tagged = Seq(eDeg.select(col("src").as("node"), lit(0).as("tag")),
+      eDeg.select(col("dst").as("node"), lit(1).as("tag"))) ++
+      seeds.map(_.select(col("node"), lit(2).as("tag")))
+    val flags = (min(col("tag")) > 0).as("dangling") +:
+      seeds.map(_ => (max(col("tag")) === 2).as("seed")).toSeq
     val nodes = graft.Partitioning.checkpointKeyed(
-      eDeg.select(col("src").as("node"))
-        .union(eDeg.select(col("dst").as("node")))
-        .distinct(), "node", Some(parts))
-    val n = nodes.count()
-    if (n == 0L) return (nodes.withColumn("rank", lit(0.0d)), 0)
+      tagged.reduce(_ union _).groupBy("node").agg(flags.head, flags.tail: _*),
+      "node", Some(parts))
+    val seed = if (seeds.isDefined) col("seed") else lit(true)
+    val stats = nodes.agg(count(when(seed, 1)),
+      coalesce(max(col("dangling")), lit(false))).first()
+    val nS = stats.getLong(0)
+    if (nS == 0L) return (nodes.where(lit(false)).select(col("node"), lit(0.0d).as("rank")), 0)
+    val hasDangling = stats.getBoolean(1)
 
-    val danglingNodes = nodes
-      .join(eDeg.select(col("src").as("node")), Seq("node"), "left_anti")
-      .pipe(graft.Partitioning.checkpointKeep)
-    val hasDangling = danglingNodes.limit(1).count() > 0L
-
-    val nD = n.toDouble
-    val teleport = (1.0d - damping) / nD
-    var ranks = nodes.select(col("node"), lit(1.0d / nD).as("rank"))
+    val nSD = nS.toDouble
+    val teleport = (1.0d - damping) / nSD
+    def masked(c: Column) = when(seed, c).otherwise(lit(0.0d))
+    var ranks = nodes.withColumn("rank", masked(lit(1.0d / nSD)))
     var i = 0
     var converged = false
     while (i < iters && !converged) {
       val contribs = eDeg
-        .join(ranks.withColumnRenamed("node", "src"), "src")
+        .join(ranks.select(col("node").as("src"), col("rank")), "src")
         .groupBy(col("dst"))
         .agg(sum(contrib).as("insum"))
         .select(col("dst").as("node"), col("insum"))
-      // tol mode carries the previous rank through the SAME join (ranks
-      // covers exactly the node set, so the row set is identical)
-      val base =
-        if (tol > 0.0d) ranks.withColumnRenamed("rank", "prev")
-          .join(contribs, Seq("node"), "left")
-        else nodes.join(contribs, Seq("node"), "left")
+      val base = ranks.withColumnRenamed("rank", "prev")
+        .join(contribs, Seq("node"), "left")
       val withDm =
         if (hasDangling) {
           // 1-row scalar broadcast, the tpch_q15 idiom — never a shuffle
-          val dm = ranks.join(danglingNodes, Seq("node"), "left_semi")
+          val dm = ranks.where(col("dangling"))
             .agg(coalesce(sum("rank"), lit(0.0d)).as("dm"))
           base.crossJoin(broadcast(dm))
         } else base.withColumn("dm", lit(0.0d))
-      val newRank = Num.r6(lit(teleport) + lit(damping) *
-        (coalesce(col("insum"), lit(0.0d)) + col("dm") / lit(nD)))
+      val newRank = Num.r6(masked(lit(teleport)) + lit(damping) *
+        (coalesce(col("insum"), lit(0.0d)) + masked(col("dm") / lit(nSD))))
+      val next = withDm.withColumn("rank", newRank).drop("insum", "dm")
       i += 1
       if (tol > 0.0d) {
-        val next = withDm.select(col("node"), col("prev"), newRank.as("rank"))
-          .pipe(graft.Partitioning.checkpointKeep)
-        val delta = next.agg(coalesce(sum(abs(col("rank") - col("prev"))),
+        val ck = next.pipe(graft.Partitioning.checkpointKeep)
+        val delta = ck.agg(coalesce(sum(abs(col("rank") - col("prev"))),
           lit(0.0d))).first().getDouble(0)
         converged = delta < tol
-        ranks = next.select(col("node"), col("rank"))
+        ranks = ck.drop("prev")
       } else {
-        ranks = withDm.select(col("node"), newRank.as("rank"))
+        ranks = next.drop("prev")
         // truncate lineage between iterations; the LAST iteration stays
         // lazy so the caller's sink job is the one that materializes it
         // (and its plan stays inspectable)
         if (i < iters) ranks = ranks.pipe(graft.Partitioning.checkpointKeep)
       }
     }
-    (ranks, i)
+    (ranks.select(col("node"), col("rank")), i)
   }
 
   /** Bounded-hop breadth-first distances from a set of source nodes —
@@ -555,7 +539,9 @@ object Graph {
     * full reached set, keeps hop cost proportional to the frontier's
     * out-edges; state is |V|-bounded by construction (min per node), so
     * unlike path-enumeration formulations nothing explodes on cyclic
-    * graphs. Lineage is truncated per hop like [[pageRank]].
+    * graphs. Lineage is truncated per hop like [[pageRank]]. Runs the
+    * shortest-path loop ([[shortestPaths]]) with a unit step; the
+    * frontier is exactly the nodes first reached last hop.
     *
     * At 100 TB the same layout lever applies: over a src-bucketed edge
     * table the per-hop edge-side exchange disappears and only the
@@ -571,7 +557,7 @@ object Graph {
   def bfs(edges: DataFrame, srcCol: String, dstCol: String,
           sources: DataFrame, sourceCol: String, maxHops: Int): DataFrame = {
     val e = graft.Partitioning.checkpointKeyed(longEdges(edges, srcCol, dstCol), "src")
-    bfsLoop(e, sources, sourceCol, maxHops)
+    shortestPaths(e, lit(1L), col("d").cast("int"), sources, sourceCol, maxHops)
   }
 
   /** [[bfs]] over a [[writeEdges]]-bucketed (or [[ingestEdges]]-logged)
@@ -584,38 +570,8 @@ object Graph {
     */
   def bfsBucketed(spark: SparkSession, edgeTable: String,
                   sources: DataFrame, sourceCol: String, maxHops: Int): DataFrame =
-    bfsLoop(spark.table(edgeTable).select(col("src"), col("dst")),
-      sources, sourceCol, maxHops)
-
-  private def bfsLoop(e: DataFrame, sources: DataFrame, sourceCol: String,
-                      maxHops: Int): DataFrame = {
-    require(maxHops >= 0, "maxHops must be non-negative")
-    var reached = sources.select(col(sourceCol).cast("long").as("node")).distinct()
-      .select(col("node"), lit(0).as("dist")).pipe(graft.Partitioning.checkpointKeep)
-    var frontier = reached
-    var hop = 0
-    while (hop < maxHops && frontier.limit(1).count() > 0L) {
-      hop += 1
-      val expand = e.join(frontier.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"), lit(hop).as("dist"))
-      val next = reached.union(expand)
-        .groupBy("node").agg(min(col("dist")).as("dist"))
-      if (hop < maxHops) {
-        // ONE checkpoint per hop: the frontier is a filter over the
-        // checkpointed state, not a second materialization
-        val ck = next.pipe(graft.Partitioning.checkpointKeep)
-        frontier = ck.where(col("dist") === hop)
-        reached = ck
-      } else {
-        // the LAST hop stays lazy (the pageRank discipline): the
-        // caller's sink job materializes it and the hop-join plan —
-        // including the bucketed twin's exchange-free edge side —
-        // stays inspectable
-        reached = next
-      }
-    }
-    reached
-  }
+    shortestPaths(spark.table(edgeTable).select(col("src"), col("dst")),
+      lit(1L), col("d").cast("int"), sources, sourceCol, maxHops)
 
   /** Single-source shortest path over NON-NEGATIVE edge weights —
     * [[bfs]]'s weighted twin (link-distance features where hop count is
@@ -625,9 +581,10 @@ object Graph {
     * [[pageRankWeighted]] grid — weights floor(w·1e6+0.5), so every
     * path length is an exact long and min() is order-independent);
     * each round expands only the nodes whose distance IMPROVED last
-    * round along the edge list (one equi-join on src), folds with a
-    * min aggregate, and derives the next frontier from the
-    * improvement join. State is |V|-bounded by construction; rounds
+    * round along the edge list (one equi-join on src) and folds with a
+    * min aggregate that also yields the next frontier — the
+    * shortest-path loop ([[shortestPaths]]) [[bfs]] runs with unit
+    * steps. State is |V|-bounded by construction; rounds
     * stop early at the fixpoint (no improvement), `maxIters` capping
     * — the oracle's full unroll is identical because converged rounds
     * are no-ops under min (the [[kCore]] argument). Negative weights
@@ -650,9 +607,8 @@ object Graph {
     val e = microEdges(edges, srcCol, dstCol, wCol)
       .where(col("wmu").isNotNull)
       .pipe(graft.Partitioning.checkpointKeyed(_, "src"))
-    require(e.where(col("wmu") < 0L).limit(1).count() == 0L,
-      "sssp requires non-negative edge weights")
-    ssspLoop(e, sources, sourceCol, maxIters)
+      .pipe(nonNegative(_, "sssp"))
+    shortestPaths(e, col("wmu"), microDist, sources, sourceCol, maxIters)
   }
 
   /** [[sssp]] over a [[writeWeightedEdges]]-bucketed table: identical
@@ -669,40 +625,48 @@ object Graph {
                    sources: DataFrame, sourceCol: String,
                    maxIters: Int): DataFrame = {
     requireWeightedTable(spark, edgeTable)
-    ssspLoop(spark.table(edgeTable).select(col("src"), col("dst"), col("wmu")),
-      sources, sourceCol, maxIters)
+    shortestPaths(spark.table(edgeTable).select(col("src"), col("dst"), col("wmu")),
+      col("wmu"), microDist, sources, sourceCol, maxIters)
   }
 
-  private def ssspLoop(e: DataFrame, sources: DataFrame, sourceCol: String,
-                       maxIters: Int): DataFrame = {
-    require(maxIters >= 0, "maxIters must be non-negative")
+  /** The shortest-path loop shared by [[bfs]] (unit `step`) and
+    * [[sssp]] (`step` = the edge's micro-unit weight `wmu`): the state
+    * is `(node, d)`, `d` the best distance in step units as an exact
+    * long. Each round joins the FRONTIER (nodes new or improved last
+    * round) to the edges on src and folds the expansion in with a min
+    * aggregate that also carries `prev`, the min over the reached side
+    * only; the next frontier is `prev IS NULL OR d < prev` over the
+    * round's one checkpoint — under unit steps exactly the nodes first
+    * reached this round. Stops early on an empty frontier; the last
+    * round stays lazy so the caller's sink materializes it and its
+    * plan (a bucketed twin's exchange-free edge side included) stays
+    * inspectable.
+    *
+    * @return (node, dist) with `dist` the output expression over `d`
+    */
+  private def shortestPaths(e: DataFrame, step: Column, dist: Column,
+                            sources: DataFrame, sourceCol: String,
+                            maxIters: Int): DataFrame = {
+    require(maxIters >= 0, "the hop/round cap must be non-negative")
     var reached = sources.select(col(sourceCol).cast("long").as("node")).distinct()
-      .select(col("node"), lit(0L).as("distmu")).pipe(graft.Partitioning.checkpointKeep)
+      .select(col("node"), lit(0L).as("d")).pipe(graft.Partitioning.checkpointKeep)
     var frontier = reached
     var it = 0
-    var result = reached
     while (it < maxIters && frontier.limit(1).count() > 0L) {
       it += 1
       val expand = e.join(frontier.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"), (col("distmu") + col("wmu")).as("distmu"))
-      val next = reached.union(expand)
-        .groupBy("node").agg(min(col("distmu")).as("distmu"))
+        .select(col("dst").as("node"), (col("d") + step).as("d"),
+          lit(null).cast("long").as("prev"))
+      val next = reached.select(col("node"), col("d"), col("d").as("prev")).union(expand)
+        .groupBy("node").agg(min(col("d")).as("d"), min(col("prev")).as("prev"))
       if (it < maxIters) {
         val ck = next.pipe(graft.Partitioning.checkpointKeep)
-        // frontier = nodes whose best distance improved (or are new):
-        // only they can improve a neighbor next round
-        frontier = ck.join(
-            reached.withColumnRenamed("distmu", "prevmu"), Seq("node"), "left")
-          .where(col("prevmu").isNull || col("distmu") < col("prevmu"))
-          .select(col("node"), col("distmu"))
-        reached = ck
-        result = ck
-      } else {
-        result = next // last round lazy: caller's sink materializes it
-      }
+        frontier = ck.where(col("prev").isNull || col("d") < col("prev"))
+          .select(col("node"), col("d"))
+        reached = ck.select(col("node"), col("d"))
+      } else reached = next
     }
-    result.select(col("node"),
-      Num.r6(col("distmu").cast("double") / lit(1000000.0d)).as("dist"))
+    reached.select(col("node"), dist.as("dist"))
   }
 
   /** Triangle enumeration over an undirected edge list — the cohesion
@@ -726,18 +690,17 @@ object Graph {
     *
     * @return (d1, d2, d3) with d1 < d2 < d3
     */
-  def triangles(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val p = pairs.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
-    val deg = p.select(col("u").as("n")).union(p.select(col("v").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
+  def triangles(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    trianglesOf(undirected(pairs, aCol, bCol))
+
+  /** [[triangles]] over already [[undirected]] pairs `(u, v)`. */
+  private def trianglesOf(p: DataFrame): DataFrame = {
+    val deg = degrees(p)
     // orient by (deg, id); carry the HEAD's rank so the wedge join can
     // order the two out-neighbors without re-joining degrees
     val or = p
-      .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
-      .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
+      .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
+      .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
       .select(when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
         struct(col("u").as("s"), col("v").as("t"), col("dv").as("dt")))
         .otherwise(struct(col("v").as("s"), col("u").as("t"), col("du").as("dt"))).as("e"))
@@ -778,19 +741,12 @@ object Graph {
             k: Int, rounds: Int): DataFrame = {
     require(k >= 1, "k must be at least 1")
     require(rounds >= 1, "rounds must be at least 1")
-    var p = pairs.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
-      .pipe(graft.Partitioning.checkpointKeep)
+    var p = undirected(pairs, aCol, bCol).pipe(graft.Partitioning.checkpointKeep)
     var r = 0
     while (r < rounds) {
-      val keep = p.select(col("u").as("n")).union(p.select(col("v").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-        .where(col("d") >= k)
-        .select(col("n"))
-      p = p.join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
-        .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi")
+      val keep = degrees(p).where(col("deg") >= k).select(col("node"))
+      p = p.join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
+        .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
       r += 1
       if (r < rounds) {
@@ -804,8 +760,7 @@ object Graph {
     // degrees of the final edge relation, NO extra >= k filter: that
     // would be half of round rounds+1 — convergence (stability under
     // +1 round) is asserted in GraphSpec, not silently patched here
-    p.select(col("u").as("node")).union(p.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
+    degrees(p)
   }
 
   /** Link prediction over an undirected graph: score every NON-edge
@@ -839,18 +794,12 @@ object Graph {
   def linkPrediction(pairs: DataFrame, aCol: String, bCol: String,
                      maxDeg: Int): DataFrame = {
     require(maxDeg >= 2, "maxDeg must be at least 2 (a wedge middle has degree >= 2)")
-    val p = pairs.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
-      .pipe(graft.Partitioning.checkpointKeep)
-    val deg = p.select(col("u").as("n")).union(p.select(col("v").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
+    val p = undirected(pairs, aCol, bCol).pipe(graft.Partitioning.checkpointKeep)
     val adj = p.select(col("u").as("w"), col("v").as("x"))
       .union(p.select(col("v").as("w"), col("u").as("x")))
     // wedge middles capped at maxDeg; 1/ln(d) rides along from one join
-    val mid = adj.join(deg.where(col("d") <= maxDeg)
-      .select(col("n").as("w"), col("d")), "w")
+    val mid = adj.join(degrees(p).where(col("deg") <= maxDeg)
+      .select(col("node").as("w"), col("deg").as("d")), "w")
     val wedges = mid.select(col("w"), col("x"), col("d"))
       .join(mid.select(col("w"), col("x").as("y")), "w")
       .where(col("x") < col("y"))
@@ -868,16 +817,10 @@ object Graph {
     * @return (node, deg, tri, cc)
     */
   def clusteringCoefficient(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val p = pairs.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
-    val deg = p.select(col("u").as("node")).union(p.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    val tris = triangles(pairs, aCol, bCol)
-    val perNode = tris.select(explode(array(col("d1"), col("d2"), col("d3"))).as("node"))
+    val p = undirected(pairs, aCol, bCol)
+    val perNode = trianglesOf(p).select(explode(array(col("d1"), col("d2"), col("d3"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("tri"))
-    deg.join(perNode, Seq("node"), "left")
+    degrees(p).join(perNode, Seq("node"), "left")
       .select(col("node"), col("deg"), coalesce(col("tri"), lit(0L)).as("tri"),
         when(col("deg") >= 2, Num.r6(lit(2.0d) * coalesce(col("tri"), lit(0L)).cast("double") /
           (col("deg") * (col("deg") - 1)).cast("double"))).otherwise(lit(0.0d)).as("cc"))

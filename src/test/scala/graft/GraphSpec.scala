@@ -20,23 +20,53 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
   }
 
-  /** Reference: same formula, same rounding, plain Scala maps. */
+  /** Reference: same formula, same rounding, plain Scala maps. With
+    * `seeds` it is personalized PageRank: the seeds join the node set,
+    * and the initial rank, the teleport and the dangling mass go to the
+    * seeds only, split over their count. */
   private def ref(edges: Seq[(Long, Long)], iters: Int,
-                  d: Double = 0.85d): Map[Long, Double] = {
-    val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted
-    val n = nodes.size.toDouble
+                  d: Double = 0.85d, seeds: Seq[Long] = Nil): Map[Long, Double] = {
+    val nodes = (edges.map(_._1) ++ edges.map(_._2) ++ seeds).distinct.sorted
+    val seed: Long => Boolean = if (seeds.isEmpty) _ => true else seeds.toSet
+    def masked(nd: Long, x: Double) = if (seed(nd)) x else 0.0d
+    val n = nodes.count(seed).toDouble
     val deg = edges.groupBy(_._1).map { case (k, v) => k -> v.size.toDouble }
-    var rank = nodes.map(_ -> 1.0d / n).toMap
+    var rank = nodes.map(nd => nd -> masked(nd, 1.0d / n)).toMap
     val teleport = (1.0d - d) / n
     for (_ <- 1 to iters) {
       val insum = edges.groupBy(_._2).map { case (dst, es) =>
         dst -> es.map(e => rank(e._1) / deg(e._1)).sum
       }
       val dm = nodes.filterNot(deg.contains).map(rank).sum
-      rank = nodes.map(nd =>
-        nd -> Num.r6(teleport + d * (insum.getOrElse(nd, 0.0d) + dm / n))).toMap
+      rank = nodes.map(nd => nd -> Num.r6(masked(nd, teleport) +
+        d * (insum.getOrElse(nd, 0.0d) + masked(nd, dm / n)))).toMap
     }
     rank
+  }
+
+  /** Jobs started while `f` runs; a marker job drains the listener bus
+    * (its start is delivered after every event `f` caused). */
+  private def jobs(f: => Unit): Int = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new AtomicInteger(0)
+    val drained = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "drain"))
+          drained.countDown()
+        else started.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      f
+      sc.setJobDescription("drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+    } finally sc.removeSparkListener(l)
+    started.get
   }
 
   test("3-cycle is uniform at every iteration") {
@@ -133,6 +163,36 @@ class GraphSpec extends AnyFunSuite {
     val ppr = graft.ops.Graph.pageRankPersonalized(df, "s", "d", allNodes, "n", iters = 8)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(ppr === std, "uniform-seed PPR must collapse to standard PageRank exactly")
+  }
+
+  test("personalized PageRank matches the seeded reference: dangling non-seeds, a seed outside the edges") {
+    val sqlc = spark
+    import sqlc.implicits._
+    // 4 and 6 are dangling non-seeds; seed 99 has no edge at all, so it
+    // is a dangling seed whose mass re-teleports to the seed set
+    val edges = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 1L -> 4L, 2L -> 5L, 5L -> 6L, 7L -> 1L)
+    val seeds = Seq(1L, 5L, 99L)
+    for (iters <- Seq(1, 2, 5, 10)) {
+      val got = graft.ops.Graph.pageRankPersonalized(edges.toDF("s", "d"), "s", "d",
+          seeds.toDF("n"), "n", iters)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(got === ref(edges, iters, seeds = seeds), s"iters=$iters")
+    }
+  }
+
+  test("PageRank and personalized PageRank fold their setup into one count job") {
+    val sqlc = spark
+    import sqlc.implicits._
+    // the dangling fixture at iters = 1: before the dangling flag rode
+    // the keyed nodes, these ran 15 (pageRank) and 19 (PPR) jobs —
+    // nodes.count, the dangling checkpoint and its limit-1 probe, and
+    // for PPR the seed checkpoint and its count
+    val edges = Seq(1L -> 2L, 3L -> 1L).toDF("s", "d")
+    val pr = jobs(graft.ops.Graph.pageRank(edges, "s", "d", iters = 1).collect())
+    val ppr = jobs(graft.ops.Graph.pageRankPersonalized(edges, "s", "d",
+      Seq(1L).toDF("n"), "n", iters = 1).collect())
+    assert(pr <= 13, s"pageRank ran $pr jobs")
+    assert(ppr <= 13, s"pageRankPersonalized ran $ppr jobs")
   }
 
   test("personalized PageRank: rank stays with the seed component; mass conserved") {

@@ -11,8 +11,22 @@ class PlanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String =
+  /** The gate's executed plan, built over an empty cache: a relation an
+    * earlier test cached would otherwise stand in for part of the plan. */
+  private def plan(name: String): String = {
+    spark.catalog.clearCache()
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+  }
+
+  /** Fails on the first gate whose executed plan has more
+    * (?<!Reused)Exchange nodes than its ceiling. */
+  private def exchangeCeilings(ceiling: Seq[(String, Int)]): Unit = {
+    for ((q, most) <- ceiling) {
+      val n = "(?<!Reused)Exchange".r.findAllIn(plan(q)).size
+      assert(n <= most, s"$q: $n exchanges in the executed plan, ceiling $most")
+    }
+    graft.Partitioning.unpersistPins()
+  }
 
   test("view_flagship: broadcast joins + filter pushed to parquet scan") {
     val p = plan("view_flagship")
@@ -263,21 +277,30 @@ class PlanSpec extends AnyFunSuite {
     // executed-plan (?<!Reused)Exchange counts at sf0.001 on this suite's
     // session with an empty cache, taken at the commit before the per-run
     // top-k forms ran their ingested twins' probe bodies; a change that
-    // adds a shuffle, a broadcast or a pinned side relation fails here.
-    // The cache is cleared per gate: a relation an earlier test cached
-    // would otherwise stand in for part of the plan
+    // adds a shuffle, a broadcast or a pinned side relation fails here
     val ceiling = Seq("similarity_topk_ivf" -> 6, "similarity_topk_lsh" -> 4,
       "similarity_topk_mlsh" -> 4, "similarity_topk_mips_ann" -> 4,
       "similarity_topk_mips_ivf" -> 5, "similarity_topk_pq" -> 10,
       "similarity_topk_sq8" -> 8, "similarity_topk_ivfpq" -> 11,
       "similarity_topk_ivfpq_residual" -> 11)
-    for ((q, most) <- ceiling) {
-      graft.Partitioning.unpersistPins()
-      spark.catalog.clearCache()
-      val n = "(?<!Reused)Exchange".r.findAllIn(plan(q)).size
-      assert(n <= most, s"$q: $n exchanges in the executed plan, ceiling $most")
-    }
-    graft.Partitioning.unpersistPins()
+    exchangeCeilings(ceiling)
+  }
+
+  test("graph gates: no more exchanges than before PPR and BFS ran the shared loops") {
+    // executed-plan (?<!Reused)Exchange counts at sf0.001 in a fresh
+    // session, cache cleared per gate, taken at the commit before
+    // personalized PageRank ran the PageRank loop and BFS the
+    // shortest-path loop; the SSSP gates now sit below theirs (2), the
+    // per-round frontier join gone
+    val ceiling = Seq("graph_pagerank" -> 1, "graph_pagerank_bucketed" -> 3,
+      "graph_pagerank_ingested" -> 3, "graph_pagerank_personalized" -> 1,
+      "graph_pagerank_weighted" -> 1, "graph_sssp" -> 3,
+      "graph_sssp_bucketed" -> 4, "graph_pagerank_weighted_bucketed" -> 3,
+      "graph_pagerank_weighted_ingested" -> 3, "graph_sssp_ingested" -> 4,
+      "graph_pagerank_directed" -> 3, "graph_communities" -> 4,
+      "graph_triangles" -> 91, "graph_clustering" -> 103, "graph_bfs" -> 2,
+      "graph_bfs_bucketed" -> 2, "graph_kcore" -> 9, "graph_link_predict" -> 6)
+    exchangeCeilings(ceiling)
   }
 
   test("q17/q20 correlated-aggregate shapes: broadcast join-backs, no cartesian") {

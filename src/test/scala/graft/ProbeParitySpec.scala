@@ -9,10 +9,10 @@ import graft.ops.Bucketing
 
 /** Each vector index family's per-run top-k trains in memory and then
   * runs the probe body its persisted (`…Ingested`) twin runs. This spec
-  * covers the two cases the gate-parameter parity tests in
-  * AnnRecallSpec do not reach: the single-table LSH path, and an empty
-  * corpus, where both forms must return no rows with one schema whose
-  * id types come from the input.
+  * covers the cases the gate-parameter parity tests in AnnRecallSpec do
+  * not reach: the single-table LSH path; an empty corpus, where both
+  * forms must return no rows with one schema whose id types come from
+  * the input; and the IVF family's shared nProbe guard.
   */
 class ProbeParitySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -94,6 +94,27 @@ class ProbeParitySpec extends AnyFunSuite {
       assert(typed(per) == typed(ing), s"${f.name}: per-run ${typed(per)} vs ingested ${typed(ing)}")
       assert(typed(per).take(2) == Seq("query_id" -> "int", "nn_id" -> "int"),
         s"${f.name}: id types must come from the input, got ${typed(per)}")
+    }
+  }
+
+  test("flat IVF and MIPS-IVF top-k reject nProbe < 1 before any job, on an empty index too") {
+    // a corpus that fails the moment a job reads it: the guard must fire
+    // before training, or the error would be the job's, not the guard's
+    val poisoned = emb.withColumn("vec",
+      when(col("vid") >= 0, raise_error(lit("corpus read"))).otherwise(col("vec")))
+    def rejects(name: String)(probe: => DataFrame): Unit = {
+      val ex = intercept[IllegalArgumentException](probe)
+      assert(ex.getMessage.contains("nProbe must be positive"), s"$name: ${ex.getMessage}")
+    }
+    for (nProbe <- Seq(0, -1)) {
+      rejects("topKIvf")(Similarity.topKIvf(poisoned, queries, "vid", "vec", k = 3,
+        nCentroids = 4, nProbe = nProbe, kmeansIters = 1))
+      rejects("topKMipsAnnIvf")(Similarity.topKMipsAnnIvf(poisoned, queries, "vid", "vec",
+        k = 3, nCentroids = 4, nProbe = nProbe, kmeansIters = 1))
+      withIndex(families.head, emb.limit(0)) { root =>
+        rejects("topKIvfIngested")(Similarity.topKIvfIngested(spark, root, queries,
+          "vid", "vec", k = 3, nProbe = nProbe))
+      }
     }
   }
 }
