@@ -1420,7 +1420,7 @@ private[graft] object TextCorpusGates {
         // the materialization is corpus-sized: localCheckpoint is the
         // local-mode stand-in for cluster storage (persist DISK / a
         // staged write) — same disclosed policy as the minhash family's
-        // shingleRelation
+        // shingle checkpoint
         val toked = graft.Partitioning.spread(
             t(s, dir, "documents").select(col("doc_id"), col("text")))
           .withColumn("tk", graft.llm.TextAnalysis.tokens(col("text")))

@@ -377,14 +377,12 @@ object Corpus {
     * the driver's thread pool, and measured end-to-end that redundant
     * parallel work beats serializing two eager localCheckpoint jobs
     * first (corpus_perplexity 1.08 s lazy vs ~2.1 s materialized at
-    * sf0.1). Pass `materialize = true` to checkpoint the (bounded:
-    * topM + |ref vocab| rows) tables once — the right call when a
-    * caller reuses the model across MANY separate actions rather than
-    * one composed DAG.
+    * sf0.1). A caller that reuses the model across MANY separate
+    * actions rather than one composed DAG checkpoints the (bounded:
+    * topM + |ref vocab| rows) tables itself.
     */
   def bigramLm(ref: DataFrame, textCol: String,
-               topM: Int, tokensCol: Option[String] = None,
-               materialize: Boolean = false): (DataFrame, DataFrame) = {
+               topM: Int, tokensCol: Option[String] = None): (DataFrame, DataFrame) = {
     val toks = filter(tokensCol.map(col).getOrElse(
       TextAnalysis.tokens(col(textCol))), t => t =!= "")
     val pairs = graft.Partitioning.spread(ref.filter(col(textCol).isNotNull))
@@ -399,8 +397,7 @@ object Corpus {
       .limit(topM)
     val unigrams = pairs.select(explode(col("tk")).as("b"))
       .groupBy(col("b")).agg(count(lit(1)).as("cb"))
-    if (materialize) (bigrams.localCheckpoint(), unigrams.localCheckpoint())
-    else (bigrams, unigrams)
+    (bigrams, unigrams)
   }
 
   /** CCNet-style perplexity scoring: the document-quality signal is how
@@ -597,8 +594,9 @@ object Corpus {
     * Scale shape: one partial-aggregated count per domain (domain
     * cardinality, join strategy left to AQE — same argument as the
     * n-gram size relation) + a one-row broadcast normalizer; admission
-    * ranks run as the SALTED two-stage row_number of [[domainCap]], so
-    * a crawler-trap domain never sorts through one task. Output:
+    * ranks run as the salted two-stage [[graft.ops.Reshape.saltedTopN]]
+    * with the domain's quota as N, so a crawler-trap domain never sorts
+    * through one task. Output:
     * admitted rows as (id, domain, quota, rank_in_mix).
     */
   def temperatureSample(df: DataFrame, idCol: String, domainCol: String,
@@ -612,10 +610,9 @@ object Corpus {
     // domainCol named e.g. 'quota' would be silently replaced by the
     // generated column in the final select
     require(!Seq(idCol, domainCol).exists(c =>
-      Seq("quota", "rank_in_mix", "_h", "_salt", "_t_dom", "_r").exists(c.equalsIgnoreCase)),
-      "idCol/domainCol must not be named 'quota', 'rank_in_mix', '_h', " +
-        "'_salt', '_t_dom' or '_r' — reserved by temperatureSample")
-    import org.apache.spark.sql.expressions.Window
+      Seq("quota", "rank_in_mix", "_h", "_t_dom").exists(c.equalsIgnoreCase)),
+      "idCol/domainCol must not be named 'quota', 'rank_in_mix', '_h' or " +
+        "'_t_dom' — reserved by temperatureSample")
     val d = graft.Partitioning.spread(df).filter(col(domainCol).isNotNull)
     val counts = d.groupBy(col(domainCol).as("_t_dom"))
       .agg(count(lit(1)).as("_t_c"))
@@ -630,15 +627,8 @@ object Corpus {
     val withQ = d.join(quotas, col(domainCol) === col("_t_dom"))
       .drop("_t_dom")
       .withColumn("_h", TextAnalysis.rollingHash(col(idCol).cast("string")))
-    val salted = withQ.withColumn("_salt", pmod(hash(col(idCol)), lit(nSalts)))
-    val w1 = Window.partitionBy(col(domainCol), col("_salt"))
-      .orderBy(col("_h").asc, col(idCol).asc)
-    val partial = salted.withColumn("_r", row_number().over(w1))
-      .filter(col("_r") <= col("quota")).drop("_r", "_salt")
-    val w2 = Window.partitionBy(col(domainCol))
-      .orderBy(col("_h").asc, col(idCol).asc)
-    partial.withColumn("rank_in_mix", row_number().over(w2))
-      .filter(col("rank_in_mix") <= col("quota"))
+    graft.ops.Reshape.saltedTopN(withQ, Seq(col(domainCol)), Seq(col("_h").asc, col(idCol).asc),
+        hash(col(idCol)), col("quota"), nSalts, "rank_in_mix")
       .select(col(idCol), col(domainCol), col("quota"), col("rank_in_mix"))
   }
 
@@ -864,9 +854,9 @@ object Corpus {
         "reserved by selectByTokenBudget's output schema")
     // the histogram action and the returned filter both consume this
     // relation: materialize the NARROW (id, score, n, bin) projection
-    // once (localCheckpoint — the shingleRelation policy) so the
-    // upstream lineage (often an expensive scorer) runs a single time
-    // and both passes provably see the same rows
+    // once (localCheckpoint — the [[Dedup.ngramJaccard]] shingle
+    // policy) so the upstream lineage (often an expensive scorer) runs
+    // a single time and both passes provably see the same rows
     val d = graft.Partitioning.spread(df)
       .select(col(idCol), col(scoreCol),
         greatest(coalesce(col(nTokCol).cast("long"), lit(0L)), lit(0L))
@@ -1052,17 +1042,13 @@ object Corpus {
     * documents per URL domain, admitted in deterministic id order.
     *
     * Scale shape: domains are the textbook skewed key (one crawler-trap
-    * site can hold millions of pages), so the rank runs as a SALTED
-    * two-stage row_number — stage 1 caps each (domain, salt) slice to
-    * `maxPerDomain`, so no task ever sorts more than one slice; stage 2
-    * ranks the <= nSalts*maxPerDomain survivors exactly. Same design as
-    * the similarity top-k merge. Output adds `domain` and
-    * `rank_in_domain` (1-based).
+    * site can hold millions of pages), so the rank runs as the salted
+    * two-stage [[graft.ops.Reshape.saltedTopN]] on `hash(id)`. Output
+    * adds `domain` and `rank_in_domain` (1-based).
     */
   def domainCap(df: DataFrame, idCol: String, urlCol: String,
                 maxPerDomain: Int, nSalts: Int = 16): DataFrame = {
     require(maxPerDomain > 0 && nSalts > 0, "maxPerDomain and nSalts must be positive")
-    import org.apache.spark.sql.expressions.Window
     // unparseable URLs (ftp://, protocol-relative, junk) get a NULL
     // domain and are ADMITTED uncapped with rank NULL: collapsing every
     // non-http(s) URL into one "" pseudo-domain would silently drop all
@@ -1073,13 +1059,8 @@ object Corpus {
       .withColumn("domain", when(ext =!= "", ext))
     val (capped, passthrough) =
       (d.filter(col("domain").isNotNull), d.filter(col("domain").isNull))
-    val salted = capped.withColumn("_salt", pmod(hash(col(idCol)), lit(nSalts)))
-    val w1 = Window.partitionBy(col("domain"), col("_salt")).orderBy(col(idCol).asc)
-    val partial = salted.withColumn("_r", row_number().over(w1))
-      .filter(col("_r") <= maxPerDomain).drop("_r", "_salt")
-    val w2 = Window.partitionBy(col("domain")).orderBy(col(idCol).asc)
-    partial.withColumn("rank_in_domain", row_number().over(w2))
-      .filter(col("rank_in_domain") <= maxPerDomain)
+    graft.ops.Reshape.saltedTopN(capped, Seq(col("domain")), Seq(col(idCol).asc),
+        hash(col(idCol)), lit(maxPerDomain), nSalts, "rank_in_domain")
       .unionByName(passthrough.withColumn("rank_in_domain", lit(null).cast("int")))
   }
 

@@ -145,23 +145,6 @@ object Dedup {
     }
   }
 
-  /** The shingle relation, optionally materialized with `localCheckpoint`:
-    * the set-similarity operators reuse it 3-4x (sizes, both join sides,
-    * signatures), and measured on local[32] the recompute costs ~3x the
-    * one-time materialization. Trade-off: localCheckpoint pins blocks to
-    * executors (an executor loss fails the job instead of recomputing) —
-    * pass materialize=false on unreliable clusters to fall back to
-    * ReusedExchange-only sharing. A columnar .cache() is strictly worse
-    * here (string-heavy columnar encode costs more than it saves).
-    */
-  private def shingleRelation(df: DataFrame, idCol: String, textCol: String,
-                              n: Int, maxDocFreq: Option[Long],
-                              materialize: Boolean): DataFrame = {
-    val ds = docShingles(df, idCol, textCol, n, maxDocFreq)
-    // unkeyed on purpose — the [[minhashLsh]] measured-revert rationale
-    if (materialize) ds.localCheckpoint() else ds
-  }
-
   /** n-gram Jaccard near-dup: candidate pairs share >=1 shingle (equi-join
     * on the shingle), then J = |A∩B| / (|A|+|B|-|A∩B|) >= threshold.
     * No cross join anywhere: the shingle join IS the candidate generator.
@@ -176,9 +159,13 @@ object Dedup {
     */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
                    n: Int, threshold: Double,
-                   maxDocFreq: Option[Long] = None,
-                   materializeShingles: Boolean = true): DataFrame = {
-    val ds = shingleRelation(df, idCol, textCol, n, maxDocFreq, materializeShingles)
+                   maxDocFreq: Option[Long] = None): DataFrame = {
+    // the shingle relation feeds sizes and both join sides: measured on
+    // local[32] the recompute costs ~3x the one-time localCheckpoint
+    // (unkeyed — the [[minhashLsh]] measured-revert rationale). A
+    // columnar .cache() is strictly worse here (string-heavy columnar
+    // encode costs more than it saves)
+    val ds = docShingles(df, idCol, textCol, n, maxDocFreq).localCheckpoint()
     // attach |doc| to every shingle row so the LENGTH FILTER prunes pairs
     // INSIDE the join: J(A,B) >= t implies min(|A|,|B|) >= t * max(|A|,|B|),
     // so disparate-size pairs never reach the aggregation. Exact (no false
@@ -292,7 +279,6 @@ object Dedup {
                  k: Int, rowsPerBand: Int, threshold: Double,
                  maxDocFreq: Option[Long] = None,
                  maxBandFreq: Option[Long] = None,
-                 materializeShingles: Boolean = true,
                  tokensCol: Option[String] = None): DataFrame = {
     // the minhash family works over HASHED shingles end-to-end
     // ([[docShinglesHashed]]): every exchange below carries longs.
@@ -304,8 +290,8 @@ object Dedup {
     // where the keyed claim costs a full |doc,h| repartition + sort at
     // materialization. Bench: dedup_minhash_lsh 2.66 s → 10.9 s keyed
     // (rerun-confirmed, not scatter); reverted.
-    val ds0 = docShinglesHashed(df, idCol, textCol, n, maxDocFreq, tokensCol)
-    val ds = if (materializeShingles) ds0.localCheckpoint() else ds0
+    val ds = docShinglesHashed(df, idCol, textCol, n, maxDocFreq, tokensCol)
+      .localCheckpoint()
     val bandsAll = bandKeys(ds, k, rowsPerBand)
     val bands = maxBandFreq match {
       case None => bandsAll
@@ -970,7 +956,7 @@ object Dedup {
       .otherwise(array().cast("array<string>"))
     // the window relation feeds THREE consumers (dup-hash stats + both
     // pair-join sides) and the dup-candidate slice two — materialize
-    // both, same policy and trade-offs as [[shingleRelation]] (pass
+    // both, same policy and trade-offs as [[ngramJaccard]]'s shingles (pass
     // materializeWindows=false on unreliable clusters; at corpus scale
     // the window relation exceeds executor storage and the honest cost
     // is the recompute)
@@ -1098,12 +1084,10 @@ object Dedup {
     */
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
                   k: Int, w: Int, minShared: Long = 2L,
-                  maxOcc: Option[Long] = Some(100L),
-                  materialize: Boolean = true): DataFrame = {
+                  maxOcc: Option[Long] = Some(100L)): DataFrame = {
     require(minShared > 0, "minShared must be positive")
-    val fp0 = winnowFingerprints(df, idCol, textCol, k, w, confirmMult = Some(137L))
-      .select(col("doc"), col("h"), col("h2")).distinct()
-    val fp = if (materialize) fp0.localCheckpoint() else fp0
+    val fp = winnowFingerprints(df, idCol, textCol, k, w, confirmMult = Some(137L))
+      .select(col("doc"), col("h"), col("h2")).distinct().localCheckpoint()
     // fp is already distinct on (doc, h, h2): a plain count gives the
     // doc count per hash pair without the distinct-aggregate's Expand
     val ok = fp.groupBy(col("h"), col("h2")).agg(count(lit(1)).as("nd"))

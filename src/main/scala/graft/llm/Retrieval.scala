@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Keyword and hybrid retrieval over a document corpus — the exact
@@ -324,34 +323,15 @@ object Retrieval {
         writeStats(spark, table, live.getLong(0), live.getLong(1))
       })
 
-  /** Two-stage per-query top-k over (query_id, doc, score) — the
-    * [[Similarity]] salted-merge discipline applied to retrieval: a
-    * plain `Window.partitionBy(query_id)` would funnel EVERY matching
-    * document for a query through one task (at corpus scale a common
-    * term matches millions of documents); stage 1 takes the top k
-    * within each (query, salt) slice, stage 2 merges the ≤ nSalts·k
-    * survivors. Bit-identical output to the single-window form (the
-    * global top-k of a union of per-slice top-ks, deterministic ties
-    * by doc).
+  /** Per-query top-k over (query_id, doc, score), ties by doc:
+    * [[graft.ops.Reshape.saltedTopN]] salted on `hash(doc)` — a common
+    * term matches millions of documents, and a plain per-query window
+    * would funnel them all through one task.
     */
-  private def saltedTopK(scored: DataFrame, topK: Int, nSalts: Int): DataFrame = {
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc").asc)
-    val partial = if (nSalts <= 1) scored else {
-      // salt on hash(doc), not doc itself: pmod over a STRING id would
-      // cast to null and collapse every doc into one salt slice —
-      // silently voiding the anti-funnel property for non-numeric ids.
-      // Output is unaffected by salt assignment (union of per-slice
-      // top-ks re-ranked globally), so this is purely the scale shape.
-      val w1 = Window.partitionBy(col("query_id"), pmod(hash(col("doc")), lit(nSalts)))
-        .orderBy(col("score").desc, col("doc").asc)
-      scored.withColumn("_r", row_number().over(w1))
-        .filter(col("_r") <= topK).drop("_r")
-    }
-    partial.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= topK)
+  private def saltedTopK(scored: DataFrame, topK: Int, nSalts: Int): DataFrame =
+    graft.ops.Reshape.saltedTopN(scored, Seq(col("query_id")),
+        Seq(col("score").desc, col("doc").asc), hash(col("doc")), lit(topK), nSalts, "rank")
       .select(col("query_id"), col("doc"), col("score"), col("rank"))
-  }
 
   /** Reciprocal-rank fusion (Cormack et al. 2009) of several ranked
     * lists `(query_id, doc, rank)` — the standard hybrid-retrieval

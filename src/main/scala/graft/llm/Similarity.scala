@@ -154,37 +154,15 @@ object Similarity {
       .select(col("id"), col("pos").cast("int").as("dim"), col("col").as("value"))
   }
 
-  /** Two-stage per-query top-k: stage 1 takes the top k within each
-    * (query, salt) slice — `nSalts`-way parallel, so no single task ever
-    * sees more than ~N/nSalts corpus rows per query; stage 2 merges the
-    * <= nSalts*k survivors per query. At 100 TB stage 1 is the only pass
-    * over the corpus and stage 2's input is tiny. A plain
-    * `Window.partitionBy(query_id)` over the raw scores would funnel ALL
-    * N corpus scores for a query through one task — the skew this
-    * replaces. Deterministic: ties broken by corpus id.
+  /** Per-query top-k over `(query_id, nn_id, score)`, ties by corpus
+    * id: [[graft.ops.Reshape.saltedTopN]] salted on `hash(nn_id)`.
+    * `nSalts == 1` means the caller established per-query candidates
+    * are already small (e.g. LSH-bucketed).
     */
-  private def topKMerge(scored: DataFrame, k: Int, nSalts: Int): DataFrame = {
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("nn_id").asc)
-    // nSalts == 1 means the caller established per-query candidates are
-    // already small (e.g. LSH-bucketed): one window, no salted pre-stage
-    val partial = if (nSalts <= 1) scored else {
-      // salt on a HASH of the id, not the id itself: pmod over a raw
-      // string id is null/zero for non-numeric ids, which would collapse
-      // every candidate into one salt slice and silently void the
-      // anti-funnel property (output stays correct — the merge window
-      // re-ranks — but stage 1 degenerates to the skew it exists to
-      // prevent). Same fix as Retrieval.saltedTopK.
-      val salted = scored.withColumn("_salt", pmod(hash(col("nn_id")), lit(nSalts)))
-      val w1 = Window.partitionBy(col("query_id"), col("_salt"))
-        .orderBy(col("score").desc, col("nn_id").asc)
-      salted.withColumn("_rank", row_number().over(w1))
-        .filter(col("_rank") <= k).drop("_rank", "_salt")
-    }
-    partial.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
+  private def topKMerge(scored: DataFrame, k: Int, nSalts: Int): DataFrame =
+    graft.ops.Reshape.saltedTopN(scored, Seq(col("query_id")),
+        Seq(col("score").desc, col("nn_id").asc), hash(col("nn_id")), lit(k), nSalts, "rank")
       .select(col("query_id"), col("nn_id"), col("score"), col("rank"))
-  }
 
   /** Normalized (query_id, qv) side plus the salt count for the
     * two-stage merge. With explicit `nSalts > 0` construction stays
@@ -217,10 +195,11 @@ object Similarity {
       // persisted plan just recomputes the lost blocks. The pin outlives
       // this call (the returned top-k plan reads it lazily) — it is
       // tracked, and long-lived sessions release accumulated pins via
-      // [[graft.Partitioning.unpersistPins]] after their terminal action
+      // [[graft.Partitioning.unpersistPins]] after their terminal action.
+      // The partition count is read first: a bad setting fails pin-free
+      val p = graft.Partitioning.shufflePartitions(queries.sparkSession)
       val qc = graft.Partitioning.trackPin(
         q.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val p = queries.sparkSession.sessionState.conf.numShufflePartitions
       val nq = math.max(1L, qc.count())
       (qc, math.min(64L, math.max(floor, (4L * p + nq - 1) / nq)).toInt)
     }
@@ -452,14 +431,13 @@ object Similarity {
     * under EUCLIDEAN distance (the PQ objective — subvectors are not
     * unit-norm, so cosine assignment would be wrong): seeds are the
     * `nCodes` lowest-id vectors' subvectors, assignment is [[argminL2]],
-    * and the update is the PLAIN mean (no re-normalization) carried in
-    * exact integer micro-units — the [[kmeansRefine]] discipline, so
-    * training is byte-reproducible across partitionings and engines.
-    * Empty codes keep their previous codeword. Each training round is
-    * ONE job: a narrow corpus scan exploding (subspace, code, subvector)
-    * straight into a map-side-combined groupBy(s, code) whose
-    * m×nCodes-row integer result is collected — the corpus is scanned,
-    * never shuffled, exactly the [[kmeansRefine]] scale contract.
+    * and the update is the PLAIN mean (no re-normalization) of one
+    * exact-integer [[lloydMeans]] round, so training is
+    * byte-reproducible across partitionings and engines. Empty codes
+    * keep their previous codeword. Each training round is ONE job: a
+    * narrow corpus scan exploding (subspace, code, subvector) straight
+    * into the round's groupBy(s, code) — the corpus is scanned, never
+    * shuffled.
     *
     * At 100 TB: training cost is `kmeansIters` corpus scans (pay-once —
     * persist the codebooks and codes via the ingest layer for repeated
@@ -486,17 +464,16 @@ object Similarity {
   /** Train the per-subspace Euclidean codebooks over a normalized corpus
     * `c` (columns nn_id, cv) — the [[topKPq]] front half, shared with
     * [[ingestPq]]. Seeds are the `nCodes` lowest-id vectors' subvectors;
-    * each round is ONE job (explode → map-side-combined groupBy(s, code)
-    * → m×nCodes-row integer collect) per the [[kmeansRefine]] contract.
+    * each round is one [[lloydMeans]] over (s, code) with the
+    * [[argminL2]] assignment.
     */
   private[graft] def pqCodebooks(c: DataFrame, m: Int, nCodes: Int,
-                                 kmeansIters: Int)
-      : IndexedSeq[Seq[(Long, Seq[Double])]] = {
+                                 kmeansIters: Int): Books = {
     require(m >= 1 && nCodes >= 1 && kmeansIters >= 0,
       "m, nCodes must be positive; kmeansIters non-negative")
     // seeds: the nCodes lowest-id vectors, sliced per subspace — one
     // TakeOrdered job; dim is read from the seeds, ragged input fails
-    // the guarded training aggregate below
+    // the round's guard (or, with no round, the probe)
     val seedRows = c.orderBy(col("nn_id")).limit(nCodes)
       .select(col("nn_id").cast("long"), col("cv")).collect()
     // an empty corpus defines no codebooks — callers degrade to typed
@@ -505,65 +482,25 @@ object Similarity {
     val dim = seedRows.head.getSeq[Double](1).length
     require(dim % m == 0, s"vector dim $dim not divisible by m=$m subspaces")
     val sub = dim / m
-    if (kmeansIters == 0) {
-      // with no training rounds the loop's ragged-input guard below
-      // never runs — probe loudly here instead (limit-1 short-circuit;
-      // a ragged vector would otherwise be coded via silently-truncated
-      // dots and return plausible-looking wrong rankings)
-      require(c.where(size(col("cv")) =!= lit(dim)).limit(1).count() == 0L,
-        s"topKPq requires uniform $dim-dim vectors; found a different length")
-    }
-    var books: IndexedSeq[Seq[(Long, Seq[Double])]] = (0 until m).map { s =>
+    if (kmeansIters == 0) requireUniform(c, dim, "topKPq")
+    val seeds: Books = (0 until m).map { s =>
       seedRows.toSeq.map(r =>
         r.getLong(0) -> r.getSeq[Double](1).slice(s * sub, (s + 1) * sub))
     }
-    for (_ <- 0 until kmeansIters) {
+    (0 until kmeansIters).foldLeft(seeds) { (books, _) =>
+      // one scan: explode feeds the round's partially-aggregated groupBy
+      // — the exchange carries only the m × nCodes aggregated rows
       val perS = (0 until m).map { s =>
-        struct(lit(s).as("s"),
-          argminL2(slice(col("cv"), s * sub + 1, sub), books(s)).as("code"),
-          slice(col("cv"), s * sub + 1, sub).as("sv"),
-          size(col("cv")).as("fd"))
+        val sv = slice(col("cv"), s * sub + 1, sub)
+        struct(lit(s).as("s"), argminL2(sv, books(s)).as("code"), sv.as("v"))
       }
-      // one scan: explode feeds a partially-aggregated groupBy — the
-      // exchange carries only the m × nCodes aggregated rows. min/max
-      // subvector length AND full-vector length ride along so ragged
-      // input fails LOUDLY (the kmeansRefine guard; try_element_at
-      // keeps the message ours). The full-vector bound matters: a
-      // vector LONGER than dim still slices into full-length
-      // subvectors everywhere, so the subvector check alone would pass
-      // silently and code it from its first dim dimensions
-      val aggCols = Seq(count(lit(1)).as("cnt"),
-        min(size(col("sv"))).as("mindim"), max(size(col("sv"))).as("maxdim"),
-        min(col("fd")).as("minfd"), max(col("fd")).as("maxfd")) ++
-        (0 until sub).map(d =>
-          sum(floor(try_element_at(col("sv"), lit(d + 1)) * lit(1000000.0d) + lit(0.5d))
-            .cast("long")).as(s"x$d"))
-      val rows = c.select(explode(array(perS: _*)).as("e"))
-        .select(col("e.s").as("s"), col("e.code").as("code"),
-          col("e.sv").as("sv"), col("e.fd").as("fd"))
-        .groupBy(col("s"), col("code")).agg(aggCols.head, aggCols.tail: _*)
-        .collect()
-      rows.foreach { r =>
-        require(r.getInt(3) == sub && r.getInt(4) == sub,
-          s"topKPq requires uniform $dim-dim vectors; found subvector lengths " +
-            s"${r.getInt(3)}..${r.getInt(4)} in subspace ${r.getInt(0)}")
-        require(r.getInt(5) == dim && r.getInt(6) == dim,
-          s"topKPq requires uniform $dim-dim vectors; found vector lengths " +
-            s"${r.getInt(5)}..${r.getInt(6)}")
-      }
-      val byKey = rows.map(r => (r.getInt(0), r.getLong(1)) -> r).toMap
-      books = books.zipWithIndex.map { case (book, s) =>
-        book.map { case (cid, old) =>
-          byKey.get((s, cid)) match {
-            case Some(r) =>
-              val cnt = r.getLong(2).toDouble
-              cid -> (0 until sub).map(d => r.getLong(7 + d).toDouble / 1000000.0d / cnt)
-            case None => cid -> old
-          }
-        }
+      val means = lloydMeans(c.select(explode(array(perS: _*)).as("e"), size(col("cv")).as("fd"))
+        .select(col("e.s").as("s"), col("e.code").as("code"), col("e.v").as("v"), col("fd")),
+        Seq("s", "code"), sub, dim, "topKPq")
+      books.zipWithIndex.map { case (book, s) =>
+        book.map { case (cid, old) => cid -> means.getOrElse(Seq(s, cid), old) }
       }
     }
-    books
   }
 
   /** The m per-subspace code assignments of the normalized vector in
@@ -1145,10 +1082,10 @@ object Similarity {
     trainedOn = Some("_cellbooks"))
 
   /** Train both residual quantizers over the normalized corpus — the
-    * cells, then the per-cell residual codebooks after the
-    * uniform-dimension guard: ragged input would slice into
-    * silently-truncated residuals (the [[pqCodebooks]] guard, applied
-    * once up front — limit-1 short-circuit). Returns the normalized
+    * cells, then the per-cell residual codebooks. Ragged input would
+    * slice into silently-truncated residuals: the coarse quantizer's
+    * rounds reject it ([[lloydMeans]]), and with no rounds the
+    * [[requireUniform]] probe does. Returns the normalized
     * corpus, the state [[rivfpqIndex]] encodes with, and the books. An
     * empty corpus trains no quantizer and no books.
     */
@@ -1163,9 +1100,10 @@ object Similarity {
     val dim = cent.headOption.fold(0)(_._2.length)
     val books = if (cent.isEmpty) IndexedSeq.empty[CellBook] else {
       require(dim % m == 0, s"vector dim $dim not divisible by m=$m subspaces")
-      require(c.where(size(col("cv")) =!= lit(dim)).limit(1).count() == 0L,
-        s"$op requires uniform $dim-dim vectors; found a different length")
-      residualCodebooks(residualsOf(c, cent), m, nCodes, kmeansIters, dim)
+      // with rounds, the coarse quantizer's first round already checked
+      // every vector
+      if (kmeansIters == 0) requireUniform(c, dim, op)
+      residualCodebooks(residualsOf(c, cent), m, nCodes, kmeansIters, dim, op)
     }
     (c, ResidualState(cent, residCodes(_, books, dim / m), books.isEmpty), books)
   }
@@ -1441,13 +1379,12 @@ object Similarity {
     * with the cell in every key. Returns one [[CellBook]] per subspace.
     * Seeds: per cell, the nCodes lowest-id members' residual subvectors
     * (one bounded window-rank collect — ≤ nCentroids × nCodes rows);
-    * each round: one narrow scan, a map-side-combined groupBy(cluster,
-    * s, code), a ≤ nCentroids·m·nCodes-row integer collect, exact
-    * micro-unit means. Cells that lose all members in a round keep
-    * their previous codewords (the kmeansRefine rule).
+    * each round is one [[lloydMeans]] over (cluster, s, code), with the
+    * [[residArgmin]] assignment and the −½‖c‖² bias recomputed per
+    * codeword.
     */
-  private def residualCodebooks(resid: DataFrame, m: Int,
-                                nCodes: Int, kmeansIters: Int, dim: Int)
+  private def residualCodebooks(resid: DataFrame, m: Int, nCodes: Int,
+                                kmeansIters: Int, dim: Int, op: String)
       : IndexedSeq[CellBook] = {
     val sub = dim / m
     val wSeed = Window.partitionBy(col("cluster")).orderBy(col("nn_id").asc)
@@ -1455,49 +1392,32 @@ object Similarity {
       .filter(col("_rn") <= nCodes)
       .select(col("cluster"), col("nn_id").cast("long"), col("rv"))
       .collect()
-    def withBias(v: Seq[Double]): (Seq[Double], Double) =
-      (v, -0.5d * v.foldLeft(0.0d)((a, x) => a + x * x))
-    var books: IndexedSeq[CellBook] = (0 until m).map { s =>
+    def coded(cid: Long, v: Seq[Double]): (Long, Seq[Double], Double) =
+      (cid, v, -0.5d * v.foldLeft(0.0d)((a, x) => a + x * x))
+    val seeds: IndexedSeq[CellBook] = (0 until m).map { s =>
       seedRows.groupBy(_.getLong(0)).map { case (cl, rs) =>
-        cl -> rs.toSeq.sortBy(_.getLong(1)).map { r =>
-          val (v, b) = withBias(r.getSeq[Double](2).slice(s * sub, (s + 1) * sub))
-          (r.getLong(1), v, b)
-        }
-      }.toMap
-    }
-    for (_ <- 0 until kmeansIters) {
-      val perS = (0 until m).map { s =>
-        struct(lit(s).as("s"),
-          residArgmin(slice(col("rv"), s * sub + 1, sub), col("cluster"),
-            books(s)).as("code"),
-          slice(col("rv"), s * sub + 1, sub).as("sv"))
+        cl -> rs.toSeq.sortBy(_.getLong(1)).map(r =>
+          coded(r.getLong(1), r.getSeq[Double](2).slice(s * sub, (s + 1) * sub)))
       }
-      val aggCols = Seq(count(lit(1)).as("cnt")) ++ (0 until sub).map(d =>
-        sum(floor(element_at(col("sv"), d + 1) * lit(1000000.0d) + lit(0.5d))
-          .cast("long")).as(s"x$d"))
-      val rows = resid.select(col("cluster"), explode(array(perS: _*)).as("e"))
+    }
+    (0 until kmeansIters).foldLeft(seeds) { (books, _) =>
+      val perS = (0 until m).map { s =>
+        val sv = slice(col("rv"), s * sub + 1, sub)
+        struct(lit(s).as("s"), residArgmin(sv, col("cluster"), books(s)).as("code"), sv.as("v"))
+      }
+      val means = lloydMeans(resid.select(col("cluster"), explode(array(perS: _*)).as("e"),
+          size(col("cv")).as("fd"))
         .select(col("cluster"), col("e.s").as("s"), col("e.code").as("code"),
-          col("e.sv").as("sv"))
-        .groupBy(col("cluster"), col("s"), col("code"))
-        .agg(aggCols.head, aggCols.tail: _*)
-        .collect()
-      val byKey = rows.map(r => (r.getLong(0), r.getInt(1), r.getLong(2)) -> r).toMap
-      books = books.zipWithIndex.map { case (book, s) =>
+          col("e.v").as("v"), col("fd")),
+        Seq("cluster", "s", "code"), sub, dim, op)
+      books.zipWithIndex.map { case (book, s) =>
         book.map { case (cl, cws) =>
-          cl -> cws.map { case (cid, old, oldBias) =>
-            byKey.get((cl, s, cid)) match {
-              case Some(r) =>
-                val cnt = r.getLong(3).toDouble
-                val (v, b) = withBias(
-                  (0 until sub).map(d => r.getLong(4 + d).toDouble / 1000000.0d / cnt))
-                (cid, v, b)
-              case None => (cid, old, oldBias)
-            }
+          cl -> cws.map { case old @ (cid, _, _) =>
+            means.get(Seq(cl, s, cid)).fold(old)(coded(cid, _))
           }
         }
       }
     }
-    books
   }
 
   // ------------------------------------------- DELETE (tombstone) verbs
@@ -1921,19 +1841,14 @@ object Similarity {
     * seeds are the lowest-id corpus vectors (reproducible, no RNG); each
     * of `iters` rounds reassigns vectors to their max-cosine centroid
     * (ties to the lowest centroid id) and recomputes each centroid as
-    * the NORMALIZED MEAN of its members. The per-dimension sums are
-    * carried as exact integers (`floor(x*1e6+0.5)`) so the mean is
-    * associative — byte-reproducible across partitionings and engines;
-    * a raw double sum would be partition-order dependent. Empty clusters
-    * keep their previous centroid.
+    * the NORMALIZED MEAN of its members: the exact-integer mean of one
+    * [[lloydMeans]] round, then a sequential-fold L2 normalize in driver
+    * scalar code. Empty clusters keep their previous centroid.
     *
     * Scale shape per round: EXACTLY ONE job — a narrow corpus scan
-    * (literal-centroid argmax, [[assignClusters]]) feeding one
-    * partial-aggregated groupBy(cluster) with (count, dim) integer-sum
-    * columns, whose <= nCentroids-row result is collected and the new
-    * centroids computed in driver scalar code (bit-identical arithmetic:
-    * (sx/1e6)/cnt then a sequential-fold L2 normalize). This is the
-    * canonical distributed Lloyd's shape — Spark MLlib's KMeans likewise
+    * (literal-centroid argmax, [[assignClusters]]) feeding the round's
+    * groupBy(cluster), whose <= nCentroids-row result is collected.
+    * This is the canonical distributed Lloyd's shape — Spark MLlib's KMeans likewise
     * collects per-round centroid sums to the driver — and collecting
     * O(nCentroids x dim) aggregated longs per round is the entire
     * driver-side footprint: the corpus is scanned, never shuffled, and
@@ -1944,43 +1859,73 @@ object Similarity {
     */
   private def kmeansRefine(c: DataFrame, seeds: Seq[(Long, Seq[Double])],
                            iters: Int): Seq[(Long, Seq[Double])] = {
-    var cent = seeds
-    val dim = if (seeds.nonEmpty) seeds.head._2.length else 0
-    for (_ <- 0 until iters) {
-      // min/max vector length ride the same aggregate so ragged input
-      // fails LOUDLY in one round trip: a vector shorter/longer than the
-      // seed dim would silently skew the single per-cluster count (the
-      // exact-integer mean assumes every member contributes every dim)
-      val sumCols = Seq(count(lit(1)).as("cnt"),
-        min(size(col("cv"))).as("mindim"), max(size(col("cv"))).as("maxdim")) ++
-        (0 until dim).map(d =>
-          // try_element_at: a shorter-than-dim vector yields null (summed
-          // as absent) instead of ANSI INVALID_ARRAY_INDEX — so the
-          // ragged-input require below gets to fire with its real message
-          sum(floor(try_element_at(col("cv"), lit(d + 1)) * lit(1000000.0d) + lit(0.5d))
-            .cast("long")).as(s"s$d"))
-      val rows = assignClusters(c, cent)
-        .groupBy(col("cluster")).agg(sumCols.head, sumCols.tail: _*)
-        .collect()
-      rows.foreach { r =>
-        require(r.getInt(2) == dim && r.getInt(3) == dim,
-          s"kmeansRefine requires uniform $dim-dim vectors; found lengths " +
-            s"${r.getInt(2)}..${r.getInt(3)} in cluster ${r.getLong(0)}")
-      }
-      val byCid = rows.map(r => r.getLong(0) -> r).toMap
-      cent = cent.map { case (cid, old) =>
-        byCid.get(cid) match {
-          case Some(r) =>
-            val cnt = r.getLong(1).toDouble
-            val mv = Array.tabulate(dim)(d => r.getLong(4 + d).toDouble / 1000000.0d / cnt)
-            val n = math.sqrt(mv.foldLeft(0.0d)((a, x) => a + x * x))
-            cid -> mv.map(_ / n).toSeq
-          case None => cid -> old
+    val dim = seeds.headOption.fold(0)(_._2.length)
+    (0 until iters).foldLeft(seeds) { (cent, _) =>
+      val means = lloydMeans(assignClusters(c, cent)
+        .select(col("cluster"), col("cv").as("v"), size(col("cv")).as("fd")),
+        Seq("cluster"), dim, dim, "kmeansRefine")
+      cent.map { case (cid, old) =>
+        means.get(Seq(cid)).fold(cid -> old) { mv =>
+          val n = math.sqrt(mv.foldLeft(0.0d)((a, x) => a + x * x))
+          cid -> mv.map(_ / n)
         }
       }
     }
-    cent
   }
+
+  /** One exact-integer Lloyd's round — the update step every trainer
+    * runs ([[kmeansRefine]], [[pqCodebooks]], [[residualCodebooks]]):
+    * over a round's assigned rows `(keys…, v, fd)` (`keys` end in the
+    * assigned code, `v` is the member's `sub`-long (sub)vector, `fd` its
+    * full vector's length), ONE partially-aggregated groupBy(keys)
+    * computes the member count, min/max of `fd`, and per dimension the
+    * long sum of `floor(x·1e6 + 0.5)`. Its keys-sized
+    * result is collected, so the round is one job and the corpus is
+    * scanned, never shuffled.
+    *
+    * Rules every trainer inherits from here:
+    *  - exact-integer means: the micro-unit sums are associative, so
+    *    the mean `sum / 1e6 / cnt` is byte-reproducible across
+    *    partitionings and engines, where a raw double sum would be
+    *    partition-order dependent;
+    *  - the ragged-input guard: a vector of another length fails
+    *    LOUDLY, naming `op` and the lengths found. The full length is
+    *    the bound to check: a vector LONGER than `dim` still slices into
+    *    full-length subvectors, and with every vector `dim` long every
+    *    slice is `sub` long. `try_element_at` keeps a shorter one from
+    *    failing first with Spark's index error.
+    *
+    * @return each non-empty key's mean (a key with no members is absent:
+    *         its caller keeps the old vector)
+    */
+  private def lloydMeans(assigned: DataFrame, keys: Seq[String], sub: Int, dim: Int,
+                         op: String): Map[Seq[Any], Seq[Double]] = {
+    val aggCols = Seq(count(lit(1)), min(col("fd")), max(col("fd"))) ++
+      (0 until sub).map(d =>
+        sum(floor(try_element_at(col("v"), lit(d + 1)) * lit(1000000.0d) + lit(0.5d))
+          .cast("long")))
+    val nk = keys.length
+    assigned.groupBy(keys.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
+      .collect().map { r =>
+        val key = (0 until nk).map(r.get)
+        val (minfd, maxfd) = (r.getInt(nk + 1), r.getInt(nk + 2))
+        require(minfd == dim && maxfd == dim,
+          s"$op requires uniform $dim-dim vectors; found lengths $minfd..$maxfd " +
+            s"at ${keys.zip(key).mkString(", ")}")
+        val cnt = r.getLong(nk).toDouble
+        key -> (0 until sub).map(d => r.getLong(nk + 3 + d).toDouble / 1000000.0d / cnt)
+      }.toMap
+  }
+
+  /** The limit-1 ragged-input probe for a trainer that runs no Lloyd's
+    * round ([[lloydMeans]] carries the guard otherwise): a vector of
+    * another length would be coded via silently-truncated dots and
+    * return plausible-looking wrong rankings.
+    */
+  private def requireUniform(c: DataFrame, dim: Int, op: String): Unit =
+    c.where(size(col("cv")) =!= lit(dim)).select(size(col("cv"))).limit(1).collect()
+      .foreach(r => throw new IllegalArgumentException(
+        s"$op requires uniform $dim-dim vectors; found a ${r.getInt(0)}-dim vector"))
 
   /** The normalized-corpus relation (nn_id, cv) every IVF-family
     * consumer starts from: null vectors cannot participate (no

@@ -62,14 +62,12 @@ object Layout {
     * value of (xCol, yCol), range-partition into `nPartitions` by it,
     * and sort within partitions — so every output file covers one
     * compact Z-curve segment (a bounded square of the key plane). Write
-    * the result with any sink; the `z` column is dropped unless
-    * `keepZ`.
+    * the result with any sink; the `z` column is dropped.
     */
   def zorderBy(df: DataFrame, xCol: String, yCol: String, bits: Int,
-               nPartitions: Int, keepZ: Boolean = false): DataFrame = {
-    val withZ = df.withColumn("z", zValue(col(xCol), col(yCol), bits))
+               nPartitions: Int): DataFrame =
+    df.withColumn("z", zValue(col(xCol), col(yCol), bits))
       .repartitionByRange(nPartitions, col("z"))
       .sortWithinPartitions("z")
-    if (keepZ) withZ else withZ.drop("z")
-  }
+      .drop("z")
 }

@@ -31,24 +31,49 @@ object Reshape {
   }
 
   /** Per-group top-N rows by `orderCol` descending (ties by `tieCol`
-    * ascending): the two-stage salted formulation — stage 1 takes the
-    * local top-N inside each (group, salt) slice so no task ever sorts
-    * a whole hot group; stage 2 merges the <= nSalts*N survivors.
-    * A single `Window.partitionBy(group)` would funnel every row of the
-    * biggest group through one task — the skew this replaces (same
-    * design as the similarity top-k merge).
+    * ascending), ranked in `rk` (1-based) — [[saltedTopN]] salted on
+    * `hash(tieCol)` over `nSalts` slices.
     */
   def topNPerGroup(df: DataFrame, groupCols: Seq[String], orderCol: String,
-                   tieCol: String, n: Int, nSalts: Int = 16): DataFrame = {
+                   tieCol: String, n: Int, nSalts: Int = 16): DataFrame =
+    saltedTopN(df, groupCols.map(col), Seq(col(orderCol).desc, col(tieCol).asc),
+      hash(col(tieCol)), lit(n), nSalts, "rk")
+
+  /** The skew-safe per-group top-N every ranking operator runs: the rows
+    * whose `rankCol` — `row_number` over `groups` by `order` — is at
+    * most `n` (a literal, or a per-row column such as a quota).
+    *
+    * Stage 1 takes the local top-N inside each (groups, `pmod(salt,
+    * nSalts)`) slice, so no task ever sorts a whole hot group; stage 2
+    * ranks the ≤ nSalts·N survivors per group in one global window. A
+    * single `Window.partitionBy(groups)` would funnel every row of the
+    * biggest group through one task. The salting is INVISIBLE in the
+    * output: the global top-N of a union of per-slice top-Ns is the
+    * group's top-N, so `order` must be total (end it in a unique tie
+    * column) and any salt gives the same rows. `nSalts <= 1` means the
+    * caller knows its groups are small and skips stage 1. The salt is a
+    * well-spread number — a hash, never a raw string id: `pmod` over a
+    * string is null and would collapse every row into one slice — still
+    * correct, but the skew it exists to prevent (the partition
+    * balancing REPOSE applies to distributed top-k).
+    *
+    * Callers, each with its own salt key and count: [[topNPerGroup]];
+    * `Similarity.topKMerge` (`hash(nn_id)`, per-query auto or explicit
+    * count); `Retrieval.saltedTopK` (`hash(doc)`, 8; 1 for fused
+    * lists); `Sketch.bottomK` (the raw 60-bit `h`, 8; 1 on merge);
+    * `Corpus.domainCap` (`hash(id)`, 16) and `Corpus.temperatureSample`
+    * (`hash(id)`, 16, per-domain quota as `n`).
+    */
+  private[graft] def saltedTopN(df: DataFrame, groups: Seq[Column], order: Seq[Column],
+                                salt: Column, n: Column, nSalts: Int,
+                                rankCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val salted = df.withColumn("_salt", pmod(hash(col(tieCol)), lit(nSalts)))
-    val w1 = Window.partitionBy((groupCols.map(col) :+ col("_salt")): _*)
-      .orderBy(col(orderCol).desc, col(tieCol).asc)
-    val partial = salted.withColumn("_r", row_number().over(w1))
-      .filter(col("_r") <= n).drop("_r", "_salt")
-    val w2 = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy(col(orderCol).desc, col(tieCol).asc)
-    partial.withColumn("rk", row_number().over(w2)).filter(col("rk") <= n)
+    def ranked(d: DataFrame, part: Seq[Column]): DataFrame =
+      d.withColumn(rankCol, row_number().over(Window.partitionBy(part: _*).orderBy(order: _*)))
+        .filter(col(rankCol) <= n)
+    val partial =
+      if (nSalts <= 1) df else ranked(df, groups :+ pmod(salt, lit(nSalts))).drop(rankCol)
+    ranked(partial, groups)
   }
 
   /** Skew-defeating salted equi-join: the LEFT side gets a

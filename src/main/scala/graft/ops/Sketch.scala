@@ -308,11 +308,9 @@ object Sketch {
     * O(1/ε²); at k ≤ a few thousand rows of state per group, the
     * simpler sketch's cost is noise).
     *
-    * Scale shape: the per-group bottom-k is the salted two-stage merge
-    * (stage 1 bottom-k inside (group, hash-salt) slices so no task
-    * ever windows a full group; stage 2 merges ≤ nSalts·k survivors) —
-    * the [[graft.llm.Similarity]] topKMerge discipline. `idCol` must
-    * be unique per row (duplicate ids bias the sample toward their
+    * Scale shape: the per-group bottom-k is the salted two-stage
+    * [[Reshape.saltedTopN]], so no task ever windows a full group.
+    * `idCol` must be unique per row (duplicate ids bias the sample toward their
     * rows — same contract as the IVF family's unique-id rule); NULL
     * values are excluded (no rank is defined for them).
     *
@@ -328,24 +326,13 @@ object Sketch {
     bottomK(base, groupCols, k, nSalts)
   }
 
-  /** The salted two-stage per-group bottom-k by (h, v): bit-identical
-    * to a single global window (union of per-slice bottom-ks re-ranked)
-    * but no task ever sorts more than ~1/nSalts of a group.
+  /** Per-group bottom-k by (h, v): [[Reshape.saltedTopN]] salted on
+    * the row's own hash `h`.
     */
   private def bottomK(rows: DataFrame, groupCols: Seq[String], k: Int,
-                      nSalts: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ord = Seq(col("h").asc, col("v").asc)
-    val partial = if (nSalts <= 1) rows else {
-      val w1 = Window.partitionBy((groupCols.map(col) :+
-        pmod(col("h"), lit(nSalts.toLong))): _*).orderBy(ord: _*)
-      rows.withColumn("__r", row_number().over(w1))
-        .filter(col("__r") <= k).drop("__r")
-    }
-    val w2 = Window.partitionBy(groupCols.map(col): _*).orderBy(ord: _*)
-    partial.withColumn("__r", row_number().over(w2))
-      .filter(col("__r") <= k).drop("__r")
-  }
+                      nSalts: Int): DataFrame =
+    Reshape.saltedTopN(rows, groupCols.map(col), Seq(col("h").asc, col("v").asc),
+      col("h"), lit(k), nSalts, "__r").drop("__r")
 
   /** Merge quantile-sample states: bottom-k of the deduplicated union.
     * EXACT and idempotent — a row kept by any shard re-enters the

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdat
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.llm.Dedup
+import graft.llm.{Dedup, Similarity}
 import graft.ops.{Bucketing, Graph, Snapshots}
 
 /** The one partition-count rule ([[Partitioning.partsFor]]), its single
@@ -100,17 +100,24 @@ class PartitioningSpec extends AnyFunSuite {
   test("non-numeric shuffle.partitions fails loudly, naming the setting and its value") {
     val key = "spark.sql.shuffle.partitions"
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("d1", "d2")
+    val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))).toDF("id", "v")
     val prev = GraftTestConf.setUnchecked(spark, key, "auto")
     try {
       Seq[(String, () => Any)](
         "checkpointKeyed" -> (() => Partitioning.checkpointKeyed(pairs, "d1")),
         "connectedComponents" -> (() => Dedup.connectedComponents(pairs)),
-        "shufflePartitions" -> (() => Partitioning.shufflePartitions(spark))
+        "shufflePartitions" -> (() => Partitioning.shufflePartitions(spark)),
+        // the auto salt count: a failed parse must not leave a pin behind
+        "topK" -> (() => Similarity.topK(vecs, vecs, "id", "v", 1, nSalts = 0))
       ).foreach { case (name, call) =>
+        val pinned = Partitioning.pinnedCount
         val e = intercept[IllegalArgumentException](call())
         assert(!e.isInstanceOf[NumberFormatException], s"$name: bare parse failure $e")
         assert(e.getMessage.contains(key) && e.getMessage.contains("'auto'"),
           s"$name: message must name the setting and its value: ${e.getMessage}")
+        assert(e.getMessage.contains("positive integer partition count"),
+          s"$name: must fail in graft's one parse, not deeper in Spark: ${e.getMessage}")
+        assert(Partitioning.pinnedCount == pinned, s"$name: leaked a tracked pin")
       }
     } finally GraftTestConf.restore(spark, key, prev)
     assert(Partitioning.shufflePartitions(spark) == 2)

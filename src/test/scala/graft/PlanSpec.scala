@@ -286,6 +286,17 @@ class PlanSpec extends AnyFunSuite {
     exchangeCeilings(ceiling)
   }
 
+  test("ranking gates: no more exchanges than before the top-N copies shared one salted helper") {
+    // executed-plan (?<!Reused)Exchange counts at sf0.001 on this suite's
+    // session, cache cleared per gate, taken at the commit before the
+    // per-group top-N and the Lloyd's rounds were each written once
+    val ceiling = Seq("retrieval_bm25" -> 4, "retrieval_bm25_ingested" -> 6,
+      "orders_top_per_cust" -> 2, "sketch_quantile_sample" -> 10,
+      "corpus_domain_cap" -> 4, "similarity_topk" -> 4, "similarity_topk_mips" -> 4,
+      "similarity_topk_pq_ingested" -> 6, "similarity_topk_ivfpq_ingested" -> 7)
+    exchangeCeilings(ceiling)
+  }
+
   test("graph gates: no more exchanges than before PPR and BFS ran the shared loops") {
     // executed-plan (?<!Reused)Exchange counts at sf0.001 in a fresh
     // session, cache cleared per gate, taken at the commit before

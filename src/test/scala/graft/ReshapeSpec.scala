@@ -67,6 +67,22 @@ class ReshapeSpec extends AnyFunSuite {
       .select("g", "id", "rk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(salted == plain && salted.size == 28)
+    // the shared helper over every caller's input shape: 1, 3 or 16
+    // salts; string tie ids salted by their hash; an ascending order
+    // salted by a raw long (the sketch's bottom-k); ties in the order
+    // column (five score values); a group with fewer than n rows
+    val mixed = ((1L to 200L).map(i => (i % 7, f"id$i%03d", (i % 5).toDouble, i * 7919L)) :+
+      ((99L, "solo", 1.0, 0L))).toDF("g", "id", "score", "h")
+    for (nSalts <- Seq(1, 3, 16); asc <- Seq(false, true)) {
+      val order = Seq(if (asc) col("score").asc else col("score").desc, col("id").asc)
+      val salt = if (asc) col("h") else hash(col("id"))
+      def rows(df: org.apache.spark.sql.DataFrame) = df.select("g", "id", "rk").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
+      val got = rows(Reshape.saltedTopN(mixed, Seq(col("g")), order, salt, lit(4), nSalts, "rk"))
+      val want = rows(mixed.withColumn("rk",
+        row_number().over(Window.partitionBy(col("g")).orderBy(order: _*))).filter(col("rk") <= 4))
+      assert(got == want && got.size == 29, s"nSalts=$nSalts asc=$asc")
+    }
   }
 
   test("guards: colliding payload names, zero salts, empty pivot values all refuse") {
