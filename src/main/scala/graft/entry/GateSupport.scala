@@ -714,7 +714,9 @@ private[graft] object GateSupport {
   /** The k greedy MMR selection rounds as CTEs, reusable over ANY
     * candidate relation: requires `cv(query_id, nn_id, score, relm, v)`
     * in scope, ends in `sel<k>(query_id, nn_id, score, relm, v, rk)` —
-    * shared by [[mmrTopKSql]] and the retrieval-capstone oracle.
+    * shared by [[mmrTopKSql]] and the retrieval-capstone oracle. Each
+    * `sel<r>` is MATERIALIZED: round r+1 references it twice (the join
+    * and the NOT EXISTS), so inlined the rounds grow geometrically.
     */
   private[graft] def mmrSelCtes(k: Int, lambdaMicro: Long): String = {
     val om = 1000000L - lambdaMicro
@@ -730,10 +732,10 @@ private[graft] object GateSupport {
          |         row_number() OVER (PARTITION BY c.query_id
          |           ORDER BY ($lambdaMicro * c.relm - $om * p.ms) DESC, c.nn_id ASC) AS rn
          |  FROM p$r p JOIN cv c ON c.query_id = p.query_id AND c.nn_id = p.nn_id) WHERE rn = 1),
-         |sel$r AS (SELECT * FROM sel${r - 1} UNION ALL SELECT * FROM s$r)""".stripMargin
+         |sel$r AS MATERIALIZED (SELECT * FROM sel${r - 1} UNION ALL SELECT * FROM s$r)""".stripMargin
     }.mkString(",\n")
     val roundsSql = if (rounds.isEmpty) "" else ",\n" + rounds
-    s"""sel1 AS (SELECT query_id, nn_id, score, relm, v, 1 AS rk FROM (
+    s"""sel1 AS MATERIALIZED (SELECT query_id, nn_id, score, relm, v, 1 AS rk FROM (
        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY relm DESC, nn_id) AS rn FROM cv)
        |  WHERE rn = 1)$roundsSql""".stripMargin
   }

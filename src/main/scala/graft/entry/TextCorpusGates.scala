@@ -97,6 +97,9 @@ private[graft] object TextCorpusGates {
     * every CTE so the chain composes into larger WITHs (the retrieval
     * capstone). Arithmetic identical to [[Retrieval.bm25TopK]]'s
     * scoring half (k1 = 1.2, b = 0.75, micro-unit sums, r6'd idf/term).
+    * `<p>rk` is MATERIALIZED: DuckDB inlines a plain CTE at every
+    * reference, so each later reference of the ranking would re-run the
+    * whole tokenization chain.
     */
   private def bm25RankCtes(docsWhere: String, qvals: String, topK: Int,
                            p: String): String = {
@@ -125,7 +128,7 @@ private[graft] object TextCorpusGates {
        |${p}sc AS (SELECT query_id, doc,
        |         ${Num.r6Sql("CAST(sum(micro) AS DOUBLE) / 1000000.0")} AS score
        |       FROM ${p}mic GROUP BY query_id, doc),
-       |${p}rk AS (SELECT query_id, doc, score, rank
+       |${p}rk AS MATERIALIZED (SELECT query_id, doc, score, rank
        |       FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc) AS rank FROM ${p}sc)
        |       WHERE rank <= $topK)""".stripMargin
   }
@@ -149,7 +152,10 @@ private[graft] object TextCorpusGates {
     * derives from the filtered postings, the ANN leg runs at exactness
     * parameters so training slices cannot matter, MMR and pack read the
     * sliced sidecars), so the first-batch-only capstone oracle pins the
-    * whole snapshot DAG.
+    * whole snapshot DAG. `brk`, `nv`, `cv` and the MMR rounds are
+    * MATERIALIZED: each is referenced more than once, and inlined they
+    * grow the plan geometrically per MMR round (DuckDB then runs out of
+    * memory on sf0.01).
     */
   private def contextFullOracleSqlOver(docsWhere: String,
                                        vecsWhere: String): String = {
@@ -165,7 +171,7 @@ private[graft] object TextCorpusGates {
     val embedded =
       s"doc_id IN (SELECT vec_id FROM embeddings) AND ($docsWhere)"
     s"""WITH ${bm25RankCtes(embedded, qvals, topK = 20, p = "b")},
-       |nv AS (SELECT vec_id AS id, ${nvSql("embedding")} AS v FROM embeddings
+       |nv AS MATERIALIZED (SELECT vec_id AS id, ${nvSql("embedding")} AS v FROM embeddings
        |       WHERE ($vecsWhere)),
        |seed AS (SELECT query_id, doc FROM brk WHERE rank = 1),
        |sq AS (SELECT s.query_id, nv.v FROM seed s JOIN nv ON nv.id = s.doc),
@@ -181,7 +187,7 @@ private[graft] object TextCorpusGates {
        |frk AS (SELECT query_id, doc, score FROM (
        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc) AS rank FROM fs)
        |  WHERE rank <= 10),
-       |cv AS (SELECT f.query_id, f.doc AS nn_id, f.score,
+       |cv AS MATERIALIZED (SELECT f.query_id, f.doc AS nn_id, f.score,
        |              CAST(floor(f.score * 1000000.0 + 0.5) AS BIGINT) AS relm, nv.v
        |       FROM frk f JOIN nv ON nv.id = f.doc),
        |${mmrSelCtes(5, 500000L)},

@@ -13,13 +13,19 @@ import org.apache.spark.sql.functions._
   * [[decodeAudio]]), video for RIFF/AVI with uncompressed DIB frames
   * (pure-JDK container walk — [[decodeVideo]]). Formats whose codecs
   * this container lacks (mp4/h264, mp3, …) fall back to a
-  * deterministic fake
-  * ([[decodeStub]]) behind the same `MediaRow => MediaFeatures`
+  * deterministic fake (the first two bytes as width/height and the
+  * byte mean — [[byteMean]]) behind the same `MediaRow => features`
   * boundary. Everything around the codec — the binary column, the
   * metadata struct, the typed Dataset batch shape, the mapPartitions
   * batching, the partitioning — is the real 100 TB design: payloads
   * never leave executors, the decode processes one partition (= one
   * file split) at a time, and feature extraction is a narrow map.
+  *
+  * Each codec step is written once: one magic guard ([[sniffed]]), one
+  * bounded RIFF/AVI walker ([[aviFrames]]), one bounded PCM reader
+  * ([[readPcm16]]), one WAV and one AVI writer for the fixtures, one
+  * synthetic-payload attach ([[attachSynthetic]]) and one typed row read
+  * ([[mediaRows]]); every public verb is a call into them.
   */
 object Multimodal {
 
@@ -29,7 +35,8 @@ object Multimodal {
 
   /** Attach a binary payload column + metadata struct to a text corpus
     * (stand-in for reading real media files via
-    * `spark.read.format("binaryFile")`).
+    * `spark.read.format("binaryFile")`). A null text yields a null
+    * payload, which every verb here reads as an empty one.
     */
   def attachPayload(df: DataFrame, idCol: String, textCol: String): DataFrame =
     graft.Partitioning.spread(df).select(
@@ -39,48 +46,102 @@ object Multimodal {
         length(encode(col(textCol), "UTF-8")).cast("long").as("n_bytes"),
         lit("fake/raw").as("format")).as("meta"))
 
+  /** The one typed read every extract verb runs: `(id, payload,
+    * meta.format)` as [[MediaRow]].
+    */
+  private def mediaRows(spark: SparkSession, withPayload: DataFrame): Dataset[MediaRow] = {
+    import spark.implicits._
+    withPayload.select(col("id"), col("payload"), col("meta.format").as("format"))
+      .as[MediaRow]
+  }
+
+  /** The one synthetic-payload attach behind every fixture verb: the
+    * encode `gen(id)` runs IN EXECUTORS (a narrow typed map) — payload
+    * bytes never exist on the driver, same as a production `binaryFile`
+    * read — and the result has the `(id, payload, meta{n_bytes,
+    * format})` shape [[mediaRows]] reads.
+    */
+  private def attachSynthetic(spark: SparkSession, df: DataFrame, idCol: String,
+                              mime: String)(gen: Long => Array[Byte]): DataFrame = {
+    import spark.implicits._
+    df.select(col(idCol).cast("long").as("id")).as[Long]
+      .map(id => MediaRow(id, gen(id), mime))
+      .toDF()
+      .select(col("id"), col("payload"),
+        struct(length(col("payload")).cast("long").as("n_bytes"),
+          col("format")).as("meta"))
+  }
+
+  /** The one codec guard: a payload reaches a codec only when its
+    * declared format has the modality `prefix`, it is non-null, AND its
+    * magic bytes match — the mime alone is not trusted, so a text
+    * payload mislabeled image/png never reaches ImageIO.
+    */
+  private def sniffed(r: MediaRow, prefix: String, magic: Array[Byte] => Boolean): Boolean =
+    r.format != null && r.format.startsWith(prefix) && r.payload != null && magic(r.payload)
+
+  // ------------------------------------------------------ byte fallback
+
+  // The one deterministic fallback every fake decode shares (formats
+  // without a codec here, and payloads a codec rejects): width/height
+  // from the first two bytes, the size, and the mean over all bytes. A
+  // null payload reads as an empty one — one null blob must degrade one
+  // row, never kill the task.
+  private def byteAt(b: Array[Byte], i: Int): Int =
+    if (b != null && b.length > i) b(i) & 0xff else 0
+
+  private def nBytes(b: Array[Byte]): Long = if (b == null) 0L else b.length.toLong
+
+  private def byteMean(b: Array[Byte]): Double =
+    if (nBytes(b) == 0L) 0.0
+    else {
+      var sum = 0L
+      var i = 0
+      while (i < b.length) { sum += b(i) & 0xff; i += 1 }
+      graft.Num.r6(sum.toDouble / b.length)
+    }
+
+  // ---------------------------------------------------------------- image
+
   /** Decode dispatcher at the codec boundary: payloads whose declared
-    * format is an image AND whose magic bytes are PNG/BMP get a REAL
-    * `javax.imageio` decode (pure JDK — actual pixel raster: width,
+    * format is an image AND whose magic bytes are PNG/BMP/JPEG/GIF get a
+    * REAL `javax.imageio` decode (pure JDK — actual pixel raster: width,
     * height, mean channel value); everything else falls through to the
-    * deterministic fake ([[decodeStub]]) standing in for codecs this
-    * container lacks (audio/video). Magic bytes are checked, not just
-    * the declared mime — a text payload mislabeled image/png must not
-    * reach ImageIO (and a null return from ImageIO falls back too).
+    * deterministic fake. Magic bytes are checked, not just the declared
+    * mime ([[sniffed]]), and a null return from ImageIO falls back too.
     */
   def decodeMedia(rows: Iterator[MediaRow]): Iterator[MediaFeatures] =
     rows.map { r =>
-      val bytes = r.payload
-      if (r.format != null && r.format.startsWith("image/") && bytes != null
-          && (isPng(bytes) || isBmp(bytes) || isJpeg(bytes) || isGif(bytes))) {
-        // a corrupt/truncated payload throws inside the codec (EOF etc.)
-        // or returns null — either way fall back to the fake features
-        // instead of killing the scan task: at corpus scale one bad blob
-        // must not fail the job
-        val img = try {
-          readImageBounded(bytes)
-        } catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null) decodeFake(r)
-        else {
-          val w = img.getWidth
-          val h = img.getHeight
-          // mean over ALL of R, G and B — a single-channel mean reads as
-          // "brightness" but silently tracks only blue on color images
-          var sum = 0L
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val rgb = img.getRGB(x, y)
-              sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-              x += 1
-            }
-            y += 1
+      // a corrupt/truncated payload throws inside the codec (EOF etc.)
+      // or returns null — either way fall back to the fake features
+      // instead of killing the scan task: at corpus scale one bad blob
+      // must not fail the job
+      val img =
+        if (!sniffed(r, "image/", b => isPng(b) || isBmp(b) || isJpeg(b) || isGif(b))) null
+        else try readImageBounded(r.payload)
+        catch { case scala.util.control.NonFatal(_) => null }
+      if (img == null)
+        MediaFeatures(r.id, nBytes(r.payload), byteAt(r.payload, 0), byteAt(r.payload, 1),
+          byteMean(r.payload))
+      else {
+        val w = img.getWidth
+        val h = img.getHeight
+        // mean over ALL of R, G and B — a single-channel mean reads as
+        // "brightness" but silently tracks only blue on color images
+        var sum = 0L
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) {
+            val rgb = img.getRGB(x, y)
+            sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
+            x += 1
           }
-          MediaFeatures(r.id, bytes.length.toLong, w, h,
-            graft.Num.r6(sum.toDouble / (3L * w * h).toDouble))
+          y += 1
         }
-      } else decodeFake(r)
+        MediaFeatures(r.id, r.payload.length.toLong, w, h,
+          graft.Num.r6(sum.toDouble / (3L * w * h).toDouble))
+      }
     }
 
   /** Max decoded raster size (pixels) before a payload is rejected as a
@@ -127,12 +188,6 @@ object Multimodal {
   private def isGif(b: Array[Byte]): Boolean =
     b.length > 6 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8'
 
-  /** Deterministic fake decode for formats without a codec in this
-    * container: (width, height) from the first two bytes and a mean over
-    * all bytes — so the distributed plumbing is testable end-to-end.
-    */
-  def decodeStub(rows: Iterator[MediaRow]): Iterator[MediaFeatures] = rows.map(decodeFake)
-
   // ---------------------------------------------------------------- audio
 
   final case class AudioFeatures(id: Long, sample_rate: Int, channels: Int,
@@ -145,48 +200,40 @@ object Multimodal {
     b.length > 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
       b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E'
 
-  /** Max decoded PCM bytes before a payload is rejected: a corrupt RIFF
-    * header can declare a multi-GB data chunk; the decode streams with
-    * this cap instead of trusting the header's frame count.
+  /** Max decoded bytes before a payload is rejected: a corrupt RIFF
+    * header can declare a multi-GB data chunk, so the PCM read
+    * ([[readPcm16]]) streams under this cap instead of trusting the
+    * header's frame count. The AVI walk ([[aviFrames]]) applies the same
+    * cap to the pixel bytes of all of a payload's decoded frames.
     */
   val MaxDecodedPcmBytes: Long = 64L * 1024 * 1024
 
-  /** Audio decode at the codec boundary: RIFF/WAVE payloads get a REAL
-    * `javax.sound.sampled` decode (pure JDK — actual PCM frames: sample
-    * rate and channel count from the parsed format, frame count from the
-    * bytes actually read, mean |sample| over every frame x channel in
-    * raw 16-bit units); anything else — and any payload the codec
-    * rejects, truncates on, or whose stream exceeds [[MaxDecodedPcmBytes]]
-    * — falls through to the deterministic fake (`sample_rate = 0`, byte
-    * mean), so one bad blob degrades one row, never the scan task.
+  /** The one bounded PCM reader behind [[decodeAudio]] and
+    * [[audioFingerprints]]: a sniffed `audio/` RIFF/WAVE payload is
+    * opened through `javax.sound.sampled`; only 16-bit signed
+    * little-endian PCM with `channels > 0` is read, in 64 KiB reads (an
+    * odd byte carries into the next read), each interleaved sample
+    * handed to `sample`. The header's frame count is untrusted input and
+    * sizes nothing: the read stops past [[MaxDecodedPcmBytes]].
+    *
+    * @return the stream's format and its PCM byte count; None when the
+    *         guard or the format check fails, the stream is empty or
+    *         over the cap, or the codec throws
     */
-  def decodeAudio(rows: Iterator[MediaRow]): Iterator[AudioFeatures] =
-    rows.map { r =>
-      val bytes = r.payload
-      if (r.format != null && r.format.startsWith("audio/") && bytes != null
-          && isWav(bytes)) {
-        decodeWavReal(r.id, bytes).getOrElse(audioFake(r))
-      } else audioFake(r)
-    }
-
-  private def decodeWavReal(id: Long, bytes: Array[Byte]): Option[AudioFeatures] =
-    try {
+  private def readPcm16(r: MediaRow)(sample: Long => Unit)
+      : Option[(javax.sound.sampled.AudioFormat, Long)] =
+    if (!sniffed(r, "audio/", isWav)) None
+    else try {
       val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
+        new java.io.ByteArrayInputStream(r.payload))
       try {
         val fmt = ais.getFormat
-        val bits = fmt.getSampleSizeInBits
-        val ch = fmt.getChannels
-        val sr = fmt.getSampleRate
         if (fmt.getEncoding != javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED
-            || bits != 16 || fmt.isBigEndian || ch <= 0 || sr <= 0) None
+            || fmt.getSampleSizeInBits != 16 || fmt.isBigEndian
+            || fmt.getChannels <= 0) None
         else {
-          // stream the PCM under a hard cap — the header's frame count is
-          // untrusted input and is NOT used for sizing
-          val frameSize = fmt.getFrameSize // = 2 * ch for 16-bit PCM
           val buf = new Array[Byte](64 * 1024)
           var total = 0L
-          var sumAbs = 0L
           var carry = new Array[Byte](0)
           var n = ais.read(buf)
           while (n > 0 && total <= MaxDecodedPcmBytes) {
@@ -195,53 +242,53 @@ object Multimodal {
             val usable = chunk.length - chunk.length % 2
             var i = 0
             while (i < usable) {
-              val s = ((chunk(i) & 0xff) | (chunk(i + 1) << 8)).toShort
-              sumAbs += math.abs(s.toLong)
+              sample(((chunk(i) & 0xff) | (chunk(i + 1) << 8)).toShort.toLong)
               i += 2
             }
             carry = chunk.drop(usable)
             n = ais.read(buf)
           }
-          if (total > MaxDecodedPcmBytes || total % frameSize != 0 || total == 0) None
-          else {
-            val frames = total / frameSize
-            val samples = frames * ch
-            Some(AudioFeatures(id, sr.toInt, ch, frames,
-              graft.Num.r6(frames.toDouble / sr.toDouble),
-              graft.Num.r6(sumAbs.toDouble / samples.toDouble)))
-          }
+          if (total > MaxDecodedPcmBytes || total == 0) None else Some((fmt, total))
         }
       } finally ais.close()
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  private def audioFake(r: MediaRow): AudioFeatures = {
-    val bytes = r.payload
-    val mean = if (bytes == null || bytes.isEmpty) 0.0
-               else bytes.map(b => (b & 0xff).toLong).sum.toDouble / bytes.length
-    AudioFeatures(r.id, 0, 0, if (bytes == null) 0L else bytes.length.toLong,
-      0.0, graft.Num.r6(mean))
-  }
-
-  /** Deterministic 16-bit PCM fixture for the real-decode gate, the
-    * audio analogue of [[syntheticImage]]: sample rate, channel count
-    * and frame count derive from the id; frame 0 carries a DIFFERENT
-    * sample value than the rest, so a decode that reads only the header
-    * (or only the first frame) cannot match. Every channel of a frame
-    * holds the same value, which keeps the closed-form mean
-    * channel-independent (and the 1-or-2 channel factor cancels exactly
-    * in IEEE division): mean_abs = (|b0| + (nFrames-1)*|a|) / nFrames.
+  /** Audio decode at the codec boundary: RIFF/WAVE payloads get a REAL
+    * `javax.sound.sampled` decode ([[readPcm16]] — actual PCM frames:
+    * sample rate and channel count from the parsed format, frame count
+    * from the bytes actually read, mean |sample| over every frame x
+    * channel in raw 16-bit units, a running sum, never a sample array);
+    * anything else — and any payload the codec rejects, truncates on,
+    * whose sample rate is not positive, whose byte count is not whole
+    * frames, or whose stream exceeds [[MaxDecodedPcmBytes]] — falls
+    * through to the deterministic fake (`sample_rate = 0`, byte mean),
+    * so one bad blob degrades one row, never the scan task.
     */
-  private[graft] def syntheticWav(id: Long): Array[Byte] = {
-    val sampleRate = (8000 * (1 + id % 3)).toInt
-    val channels = (1 + id % 2).toInt
-    val nFrames = (8 + id % 25).toInt
-    val a = ((id * 37) % 101 - 50).toShort
-    val b0 = ((id * 53) % 101 - 50).toShort
+  def decodeAudio(rows: Iterator[MediaRow]): Iterator[AudioFeatures] =
+    rows.map { r =>
+      var sumAbs = 0L
+      readPcm16(r)(s => sumAbs += math.abs(s)).collect {
+        case (fmt, total) if fmt.getSampleRate > 0 && fmt.getFrameSize > 0
+            && total % fmt.getFrameSize == 0 =>
+          val sr = fmt.getSampleRate
+          val frames = total / fmt.getFrameSize
+          AudioFeatures(r.id, sr.toInt, fmt.getChannels, frames,
+            graft.Num.r6(frames.toDouble / sr.toDouble),
+            graft.Num.r6(sumAbs.toDouble / (frames * fmt.getChannels).toDouble))
+      }.getOrElse(AudioFeatures(r.id, 0, 0, nBytes(r.payload), 0.0, byteMean(r.payload)))
+    }
+
+  /** The one RIFF/WAVE writer behind the PCM fixtures: `nFrames` 16-bit
+    * little-endian frames at `sampleRate`, frame f holding `value(f)` on
+    * every one of its `channels`.
+    */
+  private def wavOf(sampleRate: Int, channels: Int, nFrames: Int)
+                   (value: Int => Short): Array[Byte] = {
     val pcm = java.nio.ByteBuffer.allocate(nFrames * channels * 2)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     var f = 0
     while (f < nFrames) {
-      val v = if (f == 0) b0 else a
+      val v = value(f)
       var c = 0
       while (c < channels) { pcm.putShort(v); c += 1 }
       f += 1
@@ -257,6 +304,22 @@ object Multimodal {
       javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
     finally ais.close()
     bos.toByteArray
+  }
+
+  /** Deterministic 16-bit PCM fixture for the real-decode gate, the
+    * audio analogue of [[syntheticImage]]: sample rate, channel count
+    * and frame count derive from the id; frame 0 carries a DIFFERENT
+    * sample value than the rest, so a decode that reads only the header
+    * (or only the first frame) cannot match. Every channel of a frame
+    * holds the same value, which keeps the closed-form mean
+    * channel-independent (and the 1-or-2 channel factor cancels exactly
+    * in IEEE division): mean_abs = (|b0| + (nFrames-1)*|a|) / nFrames.
+    */
+  private[graft] def syntheticWav(id: Long): Array[Byte] = {
+    val a = ((id * 37) % 101 - 50).toShort
+    val b0 = ((id * 53) % 101 - 50).toShort
+    wavOf((8000 * (1 + id % 3)).toInt, (1 + id % 2).toInt, (8 + id % 25).toInt)(
+      f => if (f == 0) b0 else a)
   }
 
   // ------------------------------------------------ audio fingerprinting
@@ -297,62 +360,22 @@ object Multimodal {
   }
 
   /** Partition-batched audio fingerprinting over WAV payloads: real
-    * 16-bit PCM decode (the [[decodeAudio]] codec path and caps), then
+    * 16-bit PCM decode (the [[decodeAudio]] reader and caps), then
     * [[energyFingerprint]]. Non-WAV, corrupt, or too-short payloads are
     * dropped — fingerprinting garbage would poison the dedup join.
     */
   def audioFingerprints(spark: SparkSession, withPayload: DataFrame): Dataset[AudioFp] = {
     import spark.implicits._
-    withPayload.select(col("id"), col("payload"), col("meta.format").as("format"))
-      .as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        if (r.format == null || !r.format.startsWith("audio/") ||
-          r.payload == null || !isWav(r.payload)) None
-        else decodeWavSamples(r.payload).flatMap(energyFingerprint)
-          .map(afp => AudioFp(r.id, afp))
-      })
+    mediaRows(spark, withPayload).mapPartitions(_.flatMap { r =>
+      // primitive collector: an ArrayBuffer[Long] would box every
+      // sample (~0.5-1 GB heap at the MaxDecodedPcmBytes cap) on the
+      // executor hot path
+      val out = new scala.collection.mutable.ArrayBuilder.ofLong
+      readPcm16(r) { s => out += s }
+        .flatMap(_ => energyFingerprint(out.result()))
+        .map(afp => AudioFp(r.id, afp))
+    })
   }
-
-  /** Decode a RIFF/WAVE payload to its interleaved 16-bit samples under
-    * the [[MaxDecodedPcmBytes]] cap (same trust model as
-    * [[decodeWavReal]]: the header's frame count never sizes anything).
-    */
-  private def decodeWavSamples(bytes: Array[Byte]): Option[Array[Long]] =
-    try {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        val fmt = ais.getFormat
-        if (fmt.getEncoding != javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED
-            || fmt.getSampleSizeInBits != 16 || fmt.isBigEndian
-            || fmt.getChannels <= 0) None
-        else {
-          // primitive collector: an ArrayBuffer[Long] would box every
-          // sample (~0.5-1 GB heap at the MaxDecodedPcmBytes cap) on the
-          // executor hot path
-          val out = new scala.collection.mutable.ArrayBuilder.ofLong
-          out.sizeHint(math.min(bytes.length / 2, MaxDecodedPcmBytes.toInt / 2))
-          val buf = new Array[Byte](64 * 1024)
-          var total = 0L
-          var carry = new Array[Byte](0)
-          var n = ais.read(buf)
-          while (n > 0 && total <= MaxDecodedPcmBytes) {
-            total += n
-            val chunk = carry ++ buf.take(n)
-            val usable = chunk.length - chunk.length % 2
-            var i = 0
-            while (i < usable) {
-              out += ((chunk(i) & 0xff) | (chunk(i + 1) << 8)).toShort.toLong
-              i += 2
-            }
-            carry = chunk.drop(usable)
-            n = ais.read(buf)
-          }
-          if (total > MaxDecodedPcmBytes || total == 0) None
-          else Some(out.result())
-        }
-      } finally ais.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Deterministic mono 16-bit "tone": 256 samples at 8 kHz with
     * `s(t) = ((b·(t+7)·(t mod 13 + 1) + t²) mod 2001) − 1000`,
@@ -363,49 +386,19 @@ object Multimodal {
     */
   private[graft] def syntheticTone(id: Long): Array[Byte] = {
     val b = id % 100
-    val nFrames = 256
-    val pcm = java.nio.ByteBuffer.allocate(nFrames * 2)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    var t = 0
-    while (t < nFrames) {
-      pcm.putShort((((b * (t + 7) * (t % 13 + 1) + t.toLong * t) % 2001L) - 1000L).toShort)
-      t += 1
-    }
-    val fmt = new javax.sound.sampled.AudioFormat(
-      javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
-      8000f, 16, 1, 2, 8000f, /* bigEndian = */ false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm.array()), fmt, nFrames.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    try javax.sound.sampled.AudioSystem.write(ais,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-    finally ais.close()
-    bos.toByteArray
+    wavOf(8000, 1, 256)(t =>
+      (((b * (t + 7) * (t % 13 + 1) + t.toLong * t) % 2001L) - 1000L).toShort)
   }
 
   /** Attach synthetic-tone WAV payloads for the fingerprint gate. */
-  def attachTonePayload(spark: SparkSession, df: DataFrame, idCol: String): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("id")).as[Long]
-      .map(id => MediaRow(id, syntheticTone(id), "audio/wav"))
-      .toDF()
-      .select(col("id"), col("payload"),
-        struct(length(col("payload")).cast("long").as("n_bytes"),
-          col("format")).as("meta"))
-  }
+  def attachTonePayload(spark: SparkSession, df: DataFrame, idCol: String): DataFrame =
+    attachSynthetic(spark, df, idCol, "audio/wav")(syntheticTone)
 
   /** Attach REAL RIFF/WAVE payloads derived deterministically from the
     * id column; like the image variants, the encode runs in executors.
     */
-  def attachWavPayload(spark: SparkSession, df: DataFrame, idCol: String): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("id")).as[Long]
-      .map(id => MediaRow(id, syntheticWav(id), "audio/wav"))
-      .toDF()
-      .select(col("id"), col("payload"),
-        struct(length(col("payload")).cast("long").as("n_bytes"),
-          col("format")).as("meta"))
-  }
+  def attachWavPayload(spark: SparkSession, df: DataFrame, idCol: String): DataFrame =
+    attachSynthetic(spark, df, idCol, "audio/wav")(syntheticWav)
 
   /** Partition-batched audio feature extraction, same shape as
     * [[extractFeatures]]: typed Dataset in/out, decode per partition,
@@ -413,18 +406,7 @@ object Multimodal {
     */
   def extractAudioFeatures(spark: SparkSession, withPayload: DataFrame): Dataset[AudioFeatures] = {
     import spark.implicits._
-    withPayload.select(col("id"), col("payload"), col("meta.format").as("format"))
-      .as[MediaRow]
-      .mapPartitions(decodeAudio)
-  }
-
-  private def decodeFake(r: MediaRow): MediaFeatures = {
-    val bytes = r.payload
-    val w = if (bytes.length > 0) (bytes(0) & 0xff) else 0
-    val h = if (bytes.length > 1) (bytes(1) & 0xff) else 0
-    val mean = if (bytes.isEmpty) 0.0
-               else bytes.map(b => (b & 0xff).toLong).sum.toDouble / bytes.length
-    MediaFeatures(r.id, bytes.length.toLong, w, h, graft.Num.r6(mean))
+    mediaRows(spark, withPayload).mapPartitions(decodeAudio)
   }
 
   // ---------------------------------------------------------------- video
@@ -437,26 +419,6 @@ object Multimodal {
     b.length > 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
       b(8) == 'A' && b(9) == 'V' && b(10) == 'I' && b(11) == ' '
 
-  /** Video decode at the codec boundary: RIFF/AVI payloads carrying
-    * UNCOMPRESSED DIB frames (fourcc `00db`, BI_RGB 24-bit — the one
-    * video format a pure-JDK container walk can decode losslessly) get
-    * a REAL parse: width/height from the avih header, frame count from
-    * the `00db` chunks actually present, mean byte over every frame's
-    * pixel bytes (row padding excluded). Compressed formats (mp4 etc.,
-    * no codec in this container) and any structurally inconsistent AVI
-    * — chunk size ≠ stride×height, total past [[MaxDecodedPcmBytes]] —
-    * fall through to the deterministic fake, one bad blob degrading one
-    * row, never the scan task.
-    */
-  def decodeVideo(rows: Iterator[MediaRow]): Iterator[VideoFeatures] =
-    rows.map { r =>
-      val bytes = r.payload
-      if (r.format != null && r.format.startsWith("video/") && bytes != null
-          && isAvi(bytes)) {
-        decodeAviReal(r.id, bytes).getOrElse(videoFake(r))
-      } else videoFake(r)
-    }
-
   private def le32(b: Array[Byte], i: Int): Long =
     (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) |
       ((b(i + 3) & 0xffL) << 24)
@@ -464,15 +426,25 @@ object Multimodal {
   private def fourcc(b: Array[Byte], i: Int): String =
     new String(b, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
 
-  /** Minimal RIFF walker: find `avih` (width/height) inside LIST hdrl
-    * and the `00db` DIB chunks inside LIST movi. Every offset/size read
-    * is bounds-checked against the actual payload — header fields are
-    * untrusted input and never size an allocation.
+  /** The one bounded RIFF/AVI walker behind [[decodeVideo]] and
+    * [[sceneCuts]]: a sniffed `video/` RIFF/AVI payload is walked for
+    * `avih` (width/height) inside LIST hdrl and the `00db` DIB chunks
+    * (BI_RGB 24-bit) inside LIST movi; each frame's `(w, h, byte sum)`
+    * — rows' padding excluded — is handed to `frame`. Every offset/size
+    * read is bounds-checked against the actual payload — header fields
+    * are untrusted input and never size an allocation. The walk fails
+    * on a chunk running past its parent, a frame before any header, a
+    * frame whose size is not stride×height, or decoded pixel bytes past
+    * [[MaxDecodedPcmBytes]].
+    *
+    * @return the last header's (width, height) when the walk succeeds
+    *         with at least one frame and a positive size; None otherwise
     */
-  private def decodeAviReal(id: Long, b: Array[Byte]): Option[VideoFeatures] = {
-    if (b.length < 24) return None
+  private def aviFrames(r: MediaRow)(frame: (Long, Long, Long) => Unit): Option[(Long, Long)] = {
+    if (!sniffed(r, "video/", isAvi) || r.payload.length < 24) return None
+    val b = r.payload
     var w = -1L; var h = -1L
-    var frames = 0L; var sum = 0L; var pixelBytes = 0L
+    var frames = 0L; var pixelBytes = 0L
     def walk(start: Int, end: Int): Boolean = {
       var i = start
       while (i + 8 <= end) {
@@ -495,6 +467,7 @@ object Multimodal {
           if (sz != stride * h) return false
           pixelBytes += 3L * w * h
           if (pixelBytes > MaxDecodedPcmBytes) return false
+          var sum = 0L
           var row = 0
           while (row < h) {
             val off = dataStart + row * stride.toInt
@@ -502,6 +475,7 @@ object Multimodal {
             while (x < w * 3) { sum += b(off + x) & 0xff; x += 1 }
             row += 1
           }
+          frame(w, h, sum)
           frames += 1
         }
         // chunks are word-aligned: odd sizes carry one pad byte
@@ -511,33 +485,35 @@ object Multimodal {
     }
     val riffSz = le32(b, 4)
     val end = math.min(b.length.toLong, 8L + riffSz).toInt
-    if (!walk(12, end) || frames == 0 || w <= 0 || h <= 0) None
-    else Some(VideoFeatures(id, w.toInt, h.toInt, frames,
-      graft.Num.r6(sum.toDouble / pixelBytes.toDouble)))
+    if (!walk(12, end) || frames == 0 || w <= 0 || h <= 0) None else Some((w, h))
   }
 
-  private def videoFake(r: MediaRow): VideoFeatures = {
-    val bytes = r.payload
-    val w = if (bytes != null && bytes.length > 0) (bytes(0) & 0xff) else 0
-    val h = if (bytes != null && bytes.length > 1) (bytes(1) & 0xff) else 0
-    val mean = if (bytes == null || bytes.isEmpty) 0.0
-               else bytes.map(x => (x & 0xff).toLong).sum.toDouble / bytes.length
-    VideoFeatures(r.id, w, h, if (bytes == null) 0L else bytes.length.toLong,
-      graft.Num.r6(mean))
-  }
-
-  /** Deterministic AVI/DIB fixture, the video analogue of
-    * [[syntheticImage]]: w×h from the id (same formula as the image
-    * fixtures), 1+id%4 frames; frame f is gray g_f = (id+31f)%251
-    * except pixel (0,0) colored (id,2id,3id)%251 — every frame differs,
-    * so a decode reading only frame 0 cannot match, and BI_RGB frames
-    * round-trip losslessly so the gate covers the decoded raster mean
-    * exactly. Closed form: mean = (3·Σg_f·(wh−1) + nf·c0) / (3·wh·nf).
+  /** Video decode at the codec boundary: RIFF/AVI payloads carrying
+    * UNCOMPRESSED DIB frames (fourcc `00db`, BI_RGB 24-bit — the one
+    * video format a pure-JDK container walk can decode losslessly) get
+    * a REAL parse ([[aviFrames]]): width/height from the avih header,
+    * frame count from the `00db` chunks actually present, mean byte
+    * over every frame's pixel bytes (row padding excluded). Compressed
+    * formats (mp4 etc., no codec in this container) and any
+    * structurally inconsistent AVI fall through to the deterministic
+    * fake, one bad blob degrading one row, never the scan task.
     */
-  private[graft] def syntheticAvi(id: Long): Array[Byte] = {
-    val w = (1 + id % 7).toInt
-    val h = (1 + id % 5).toInt
-    val nf = (1 + id % 4).toInt
+  def decodeVideo(rows: Iterator[MediaRow]): Iterator[VideoFeatures] =
+    rows.map { r =>
+      var frames = 0L; var sum = 0L; var pixelBytes = 0L
+      aviFrames(r) { (w, h, s) => frames += 1; sum += s; pixelBytes += 3L * w * h }
+        .map { case (w, h) => VideoFeatures(r.id, w.toInt, h.toInt, frames,
+          graft.Num.r6(sum.toDouble / pixelBytes.toDouble)) }
+        .getOrElse(VideoFeatures(r.id, byteAt(r.payload, 0), byteAt(r.payload, 1),
+          nBytes(r.payload), byteMean(r.payload)))
+    }
+
+  /** The one RIFF/AVI writer behind the video fixtures: `nf`
+    * uncompressed BI_RGB 24-bit w×h DIB frames (`00db`, rows padded to
+    * 4 bytes) behind an avih/strh/strf header; pixel (x, y) of frame f
+    * is `rgb(f, x, y)` (0xRRGGBB, stored B, G, R).
+    */
+  private def aviOf(w: Int, h: Int, nf: Int)(rgb: (Int, Int, Int) => Int): Array[Byte] = {
     val stride = ((w * 3 + 3) / 4) * 4
     val frameSz = stride * h
     val bos = new java.io.ByteArrayOutputStream()
@@ -565,19 +541,16 @@ object Multimodal {
     bos.write(24); bos.write(0)                          // biBitCount
     w32(0); w32(frameSz); w32(0); w32(0); w32(0); w32(0) // BI_RGB, biSizeImage, ...
     cc("LIST"); w32(moviSz); cc("movi")
+    val row = new Array[Byte](stride)
     var f = 0
     while (f < nf) {
       cc("00db"); w32(frameSz)
-      val g = ((id + 31 * f) % 251).toInt
-      val row = new Array[Byte](stride)
       var y = 0
       while (y < h) {
         var x = 0
         while (x < w) {
-          val (bb, gg, rr) =
-            if (x == 0 && y == 0) (((3 * id) % 251).toInt, ((2 * id) % 251).toInt, (id % 251).toInt)
-            else (g, g, g)
-          row(3 * x) = bb.toByte; row(3 * x + 1) = gg.toByte; row(3 * x + 2) = rr.toByte
+          val c = rgb(f, x, y)
+          row(3 * x) = c.toByte; row(3 * x + 1) = (c >> 8).toByte; row(3 * x + 2) = (c >> 16).toByte
           x += 1
         }
         bos.write(row)
@@ -588,27 +561,52 @@ object Multimodal {
     bos.toByteArray
   }
 
+  /** The image and video fixtures' shared pixel rule: pixel (0,0)
+    * COLORED (r,g,b) = (id, 2id, 3id) mod 251 — unequal channels, so a
+    * decode that reads only one channel cannot match — every other
+    * pixel the `gray` value on all three channels.
+    */
+  private def fixtureRgb(id: Long, gray: Int, x: Int, y: Int): Int =
+    if (x == 0 && y == 0)
+      (((id % 251).toInt) << 16) | (((2 * id % 251).toInt) << 8) | (3 * id % 251).toInt
+    else (gray << 16) | (gray << 8) | gray
+
+  /** Deterministic AVI/DIB fixture, the video analogue of
+    * [[syntheticImage]]: w×h from the id (same formula as the image
+    * fixtures), 1+id%4 frames; frame f is gray g_f = (id+31f)%251
+    * except pixel (0,0) colored (id,2id,3id)%251 — every frame differs,
+    * so a decode reading only frame 0 cannot match, and BI_RGB frames
+    * round-trip losslessly so the gate covers the decoded raster mean
+    * exactly. Closed form: mean = (3·Σg_f·(wh−1) + nf·c0) / (3·wh·nf).
+    */
+  private[graft] def syntheticAvi(id: Long): Array[Byte] =
+    aviOf((1 + id % 7).toInt, (1 + id % 5).toInt, (1 + id % 4).toInt)(
+      (f, x, y) => fixtureRgb(id, ((id + 31 * f) % 251).toInt, x, y))
+
   /** Attach REAL RIFF/AVI payloads derived deterministically from the
     * id column; the encode runs in executors like the image variants.
     */
-  def attachAviPayload(spark: SparkSession, df: DataFrame, idCol: String): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("id")).as[Long]
-      .map(id => MediaRow(id, syntheticAvi(id), "video/avi"))
-      .toDF()
-      .select(col("id"), col("payload"),
-        struct(length(col("payload")).cast("long").as("n_bytes"),
-          col("format")).as("meta"))
-  }
+  def attachAviPayload(spark: SparkSession, df: DataFrame, idCol: String): DataFrame =
+    attachSynthetic(spark, df, idCol, "video/avi")(syntheticAvi)
 
   /** Partition-batched video feature extraction, same shape as
     * [[extractFeatures]]/[[extractAudioFeatures]].
     */
   def extractVideoFeatures(spark: SparkSession, withPayload: DataFrame): Dataset[VideoFeatures] = {
     import spark.implicits._
-    withPayload.select(col("id"), col("payload"), col("meta.format").as("format"))
-      .as[MediaRow]
-      .mapPartitions(decodeVideo)
+    mediaRows(spark, withPayload).mapPartitions(decodeVideo)
+  }
+
+  /** A w×h RGB image whose pixel (x, y) is `rgb(x, y)` (0xRRGGBB). */
+  private def rgbImage(w: Int, h: Int)(rgb: (Int, Int) => Int): java.awt.image.BufferedImage = {
+    val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) { img.setRGB(x, y, rgb(x, y)); x += 1 }
+      y += 1
+    }
+    img
   }
 
   /** Deterministic tiny RGB image for the real-decode gate: w x h from
@@ -618,27 +616,9 @@ object Multimodal {
     * read the actual raster, not just the header; closed form for the
     * oracle: mean = (3g*(wh-1) + r0+g0+b0) / (3wh).
     */
-  private[graft] def syntheticImage(id: Long): java.awt.image.BufferedImage = {
-    val w = (1 + id % 7).toInt
-    val h = (1 + id % 5).toInt
-    val g = (id % 251).toInt
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val rgb =
-          if (x == 0 && y == 0)
-            (((id % 251).toInt) << 16) | (((2 * id % 251).toInt) << 8) | (3 * id % 251).toInt
-          else (g << 16) | (g << 8) | g
-        img.setRGB(x, y, rgb)
-        x += 1
-      }
-      y += 1
-    }
-    img
-  }
+  private[graft] def syntheticImage(id: Long): java.awt.image.BufferedImage =
+    rgbImage((1 + id % 7).toInt, (1 + id % 5).toInt)(
+      (x, y) => fixtureRgb(id, (id % 251).toInt, x, y))
 
   private[graft] def encodeImage(img: java.awt.image.BufferedImage,
                                  format: String): Array[Byte] = {
@@ -651,20 +631,11 @@ object Multimodal {
   }
 
   /** Attach REAL compressed image payloads derived deterministically from
-    * the id column. The encode runs IN EXECUTORS (a narrow typed map) —
-    * payload bytes never exist on the driver, same as a production
-    * `binaryFile` read.
+    * the id column, encoded in executors ([[attachSynthetic]]).
     */
   private def attachImagePayload(spark: SparkSession, df: DataFrame, idCol: String,
-                                 writerFormat: String, mime: String): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("id")).as[Long]
-      .map(id => MediaRow(id, encodeImage(syntheticImage(id), writerFormat), mime))
-      .toDF()
-      .select(col("id"), col("payload"),
-        struct(length(col("payload")).cast("long").as("n_bytes"),
-          col("format")).as("meta"))
-  }
+                                 writerFormat: String, mime: String): DataFrame =
+    attachSynthetic(spark, df, idCol, mime)(id => encodeImage(syntheticImage(id), writerFormat))
 
   def attachPngPayload(spark: SparkSession, df: DataFrame, idCol: String): DataFrame =
     attachImagePayload(spark, df, idCol, "png", "image/png")
@@ -690,13 +661,12 @@ object Multimodal {
   /** Partition-batched feature extraction over the payload column: the
     * Scala analogue of `mapInPandas` — one decode call per partition batch,
     * typed Dataset in/out. Routes through [[decodeMedia]]: real ImageIO
-    * decode for PNG/BMP payloads, deterministic fake for the rest.
+    * decode for image payloads, deterministic fake for the rest (a null
+    * payload gives `(id, 0, 0, 0, 0.0)`).
     */
   def extractFeatures(spark: SparkSession, withPayload: DataFrame): Dataset[MediaFeatures] = {
     import spark.implicits._
-    withPayload.select(col("id"), col("payload"), col("meta.format").as("format"))
-      .as[MediaRow]
-      .mapPartitions(decodeMedia)
+    mediaRows(spark, withPayload).mapPartitions(decodeMedia)
   }
 
   // ----------------------------------------------------------- scene cuts
@@ -706,9 +676,9 @@ object Multimodal {
   /** Shot-boundary (scene-cut) detection over AVI/DIB payloads — the
     * video segmentation primitive (frame-sampling for captioning,
     * per-shot dedup): decode each DIB frame's exact pixel-byte sum with
-    * the same bounds-checked RIFF walk as [[decodeVideo]], take each
-    * frame's integer mean brightness (sum / 3wh), and report every
-    * frame whose |mean − previous mean| reaches `threshold` — the
+    * the same bounds-checked RIFF walk as [[decodeVideo]] ([[aviFrames]]),
+    * take each frame's integer mean brightness (sum / 3wh), and report
+    * every frame whose |mean − previous mean| reaches `threshold` — the
     * classic mean-intensity cut detector, integer end-to-end. Payloads
     * that fail the walk contribute nothing (one bad blob degrades one
     * row, never the task).
@@ -720,134 +690,35 @@ object Multimodal {
                 threshold: Long): Dataset[SceneCut] = {
     import spark.implicits._
     require(threshold >= 1L, "threshold must be at least 1")
-    withPayload.select(col("id"), col("payload"), col("meta.format").as("format"))
-      .as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        if (r.format == null || !r.format.startsWith("video/") ||
-          r.payload == null || !isAvi(r.payload)) Iterator.empty
-        else decodeAviFrameMeans(r.payload) match {
-          case Some(means) =>
-            means.indices.drop(1).iterator.flatMap { f =>
-              val d = math.abs(means(f) - means(f - 1))
-              if (d >= threshold) Some(SceneCut(r.id, f, d)) else None
-            }
-          case None => Iterator.empty
+    mediaRows(spark, withPayload).mapPartitions(_.flatMap { r =>
+      val means = new scala.collection.mutable.ArrayBuilder.ofLong
+      if (aviFrames(r) { (w, h, s) => means += s / (3L * w * h) }.isEmpty) Iterator.empty
+      else {
+        val m = means.result()
+        (1 until m.length).iterator.flatMap { f =>
+          val d = math.abs(m(f) - m(f - 1))
+          if (d >= threshold) Some(SceneCut(r.id, f, d)) else None
         }
-      })
-  }
-
-  /** Per-frame integer mean brightness (Σ pixel bytes / 3wh) of an
-    * AVI/DIB payload, via the bounded RIFF walk. None on any structural
-    * failure — same trust model as [[decodeAviReal]].
-    */
-  private def decodeAviFrameMeans(b: Array[Byte]): Option[Array[Long]] = {
-    if (b.length < 24) return None
-    var w = -1L; var h = -1L
-    var pixelBytes = 0L
-    val sums = new scala.collection.mutable.ArrayBuffer[Long]()
-    def walk(start: Int, end: Int): Boolean = {
-      var i = start
-      while (i + 8 <= end) {
-        val cc = fourcc(b, i)
-        val sz = le32(b, i + 8 - 4)
-        val dataStart = i + 8
-        val dataEnd = dataStart + sz
-        if (sz < 0 || dataEnd > end || dataEnd < dataStart) return false
-        if (cc == "LIST") {
-          if (sz < 4) return false
-          if (!walk(dataStart + 4, dataEnd.toInt)) return false
-        } else if (cc == "avih") {
-          if (sz < 40) return false
-          w = le32(b, dataStart + 32)
-          h = le32(b, dataStart + 36)
-        } else if (cc == "00db") {
-          if (w <= 0 || h <= 0) return false
-          val stride = ((w * 3 + 3) / 4) * 4
-          if (sz != stride * h) return false
-          pixelBytes += 3L * w * h
-          if (pixelBytes > MaxDecodedPcmBytes) return false
-          var sum = 0L
-          var row = 0
-          while (row < h) {
-            val off = dataStart + row * stride.toInt
-            var x = 0
-            while (x < w * 3) { sum += b(off + x) & 0xff; x += 1 }
-            row += 1
-          }
-          sums += sum / (3L * w * h)
-        }
-        i = dataEnd.toInt + (sz.toInt & 1)
       }
-      true
-    }
-    val riffSz = le32(b, 4)
-    val end = math.min(b.length.toLong, 8L + riffSz).toInt
-    if (!walk(12, end) || sums.isEmpty || w <= 0 || h <= 0) None
-    else Some(sums.toArray)
+    })
   }
 
   /** Deterministic 24-frame 8×6 AVI "clip": every frame a uniform gray
     * `g(f) = (b mod 40) + (f ÷ 8)·70 + (f mod 8)` with `b = id mod 100`
     * — three 8-frame scenes drifting +1 per frame with +63 jumps at
     * frames 8 and 16, the planted cuts (values stay < 251, so no mod
-    * wrap ever fakes a cut). Built on the same RIFF writer layout as
+    * wrap ever fakes a cut). Built by the same RIFF writer as
     * [[syntheticAvi]]; the closed form is what the oracle evaluates.
     */
-  private[graft] def syntheticClip(id: Long): Array[Byte] = {
-    val b = id % 100
-    val w = 8; val h = 6; val nf = 24
-    val stride = ((w * 3 + 3) / 4) * 4
-    val frameSz = stride * h
-    val bos = new java.io.ByteArrayOutputStream()
-    def w32(v: Long): Unit = {
-      bos.write((v & 0xff).toInt); bos.write(((v >> 8) & 0xff).toInt)
-      bos.write(((v >> 16) & 0xff).toInt); bos.write(((v >> 24) & 0xff).toInt)
+  private[graft] def syntheticClip(id: Long): Array[Byte] =
+    aviOf(8, 6, 24) { (f, _, _) =>
+      val g = ((id % 100 % 40) + (f / 8) * 70 + (f % 8)).toInt
+      (g << 16) | (g << 8) | g
     }
-    def cc(s: String): Unit =
-      bos.write(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    val strlSz = 4 + 8 + 56 + 8 + 40
-    val hdrlSz = 4 + 8 + 56 + 8 + strlSz
-    val moviSz = 4 + nf * (8 + frameSz)
-    cc("RIFF"); w32(4 + 8 + hdrlSz + 8 + moviSz); cc("AVI ")
-    cc("LIST"); w32(hdrlSz); cc("hdrl")
-    cc("avih"); w32(56)
-    w32(40000); w32(0); w32(0); w32(0)
-    w32(nf); w32(0); w32(1); w32(frameSz)
-    w32(w); w32(h); w32(0); w32(0); w32(0); w32(0)
-    cc("LIST"); w32(strlSz); cc("strl")
-    cc("strh"); w32(56)
-    cc("vids"); cc("DIB "); w32(0); w32(0); w32(0)
-    w32(1); w32(25); w32(0); w32(nf)
-    w32(frameSz); w32(0); w32(0); w32(0); w32(0)
-    cc("strf"); w32(40)
-    w32(40); w32(w); w32(h); bos.write(1); bos.write(0)
-    bos.write(24); bos.write(0)
-    w32(0); w32(frameSz); w32(0); w32(0); w32(0); w32(0)
-    cc("LIST"); w32(moviSz); cc("movi")
-    var f = 0
-    while (f < nf) {
-      cc("00db"); w32(frameSz)
-      val g = ((b % 40) + (f / 8) * 70 + (f % 8)).toInt
-      val row = new Array[Byte](stride)
-      var x = 0
-      while (x < w * 3) { row(x) = g.toByte; x += 1 }
-      var y = 0
-      while (y < h) { bos.write(row); y += 1 }
-      f += 1
-    }
-    bos.toByteArray
-  }
 
   /** Attach synthetic-clip AVI payloads for the scene-cut gate. */
-  def attachClipPayload(spark: SparkSession, df: DataFrame, idCol: String): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("id")).as[Long]
-      .map(id => MediaRow(id, syntheticClip(id), "video/avi"))
-      .toDF()
-      .select(col("id"), col("payload"),
-        struct(length(col("payload")).cast("long").as("n_bytes"),
-          col("format")).as("meta"))
-  }
+  def attachClipPayload(spark: SparkSession, df: DataFrame, idCol: String): DataFrame =
+    attachSynthetic(spark, df, idCol, "video/avi")(syntheticClip)
 
   // ------------------------------------------------------ perceptual hash
 
@@ -922,15 +793,13 @@ object Multimodal {
     */
   def perceptualHash(spark: SparkSession, withPayload: DataFrame): Dataset[PHash] = {
     import spark.implicits._
-    withPayload.select(col("id"), col("payload"), col("meta.format").as("format"))
-      .as[MediaRow]
-      .mapPartitions(_.flatMap { r =>
-        try {
-          val img = readImageBounded(r.payload)
-          if (img == null) None
-          else dHash(img).map { case (hi, lo) => PHash(r.id, hi, lo) }
-        } catch { case scala.util.control.NonFatal(_) => None }
-      })
+    mediaRows(spark, withPayload).mapPartitions(_.flatMap { r =>
+      try {
+        val img = readImageBounded(r.payload)
+        if (img == null) None
+        else dHash(img).map { case (hi, lo) => PHash(r.id, hi, lo) }
+      } catch { case scala.util.control.NonFatal(_) => None }
+    })
   }
 
   /** The band count [[phashNearDup]] uses for a radius: pigeonhole
@@ -995,33 +864,17 @@ object Multimodal {
     */
   private[graft] def syntheticPhoto(id: Long): java.awt.image.BufferedImage = {
     val b = id % 100
-    val img = new java.awt.image.BufferedImage(
-      36, 32, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < 32) {
-      var x = 0
-      while (x < 36) {
-        val p = ((b * (x + 1) * (y + 3) + x.toLong * x + b) % 251L).toInt
-        img.setRGB(x, y, (p << 16) | (p << 8) | p)
-        x += 1
-      }
-      y += 1
+    rgbImage(36, 32) { (x, y) =>
+      val p = ((b * (x + 1) * (y + 3) + x.toLong * x + b) % 251L).toInt
+      (p << 16) | (p << 8) | p
     }
-    img
   }
 
   /** Attach losslessly-coded (PNG) synthetic photos for the pHash gates
     * — encode in executors like every payload attach here.
     */
-  def attachPhotoPayload(spark: SparkSession, df: DataFrame, idCol: String): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("id")).as[Long]
-      .map(id => MediaRow(id, encodeImage(syntheticPhoto(id), "png"), "image/png"))
-      .toDF()
-      .select(col("id"), col("payload"),
-        struct(length(col("payload")).cast("long").as("n_bytes"),
-          col("format")).as("meta"))
-  }
+  def attachPhotoPayload(spark: SparkSession, df: DataFrame, idCol: String): DataFrame =
+    attachSynthetic(spark, df, idCol, "image/png")(id => encodeImage(syntheticPhoto(id), "png"))
 
   /** Mixed-modality payload attachment: modality assigned
     * deterministically from the id (stand-in for real mime sniffing on
@@ -1047,27 +900,21 @@ object Multimodal {
     * per executor. Decoders are the honest stubs (real ones sit behind
     * the same `MediaRow => feature` boundary):
     * image → first-two-byte dimension product, audio → mean amplitude,
-    * video → payload size.
+    * video → payload size; a null payload reads as empty (`n_bytes` 0,
+    * feature 0.0).
     */
   def dispatchFeatures(spark: SparkSession, withPayload: DataFrame): Dataset[ModalFeatures] = {
     import spark.implicits._
-    withPayload.select(col("id"), col("payload"), col("meta.format").as("format"))
-      .as[MediaRow]
-      .mapPartitions(_.map { r =>
-        val bytes = r.payload
-        val modality = r.format.takeWhile(_ != '/')
-        val feature = modality match {
-          case "image" =>
-            val w = if (bytes.length > 0) (bytes(0) & 0xff) else 0
-            val h = if (bytes.length > 1) (bytes(1) & 0xff) else 0
-            (w * h).toDouble
-          case "audio" =>
-            if (bytes.isEmpty) 0.0
-            else graft.Num.r6(bytes.map(b => (b & 0xff).toLong).sum.toDouble / bytes.length)
-          case _ => bytes.length.toDouble
-        }
-        ModalFeatures(r.id, modality, bytes.length.toLong, feature)
-      })
+    mediaRows(spark, withPayload).mapPartitions(_.map { r =>
+      val b = r.payload
+      val modality = r.format.takeWhile(_ != '/')
+      val feature = modality match {
+        case "image" => (byteAt(b, 0) * byteAt(b, 1)).toDouble
+        case "audio" => byteMean(b)
+        case _ => nBytes(b).toDouble
+      }
+      ModalFeatures(r.id, modality, nBytes(b), feature)
+    })
   }
 
   final case class FrameRow(id: Long, frame_idx: Int, frame: Array[Byte])
@@ -1077,14 +924,15 @@ object Multimodal {
     * per-frame features): split the payload into fixed `frameBytes`
     * blocks and keep every `stride`-th one. Payloads never leave
     * executors; output is one row per kept frame — a flatMap, no shuffle.
-    * The "codec" is the honest stub (byte blocks as frames).
+    * The "codec" is the honest stub (byte blocks as frames); a null
+    * payload has no frames.
     */
   def sampleFrames(spark: SparkSession, withPayload: DataFrame,
                    frameBytes: Int = 64, stride: Int = 2): Dataset[FrameRow] = {
     import spark.implicits._
     withPayload.select(col("id"), col("payload")).as[(Long, Array[Byte])]
       .flatMap { case (id, p) =>
-        p.grouped(frameBytes).zipWithIndex.collect {
+        (if (p == null) Iterator.empty else p.grouped(frameBytes)).zipWithIndex.collect {
           case (blk, i) if i % stride == 0 => FrameRow(id, i, blk)
         }
       }
@@ -1092,11 +940,7 @@ object Multimodal {
 
   def frameFeatures(frames: Dataset[FrameRow]): Dataset[FrameFeatures] = {
     import frames.sparkSession.implicits._
-    frames.map { f =>
-      val mean = if (f.frame.isEmpty) 0.0
-                 else f.frame.map(b => (b & 0xff).toLong).sum.toDouble / f.frame.length
-      FrameFeatures(f.id, f.frame_idx, f.frame.length.toLong, graft.Num.r6(mean))
-    }
+    frames.map(f => FrameFeatures(f.id, f.frame_idx, nBytes(f.frame), byteMean(f.frame)))
   }
 
   final case class ResizedDims(id: Long, width: Int, height: Int, out_w: Int, out_h: Int)

@@ -82,17 +82,16 @@ object Bucketing {
     if (fs.exists(loc)) fs.delete(loc, true)
   }
 
-  /** Append into an existing [[writeBucketed]] table (Spark validates
-    * that key and bucket count match the table's spec). The append-only
+  /** Append into an existing [[writeBucketed]] table at the table's own
+    * bucket count ([[bucketCountOf]], catalog metadata, no job; Spark
+    * validates that the key matches the table's spec). The append-only
     * half of an ingest log: history is never rewritten — each batch
     * adds bucketed files — which is what makes the layout streamable
     * (a `foreachBatch` sink can call this per micro-batch). Same
     * single-writer-per-table contract as [[writeBucketed]].
     */
-  def appendBucketed(df: DataFrame, table: String, key: String, nBuckets: Int): Unit = {
-    require(nBuckets > 0, "nBuckets must be positive")
-    write(df, "append", table, key, nBuckets)
-  }
+  def appendBucketed(df: DataFrame, table: String, key: String): Unit =
+    write(df, "append", table, key, bucketCountOf(df.sparkSession, table))
 
   /** The bucket count a [[writeBucketed]] table was written with, read
     * from the catalog — append paths derive it from the table itself

@@ -136,8 +136,7 @@ object Graph {
     // config drift between the bootstrap and incremental jobs must be
     // impossible by construction (the appendBm25/appendIvf discipline)
     if (spark.catalog.tableExists(logTable))
-      Bucketing.appendBucketed(e, logTable, "src",
-        Bucketing.bucketCountOf(spark, logTable))
+      Bucketing.appendBucketed(e, logTable, "src")
     else Bucketing.writeBucketed(e, logTable, "src", nBuckets)
     // degTable MUST share the log's bucket count or the co-located
     // log⋈degrees join stops being exchange-free; the aggregation over

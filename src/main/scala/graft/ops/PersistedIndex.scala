@@ -125,8 +125,7 @@ final case class PersistedIndex[S](
       val data = encode(rows, st)
       val b = Snapshots.nextBatchId(spark, root, tables.map(root + _._1))
       tables.zip(data).foreach { case ((sfx, key), df) =>
-        Bucketing.appendBucketed(Snapshots.stamp(df, b), root + sfx, key,
-          Bucketing.bucketCountOf(spark, root + sfx))
+        Bucketing.appendBucketed(Snapshots.stamp(df, b), root + sfx, key)
       }
       afterAppend(spark, root, data)
       Snapshots.record(spark, root, b)

@@ -192,7 +192,7 @@ object Snapshots {
         .collect().map(_.getLong(0)).sorted
       rest.foreach { b =>
         Bucketing.appendBucketed(
-          transform(rows.where(col(BatchCol) === b)), tmp, key, n)
+          transform(rows.where(col(BatchCol) === b)), tmp, key)
       }
     }
   }

@@ -62,8 +62,7 @@ object Tombstones {
       (if (exists) in.join(spark.table(tt), Seq(idName), "left_anti")
       else in).localCheckpoint(true)
     if (exists)
-      Bucketing.appendBucketed(fresh, tt, idName,
-        Bucketing.bucketCountOf(spark, tt))
+      Bucketing.appendBucketed(fresh, tt, idName)
     else Bucketing.writeBucketed(fresh, tt, idName,
       Bucketing.bucketCountOf(spark, parent))
     fresh

@@ -43,13 +43,6 @@ object BucketedLogSink {
 
   private def commitsTable(table: String): String = s"${table}_commits"
 
-  /** Has `batchId` already been committed into `table`'s log? Bounded:
-    * the commit log is batches-sized by construction.
-    */
-  def alreadyCommitted(spark: org.apache.spark.sql.SparkSession,
-                       table: String, batchId: Long): Boolean =
-    ExactlyOnce.committed(spark, commitsTable(table), batchId)
-
   /** Idempotently append one micro-batch into the bucketed log `table`.
     * First-ever batch creates the table ([[Bucketing.writeBucketed]]);
     * later batches append ([[Bucketing.appendBucketed]] — bucket count
@@ -81,8 +74,7 @@ object BucketedLogSink {
             .limit(1).count() > 0L)
           Bucketing.compactBucketedWith(spark, table, key,
             _.where(col("_batch_id") =!= batchId))
-        Bucketing.appendBucketed(stamped, table, key,
-          Bucketing.bucketCountOf(spark, table))
+        Bucketing.appendBucketed(stamped, table, key)
       } else Bucketing.writeBucketed(stamped, table, key, nBuckets)
     }
   }

@@ -346,7 +346,7 @@ class AppendMaintenanceSpec extends AnyFunSuite {
         t, "custkey", nBuckets = 4)
       (1 to 3).foreach(i =>
         Bucketing.appendBucketed(orders.filter(col("o_orderkey") % 4 === i),
-          t, "custkey", 4))
+          t, "custkey"))
       val before = rows(spark.table(t))
       def dataFiles(): Int = {
         val loc = new org.apache.hadoop.fs.Path(

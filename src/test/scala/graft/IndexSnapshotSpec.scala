@@ -85,8 +85,7 @@ class IndexSnapshotSpec extends AnyFunSuite {
         spark.table(t).drop(Snapshots.BatchCol)
           .withColumn("nn_id", col("nn_id") + 100000L)
           .localCheckpoint(), 1L)
-      Bucketing.appendBucketed(orphan, t, "bucket",
-        Bucketing.bucketCountOf(spark, t))
+      Bucketing.appendBucketed(orphan, t, "bucket")
       // the orphans are stamped batch 1 but batch 1 was never recorded:
       // every asOf ≤ 1 must exclude them
       assert(rows(Similarity.topKLshIngested(spark, t,
@@ -133,8 +132,7 @@ class IndexSnapshotSpec extends AnyFunSuite {
         spark.table(t).drop(Snapshots.BatchCol)
           .withColumn("nn_id", col("nn_id") + 100000L)
           .localCheckpoint(), 1L)
-      Bucketing.appendBucketed(orphan, t, "bucket",
-        Bucketing.bucketCountOf(spark, t))
+      Bucketing.appendBucketed(orphan, t, "bucket")
       // deriving the next id from the sidecar alone would REUSE 1 here,
       // and record(1) would retroactively commit the orphan rows into
       // every asOf >= 1 snapshot — nextBatchId must consult the data
@@ -211,8 +209,7 @@ class IndexSnapshotSpec extends AnyFunSuite {
         spark.table(t).drop(Snapshots.BatchCol)
           .withColumn("nn_id", col("nn_id") + 100000L)
           .localCheckpoint(), 1L)
-      Bucketing.appendBucketed(orphan, t, "bucket",
-        Bucketing.bucketCountOf(spark, t))
+      Bucketing.appendBucketed(orphan, t, "bucket")
       // the retry lands under a fresh id (2)
       Similarity.appendLsh(spark, t,
         emb.filter(col("vec_id") >= 50 && col("vec_id") < 100),

@@ -8,8 +8,9 @@ import graft.llm.Multimodal
 /** Multimodal operator semantics that the gates alone cannot pin:
   * the pHash near-dup banding GUARANTEE at mid-range radii (planted
   * Hamming-4..6 pairs constructed adversarially against the old 4×16
-  * banding), the radius→band derivation itself, and the streamed WAV
-  * sample decode behind the audio fingerprint.
+  * banding), the radius→band derivation itself, the streamed WAV
+  * sample decode behind the audio fingerprint, the rejection paths of
+  * the shared RIFF walker and PCM reader, and null payloads.
   */
 class MultimodalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -103,4 +104,96 @@ class MultimodalSpec extends AnyFunSuite {
     assert(fps(17L) === fps(117L), "planted copy must fingerprint identically")
     assert(fps(3L) !== fps(17L), "different tones must differ")
   }
+
+  // --------------------------------------------------------- null payloads
+
+  // A null text attaches a null payload; every verb reads it as an empty
+  // one instead of failing the task on a null dereference.
+  private def nullDocs = {
+    import spark.implicits._
+    Seq((0L, null: String), (1L, null: String), (2L, null: String)).toDF("doc_id", "text")
+  }
+
+  private val nullPayloadRows: Seq[(String, () => Seq[Any], Seq[Any])] = Seq(
+    ("extractFeatures", () => Multimodal.extractFeatures(spark,
+        Multimodal.attachPayload(nullDocs, "doc_id", "text")).collect().toSeq.sortBy(_.id),
+      (0L to 2L).map(id => Multimodal.MediaFeatures(id, 0L, 0, 0, 0.0))),
+    ("dispatchFeatures", () => Multimodal.dispatchFeatures(spark,
+        Multimodal.attachMixedPayload(nullDocs, "doc_id", "text")).collect().toSeq.sortBy(_.id),
+      Seq(Multimodal.ModalFeatures(0L, "image", 0L, 0.0),
+        Multimodal.ModalFeatures(1L, "audio", 0L, 0.0),
+        Multimodal.ModalFeatures(2L, "video", 0L, 0.0))),
+    ("sampleFrames", () => Multimodal.sampleFrames(spark,
+        Multimodal.attachPayload(nullDocs, "doc_id", "text")).collect().toSeq,
+      Seq.empty))
+
+  for ((verb, run, expected) <- nullPayloadRows)
+    test(s"null payload reads as an empty one: $verb") {
+      assert(run() === expected)
+    }
+
+  // ------------------------------- walker and reader rejection paths
+
+  private def withBytes(b: Array[Byte], at: Int, bytes: Array[Byte]): Array[Byte] = {
+    val c = b.clone()
+    System.arraycopy(bytes, 0, c, at, bytes.length)
+    c
+  }
+  private def le32(v: Long): Array[Byte] = Array.tabulate(4)(i => (v >> (8 * i)).toByte)
+  private def ascii(s: String): Array[Byte] = s.getBytes("US-ASCII")
+
+  /** (case, mime, payload): synthetic clips and tones corrupted one way
+    * each. The clip is 8×6 (stride 24) with `avih` at byte 24, so its
+    * width sits at byte 64; the tone's `fmt ` chunk id sits at byte 12.
+    */
+  private val rejected: Seq[(String, String, Array[Byte])] = {
+    val clip = Multimodal.syntheticClip(3L)
+    val tone = Multimodal.syntheticTone(3L)
+    val firstFrame = clip.indexOfSlice(ascii("00db").toSeq)
+    Seq(
+      ("truncated movi", "video/avi", java.util.Arrays.copyOf(clip, clip.length - 7)),
+      ("avih renamed: frames before any header", "video/avi", withBytes(clip, 24, ascii("junk"))),
+      ("chunk size past the end", "video/avi", withBytes(clip, firstFrame + 4, le32(0x7fffffffL))),
+      ("width breaks the stride check", "video/avi", withBytes(clip, 64, le32(9L))),
+      ("non-RIFF text", "video/avi", ascii("not a movie, just text")),
+      ("non-RIFF text", "audio/wav", ascii("not a sound, just text")),
+      ("corrupt WAV header: fmt chunk renamed", "audio/wav", withBytes(tone, 12, ascii("junk"))),
+      ("corrupt WAV header: 8-bit samples", "audio/wav", withBytes(tone, 34, Array[Byte](8, 0))))
+  }
+
+  test("rejection rows are corrupt on purpose: the uncorrupted payloads decode and emit rows") {
+    import spark.implicits._
+    val clip = Multimodal.syntheticClip(3L)
+    val tone = Multimodal.syntheticTone(3L)
+    assert(Multimodal.decodeVideo(Iterator(Multimodal.MediaRow(1L, clip, "video/avi")))
+      .next().n_frames === 24L)
+    assert(Multimodal.decodeAudio(Iterator(Multimodal.MediaRow(1L, tone, "audio/wav")))
+      .next().sample_rate === 8000)
+    val ids = Seq(3L).toDF("doc_id")
+    assert(Multimodal.sceneCuts(spark,
+      Multimodal.attachClipPayload(spark, ids, "doc_id"), threshold = 20L).count() === 2L)
+    assert(Multimodal.audioFingerprints(spark,
+      Multimodal.attachTonePayload(spark, ids, "doc_id")).count() === 1L)
+  }
+
+  for ((name, mime, payload) <- rejected)
+    test(s"$mime $name: decode falls back to the fake, sceneCuts/audioFingerprints emit nothing") {
+      import spark.implicits._
+      val row = Multimodal.MediaRow(7L, payload, mime)
+      val b0 = payload(0) & 0xff
+      val b1 = payload(1) & 0xff
+      if (mime.startsWith("video/")) {
+        val f = Multimodal.decodeVideo(Iterator(row)).next()
+        assert((f.width, f.height, f.n_frames) === ((b0, b1, payload.length.toLong)))
+      } else {
+        val f = Multimodal.decodeAudio(Iterator(row)).next()
+        assert((f.sample_rate, f.channels, f.n_frames) === ((0, 0, payload.length.toLong)))
+      }
+      val df = Seq((7L, payload, mime)).toDF("id", "payload", "format")
+        .select(col("id"), col("payload"), struct(col("format")).as("meta"))
+      val emitted =
+        if (mime.startsWith("video/")) Multimodal.sceneCuts(spark, df, threshold = 1L).count()
+        else Multimodal.audioFingerprints(spark, df).count()
+      assert(emitted === 0L)
+    }
 }

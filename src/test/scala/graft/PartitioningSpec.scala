@@ -188,7 +188,7 @@ class PartitioningSpec extends AnyFunSuite {
       (0L to 2L).foreach { bid =>
         val rows = Snapshots.stamp(edges.select(col("s").as("src"), col("d").as("dst")), bid)
         if (bid == 0L) Bucketing.writeBucketed(rows, t, "src", 4)
-        else Bucketing.appendBucketed(rows, t, "src", 4)
+        else Bucketing.appendBucketed(rows, t, "src")
       }
       assert(writeExchanges(staged)(Snapshots.compactStampedRange(spark, t, "src", 0L, 1L)) ==
         Seq(0, 0))

@@ -1010,7 +1010,7 @@ class StreamingSpec extends AnyFunSuite {
       graft.ops.Bucketing.appendBucketed(
         Seq((5L, "e")).toDF("k", "v")
           .withColumn("_batch_id", lit(lastBatch + 2)),
-        t, "k", 4)
+        t, "k")
       assert(spark.table(t).count() === 5L, "uncommitted data landed")
       assert(graft.streaming.BucketedLogSink.asOf(spark, t, lastBatch + 2)
         .count() === 4L, "snapshot leaked uncommitted crash-window rows")
