@@ -207,6 +207,18 @@ private[graft] object OlapGates {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
   }
 
+  /** The (log, degree) table pair `graft_<name>_{log,deg}_<dir digest>`
+    * of one graph gate, dropped first with the weighted log's `_meta`
+    * sidecar: ingest APPENDS to an existing log, so a rerun over the old
+    * pair would double every edge. The digest keeps concurrent suites on
+    * different fixture dirs off each other's tables.
+    */
+  private def freshPair(s: SparkSession, dir: String, name: String): (String, String) = {
+    val (log, degT) = (s"graft_${name}_log_${dirSuffix(dir)}", s"graft_${name}_deg_${dirSuffix(dir)}")
+    Seq(log, s"${log}_meta", degT).foreach(Bucketing.dropManaged(s, _))
+    (log, degT)
+  }
+
   /** [[coPurchaseEdges]] carrying the line quantity as the edge weight
     * — co-purchase VOLUME, the natural link-prominence signal for the
     * weighted graph gates; both directions carry the same weight.
@@ -1239,16 +1251,14 @@ private[graft] object OlapGates {
 
     ("graph_pagerank_bucketed",
       (s: SparkSession, dir: String) => {
-        // same ranks, production layout: the degree-annotated edge
-        // relation is written ONCE bucketed by src, and every
-        // iteration's edges⋈ranks join then reads the bucketed scan
-        // exchange-free — at 100 TB the per-round shuffle drops from
-        // |E| to |V|. Table name carries a SHA-256 dir digest so
-        // concurrent suites on different fixture dirs never race on
-        // the catalog.
-        val table = s"graft_pr_edges_${dirSuffix(dir)}"
-        Graph.writeEdges(coPurchaseEdges(s, dir), "src", "dst", table, nBuckets = 8)
-        Graph.pageRankBucketed(s, table, iters = 5, damping = 0.85d)
+        // same ranks, stored layout: the edges land in ONE batch in
+        // the src-bucketed (log, degree) pair, and every iteration's
+        // log⋈degrees⋈ranks join then reads the bucketed scans
+        // exchange-free on the edge side — at 100 TB the per-round
+        // shuffle drops from |E| to |V|
+        val (log, degT) = freshPair(s, dir, "pr_edges")
+        Graph.ingestEdges(coPurchaseEdges(s, dir), "src", "dst", log, degT, nBuckets = 8)
+        Graph.pageRankIngested(s, log, degT, iters = 5, damping = 0.85d)
       },
       pageRankOracleSql),
 
@@ -1259,13 +1269,8 @@ private[graft] object OlapGates {
         // the edge multiset) through Graph.ingestEdges, which appends
         // each into the src-bucketed log and rebuilds the derived
         // degree table exchange-free; pageRankIngested then runs the
-        // shared loop over the co-located log⋈degrees join. The log is
-        // append-only, so the gate DROPs it first — a managed table,
-        // so the drop removes the previous invocation's files too
-        // (otherwise a second run would double every edge).
-        val log = s"graft_pr_log_${dirSuffix(dir)}"
-        val degT = s"graft_pr_deg_${dirSuffix(dir)}"
-        s.sql(s"DROP TABLE IF EXISTS `$log`")
+        // shared loop over the co-located log⋈degrees join
+        val (log, degT) = freshPair(s, dir, "pr")
         val e = coPurchaseEdges(s, dir)
         Seq(0, 1).foreach { p =>
           Graph.ingestEdges(e.filter(pmod(col("src") + col("dst"), lit(2)) === p),
@@ -1325,15 +1330,15 @@ private[graft] object OlapGates {
 
     ("graph_sssp_bucketed",
       (s: SparkSession, dir: String) => {
-        // same distances, production layout: the validated weighted
-        // edge relation is written ONCE bucketed by src and every
+        // same distances, stored layout: the validated weighted edges
+        // land in ONE batch in the src-bucketed log and every
         // relaxation round's edges⋈frontier join reads the bucketed
         // scan exchange-free — the graph_bfs_bucketed pattern for the
         // weighted family (SCALING.md measures why the layout matters)
-        val table = s"graft_wedges_${dirSuffix(dir)}"
-        Graph.writeWeightedEdges(coPurchaseEdgesWeighted(s, dir),
-          "src", "dst", "w", table, nBuckets = 8)
-        Graph.ssspBucketed(s, table,
+        val (log, degT) = freshPair(s, dir, "wedges")
+        Graph.ingestWeightedEdges(coPurchaseEdgesWeighted(s, dir),
+          "src", "dst", "w", log, degT, nBuckets = 8)
+        Graph.ssspIngested(s, log,
           t(s, dir, "customer").filter(col("c_custkey") <= 3)
             .select(col("c_custkey")),
           "c_custkey", maxIters = 4)
@@ -1342,35 +1347,33 @@ private[graft] object OlapGates {
 
     ("graph_pagerank_weighted_bucketed",
       (s: SparkSession, dir: String) => {
-        // weighted ranks over the same pay-once layout: weight totals
-        // baked in at write time (recomputing them per run would
-        // re-shuffle the edges the bucketing exists to avoid), each
-        // iteration's join exchange-free on the edge side
-        val table = s"graft_wedges_pr_${dirSuffix(dir)}"
-        Graph.writeWeightedEdges(coPurchaseEdgesWeighted(s, dir),
-          "src", "dst", "w", table, nBuckets = 8)
-        Graph.pageRankWeightedBucketed(s, table, iters = 5, damping = 0.85d)
+        // weighted ranks over the same one-batch pair: weight totals
+        // live in the degree table, rebuilt from the log at ingest
+        // (recomputing them per run would re-shuffle the edges the
+        // bucketing exists to avoid), each iteration's join
+        // exchange-free on the edge side
+        val (log, degT) = freshPair(s, dir, "wedges_pr")
+        Graph.ingestWeightedEdges(coPurchaseEdgesWeighted(s, dir),
+          "src", "dst", "w", log, degT, nBuckets = 8)
+        Graph.pageRankWeightedIngested(s, log, degT, iters = 5, damping = 0.85d)
       },
       weightedPrOracleSql),
 
     ("graph_pagerank_weighted_ingested",
       (s: SparkSession, dir: String) => {
-        // the APPEND path the full-rebuild layout cannot offer: the
-        // weighted co-purchase edges arrive as TWO batches into the
-        // (log, degree) pair — baked degmu would go stale, so weight
-        // totals live in their own src-bucketed table rebuilt
-        // exchange-free from the log per ingest. Ranks are
+        // the APPEND path: the weighted co-purchase edges arrive as TWO
+        // batches into the (log, degree) pair — weight totals live in
+        // their own src-bucketed table, rebuilt exchange-free from the
+        // log per ingest, so no stored total goes stale. Ranks are
         // bit-identical to the batch operator on the union (weight
         // merging is a sum — batch boundaries cannot move it), so the
         // gate shares the weighted-PageRank oracle.
-        val log = s"graft_wlog_${dirSuffix(dir)}"
-        val degT = s"graft_wdeg_${dirSuffix(dir)}"
-        Seq(log, s"${log}_meta", degT).foreach(Bucketing.dropManaged(s, _))
+        val (log, degT) = freshPair(s, dir, "wpr")
         val e = coPurchaseEdgesWeighted(s, dir)
-        Graph.ingestWeightedEdges(e.filter(pmod(col("src") + col("dst"), lit(2)) === 0),
-          "src", "dst", "w", log, degT, nBuckets = 8)
-        Graph.ingestWeightedEdges(e.filter(pmod(col("src") + col("dst"), lit(2)) === 1),
-          "src", "dst", "w", log, degT, nBuckets = 8)
+        Seq(0, 1).foreach { p =>
+          Graph.ingestWeightedEdges(e.filter(pmod(col("src") + col("dst"), lit(2)) === p),
+            "src", "dst", "w", log, degT, nBuckets = 8)
+        }
         Graph.pageRankWeightedIngested(s, log, degT, iters = 5, damping = 0.85d)
       },
       weightedPrOracleSql),
@@ -1520,15 +1523,15 @@ private[graft] object OlapGates {
 
     ("graph_bfs_bucketed",
       (s: SparkSession, dir: String) => {
-        // same distances, production layout: the edge list is written
-        // ONCE bucketed by src and every hop's edges⋈frontier join then
+        // same distances, stored layout: the edges land in ONE batch in
+        // the src-bucketed log and every hop's edges⋈frontier join then
         // reads the bucketed scan exchange-free — at 100 TB the per-hop
         // shuffle drops from |E| (frontier out-edges) to the frontier
-        // itself (≤|V| rows). The pageRankBucketed pattern applied to
-        // reachability; GraphSpec asserts strictly fewer exchanges.
-        val table = s"graft_bfs_edges_${dirSuffix(dir)}"
-        Graph.writeEdges(coPurchaseEdges(s, dir), "src", "dst", table, nBuckets = 8)
-        Graph.bfsBucketed(s, table,
+        // itself (≤|V| rows). GraphSpec asserts strictly fewer
+        // exchanges.
+        val (log, degT) = freshPair(s, dir, "bfs_edges")
+        Graph.ingestEdges(coPurchaseEdges(s, dir), "src", "dst", log, degT, nBuckets = 8)
+        Graph.bfsBucketed(s, log,
           t(s, dir, "customer").filter(col("c_custkey") <= 3)
             .select(col("c_custkey")),
           "c_custkey", maxHops = 4)

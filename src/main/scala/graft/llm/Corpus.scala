@@ -1512,12 +1512,12 @@ object Corpus {
     * through the driver (same bounded-collect argument as the scoring
     * path, which already rides the whole vector as a literal).
     *
-    * PUBLISH is staged, never a read-from-self overwrite (the
-    * [[graft.ops.Bucketing.compactBucketedStaged]] discipline): the
-    * survivors are written to `<table>__compacting`, the live log
-    * parks as `<table>__precompact`, the compacted copy takes the
-    * name, the backup drops LAST — so a full copy of the weights log
-    * stays live under a deterministic name at every instant. A crash
+    * PUBLISH is [[graft.ops.Bucketing.publishStaged]], the one staged
+    * publish, never a read-from-self overwrite: the survivors are
+    * written to the staging table, the live log parks as the backup,
+    * the compacted copy takes the name, the backup drops LAST — so a
+    * full copy of the weights log stays live under a deterministic
+    * name at every instant. A crash
     * mid-rewrite can no longer lose the log and silently restart
     * training from the zero vector while the commit log still marks
     * the lost batches committed. A leftover backup from an interrupted
@@ -1533,31 +1533,25 @@ object Corpus {
                              table: String, keepLast: Int): Unit = {
     require(keepLast >= 1, "keepLast must be positive")
     val ct = s"${table}_commits"
-    val tmp = s"${table}__compacting"
-    val backup = s"${table}__precompact"
-    // leftover detection MUST precede the missing-table early return: a
-    // crash between the two publish renames leaves the log parked as
-    // `backup` while the table name is unoccupied — an early return
-    // keyed on tableExists(table) would silently no-op right past the
-    // evidence (the recovery contract is LOUD failure in EVERY crash
-    // window, never a quiet skip)
-    require(!spark.catalog.tableExists(backup),
-      s"compactQualityModelLog: leftover '$backup' from an interrupted " +
-        s"compaction — recover (rename it or '$tmp' back to '$table') " +
-        "before compacting again")
-    if (!spark.catalog.tableExists(table) ||
-        !spark.catalog.tableExists(ct)) return
-    val keep = spark.table(ct).select(col("batch_id"))
-      .orderBy(col("batch_id").desc).limit(keepLast)
-    val kept = spark.table(table)
-      .join(broadcast(keep), Seq("batch_id"), "left_semi")
-      .select(col("batch_id"), col("b"), col("wm")).distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    import spark.implicits._
-    kept.toDF("batch_id", "b", "wm").write.mode("overwrite")
-      .format("parquet").saveAsTable(tmp)
-    spark.sql(s"ALTER TABLE `$table` RENAME TO `$backup`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-    spark.sql(s"DROP TABLE `$backup`")
+    graft.ops.Bucketing.publishStaged(spark, table, "compactQualityModelLog") { tmp =>
+      // the missing-table no-op runs INSIDE the publish, after its
+      // leftover-backup guard: a crash between the two publish renames
+      // leaves the log parked as the backup while the table name is
+      // unoccupied — a return keyed on tableExists(table) ahead of the
+      // guard would silently no-op right past the evidence (the
+      // recovery contract is LOUD failure in EVERY crash window)
+      spark.catalog.tableExists(table) && spark.catalog.tableExists(ct) && {
+        val keep = spark.table(ct).select(col("batch_id"))
+          .orderBy(col("batch_id").desc).limit(keepLast)
+        val kept = spark.table(table)
+          .join(broadcast(keep), Seq("batch_id"), "left_semi")
+          .select(col("batch_id"), col("b"), col("wm")).distinct()
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+        import spark.implicits._
+        kept.toDF("batch_id", "b", "wm").write.mode("overwrite")
+          .format("parquet").saveAsTable(tmp)
+        true
+      }
+    }
   }
 }

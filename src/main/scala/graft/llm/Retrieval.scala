@@ -144,7 +144,7 @@ object Retrieval {
   }
 
   /** Persist the BM25 index ONCE — the pay-once-at-ingest layout twin
-    * ([[graft.llm.Similarity.ingestIvf]], `Graph.writeEdges`): tokenize
+    * ([[graft.llm.Similarity.ingestIvf]], `Graph.ingestEdges`): tokenize
     * the corpus a single time and write the `(term, doc, tf)` posting
     * table BUCKETED BY TERM (the key every probe joins and aggregates
     * on — df counting and query expansion read it exchange-free), the

@@ -672,7 +672,7 @@ object Similarity {
     val books = pqBooksOf(spark, table)
     // tombstoned rows are excluded: the drift signal should reflect the
     // LIVE index, not rows a probe can no longer see (snapshot stamps
-    // dropped — a duplicate _batch_id column would make the join output
+    // dropped — a duplicate stamp column would make the join output
     // ambiguous)
     val joined = graft.ops.Tombstones.filterByParent(spark, table,
       graft.ops.Snapshots.readAsOf(spark, s"${table}_vectors", table, None)
@@ -1083,9 +1083,8 @@ object Similarity {
 
   /** Train both residual quantizers over the normalized corpus — the
     * cells, then the per-cell residual codebooks. Ragged input would
-    * slice into silently-truncated residuals: the coarse quantizer's
-    * rounds reject it ([[lloydMeans]]), and with no rounds the
-    * [[requireUniform]] probe does. Returns the normalized
+    * slice into silently-truncated residuals: the coarse quantizer
+    * rejects it ([[coarseQuantizer]]). Returns the normalized
     * corpus, the state [[rivfpqIndex]] encodes with, and the books. An
     * empty corpus trains no quantizer and no books.
     */
@@ -1100,9 +1099,6 @@ object Similarity {
     val dim = cent.headOption.fold(0)(_._2.length)
     val books = if (cent.isEmpty) IndexedSeq.empty[CellBook] else {
       require(dim % m == 0, s"vector dim $dim not divisible by m=$m subspaces")
-      // with rounds, the coarse quantizer's first round already checked
-      // every vector
-      if (kmeansIters == 0) requireUniform(c, dim, op)
       residualCodebooks(residualsOf(c, cent), m, nCodes, kmeansIters, dim, op)
     }
     (c, ResidualState(cent, residCodes(_, books, dim / m), books.isEmpty), books)
@@ -1949,14 +1945,24 @@ object Similarity {
     * ([[kmeansRefine]]). The result is dimension-sized BY DEFINITION
     * (nCentroids x dim): collected once (a TakeOrdered job, reading the
     * pinned corpus when present) so it rides every later plan as a
-    * literal. Shared by [[topKIvf]] and [[Dedup.semanticNearDup]].
+    * literal. Shared by every IVF-family trainer ([[topKIvf]],
+    * [[topKMipsAnnIvf]], [[ingestIvf]], the residual and IVF-PQ
+    * trainers, [[Dedup.semanticNearDup]]), so it is the one place that
+    * guards them against ragged input: each Lloyd's round checks every
+    * vector's length ([[lloydMeans]]), and with no round the limit-1
+    * [[requireUniform]] probe does — a vector of another length would
+    * otherwise be assigned and scored on silently-truncated dots.
     */
   private[graft] def coarseQuantizer(c: DataFrame, nCentroids: Int,
                                      kmeansIters: Int): Seq[(Long, Seq[Double])] = {
     val seeds: Seq[(Long, Seq[Double])] = c.orderBy(col("nn_id")).limit(nCentroids)
       .select(col("nn_id").cast("long").as("cid"), col("cv").as("centv"))
       .collect().toSeq.map(r => r.getLong(0) -> r.getSeq[Double](1))
-    if (kmeansIters > 0) kmeansRefine(c, seeds, kmeansIters) else seeds
+    if (kmeansIters > 0) kmeansRefine(c, seeds, kmeansIters)
+    else {
+      seeds.headOption.foreach(s => requireUniform(c, s._2.length, "coarseQuantizer"))
+      seeds
+    }
   }
 
   /** Normalized corpus + literal quantizer in one call — the shared
@@ -1970,7 +1976,7 @@ object Similarity {
   }
 
   /** Persist the IVF index ONCE — the pay-once-at-ingest layout twin
-    * the graph family already has ([[graft.ops.Graph.writeEdges]]):
+    * the graph family already has ([[graft.ops.Graph.ingestEdges]]):
     * run the deterministic coarse quantizer over the corpus, write the
     * assigned corpus `(nn_id, cv, cluster)` as a parquet table BUCKETED
     * by cluster id, and the `nCentroids × dim` centroid table

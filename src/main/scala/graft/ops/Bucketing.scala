@@ -150,36 +150,50 @@ object Bucketing {
       writeBucketed(transform(spark.table(table)), tmp, key, n)
     }
 
-  /** The staged-publish skeleton [[compactBucketedWith]] and
-    * [[Snapshots.compactStampedRange]] share: force the bucketed scan,
-    * let `writeStaging` build the replacement table under the staging
-    * name, then swap via catalog renames — never a read-from-self
-    * overwrite. `writeStaging(tmp, n)` receives the staging name and
-    * the table's bucket count and must leave `tmp` a bucketed table on
-    * the same (key, n).
+  /** The bucketed form of [[publishStaged]], shared by
+    * [[compactBucketedWith]] and [[Snapshots.compactStampedRange]]:
+    * force the bucketed scan, let `writeStaging` build the replacement
+    * table under the staging name, then publish. `writeStaging(tmp, n)`
+    * receives the staging name and the table's bucket count and must
+    * leave `tmp` a bucketed table on the same (key, n).
     */
   def compactBucketedStaged(spark: SparkSession, table: String, key: String)
-                           (writeStaging: (String, Int) => Unit): Unit = {
-    val n = bucketCountOf(spark, table)
+                           (writeStaging: (String, Int) => Unit): Unit =
+    publishStaged(spark, table, "compactBucketed") { tmp =>
+      val n = bucketCountOf(spark, table)
+      // force the bucketed scan: the auto heuristic falls back to a plain
+      // size-split file read when the plan has no join/agg to exploit the
+      // bucketing — which would hand the writer mixed-bucket partitions
+      // and re-fragment the output (task count files, not bucket count)
+      val conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+      val prev = spark.conf.get(conf)
+      spark.conf.set(conf, "false")
+      try writeStaging(tmp, n)
+      finally spark.conf.set(conf, prev)
+      true
+    }
+
+  /** The one staged publish of a rewritten table — never a
+    * read-from-self overwrite. `stage(tmp)` writes the replacement under
+    * the staging name `<table>__compacting` and returns true, or returns
+    * false to leave `table` as it is. `op` names the caller in the
+    * leftover-backup failure.
+    */
+  def publishStaged(spark: SparkSession, table: String, op: String)
+                   (stage: String => Boolean): Unit = {
     val tmp = s"${table}__compacting"
-    // force the bucketed scan: the auto heuristic falls back to a plain
-    // size-split file read when the plan has no join/agg to exploit the
-    // bucketing — which would hand the writer mixed-bucket partitions
-    // and re-fragment the output (task count files, not bucket count)
-    val conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = spark.conf.get(conf)
-    spark.conf.set(conf, "false")
     val backup = s"${table}__precompact"
     // a leftover backup means a previous compaction crashed mid-publish:
     // both the original (backup) and compacted (tmp) copies exist but
     // the live name may be unbound — surface it loudly rather than
-    // silently compacting whatever now answers to the name
+    // silently compacting whatever now answers to the name. It runs
+    // before `stage`, so a caller's missing-table early return cannot
+    // skip past the evidence
     require(!spark.catalog.tableExists(backup),
-      s"compactBucketed: leftover '$backup' from an interrupted " +
+      s"$op: leftover '$backup' from an interrupted " +
         s"compaction — recover (rename it or '$tmp' back to '$table') " +
         "before compacting again")
-    try writeStaging(tmp, n)
-    finally spark.conf.set(conf, prev)
+    if (!stage(tmp)) return
     // publish keeps a full copy live under a deterministic name at every
     // instant: original parks as backup, compacted copy takes the name,
     // backup drops LAST. A crash between the renames leaves the table
@@ -187,8 +201,9 @@ object Bucketing {
     // catches it on the next attempt) — the remaining window plain
     // parquet cannot close without a transactional catalog, documented
     // honestly like the sinks' two-writes window.
-    spark.sql(s"ALTER TABLE `$table` RENAME TO `$backup`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
+    Seq(table -> backup, tmp -> table).foreach { case (from, to) =>
+      spark.sql(s"ALTER TABLE `$from` RENAME TO `$to`")
+    }
     spark.sql(s"DROP TABLE `$backup`")
   }
 

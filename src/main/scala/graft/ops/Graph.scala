@@ -19,9 +19,10 @@ import graft.Num
   * teleport term is pure arithmetic. Ranks are `localCheckpoint`ed per
   * iteration: without truncation the plan doubles in depth every round
   * (the classic iterative-lineage explosion). At 100 TB the lever is
-  * storage layout, not the loop: write the edge table bucketed by `src`
-  * ([[Bucketing.writeBucketed]]) and the per-iteration edge-side
-  * exchange disappears, leaving one rank-sized shuffle per round.
+  * storage layout, not the loop: the one stored edge layout is the
+  * src-bucketed (log, degree) pair ([[ingestEdges]],
+  * [[ingestWeightedEdges]]), whose probes join the log to its degrees
+  * exchange-free, leaving one rank-sized shuffle per round.
   *
   * Cross-engine determinism: every new rank is rounded to the 1e-6 grid
   * with [[Num.r6]] (the bit-identical floor-based formula the DuckDB
@@ -91,23 +92,10 @@ object Graph {
     iterate(withDeg(e, outDeg), iters, damping, tol)
   }
 
-  /** Write the degree-annotated edge relation `(src, dst, deg)` as a
-    * parquet table bucketed by `src` — the pay-once-at-ingest layout
-    * that removes the edge-side exchange from EVERY
-    * [[pageRankBucketed]] iteration (only the rank relation shuffles
-    * per round). The degree is baked in at write time: recomputing it
-    * per run would re-shuffle the edges the bucketing exists to avoid.
-    */
-  def writeEdges(edges: DataFrame, srcCol: String, dstCol: String,
-                 table: String, nBuckets: Int): Unit = {
-    Bucketing.writeBucketed(withDeg(longEdges(edges, srcCol, dstCol), outDeg),
-      table, "src", nBuckets)
-  }
-
-  /** Incremental edge ingest — the crawl-frontier twin of [[writeEdges]],
-    * callable per micro-batch from a Structured Streaming
-    * `foreachBatch` sink (StreamingSpec proves stream-vs-batch rank
-    * equality).
+  /** Persist an edge list as the stored edge layout, one batch per call
+    * — a one-batch build for a write-once graph, or per micro-batch from
+    * a Structured Streaming `foreachBatch` sink (StreamingSpec proves
+    * stream-vs-batch rank equality).
     *
     * Layout: an APPEND-ONLY edge log `logTable` (src, dst) bucketed by
     * src, plus a DERIVED degree table `degTable` (src, deg) bucketed
@@ -115,11 +103,10 @@ object Graph {
     * rewritten — the property that makes the sink streamable and the
     * log safe to re-read mid-ingest) and rebuilds the degree relation:
     * a groupBy(src) over the src-bucketed log, which Catalyst plans
-    * WITHOUT an exchange, writing |V| rows. [[writeEdges]]'s
-    * baked-in-deg layout is the right call for write-once graphs, but
-    * under ingest it would rewrite every stored row of every src the
-    * batch touches — O(affected-src edges) rewrite per batch versus
-    * this layout's O(|V|) derived-table refresh.
+    * WITHOUT an exchange, writing |V| rows. A degree baked into the
+    * edge rows would instead rewrite every stored row of every src the
+    * batch touches — O(affected-src edges) per batch versus this
+    * layout's O(|V|) derived-table refresh.
     */
   def ingestEdges(edges: DataFrame, srcCol: String, dstCol: String,
                   logTable: String, degTable: String, nBuckets: Int): Unit =
@@ -148,9 +135,10 @@ object Graph {
 
   /** PageRank over an [[ingestEdges]] log: the log⋈degrees join is
     * co-located (both tables bucketed by src, same count — zero
-    * exchanges, StreamingSpec asserts it), so like [[pageRankBucketed]]
-    * only the rank relation shuffles per iteration. Bit-identical to
-    * [[pageRank]] over the concatenation of every ingested batch.
+    * exchanges, StreamingSpec asserts it), so only the rank relation
+    * shuffles per iteration — at 100 TB |V| rows per round instead of
+    * |E|. Bit-identical to [[pageRank]] over the concatenation of every
+    * ingested batch.
     */
   def pageRankIngested(spark: SparkSession, logTable: String, degTable: String,
                        iters: Int, damping: Double = 0.85d,
@@ -158,19 +146,6 @@ object Graph {
     iterate(spark.table(logTable).join(spark.table(degTable), "src"),
       iters, damping, tol,
       keyParts = Some(Bucketing.bucketCountOf(spark, logTable)))._1
-
-  /** PageRank over a [[writeEdges]]-bucketed edge table: bit-identical
-    * output to [[pageRank]] on the same edges (same arithmetic, same
-    * per-iteration rounding), but each iteration's edges⋈ranks join
-    * reads the bucketed scan directly — Catalyst plans the exchange on
-    * the rank side only, which at 100 TB is |V| rows per round instead
-    * of |E|.
-    */
-  def pageRankBucketed(spark: SparkSession, edgeTable: String,
-                       iters: Int, damping: Double = 0.85d,
-                       tol: Double = 0.0d): DataFrame =
-    iterate(spark.table(edgeTable), iters, damping, tol,
-      keyParts = Some(Bucketing.bucketCountOf(spark, edgeTable)))._1
 
   /** Weighted PageRank: each out-edge carries a weight and src's rank
     * splits PROPORTIONALLY to weight instead of uniformly — the
@@ -193,9 +168,9 @@ object Graph {
     * contribution); with every weight equal the share wµ/Wµ equals
     * 1/deg up to one rounding (GraphSpec asserts rank equality with
     * [[pageRank]] on the r6 grid). The same storage lever applies at
-    * 100 TB: persist (src, dst, wµ, Wµ) bucketed by src
-    * ([[writeEdges]]'s baked-in-degree pattern) and the per-iteration
-    * edge-side exchange disappears.
+    * 100 TB: ingest the edges into the weighted (log, degree) pair
+    * ([[ingestWeightedEdges]]) and the per-iteration edge-side exchange
+    * disappears.
     *
     * @return (node: long, rank: double) — ranks on the 1e-6 grid
     */
@@ -206,43 +181,23 @@ object Graph {
     iterate(withDeg(e, outWeight), iters, damping, tol, contrib = weightedShare)._1
   }
 
-  /** [[writeEdges]] for the WEIGHTED family: the micro-unit weighted
-    * edge relation `(src, dst, wmu, degmu)` bucketed by src, weight
-    * totals baked in at write time. Weights are validated ONCE here —
-    * nulls and non-positive weights dropped (the [[pageRankWeighted]]
-    * semantics), negativity rejected loudly — so the per-run probes
-    * ([[pageRankWeightedBucketed]], [[ssspBucketed]]) read a
-    * trusted-by-construction table and never re-scan to validate.
+  /** [[ingestEdges]] for the WEIGHTED family: the `(src, dst, wmu)`
+    * edge log APPENDS batch-sized and the `(src, degmu)` weight-total
+    * table REBUILDS from the log via an exchange-free bucketed groupBy
+    * (both tables bucketed by src, same count — the probes'
+    * log⋈degrees join co-locates; totals baked into the edge rows would
+    * go stale the moment an existing source gains an edge). Weights are
+    * validated per batch — negatives rejected loudly, nulls and
+    * non-positives dropped (the [[pageRankWeighted]] semantics) — so
+    * the probes ([[pageRankWeightedIngested]], [[ssspIngested]]) read a
+    * trusted-by-construction log and never re-scan to validate.
     * Provenance is recorded in a 1-row `(wmu_scale, validated)` sidecar
-    * (the ingestLsh parameter-sidecar pattern): the probes verify it
-    * before trusting the table, so pointing them at a table NOT written
-    * here — different micro-unit scale, unvalidated negative weights
-    * that would break sssp's w ≥ 0 precondition — fails loudly instead
-    * of silently yielding wrong distances/ranks.
-    */
-  def writeWeightedEdges(edges: DataFrame, srcCol: String, dstCol: String,
-                         wCol: String, table: String, nBuckets: Int): Unit = {
-    val e = nonNegative(microEdges(edges, srcCol, dstCol, wCol), "writeWeightedEdges")
-      .where(col("wmu") > 0L)
-    Bucketing.writeBucketed(withDeg(e, outWeight), table, "src", nBuckets)
-    val spark = edges.sparkSession
-    import spark.implicits._
-    Bucketing.writeSmall(
-      Seq((1000000L, true)).toDF("wmu_scale", "validated"), s"${table}_meta")
-  }
-
-  /** [[ingestEdges]] for the WEIGHTED family — the append path
-    * [[writeWeightedEdges]] (a full rebuild) cannot offer, because its
-    * baked-in `degmu` totals go stale the moment an existing source
-    * gains an edge. The log layout splits the concerns exactly like
-    * the unweighted twin: the `(src, dst, wmu)` edge log APPENDS
-    * batch-sized (validated per batch — negatives rejected loudly,
-    * non-positives dropped, the [[pageRankWeighted]] semantics), and
-    * the `(src, degmu)` weight-total table REBUILDS from the log via
-    * an exchange-free bucketed groupBy (both tables bucketed by src,
-    * same count — the probes' log⋈degrees join co-locates). The
-    * provenance sidecar rides on the LOG table so the probes'
-    * [[requireWeightedTable]] guard covers the pair.
+    * on the LOG table (the ingestLsh parameter-sidecar pattern): the
+    * probes verify it ([[requireWeightedTable]]) before trusting the
+    * pair, so pointing them at a table NOT written here — different
+    * micro-unit scale, unvalidated negative weights that would break
+    * sssp's w ≥ 0 precondition — fails loudly instead of silently
+    * yielding wrong distances/ranks.
     */
   def ingestWeightedEdges(edges: DataFrame, srcCol: String, dstCol: String,
                           wCol: String, logTable: String, degTable: String,
@@ -273,9 +228,12 @@ object Graph {
   }
 
   /** [[sssp]] over an [[ingestWeightedEdges]] log — shortest paths need
-    * no degree totals, so the probe reads the src-bucketed log alone;
-    * relaxation rounds are exchange-free on the edge side exactly like
-    * [[ssspBucketed]].
+    * no degree totals, so the probe reads the src-bucketed log alone:
+    * identical distances, but each relaxation round's edges⋈frontier
+    * join reads the bucketed scan exchange-free — only the frontier
+    * (≤|V| rows) shuffles, the [[bfsBucketed]] shape. The log is NOT
+    * checkpointed (truncation would discard the bucketing) and not
+    * re-validated: the ingest rejected negative weights once per batch.
     */
   def ssspIngested(spark: SparkSession, logTable: String,
                    sources: DataFrame, sourceCol: String,
@@ -285,8 +243,8 @@ object Graph {
       col("wmu"), microDist, sources, sourceCol, maxIters)
   }
 
-  /** Verify a table was written by [[writeWeightedEdges]] (sidecar
-    * present, expected scale, validated flag) before a bucketed probe
+  /** Verify a log was written by [[ingestWeightedEdges]] (sidecar
+    * present, expected scale, validated flag) before a weighted probe
     * trusts its unchecked preconditions. 1-row read, bounded.
     */
   private def requireWeightedTable(spark: SparkSession, table: String): Unit = {
@@ -296,24 +254,9 @@ object Graph {
         m.getLong(m.fieldIndex("wmu_scale")) == 1000000L &&
           m.getBoolean(m.fieldIndex("validated"))
       } catch { case _: Exception => false }
-    require(ok, s"table '$table' was not written by writeWeightedEdges " +
-      s"(missing or mismatched ${table}_meta sidecar); the bucketed probes " +
+    require(ok, s"table '$table' was not written by ingestWeightedEdges " +
+      s"(missing or mismatched ${table}_meta sidecar); the weighted probes " +
       "rely on its at-ingest weight validation and micro-unit scale")
-  }
-
-  /** [[pageRankWeighted]] over a [[writeWeightedEdges]] table:
-    * bit-identical ranks, but each iteration's edges⋈ranks join reads
-    * the src-bucketed scan exchange-free — only the rank relation
-    * (|V| rows) shuffles per round, the [[pageRankBucketed]] property
-    * SCALING.md measures (the plain loop's per-iteration edge
-    * exchange+sort is the one superlinear term in the curve).
-    */
-  def pageRankWeightedBucketed(spark: SparkSession, table: String,
-                               iters: Int, damping: Double = 0.85d,
-                               tol: Double = 0.0d): DataFrame = {
-    requireWeightedTable(spark, table)
-    iterate(spark.table(table), iters, damping, tol, contrib = weightedShare,
-      keyParts = Some(Bucketing.bucketCountOf(spark, table)))._1
   }
 
   /** Personalized PageRank (PPR): rank mass teleports to a SEED SET
@@ -559,11 +502,12 @@ object Graph {
     shortestPaths(e, lit(1L), col("d").cast("int"), sources, sourceCol, maxHops)
   }
 
-  /** [[bfs]] over a [[writeEdges]]-bucketed (or [[ingestEdges]]-logged)
-    * edge table: bit-identical distances, but each hop's edges⋈frontier
-    * join reads the src-bucketed scan directly — no per-hop edge-side
-    * exchange, only the frontier (≤|V| rows) shuffles. The edge
-    * relation is NOT checkpointed here: truncating it would discard
+  /** [[bfs]] over an [[ingestEdges]] log (the select reads `(src, dst)`
+    * of any src-bucketed table): bit-identical distances, but each
+    * hop's edges⋈frontier join reads the src-bucketed scan directly —
+    * no per-hop edge-side exchange, only the frontier (≤|V| rows)
+    * shuffles. The edge relation is NOT checkpointed here: truncating
+    * it would discard
     * exactly the bucketed output partitioning this twin exists to
     * exploit (the per-hop state still checkpoints, as in [[bfs]]).
     */
@@ -591,8 +535,8 @@ object Graph {
     * exit this frontier loop is Dijkstra-correct only for w ≥ 0, and
     * a negative cycle would never converge. Null-weight edges drop
     * (no defined length). The bucketed-edge layout lever applies
-    * unchanged: over a src-bucketed table the per-round edge-side
-    * exchange disappears ([[bfsBucketed]]'s shape).
+    * unchanged: over an [[ingestWeightedEdges]] log the per-round
+    * edge-side exchange disappears ([[ssspIngested]]).
     *
     * Directed semantics; pass both directions for undirected. Isolated
     * sources report dist 0; unreached nodes are absent. The last
@@ -608,24 +552,6 @@ object Graph {
       .pipe(graft.Partitioning.checkpointKeyed(_, "src"))
       .pipe(nonNegative(_, "sssp"))
     shortestPaths(e, col("wmu"), microDist, sources, sourceCol, maxIters)
-  }
-
-  /** [[sssp]] over a [[writeWeightedEdges]]-bucketed table: identical
-    * distances, but each relaxation round's edges⋈frontier join reads
-    * the src-bucketed scan exchange-free — only the frontier (≤|V|
-    * rows) shuffles, the [[bfsBucketed]] shape. The edge relation is
-    * NOT checkpointed (truncation would discard the bucketing) and not
-    * re-validated: the write rejected negative weights once at ingest
-    * (provenance verified via the `_meta` sidecar — a foreign table
-    * with unvalidated weights would violate the w ≥ 0 precondition
-    * silently).
-    */
-  def ssspBucketed(spark: SparkSession, edgeTable: String,
-                   sources: DataFrame, sourceCol: String,
-                   maxIters: Int): DataFrame = {
-    requireWeightedTable(spark, edgeTable)
-    shortestPaths(spark.table(edgeTable).select(col("src"), col("dst"), col("wmu")),
-      col("wmu"), microDist, sources, sourceCol, maxIters)
   }
 
   /** The shortest-path loop shared by [[bfs]] (unit `step`) and

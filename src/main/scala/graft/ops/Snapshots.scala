@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * serve last Tuesday" (the audit question a takedown review asks) are
   * unanswerable from plain append-only parquet unless every row carries
   * its batch of origin, because parquet has no file→batch mapping and
-  * reconstruction after the fact is impossible. This is
-  * [[graft.streaming.BucketedLogSink]]'s `_batch_id` discipline factored
-  * out for the multi-table index layouts (BM25 postings, MinHash
+  * reconstruction after the fact is impossible. The stamp column is
+  * [[BatchCol]]; [[graft.streaming.BucketedLogSink]] stamps and reads
+  * its single log through the same [[stamp]] and [[asOfCommitted]], and
+  * so do the multi-table index layouts (BM25 postings, MinHash
   * bands/shingles, LSH bands, IVF/PQ/IVF-PQ codes and vectors).
   *
   * Numbering: ingest stamps batch 0; each append stamps max + 1 over
@@ -27,8 +28,9 @@ import org.apache.spark.sql.functions._
   * Semantics of `asOf = Some(b)`:
   *   - rows of batches ≤ b, with a broadcast semi-join against the
   *     batches sidecar excluding orphans of the documented two-writes
-  *     crash window (data landed, batch record didn't) — the
-  *     [[graft.streaming.BucketedLogSink.asOf]] rule verbatim;
+  *     crash window (data landed, batch record didn't) — the one
+  *     [[asOfCommitted]] body [[graft.streaming.BucketedLogSink.asOf]]
+  *     runs too;
   *   - TOMBSTONES STILL APPLY (probes compose this read with
   *     [[Tombstones.filterByParent]]): a takedown must hide the row in
   *     historical snapshots too — retraction is retroactive by law,
@@ -208,12 +210,24 @@ object Snapshots {
   def readAsOf(spark: SparkSession, table: String, parent: String,
                asOf: Option[Long]): DataFrame = asOf match {
     case None => spark.table(table).drop(BatchCol)
-    case Some(b) =>
-      val committed = spark.table(batchesTable(parent))
-        .where(col("batch_id") <= b)
-        .select(col("batch_id").as(BatchCol))
-      spark.table(table).where(col(BatchCol) <= b)
-        .join(broadcast(committed), Seq(BatchCol), "left_semi")
-        .drop(BatchCol)
+    case Some(b) => asOfCommitted(spark, table, batchesTable(parent), b)
+  }
+
+  /** The as-of body: rows of `table` stamped ≤ `b` whose stamp the
+    * committed-ids table `committedTable (batch_id)` records, stamp
+    * dropped. The stamp predicate prunes newer batch files via parquet
+    * min/max stats; the semi-join (batches-sized, broadcast) excludes
+    * orphans of the two-writes crash window. [[readAsOf]] points it at
+    * an index's batches sidecar, [[graft.streaming.BucketedLogSink.asOf]]
+    * at its sink's commit log.
+    */
+  def asOfCommitted(spark: SparkSession, table: String, committedTable: String,
+                    b: Long): DataFrame = {
+    val committed = spark.table(committedTable)
+      .where(col("batch_id") <= b)
+      .select(col("batch_id").as(BatchCol))
+    spark.table(table).where(col(BatchCol) <= b)
+      .join(broadcast(committed), Seq(BatchCol), "left_semi")
+      .drop(BatchCol)
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.Bucketing
+import graft.ops.{Bucketing, Snapshots}
 
 /** Exactly-once streaming ingest into a [[graft.ops.Bucketing]] bucketed
   * log — the `foreachBatch` sink that closes the loop between the
@@ -53,27 +53,26 @@ object BucketedLogSink {
                         key: String, nBuckets: Int): Boolean = {
     val spark = batch.sparkSession
     ExactlyOnce.once(spark, commitsTable(table), batchId) {
-      // every row is stamped with its batch id: provenance is free at
-      // write time and unrecoverable later (plain parquet has no
-      // file→batch mapping), and it is what makes [[asOf]] snapshots —
+      // every row is stamped with its batch id (Snapshots.stamp):
+      // provenance is free at write time and unrecoverable later (plain
+      // parquet has no file→batch mapping), and it is what makes [[asOf]] snapshots —
       // "train on the corpus as of batch N", the reproducibility story
       // a training pipeline needs — a narrow filter instead of an
       // impossible reconstruction. One long column per row; at 100 TB
       // it dictionary/RLE-compresses to near nothing per batch file.
-      val stamped = batch.withColumn("_batch_id", lit(batchId))
+      val stamped = Snapshots.stamp(batch, batchId)
       if (spark.catalog.tableExists(table)) {
         // crash-window RECONCILE: rows stamped with THIS batch id that
         // reached the log while the commit record did not are orphans of
         // a crash between the two writes. Re-appending without removing
         // them would leave the batch DOUBLED under a now-committed id —
         // permanently visible to every snapshot. Detection is a limit-1
-        // probe (the _batch_id predicate prunes via parquet min/max
+        // probe (the stamp predicate prunes via parquet min/max
         // stats — newer-batch files are skipped); the per-bucket rewrite
         // runs only on this crash-recovery path, never in steady state.
-        if (spark.table(table).where(col("_batch_id") === batchId)
-            .limit(1).count() > 0L)
-          Bucketing.compactBucketedWith(spark, table, key,
-            _.where(col("_batch_id") =!= batchId))
+        val thisBatch = col(Snapshots.BatchCol) === batchId
+        if (spark.table(table).where(thisBatch).limit(1).count() > 0L)
+          Bucketing.compactBucketedWith(spark, table, key, _.where(!thisBatch))
         Bucketing.appendBucketed(stamped, table, key)
       } else Bucketing.writeBucketed(stamped, table, key, nBuckets)
     }
@@ -82,8 +81,9 @@ object BucketedLogSink {
   /** The log AS OF `batchId`: rows of every COMMITTED batch ≤ batchId —
     * a reproducible snapshot (re-running a job pinned to a batch id
     * reads the identical corpus no matter how many batches landed
-    * since). The narrow `_batch_id` predicate lets parquet min/max
-    * stats skip newer batch files; the semi-join against the commit log
+    * since) — [[Snapshots.asOfCommitted]] over the sink's commit log.
+    * The narrow stamp predicate lets parquet min/max stats skip newer
+    * batch files; the semi-join against the commit log
     * (batches-sized, broadcast) excludes rows from the documented crash
     * window — data landed, commit didn't — BEFORE the batch replays
     * (the orphans carry an uncommitted id, so the semi-join hides
@@ -98,14 +98,8 @@ object BucketedLogSink {
     * no longer needed — or compact per batch range.
     */
   def asOf(spark: org.apache.spark.sql.SparkSession, table: String,
-           batchId: Long): DataFrame = {
-    val committed = spark.table(commitsTable(table))
-      .where(col("batch_id") <= batchId)
-      .select(col("batch_id").as("_batch_id"))
-    spark.table(table).where(col("_batch_id") <= batchId)
-      .join(broadcast(committed), Seq("_batch_id"), "left_semi")
-      .drop("_batch_id")
-  }
+           batchId: Long): DataFrame =
+    Snapshots.asOfCommitted(spark, table, commitsTable(table), batchId)
 
   /** The `foreachBatch` function: `stream.writeStream.foreachBatch(
     * BucketedLogSink.sink(table, key, n)).start()`.

@@ -619,18 +619,18 @@ class GraphSpec extends AnyFunSuite {
     assert(srcShuffles(wp.queryExecution.executedPlan.toString) === 0)
   }
 
-  test("writeWeightedEdges rejects negative weights at ingest") {
+  test("ingestWeightedEdges rejects negative weights at ingest") {
     val sqlc = spark
     import sqlc.implicits._
     val bad = Seq((1L, 2L, -0.5d)).toDF("s", "d", "w")
     val ex = intercept[IllegalArgumentException] {
-      graft.ops.Graph.writeWeightedEdges(bad, "s", "d", "w",
-        "graft_wedges_graphspec_bad", 2)
+      graft.ops.Graph.ingestWeightedEdges(bad, "s", "d", "w",
+        "graft_wedges_graphspec_bad", "graft_wedges_graphspec_bad_deg", 2)
     }
     assert(ex.getMessage.contains("non-negative"))
   }
 
-  test("bucketed weighted probes reject tables not written by writeWeightedEdges") {
+  test("weighted probes reject tables not written by ingestWeightedEdges") {
     val sqlc = spark
     import sqlc.implicits._
     // a foreign table with the right COLUMNS but no provenance sidecar:
@@ -645,13 +645,13 @@ class GraphSpec extends AnyFunSuite {
         Seq((1L, 2L, 500000L, 500000L)).toDF("src", "dst", "wmu", "degmu"),
         t, "src", 2)
       val ex = intercept[IllegalArgumentException] {
-        graft.ops.Graph.ssspBucketed(spark, t, Seq(1L).toDF("n"), "n", 3)
+        graft.ops.Graph.ssspIngested(spark, t, Seq(1L).toDF("n"), "n", 3)
       }
-      assert(ex.getMessage.contains("writeWeightedEdges"))
+      assert(ex.getMessage.contains("ingestWeightedEdges"))
       val ex2 = intercept[IllegalArgumentException] {
-        graft.ops.Graph.pageRankWeightedBucketed(spark, t, iters = 2)
+        graft.ops.Graph.pageRankWeightedIngested(spark, t, t, iters = 2)
       }
-      assert(ex2.getMessage.contains("writeWeightedEdges"))
+      assert(ex2.getMessage.contains("ingestWeightedEdges"))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS `$t`")
       spark.sql(s"DROP TABLE IF EXISTS `${t}_meta`")
@@ -693,6 +693,27 @@ class GraphSpec extends AnyFunSuite {
       }
     } finally Seq(log, s"${log}_meta", degT)
       .foreach(graft.ops.Bucketing.dropManaged(spark, _))
+  }
+
+  test("the one-batch *_bucketed gates drop their pair first: a second run returns the same rows and stores the same edges") {
+    // ingest APPENDS to an existing log, so a gate that reused the
+    // previous run's pair would double every edge; doubled edges leave
+    // ranks and distances unchanged, so the stored edge count shows it
+    val dir = "/root/testdata/sf0.001"
+    val sfx = GateSupport.dirSuffix(dir)
+    for ((q, name) <- Seq("graph_pagerank_bucketed" -> "pr_edges",
+      "graph_pagerank_weighted_bucketed" -> "wedges_pr",
+      "graph_sssp_bucketed" -> "wedges", "graph_bfs_bucketed" -> "bfs_edges")) {
+      def run() = {
+        val rows = SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSet
+        (rows, spark.table(s"graft_${name}_log_$sfx").count())
+      }
+      val (first, edges1) = run()
+      val (second, edges2) = run()
+      assert(first.nonEmpty, q)
+      assert(second === first, s"$q: a second run changed the result")
+      assert(edges2 === edges1, s"$q: a second run changed the stored edge count")
+    }
   }
 
   test("sssp: negative weights rejected loudly") {

@@ -383,14 +383,16 @@ class PropertySpec extends AnyFunSuite {
     checkN(4, Prop.forAll(edgeGen) { edges =>
       val df = edges.toDF("s", "d")
       val tbl = f"pr_prop_${math.abs(edges.hashCode)}%x"
-      graft.ops.Graph.writeEdges(df, "s", "d", tbl, nBuckets = 4)
+      val deg = s"${tbl}_deg"
+      Seq(tbl, deg).foreach(graft.ops.Bucketing.dropManaged(spark, _))
+      graft.ops.Graph.ingestEdges(df, "s", "d", tbl, deg, nBuckets = 4)
       try {
         val plain = graft.ops.Graph.pageRank(df, "s", "d", iters = 3)
           .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        val buck = graft.ops.Graph.pageRankBucketed(spark, tbl, iters = 3)
+        val buck = graft.ops.Graph.pageRankIngested(spark, tbl, deg, iters = 3)
           .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
         plain == buck
-      } finally spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
+      } finally Seq(tbl, deg).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     })
   }
 

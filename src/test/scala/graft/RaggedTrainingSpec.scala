@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.llm.Similarity
+import graft.llm.{Dedup, Similarity}
 
 /** The ragged-input guard of the vector trainers: a corpus whose
   * vectors are not all one length fails loudly, naming the lengths, in
@@ -22,6 +22,15 @@ class RaggedTrainingSpec extends AnyFunSuite {
   test("every trainer rejects ragged vectors, naming the lengths") {
     val table = "ragged_rivfpq"
     Seq[(String, () => Any)](
+      "topKIvf, 0 rounds" -> (() =>
+        Similarity.topKIvf(corpus, queries, "id", "v", 3, nCentroids = 4, nProbe = 4,
+          kmeansIters = 0).collect()),
+      "topKMipsAnnIvf, 0 rounds" -> (() =>
+        Similarity.topKMipsAnnIvf(corpus, queries, "id", "v", 3, nCentroids = 4, nProbe = 4,
+          kmeansIters = 0).collect()),
+      "semanticNearDup, 0 rounds" -> (() =>
+        Dedup.semanticNearDup(corpus, "id", "v", threshold = 0.5, nCentroids = 4,
+          kmeansIters = 0).collect()),
       "topKIvf, 2 rounds" -> (() =>
         Similarity.topKIvf(corpus, queries, "id", "v", 3, nCentroids = 4, nProbe = 2,
           kmeansIters = 2).collect()),
@@ -47,8 +56,11 @@ class RaggedTrainingSpec extends AnyFunSuite {
     ).foreach { case (name, call) =>
       try {
         val e = intercept[IllegalArgumentException](call())
-        assert(e.getMessage.contains("requires uniform 8-dim vectors") &&
-          "\\b(5|11)\\b".r.findFirstIn(e.getMessage).nonEmpty,
+        // the MIPS reduction appends one coordinate: its quantizer sees
+        // 9-dim vectors and the ragged ones as 12- and 6-dim
+        val dim = if (name.startsWith("topKMipsAnnIvf")) 9 else 8
+        assert(e.getMessage.contains(s"requires uniform $dim-dim vectors") &&
+          s"\\b(${dim - 3}|${dim + 3})\\b".r.findFirstIn(e.getMessage).nonEmpty,
           s"$name: the message must name the expected and the ragged lengths: ${e.getMessage}")
       } finally Seq("", "_vectors", "_centroids", "_cellbooks")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$table$t`"))
