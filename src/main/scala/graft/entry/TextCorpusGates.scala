@@ -23,6 +23,12 @@ private[graft] object TextCorpusGates {
     ("q2", "hash merge sort"),
     ("q3", "customer query table"))
 
+  /** The three literal queries of the retrieval capstones, shared
+    * verbatim by the Spark input and the capstone oracle's VALUES list.
+    */
+  private val contextQueries = Seq((9001L, "spark window join"),
+    (9002L, "hash merge sort"), (9003L, "customer query table"))
+
   /** BM25 oracle at the gate parameters (k1=1.2, b=0.75, topK=10) over
     * the three literal queries — shared by `retrieval_bm25` and its
     * ingested-index twin, which is bit-identical by construction (the
@@ -159,8 +165,7 @@ private[graft] object TextCorpusGates {
     */
   private def contextFullOracleSqlOver(docsWhere: String,
                                        vecsWhere: String): String = {
-    val qvals = Seq((9001L, "spark window join"),
-      (9002L, "hash merge sort"), (9003L, "customer query table"))
+    val qvals = contextQueries
       .flatMap { case (qid, text) =>
         // CAST pins BIGINT — a bare literal would come out INT32 and
         // fail the driver's schema compare against Spark's LongType
@@ -201,6 +206,56 @@ private[graft] object TextCorpusGates {
        |  CAST(start_offset // 256 AS BIGINT) AS seq_first,
        |  CAST(CASE WHEN nt > 0 THEN (start_offset + nt - 1) // 256 ELSE start_offset // 256 END AS BIGINT) AS seq_last
        |FROM pk""".stripMargin
+  }
+
+  /** The documents a vector-backed store serves: those with an
+    * embedding.
+    */
+  private def embeddedDocs(s: SparkSession, dir: String, emb: DataFrame): DataFrame =
+    t(s, dir, "documents").select(col("doc_id"), col("text"))
+      .join(emb.select(col("vec_id")), col("doc_id") === col("vec_id"), "left_semi")
+
+  /** The tail every retrieval capstone runs after its own legs: `bm`
+    * retrieves over [[contextQueries]] `(qid, qtext)`, its rank-1 hit's
+    * embedding seeds the ANN leg `ann`, both rank lists fuse by RRF
+    * (top-10), `mmr` diversifies the fused `(query_id, nn_id, score)`
+    * candidates, and the picks pack per query (stream = query, order =
+    * MMR rank, capacity 256) against `toks (nn_id, doc_toks)`, joined
+    * back to the picks. Every rank list is (queries × k)-bounded — ≤ 60
+    * rows — and has several eager downstream consumers (the ANN leg's
+    * query-side pin count, MMR's contract counts, the pack join-back),
+    * so each is materialized ONCE; without this the whole retrieve tail
+    * re-evaluates per consumer (measured 29 s vs 8 s at sf0.1). `toks`
+    * is by-name: it is built after the MMR picks, as each gate reads it.
+    */
+  private def contextTail(emb: DataFrame, bm: DataFrame => DataFrame,
+                          ann: DataFrame => DataFrame, mmr: DataFrame => DataFrame,
+                          toks: => DataFrame): DataFrame = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val bmr = bm(contextQueries.toDF("qid", "qtext")).localCheckpoint()
+    val seed = bmr.filter(col("rank") === 1)
+      .select(col("query_id"), col("doc"))
+    val seedVecs = emb.join(seed, emb("vec_id") === seed("doc"))
+      .select(col("query_id").as("vec_id"), col("embedding"))
+    val annr = ann(seedVecs).localCheckpoint()
+    val fused = Retrieval.rrfFuse(Seq(
+      bmr.select(col("query_id"), col("doc"), col("rank")),
+      annr.select(col("query_id"), col("nn_id").as("doc"), col("rank"))),
+      topK = 10)
+    val picks = mmr(fused.select(col("query_id"), col("doc").as("nn_id"), col("score")))
+      .localCheckpoint()
+    val packed = Corpus.packSequences(
+      picks.join(toks, Seq("nn_id")).select(col("query_id"), col("rank"), col("doc_toks")),
+      idCol = "rank", tokensCol = "doc_toks", capacity = 256,
+      streamCol = Some("query_id"))
+    packed.select(col("stream").as("query_id"), col("doc").as("rank"),
+        col("n_toks"), col("start_offset"), col("seq_first"),
+        col("seq_last"))
+      .join(picks, Seq("query_id", "rank"))
+      .select(col("query_id"), col("nn_id"), col("score"),
+        col("rank").cast("int").as("rank"), col("n_toks"),
+        col("start_offset"), col("seq_first"), col("seq_last"))
   }
 
   val all: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
@@ -406,52 +461,17 @@ private[graft] object TextCorpusGates {
         // PlanSpec asserts no documents.parquet re-scan. Every stage is
         // individually oracle-gated elsewhere; this pins the
         // COMPOSITION.
-        import s.implicits._
         val emb = t(s, dir, "embeddings")
-        val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-          .join(emb.select(col("vec_id")), col("doc_id") === col("vec_id"),
-            "left_semi")
-        val toked = graft.Partitioning.spread(docs)
+        val toked = graft.Partitioning.spread(embeddedDocs(s, dir, emb))
           .withColumn("tk", filter(TextAnalysis.tokens(col("text")),
             tok => tok =!= lit("")))
           .localCheckpoint()
-        val queries = Seq((9001L, "spark window join"),
-          (9002L, "hash merge sort"), (9003L, "customer query table"))
-          .toDF("qid", "qtext")
-        // every rank list is (queries × k)-bounded — ≤ 60 rows — and has
-        // several eager downstream consumers (the ANN leg's query-side
-        // pin count, MMR's contract counts, the pack join-back), so each
-        // is materialized ONCE; without this the whole retrieve tail
-        // re-evaluates per consumer (measured 29 s vs 8 s at sf0.1)
-        val bm = Retrieval.bm25TopK(toked, "doc_id", "text",
-          queries, "qid", "qtext", topK = 20).localCheckpoint()
-        val seed = bm.filter(col("rank") === 1)
-          .select(col("query_id"), col("doc"))
-        val seedVecs = emb.join(seed, emb("vec_id") === seed("doc"))
-          .select(col("query_id").as("vec_id"), col("embedding"))
-        val ann = Similarity.topK(emb, seedVecs, "vec_id", "embedding", k = 20)
-          .localCheckpoint()
-        val fused = Retrieval.rrfFuse(Seq(
-          bm.select(col("query_id"), col("doc"), col("rank")),
-          ann.select(col("query_id"), col("nn_id").as("doc"), col("rank"))),
-          topK = 10)
-        val mmr = Similarity.diversifyMmr(
-          fused.select(col("query_id"), col("doc").as("nn_id"), col("score")),
-          emb, "vec_id", "embedding", k = 5, lambda = 0.5).localCheckpoint()
-        val toks = toked.select(col("doc_id").as("nn_id"),
-          size(col("tk")).cast("long").as("doc_toks"))
-        val sel = mmr.join(toks, Seq("nn_id"))
-        val packed = Corpus.packSequences(
-          sel.select(col("query_id"), col("rank"), col("doc_toks")),
-          idCol = "rank", tokensCol = "doc_toks", capacity = 256,
-          streamCol = Some("query_id"))
-        packed.select(col("stream").as("query_id"), col("doc").as("rank"),
-            col("n_toks"), col("start_offset"), col("seq_first"),
-            col("seq_last"))
-          .join(mmr, Seq("query_id", "rank"))
-          .select(col("query_id"), col("nn_id"), col("score"),
-            col("rank").cast("int").as("rank"), col("n_toks"),
-            col("start_offset"), col("seq_first"), col("seq_last"))
+        contextTail(emb,
+          Retrieval.bm25TopK(toked, "doc_id", "text", _, "qid", "qtext", topK = 20),
+          Similarity.topK(emb, _, "vec_id", "embedding", k = 20),
+          Similarity.diversifyMmr(_, emb, "vec_id", "embedding", k = 5, lambda = 0.5),
+          toked.select(col("doc_id").as("nn_id"),
+            size(col("tk")).cast("long").as("doc_toks")))
       },
       contextFullOracleSql),
 
@@ -473,53 +493,22 @@ private[graft] object TextCorpusGates {
         // ZERO times in the probe DAG (PlanSpec asserts it); the only
         // raw-parquet touch is the embeddings seed lookup, an id-keyed
         // fetch a production deployment serves from an id-bucketed
-        // store. Same materialize-once discipline as the per-run
-        // capstone (each k-bounded rank list has several eager
-        // consumers).
-        import s.implicits._
+        // store.
         val emb = t(s, dir, "embeddings")
-        val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-          .join(emb.select(col("vec_id")), col("doc_id") === col("vec_id"),
-            "left_semi")
+        val docs = embeddedDocs(s, dir, emb)
         val bmT = s"graft_ctx_bm25_${dirSuffix(dir)}"
         val annT = s"graft_ctx_ivfpq_${dirSuffix(dir)}"
         builtOnce(s, bmT) {
           Bm25.ingest(docs, bmT)
           IvfPq.ingest(emb, annT)
         }
-        val queries = Seq((9001L, "spark window join"),
-          (9002L, "hash merge sort"), (9003L, "customer query table"))
-          .toDF("qid", "qtext")
-        val bm = Retrieval.bm25TopKIngested(s, bmT, queries, "qid", "qtext",
-          topK = 20).localCheckpoint()
-        val seed = bm.filter(col("rank") === 1)
-          .select(col("query_id"), col("doc"))
-        val seedVecs = emb.join(seed, emb("vec_id") === seed("doc"))
-          .select(col("query_id").as("vec_id"), col("embedding"))
-        val ann = Similarity.topKIvfPqIngested(s, annT, seedVecs,
-          "vec_id", "embedding", k = 20, nProbe = 16, nCandidates = 1 << 20)
-          .localCheckpoint()
-        val fused = Retrieval.rrfFuse(Seq(
-          bm.select(col("query_id"), col("doc"), col("rank")),
-          ann.select(col("query_id"), col("nn_id").as("doc"), col("rank"))),
-          topK = 10)
-        val mmr = Similarity.diversifyMmrIngested(s, s"${annT}_vectors",
-          fused.select(col("query_id"), col("doc").as("nn_id"), col("score")),
-          k = 5, lambda = 0.5).localCheckpoint()
-        val toks = graft.ops.Snapshots.readAsOf(s, s"${bmT}_dl", bmT, None)
-          .select(col("doc").as("nn_id"), col("dl").as("doc_toks"))
-        val sel = mmr.join(toks, Seq("nn_id"))
-        val packed = Corpus.packSequences(
-          sel.select(col("query_id"), col("rank"), col("doc_toks")),
-          idCol = "rank", tokensCol = "doc_toks", capacity = 256,
-          streamCol = Some("query_id"))
-        packed.select(col("stream").as("query_id"), col("doc").as("rank"),
-            col("n_toks"), col("start_offset"), col("seq_first"),
-            col("seq_last"))
-          .join(mmr, Seq("query_id", "rank"))
-          .select(col("query_id"), col("nn_id"), col("score"),
-            col("rank").cast("int").as("rank"), col("n_toks"),
-            col("start_offset"), col("seq_first"), col("seq_last"))
+        contextTail(emb,
+          Retrieval.bm25TopKIngested(s, bmT, _, "qid", "qtext", topK = 20),
+          Similarity.topKIvfPqIngested(s, annT, _, "vec_id", "embedding", k = 20,
+            nProbe = 16, nCandidates = 1 << 20),
+          Similarity.diversifyMmrIngested(s, s"${annT}_vectors", _, k = 5, lambda = 0.5),
+          graft.ops.Snapshots.readAsOf(s, s"${bmT}_dl", bmT, None)
+            .select(col("doc").as("nn_id"), col("dl").as("doc_toks")))
       },
       contextFullOracleSql),
 
@@ -538,11 +527,8 @@ private[graft] object TextCorpusGates {
         // match pins the END-TO-END snapshot, not one index at a time.
         // Zero documents scans in the probe DAG, as on the ingested
         // twin (PlanSpec asserts it).
-        import s.implicits._
         val emb = t(s, dir, "embeddings")
-        val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-          .join(emb.select(col("vec_id")), col("doc_id") === col("vec_id"),
-            "left_semi")
+        val docs = embeddedDocs(s, dir, emb)
         val bmT = s"graft_ctxa_bm25_${dirSuffix(dir)}"
         val annT = s"graft_ctxa_ivfpq_${dirSuffix(dir)}"
         builtOnce(s, bmT) {
@@ -552,39 +538,14 @@ private[graft] object TextCorpusGates {
           IvfPq.append(s, annT, emb.filter(col("vec_id") % 2 =!= 0))
         }
         val asOf0 = Some(0L)
-        val queries = Seq((9001L, "spark window join"),
-          (9002L, "hash merge sort"), (9003L, "customer query table"))
-          .toDF("qid", "qtext")
-        val bm = Retrieval.bm25TopKIngested(s, bmT, queries, "qid", "qtext",
-          topK = 20, asOf = asOf0).localCheckpoint()
-        val seed = bm.filter(col("rank") === 1)
-          .select(col("query_id"), col("doc"))
-        val seedVecs = emb.join(seed, emb("vec_id") === seed("doc"))
-          .select(col("query_id").as("vec_id"), col("embedding"))
-        val ann = Similarity.topKIvfPqIngested(s, annT, seedVecs,
-          "vec_id", "embedding", k = 20, nProbe = 16, nCandidates = 1 << 20,
-          asOf = asOf0).localCheckpoint()
-        val fused = Retrieval.rrfFuse(Seq(
-          bm.select(col("query_id"), col("doc"), col("rank")),
-          ann.select(col("query_id"), col("nn_id").as("doc"), col("rank"))),
-          topK = 10)
-        val mmr = Similarity.diversifyMmrIngested(s, s"${annT}_vectors",
-          fused.select(col("query_id"), col("doc").as("nn_id"), col("score")),
-          k = 5, lambda = 0.5, asOf = Some((annT, 0L))).localCheckpoint()
-        val toks = graft.ops.Snapshots.readAsOf(s, s"${bmT}_dl", bmT, asOf0)
-          .select(col("doc").as("nn_id"), col("dl").as("doc_toks"))
-        val sel = mmr.join(toks, Seq("nn_id"))
-        val packed = Corpus.packSequences(
-          sel.select(col("query_id"), col("rank"), col("doc_toks")),
-          idCol = "rank", tokensCol = "doc_toks", capacity = 256,
-          streamCol = Some("query_id"))
-        packed.select(col("stream").as("query_id"), col("doc").as("rank"),
-            col("n_toks"), col("start_offset"), col("seq_first"),
-            col("seq_last"))
-          .join(mmr, Seq("query_id", "rank"))
-          .select(col("query_id"), col("nn_id"), col("score"),
-            col("rank").cast("int").as("rank"), col("n_toks"),
-            col("start_offset"), col("seq_first"), col("seq_last"))
+        contextTail(emb,
+          Retrieval.bm25TopKIngested(s, bmT, _, "qid", "qtext", topK = 20, asOf = asOf0),
+          Similarity.topKIvfPqIngested(s, annT, _, "vec_id", "embedding", k = 20,
+            nProbe = 16, nCandidates = 1 << 20, asOf = asOf0),
+          Similarity.diversifyMmrIngested(s, s"${annT}_vectors", _, k = 5, lambda = 0.5,
+            asOf = Some((annT, 0L))),
+          graft.ops.Snapshots.readAsOf(s, s"${bmT}_dl", bmT, asOf0)
+            .select(col("doc").as("nn_id"), col("dl").as("doc_toks")))
       },
       contextFullOracleSqlOver("doc_id % 2 = 0", "vec_id % 2 = 0")),
     // ---- text analysis ----------------------------------------------------

@@ -600,10 +600,9 @@ object Corpus {
     * admitted rows as (id, domain, quota, rank_in_mix).
     */
   def temperatureSample(df: DataFrame, idCol: String, domainCol: String,
-                        tau: Double, nTarget: Long,
-                        nSalts: Int = 16): DataFrame = {
+                        tau: Double, nTarget: Long): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0, 1], got $tau")
-    require(nTarget > 0 && nSalts > 0, "nTarget and nSalts must be positive")
+    require(nTarget > 0, "nTarget must be positive")
     // fail fast on generated/output name shadowing (the
     // selectByTokenBudget / Xslt.pipeline reserved-name convention,
     // case-insensitive to match Spark's resolution): an idCol or
@@ -628,7 +627,7 @@ object Corpus {
       .drop("_t_dom")
       .withColumn("_h", TextAnalysis.rollingHash(col(idCol).cast("string")))
     graft.ops.Reshape.saltedTopN(withQ, Seq(col(domainCol)), Seq(col("_h").asc, col(idCol).asc),
-        hash(col(idCol)), col("quota"), nSalts, "rank_in_mix")
+        hash(col(idCol)), col("quota"), 16, "rank_in_mix")
       .select(col(idCol), col(domainCol), col("quota"), col("rank_in_mix"))
   }
 
@@ -1047,8 +1046,8 @@ object Corpus {
     * adds `domain` and `rank_in_domain` (1-based).
     */
   def domainCap(df: DataFrame, idCol: String, urlCol: String,
-                maxPerDomain: Int, nSalts: Int = 16): DataFrame = {
-    require(maxPerDomain > 0 && nSalts > 0, "maxPerDomain and nSalts must be positive")
+                maxPerDomain: Int): DataFrame = {
+    require(maxPerDomain > 0, "maxPerDomain must be positive")
     // unparseable URLs (ftp://, protocol-relative, junk) get a NULL
     // domain and are ADMITTED uncapped with rank NULL: collapsing every
     // non-http(s) URL into one "" pseudo-domain would silently drop all
@@ -1060,7 +1059,7 @@ object Corpus {
     val (capped, passthrough) =
       (d.filter(col("domain").isNotNull), d.filter(col("domain").isNull))
     graft.ops.Reshape.saltedTopN(capped, Seq(col("domain")), Seq(col(idCol).asc),
-        hash(col(idCol)), lit(maxPerDomain), nSalts, "rank_in_domain")
+        hash(col(idCol)), lit(maxPerDomain), 16, "rank_in_domain")
       .unionByName(passthrough.withColumn("rank_in_domain", lit(null).cast("int")))
   }
 

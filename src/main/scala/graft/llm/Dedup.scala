@@ -945,8 +945,7 @@ object Dedup {
     * shared span.
     */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String, k: Int,
-                     maxOcc: Option[Long] = Some(100L),
-                     materializeWindows: Boolean = true): DataFrame = {
+                     maxOcc: Option[Long] = Some(100L)): DataFrame = {
     require(k > 0, "k must be positive")
     import org.apache.spark.sql.expressions.Window
     val toks = TextAnalysis.tokens(col(textCol))
@@ -956,18 +955,14 @@ object Dedup {
       .otherwise(array().cast("array<string>"))
     // the window relation feeds THREE consumers (dup-hash stats + both
     // pair-join sides) and the dup-candidate slice two — materialize
-    // both, same policy and trade-offs as [[ngramJaccard]]'s shingles (pass
-    // materializeWindows=false on unreliable clusters; at corpus scale
-    // the window relation exceeds executor storage and the honest cost
-    // is the recompute)
+    // both, same policy and trade-offs as [[ngramJaccard]]'s shingles
     val wins0 = graft.Partitioning.spread(df)
       .select(col(idCol).as("doc"), posexplode(winArr).as(Seq("pos", "w")))
       .withColumn("h", graft.functions.RollingHash.hash(col("w"), 131L))
     // keyed on h: the (h, w) stats aggregation, the candidate semi-join
     // and the hit self-join all cluster on keys with h as a prefix, so
     // hash(h) satisfies every one of them exchange-free
-    val wins = if (materializeWindows)
-      graft.Partitioning.checkpointKeyed(wins0, "h") else wins0
+    val wins = graft.Partitioning.checkpointKeyed(wins0, "h")
     // stats key on (h, w) — the window TEXT, not the hash alone: a
     // hash collision between a flood-capped boilerplate window and a
     // real duplicated passage would otherwise merge their counts and
@@ -980,11 +975,9 @@ object Dedup {
     val dupH = stats
       .filter(col("nd") > 1 && maxOcc.map(col("n") <= _).getOrElse(lit(true)))
       .select(col("h"), col("w"))
-    val cand0 = wins.join(dupH, Seq("h", "w"), "left_semi")
-    // checkpointKeep: cand0 inherits wins' hash(h) layout through the
-    // semi-join, and the hit self-join reuses it
-    val cand = if (materializeWindows)
-      graft.Partitioning.checkpointKeep(cand0) else cand0
+    // checkpointKeep: the semi-join inherits wins' hash(h) layout, and
+    // the hit self-join reuses it
+    val cand = graft.Partitioning.checkpointKeep(wins.join(dupH, Seq("h", "w"), "left_semi"))
     val l = cand.select(col("h"), col("doc").as("d1"), col("pos").as("p1"), col("w").as("w1"))
     val r = cand.select(col("h").as("h2"), col("doc").as("d2"), col("pos").as("p2"),
       col("w").as("w2"))

@@ -155,9 +155,12 @@ object Similarity {
   }
 
   /** Per-query top-k over `(query_id, nn_id, score)`, ties by corpus
-    * id: [[graft.ops.Reshape.saltedTopN]] salted on `hash(nn_id)`.
-    * `nSalts == 1` means the caller established per-query candidates
-    * are already small (e.g. LSH-bucketed).
+    * id: [[graft.ops.Reshape.saltedTopN]] salted on `hash(nn_id)`. The
+    * salt count is decided in code, never by the caller of a public
+    * verb: the corpus-scoring verbs pass [[prepQueries]]' auto count,
+    * [[topKMips]] a fixed 8, and the paths whose per-query candidates
+    * are already small pass 1 (one window, no pre-stage) — the MIPS-ANN
+    * probes and the [[twoTier]] rescore.
     */
   private def topKMerge(scored: DataFrame, k: Int, nSalts: Int): DataFrame =
     graft.ops.Reshape.saltedTopN(scored, Seq(col("query_id")),
@@ -165,12 +168,11 @@ object Similarity {
       .select(col("query_id"), col("nn_id"), col("score"), col("rank"))
 
   /** Normalized (query_id, qv) side plus the salt count for the
-    * two-stage merge. With explicit `nSalts > 0` construction stays
-    * fully lazy. With `nSalts = 0` (auto) the query side is
-    * localCheckpoint'ed FIRST and the count reads the checkpoint — one
-    * scan of the (broadcast-small by contract) query plan total, where
-    * counting the raw plan and then joining it again would evaluate a
-    * derived query side (e.g. a filter over the corpus) twice.
+    * two-stage merge. The query side is persisted FIRST and the count
+    * reads the pin — one scan of the (broadcast-small by contract)
+    * query plan total, where counting the raw plan and then joining it
+    * again would evaluate a derived query side (e.g. a filter over the
+    * corpus) twice.
     *
     * Auto salt count: enough (query, salt) slices to fill the cluster's
     * shuffle parallelism ~4x over, no more — a fixed wide salt on a
@@ -185,24 +187,21 @@ object Similarity {
     * cluster.
     */
   private def prepQueries(queries: DataFrame, idCol: String, vecCol: String,
-                          nSalts: Int, floor: Long = 4L): (DataFrame, Int) = {
+                          floor: Long = 4L): (DataFrame, Int) = {
     val q = queries.select(col(idCol).as("query_id"), normalize(col(vecCol)).as("qv"))
-    if (nSalts > 0) (q, nSalts)
-    else {
-      // persist (lineage kept), NOT localCheckpoint (lineage severed):
-      // losing an executor holding checkpoint blocks mid-way through the
-      // long corpus pass would fail the whole job unrecoverably, where a
-      // persisted plan just recomputes the lost blocks. The pin outlives
-      // this call (the returned top-k plan reads it lazily) — it is
-      // tracked, and long-lived sessions release accumulated pins via
-      // [[graft.Partitioning.unpersistPins]] after their terminal action.
-      // The partition count is read first: a bad setting fails pin-free
-      val p = graft.Partitioning.shufflePartitions(queries.sparkSession)
-      val qc = graft.Partitioning.trackPin(
-        q.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val nq = math.max(1L, qc.count())
-      (qc, math.min(64L, math.max(floor, (4L * p + nq - 1) / nq)).toInt)
-    }
+    // persist (lineage kept), NOT localCheckpoint (lineage severed):
+    // losing an executor holding checkpoint blocks mid-way through the
+    // long corpus pass would fail the whole job unrecoverably, where a
+    // persisted plan just recomputes the lost blocks. The pin outlives
+    // this call (the returned top-k plan reads it lazily) — it is
+    // tracked, and long-lived sessions release accumulated pins via
+    // [[graft.Partitioning.unpersistPins]] after their terminal action.
+    // The partition count is read first: a bad setting fails pin-free
+    val p = graft.Partitioning.shufflePartitions(queries.sparkSession)
+    val qc = graft.Partitioning.trackPin(
+      q.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val nq = math.max(1L, qc.count())
+    (qc, math.min(64L, math.max(floor, (4L * p + nq - 1) / nq)).toInt)
   }
 
   /** Max-inner-product top-k (MIPS) — the recommendation-scoring
@@ -216,8 +215,7 @@ object Similarity {
     * norm-augmentation reduction implemented below.
     */
   def topKMips(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-               k: Int, nSalts: Int = 8): DataFrame = {
-    require(nSalts >= 1, "nSalts must be at least 1")
+               k: Int): DataFrame = {
     val c = graft.Partitioning.spread(corpus)
       .select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv"))
     val q = queries.select(col(idCol).as("query_id"),
@@ -225,7 +223,7 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .filter(col("nn_id") =!= col("query_id"))
       .withColumn("score", graft.Num.r6(dot(col("cv"), col("qv"))))
-    topKMerge(scored, k, nSalts)
+    topKMerge(scored, k, 8)
   }
 
   /** The MIPS→cosine norm-augmentation front half (Bachrach et al.
@@ -271,12 +269,12 @@ object Similarity {
     * the exact linear-scan baseline.
     */
   def topKMipsAnn(corpus: DataFrame, queries: DataFrame, idCol: String,
-                  vecCol: String, k: Int, nPlanes: Int = 4, nTables: Int = 16,
-                  nSalts: Int = 1): DataFrame = {
+                  vecCol: String, k: Int, nPlanes: Int = 4,
+                  nTables: Int = 16): DataFrame = {
     require(nPlanes >= 1, "nPlanes must be positive")
     require(nTables >= 1, "nTables must be positive")
     val (c, q) = mipsAugmented(corpus, queries, idCol, vecCol)
-    lshProbe(tabled(c, "av", nPlanes, nTables), q, "aq", nPlanes, nTables, k, nSalts)
+    lshProbe(tabled(c, "av", nPlanes, nTables), q, "aq", nPlanes, nTables, k, 1)
   }
 
   /** Sublinear MIPS, IVF variant: the same [[mipsAugmented]] reduction
@@ -293,8 +291,7 @@ object Similarity {
     */
   def topKMipsAnnIvf(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int, nCentroids: Int = 16,
-                     nProbe: Int = 4, kmeansIters: Int = 2,
-                     nSalts: Int = 1): DataFrame = {
+                     nProbe: Int = 4, kmeansIters: Int = 2): DataFrame = {
     requireProbes(nProbe)
     val (aug0, q0) = mipsAugmented(corpus, queries, idCol, vecCol)
     val aug = if (kmeansIters > 0) graft.Partitioning.pinForReuse(corpus, aug0) else aug0
@@ -305,7 +302,7 @@ object Similarity {
         .as("cluster"))
     // ranked by the normalized augmented query, scored by the raw one
     val q = q0.withColumn("nq", normalize(col("aq")))
-    topKMerge(ivfScore(q, cent, nProbe, "cv", by = "nq")(_ => assign), k, nSalts)
+    topKMerge(ivfScore(q, cent, nProbe, "cv", by = "nq")(_ => assign), k, 1)
   }
 
   /** Distinct (query_id, nn_id) candidate pairs [[topKMipsAnn]] would
@@ -334,10 +331,10 @@ object Similarity {
     * a vector trivially being its own nearest neighbor is noise.
     */
   def topK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-           k: Int, nSalts: Int = 0, excludeSelf: Boolean = true): DataFrame = {
+           k: Int, excludeSelf: Boolean = true): DataFrame = {
     val c = graft.Partitioning.spread(corpus)
       .select(col(idCol).as("nn_id"), normalize(col(vecCol)).as("cv"))
-    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
+    val (q, salts) = prepQueries(queries, idCol, vecCol)
     val paired = c.crossJoin(broadcast(q))
     val scored = (if (excludeSelf) paired.filter(col("nn_id") =!= col("query_id"))
                   else paired)
@@ -369,7 +366,7 @@ object Similarity {
     * @return (query_id, nn_id, score, rank) — score is the EXACT cosine
     */
   def topKSq8(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-              k: Int, nCandidates: Int = 0, nSalts: Int = 0): DataFrame = {
+              k: Int, nCandidates: Int = 0): DataFrame = {
     val c = graft.Partitioning.spread(corpus)
       .select(col(idCol).as("nn_id"), normalize(col(vecCol)).as("cv"))
     val ma = aggregate(transform(col("cv"), x => abs(x)),
@@ -382,7 +379,7 @@ object Similarity {
       .select(col("nn_id"), transform(col("cv"), x =>
         greatest(lit(-127.0d), least(lit(127.0d),
           floor(x / col("_scale") + lit(0.5d)))) * col("_scale")).as("dq"))
-    pqServe(cq, c, queries, idCol, vecCol, k, nCandidates, nSalts)
+    pqServe(cq, c, queries, idCol, vecCol, k, nCandidates)
   }
 
   /** The typed empty top-k result every index family's empty path
@@ -454,11 +451,10 @@ object Similarity {
     */
   def topKPq(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
              k: Int, m: Int, nCodes: Int, kmeansIters: Int,
-             nCandidates: Int = 0, nSalts: Int = 0): DataFrame = {
+             nCandidates: Int = 0): DataFrame = {
     val c = normalizedCorpus(corpus, idCol, vecCol, kmeansIters)
-    val books = pqCodebooks(c, m, nCodes, kmeansIters)
-    pqProbe(books, pqIndex.encode(c, books), queries, idCol, vecCol, k,
-      nCandidates, nSalts)
+    val books = pqOnlyCodebooks(c, m, nCodes, kmeansIters)
+    pqProbe(books, pqIndex.encode(c, books), queries, idCol, vecCol, k, nCandidates)
   }
 
   /** Train the per-subspace Euclidean codebooks over a normalized corpus
@@ -473,7 +469,7 @@ object Similarity {
       "m, nCodes must be positive; kmeansIters non-negative")
     // seeds: the nCodes lowest-id vectors, sliced per subspace — one
     // TakeOrdered job; dim is read from the seeds, ragged input fails
-    // the round's guard (or, with no round, the probe)
+    // the round's guard (with no round, the caller's probe)
     val seedRows = c.orderBy(col("nn_id")).limit(nCodes)
       .select(col("nn_id").cast("long"), col("cv")).collect()
     // an empty corpus defines no codebooks — callers degrade to typed
@@ -482,7 +478,6 @@ object Similarity {
     val dim = seedRows.head.getSeq[Double](1).length
     require(dim % m == 0, s"vector dim $dim not divisible by m=$m subspaces")
     val sub = dim / m
-    if (kmeansIters == 0) requireUniform(c, dim, "topKPq")
     val seeds: Books = (0 until m).map { s =>
       seedRows.toSeq.map(r =>
         r.getLong(0) -> r.getSeq[Double](1).slice(s * sub, (s + 1) * sub))
@@ -501,6 +496,19 @@ object Similarity {
         book.map { case (cid, old) => cid -> means.getOrElse(Seq(s, cid), old) }
       }
     }
+  }
+
+  /** [[pqCodebooks]] for the trainers with no coarse quantizer
+    * ([[topKPq]], [[ingestPq]]): with no Lloyd's round, nothing else
+    * reads the whole corpus, so the limit-1 [[requireUniform]] probe
+    * runs here. The IVF-PQ trainers get it from [[coarseQuantizer]].
+    */
+  private def pqOnlyCodebooks(c: DataFrame, m: Int, nCodes: Int,
+                              kmeansIters: Int): Books = {
+    val books = pqCodebooks(c, m, nCodes, kmeansIters)
+    if (kmeansIters == 0)
+      books.headOption.foreach(b => requireUniform(c, books.size * b.head._2.length, "topKPq"))
+    books
   }
 
   /** The m per-subspace code assignments of the normalized vector in
@@ -535,13 +543,13 @@ object Similarity {
     */
   private def pqProbe(books: Books, data: Seq[DataFrame], queries: DataFrame,
                       idCol: String, vecCol: String, k: Int,
-                      nCandidates: Int, nSalts: Int): DataFrame = {
+                      nCandidates: Int): DataFrame = {
     val Seq(codes, cvec) = data
-    if (books.isEmpty)
-      emptyTopKResult(cvec, prepQueries(queries, idCol, vecCol, nSalts = 1)._1)
+    if (books.isEmpty) emptyTopKResult(cvec,
+      queries.select(col(idCol).as("query_id"), normalize(col(vecCol)).as("qv")))
     else pqServe(codes.select(col("nn_id"),
         pqReconstructCodes(books, col("codes")).as("dq")),
-      cvec, queries, idCol, vecCol, k, nCandidates, nSalts)
+      cvec, queries, idCol, vecCol, k, nCandidates)
   }
 
   /** The linear-scan two-tier serve of [[topKSq8]] and the PQ probe:
@@ -550,9 +558,9 @@ object Similarity {
     */
   private def pqServe(cq: DataFrame, cvec: DataFrame, queries: DataFrame,
                       idCol: String, vecCol: String, k: Int,
-                      nCandidates: Int, nSalts: Int): DataFrame = {
+                      nCandidates: Int): DataFrame = {
     val tail = twoTier(k, nCandidates)
-    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
+    val (q, salts) = prepQueries(queries, idCol, vecCol)
     tail(cq.crossJoin(broadcast(q))
       .filter(col("nn_id") =!= col("query_id"))
       .withColumn("score", graft.Num.r6(dot(col("dq"), col("qv")))), cvec, q, salts)
@@ -601,7 +609,7 @@ object Similarity {
   def ingestPq(corpus: DataFrame, idCol: String, vecCol: String, table: String,
                m: Int, nCodes: Int, kmeansIters: Int, nBuckets: Int): Unit = {
     val c = normalizedCorpus(corpus, idCol, vecCol, kmeansIters)
-    val books = pqCodebooks(c, m, nCodes, kmeansIters)
+    val books = pqOnlyCodebooks(c, m, nCodes, kmeansIters)
     // empty corpus: empty tables with the contract schema and an empty
     // sidecar — probes degrade to typed empty results, appends of real
     // rows reject loudly (no quantizer to code against)
@@ -711,10 +719,10 @@ object Similarity {
     */
   def topKPqIngested(spark: org.apache.spark.sql.SparkSession, table: String,
                      queries: DataFrame, idCol: String, vecCol: String,
-                     k: Int, nCandidates: Int = 0, nSalts: Int = 0,
+                     k: Int, nCandidates: Int = 0,
                      asOf: Option[Long] = None): DataFrame = {
     pqProbe(pqBooksOf(spark, table), liveData(pqIndex, spark, table, asOf),
-      queries, idCol, vecCol, k, nCandidates, nSalts)
+      queries, idCol, vecCol, k, nCandidates)
   }
 
   // ------------------------------------------------------------- IVF-PQ
@@ -748,14 +756,13 @@ object Similarity {
   def topKIvfPq(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, k: Int, nCentroids: Int, nProbe: Int,
                 m: Int, nCodes: Int, kmeansIters: Int,
-                nCandidates: Int = 0, nSalts: Int = 0): DataFrame = {
+                nCandidates: Int = 0): DataFrame = {
     val tail = twoTier(k, nCandidates)
     requireProbes(nProbe)
     val (c, cent) = quantizedCorpus(corpus, idCol, vecCol, nCentroids, kmeansIters)
     val st = (cent, pqCodebooks(c, m, nCodes, kmeansIters))
     ivfpqProbe(cent, ivfpqIndex.untrained(st), ivfpqIndex.encode(c, st),
-      pqCells(st._2), (codes, _) => codes, queries, idCol, vecCol, nProbe,
-      nSalts, tail)
+      pqCells(st._2), (codes, _) => codes, queries, idCol, vecCol, nProbe, tail)
   }
 
   /** The probe body every IVF-PQ top-k runs — global or residual codes,
@@ -770,11 +777,11 @@ object Similarity {
                          recon: DataFrame => DataFrame,
                          read: (DataFrame, DataFrame) => DataFrame,
                          queries: DataFrame, idCol: String, vecCol: String,
-                         nProbe: Int, nSalts: Int,
+                         nProbe: Int,
                          tail: (DataFrame, DataFrame, DataFrame, Int) => DataFrame)
       : DataFrame = {
     val Seq(codes, cvec) = data
-    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
+    val (q, salts) = prepQueries(queries, idCol, vecCol)
     if (untrained) return emptyTopKResult(cvec, q)
     tail(ivfScore(q, cent, nProbe, "dq")(probes => recon(read(codes, probes))),
       cvec, q, salts)
@@ -868,12 +875,12 @@ object Similarity {
   def topKIvfPqIngested(spark: org.apache.spark.sql.SparkSession, table: String,
                         queries: DataFrame, idCol: String, vecCol: String,
                         k: Int, nProbe: Int, nCandidates: Int = 0,
-                        nSalts: Int = 0, asOf: Option[Long] = None): DataFrame = {
+                        asOf: Option[Long] = None): DataFrame = {
     val tail = twoTier(k, nCandidates)
     requireProbes(nProbe)
     val st @ (cent, books) = ivfpqIndex.load(spark, table)
     ivfpqProbe(cent, ivfpqIndex.untrained(st), liveData(ivfpqIndex, spark, table, asOf),
-      pqCells(books), probedCells, queries, idCol, vecCol, nProbe, nSalts, tail)
+      pqCells(books), probedCells, queries, idCol, vecCol, nProbe, tail)
   }
 
   /** The live data tables of a persisted index in `tables` order — the
@@ -973,14 +980,14 @@ object Similarity {
   def topKIvfPqResidual(corpus: DataFrame, queries: DataFrame, idCol: String,
                         vecCol: String, k: Int, nCentroids: Int, nProbe: Int,
                         m: Int, nCodes: Int, kmeansIters: Int,
-                        nCandidates: Int = 0, nSalts: Int = 0): DataFrame = {
+                        nCandidates: Int = 0): DataFrame = {
     val tail = twoTier(k, nCandidates)
     requireProbes(nProbe)
     val (c, st, books) = trainResidual(corpus, idCol, vecCol, nCentroids, m,
       nCodes, kmeansIters, "topKIvfPqResidual")
     ivfpqProbe(st.cent, st.untrained, rivfpqIndex.encode(c, st),
       _.select(col("nn_id"), col("cluster"), residRecon(st.cent, books).as("dq")),
-      (codes, _) => codes, queries, idCol, vecCol, nProbe, nSalts, tail)
+      (codes, _) => codes, queries, idCol, vecCol, nProbe, tail)
   }
 
   /** Persist the residual-coded IVF-PQ index ONCE — [[ingestIvfPq]]'s
@@ -1315,7 +1322,6 @@ object Similarity {
                                 table: String, queries: DataFrame,
                                 idCol: String, vecCol: String, k: Int,
                                 nProbe: Int, nCandidates: Int = 0,
-                                nSalts: Int = 0,
                                 asOf: Option[Long] = None,
                                 maxLiteralBookRows: Int = 65536): DataFrame = {
     val tail = twoTier(k, nCandidates)
@@ -1330,7 +1336,7 @@ object Similarity {
       } else residReconFromTable(spark, table, _)
     ivfpqProbe(cent, cent.isEmpty || cbRows.isEmpty,
       liveData(rivfpqIndex, spark, table, asOf), recon, probedCells,
-      queries, idCol, vecCol, nProbe, nSalts, tail)
+      queries, idCol, vecCol, nProbe, tail)
   }
 
   /** Exactly-once streaming maintenance of a residual IVF-PQ index —
@@ -1787,12 +1793,11 @@ object Similarity {
     * @return (query_id, nn_id, score, rank) — rank 1 = hardest negative
     */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, positives: DataFrame,
-                    idCol: String, vecCol: String, k: Int,
-                    nSalts: Int = 0): DataFrame = {
+                    idCol: String, vecCol: String, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
     val c = graft.Partitioning.spread(corpus)
       .select(col(idCol).as("nn_id"), normalize(col(vecCol)).as("cv"))
-    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
+    val (q, salts) = prepQueries(queries, idCol, vecCol)
     val pos = positives.select(col("query_id"), col("pos_id").as("nn_id"))
     val scored = c.crossJoin(broadcast(q))
       .filter(col("nn_id") =!= col("query_id"))
@@ -2061,11 +2066,11 @@ object Similarity {
     */
   def topKIvfIngested(spark: org.apache.spark.sql.SparkSession, table: String,
                       queries: DataFrame, idCol: String, vecCol: String,
-                      k: Int, nProbe: Int = 4, nSalts: Int = 0,
+                      k: Int, nProbe: Int = 4,
                       asOf: Option[Long] = None): DataFrame = {
     requireProbes(nProbe)
     ivfFlatProbe(centroidsOf(spark, table), liveData(ivfIndex, spark, table, asOf),
-      probedCells, queries, idCol, vecCol, k, nProbe, nSalts)
+      probedCells, queries, idCol, vecCol, k, nProbe)
   }
 
   /** The IVF probe body [[topKIvf]] and [[topKIvfIngested]] both run over
@@ -2076,9 +2081,9 @@ object Similarity {
   private def ivfFlatProbe(cent: Centroids, data: Seq[DataFrame],
                            read: (DataFrame, DataFrame) => DataFrame,
                            queries: DataFrame, idCol: String, vecCol: String,
-                           k: Int, nProbe: Int, nSalts: Int): DataFrame = {
+                           k: Int, nProbe: Int): DataFrame = {
     val Seq(assign) = data
-    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts)
+    val (q, salts) = prepQueries(queries, idCol, vecCol)
     if (cent.isEmpty) emptyTopKResult(assign, q)
     else topKMerge(ivfScore(q, cent, nProbe, "cv")(read(assign, _)), k, salts)
   }
@@ -2258,10 +2263,9 @@ object Similarity {
     */
   def topKLshIngested(spark: org.apache.spark.sql.SparkSession, table: String,
                       queries: DataFrame, idCol: String, vecCol: String,
-                      k: Int, nSalts: Int = 0,
-                      asOf: Option[Long] = None): DataFrame = {
+                      k: Int, asOf: Option[Long] = None): DataFrame = {
     val (nPlanes, nTables) = lshIndex.load(spark, table)
-    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts, floor = 1L)
+    val (q, salts) = prepQueries(queries, idCol, vecCol, floor = 1L)
     lshProbe(lshIndex.live(spark, table, asOf = asOf), q, "qv", nPlanes, nTables,
       k, salts)
   }
@@ -2312,12 +2316,12 @@ object Similarity {
     * independently (the id is the output key).
     */
   def topKIvf(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-              k: Int, nCentroids: Int = 16, nProbe: Int = 4, nSalts: Int = 0,
+              k: Int, nCentroids: Int = 16, nProbe: Int = 4,
               kmeansIters: Int = 0): DataFrame = {
     requireProbes(nProbe)
     val (c, cent) = quantizedCorpus(corpus, idCol, vecCol, nCentroids, kmeansIters)
     ivfFlatProbe(cent, ivfIndex.encode(c, cent), (assign, _) => assign, queries,
-      idCol, vecCol, k, nProbe, nSalts)
+      idCol, vecCol, k, nProbe)
   }
 
   /** Explode `nTables` (tbl, bucket) keys per row — table t hashes with
@@ -2377,10 +2381,10 @@ object Similarity {
     * src/tgt sides) where overlapping id spaces must not drop pairs.
     */
   def topKLsh(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-              k: Int, nPlanes: Int = 8, nSalts: Int = 0,
+              k: Int, nPlanes: Int = 8,
               nTables: Int = 1, excludeSelf: Boolean = true): DataFrame = {
     require(nTables >= 1, "nTables must be positive")
-    val (q, salts) = prepQueries(queries, idCol, vecCol, nSalts, floor = 1L)
+    val (q, salts) = prepQueries(queries, idCol, vecCol, floor = 1L)
     lshProbe(lshIndex.encode(vectorRows(corpus, idCol, vecCol), (nPlanes, nTables)).head,
       q, "qv", nPlanes, nTables, k, salts, excludeSelf)
   }

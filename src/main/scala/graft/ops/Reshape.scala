@@ -32,12 +32,12 @@ object Reshape {
 
   /** Per-group top-N rows by `orderCol` descending (ties by `tieCol`
     * ascending), ranked in `rk` (1-based) — [[saltedTopN]] salted on
-    * `hash(tieCol)` over `nSalts` slices.
+    * `hash(tieCol)` over 16 slices.
     */
   def topNPerGroup(df: DataFrame, groupCols: Seq[String], orderCol: String,
-                   tieCol: String, n: Int, nSalts: Int = 16): DataFrame =
+                   tieCol: String, n: Int): DataFrame =
     saltedTopN(df, groupCols.map(col), Seq(col(orderCol).desc, col(tieCol).asc),
-      hash(col(tieCol)), lit(n), nSalts, "rk")
+      hash(col(tieCol)), lit(n), 16, "rk")
 
   /** The skew-safe per-group top-N every ranking operator runs: the rows
     * whose `rankCol` — `row_number` over `groups` by `order` — is at
@@ -51,15 +51,17 @@ object Reshape {
     * output: the global top-N of a union of per-slice top-Ns is the
     * group's top-N, so `order` must be total (end it in a unique tie
     * column) and any salt gives the same rows. `nSalts <= 1` means the
-    * caller knows its groups are small and skips stage 1. The salt is a
+    * caller knows its groups are small and skips stage 1. Every caller
+    * fixes its count in code; no public verb takes one. The salt is a
     * well-spread number — a hash, never a raw string id: `pmod` over a
     * string is null and would collapse every row into one slice — still
     * correct, but the skew it exists to prevent (the partition
     * balancing REPOSE applies to distributed top-k).
     *
-    * Callers, each with its own salt key and count: [[topNPerGroup]];
-    * `Similarity.topKMerge` (`hash(nn_id)`, per-query auto or explicit
-    * count); `Retrieval.saltedTopK` (`hash(doc)`, 8; 1 for fused
+    * Callers, each with its own salt key and count: [[topNPerGroup]]
+    * (`hash(tieCol)`, 16); `Similarity.topKMerge` (`hash(nn_id)`, the
+    * per-query auto count, 8 for `topKMips`, 1 for the MIPS-ANN probes
+    * and the two-tier rescore); `Retrieval.saltedTopK` (`hash(doc)`, 8; 1 for fused
     * lists); `Sketch.bottomK` (the raw 60-bit `h`, 8; 1 on merge);
     * `Corpus.domainCap` (`hash(id)`, 16) and `Corpus.temperatureSample`
     * (`hash(id)`, 16, per-domain quota as `n`).

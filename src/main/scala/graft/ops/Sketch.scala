@@ -317,13 +317,12 @@ object Sketch {
     * @return (groupCols…, h: long, v: double) — ≤ k rows per group
     */
   def quantileSample(df: DataFrame, idCol: String, valueCol: String,
-                     groupCols: Seq[String], k: Int,
-                     nSalts: Int = 8): DataFrame = {
+                     groupCols: Seq[String], k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
     val base = df.where(col(valueCol).isNotNull)
       .select(groupCols.map(col) :+ hash60(col(idCol)).as("h")
         :+ col(valueCol).cast("double").as("v"): _*)
-    bottomK(base, groupCols, k, nSalts)
+    bottomK(base, groupCols, k, nSalts = 8)
   }
 
   /** Per-group bottom-k by (h, v): [[Reshape.saltedTopN]] salted on

@@ -121,14 +121,22 @@ object Snapshots {
     * orphan rows that every asOf read excludes via the semi-join; the
     * reverse order would let a snapshot see a half-written batch).
     */
-  def record(spark: SparkSession, parent: String, batchId: Long): Unit = {
-    val bt = batchesTable(parent)
-    // first record of a fresh sidecar: clear any orphan dir a previous
+  def record(spark: SparkSession, parent: String, batchId: Long): Unit =
+    writeCommit(spark, batchesTable(parent), batchId)
+
+  /** Append the one-row commit record `(batch_id)` to `commitTable` —
+    * the one writer of both commit logs: an index's batch
+    * history ([[record]]) and a streaming sink's replay guard
+    * ([[graft.streaming.ExactlyOnce.once]]).
+    */
+  private[graft] def writeCommit(spark: SparkSession, commitTable: String,
+                                 batchId: Long): Unit = {
+    // first record of a fresh log: clear any orphan dir a previous
     // JVM's in-memory catalog left behind (the dropManaged discipline)
-    if (!spark.catalog.tableExists(bt)) Bucketing.dropManaged(spark, bt)
+    if (!spark.catalog.tableExists(commitTable)) Bucketing.dropManaged(spark, commitTable)
     import spark.implicits._
     Seq(batchId).toDF("batch_id").write.mode("append")
-      .format("parquet").saveAsTable(bt)
+      .format("parquet").saveAsTable(commitTable)
   }
 
   /** Drop the batch history — [[PersistedIndex.ingest]] calls this on

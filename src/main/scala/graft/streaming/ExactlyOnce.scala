@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.ops.Bucketing
+import graft.ops.Snapshots
 
 /** Batch-id idempotence for `foreachBatch` sinks, factored out of
   * [[BucketedLogSink]] so ANY index-maintenance fold (a single bucketed
@@ -49,13 +49,7 @@ object ExactlyOnce {
     if (committed(spark, commitTable, batchId)) false
     else {
       work
-      // first commit of a fresh log: clear any orphan dir a previous
-      // JVM's in-memory catalog left behind (the dropManaged discipline)
-      if (!spark.catalog.tableExists(commitTable))
-        Bucketing.dropManaged(spark, commitTable)
-      import spark.implicits._
-      Seq(batchId).toDF("batch_id").write.mode("append")
-        .format("parquet").saveAsTable(commitTable)
+      Snapshots.writeCommit(spark, commitTable, batchId)
       true
     }
 }

@@ -606,7 +606,7 @@ class CorpusSpec extends AnyFunSuite {
       Seq((100L, "https://b.example.com/x"), (101L, "https://b.example.com/y"),
         (102L, "https://b.example.com/z"))
     val d = rows.toDF("doc_id", "url").repartition(7)
-    val out = Corpus.domainCap(d, "doc_id", "url", maxPerDomain = 5, nSalts = 4)
+    val out = Corpus.domainCap(d, "doc_id", "url", maxPerDomain = 5)
       .collect().map(r => (r.getAs[String]("domain"), r.getAs[Long]("doc_id"),
         r.getAs[Int]("rank_in_domain")))
     val byDomain = out.groupBy(_._1)

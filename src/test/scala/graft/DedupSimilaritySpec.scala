@@ -584,7 +584,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (i, Seq(math.cos(i * 0.37).toFloat, math.sin(i * 0.37).toFloat, (i % 7).toFloat / 7f)))
     val df = vecs.toDF("id", "v")
     val q = df.filter(col("id") < 3)
-    val fast = Similarity.topK(df, q, "id", "v", k = 4, nSalts = 8).collect()
+    val fast = Similarity.topK(df, q, "id", "v", k = 4).collect()
       .map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
     // reference: plain single window (correct but unscalable)
     val c = df.select(col("id").as("nn_id"), Similarity.normalize(col("v")).as("cv"))

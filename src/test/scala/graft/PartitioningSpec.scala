@@ -108,7 +108,7 @@ class PartitioningSpec extends AnyFunSuite {
         "connectedComponents" -> (() => Dedup.connectedComponents(pairs)),
         "shufflePartitions" -> (() => Partitioning.shufflePartitions(spark)),
         // the auto salt count: a failed parse must not leave a pin behind
-        "topK" -> (() => Similarity.topK(vecs, vecs, "id", "v", 1, nSalts = 0))
+        "topK" -> (() => Similarity.topK(vecs, vecs, "id", "v", 1))
       ).foreach { case (name, call) =>
         val pinned = Partitioning.pinnedCount
         val e = intercept[IllegalArgumentException](call())

@@ -342,19 +342,44 @@ class PlanSpec extends AnyFunSuite {
       "the scalar max must broadcast, not cartesian")
   }
 
-  test("duplicateSpans FULL lazy plan (no checkpoints) has no cartesian") {
-    // the registered query materializes its window relation, which
-    // truncates lineage to Scan ExistingRDD — so assert on the
-    // materialization-free variant, where every stage is visible
-    import org.apache.spark.sql.functions.col
+  test("duplicateSpans: every join the default call plans, checkpoints included, is an equi-join") {
+    // the call materializes its window relation and its dup-candidate
+    // slice eagerly, each truncating the final plan's lineage to Scan
+    // ExistingRDD, and the checkpoints run outside any SQL execution —
+    // so record the physical join the planner picks for every logical
+    // join it plans while the call runs, checkpoints included
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     val sqlc = spark
     import sqlc.implicits._
     val d = Seq((1L, "a b c d e f g h i"), (2L, "a b c d e f g h j"))
       .toDF("doc_id", "text")
-    val p = graft.llm.Dedup.duplicateSpans(d, "doc_id", "text", k = 4,
-      materializeWindows = false).queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"duplicateSpans must stay an equi-join pipeline:\n${p.take(1200)}")
+    val planner = spark.sessionState.planner
+    val joins = new ConcurrentLinkedQueue[SparkPlan]()
+    // consulted first for every logical node; plans nothing itself
+    object recorder extends SparkStrategy {
+      def apply(p: LogicalPlan): Seq[SparkPlan] = {
+        p match {
+          case j: Join => planner.JoinSelection(j).headOption.foreach(joins.add)
+          case _ =>
+        }
+        Nil
+      }
+    }
+    val prev = spark.experimental.extraStrategies
+    spark.experimental.extraStrategies = Seq(recorder)
+    try graft.llm.Dedup.duplicateSpans(d, "doc_id", "text", k = 4).collect()
+    finally spark.experimental.extraStrategies = prev
+    val all = joins.asScala.toSeq
+    assert(all.nonEmpty, "no join was planned")
+    all.foreach(j => assert(j.nodeName != "CartesianProduct" && j.nodeName != "BroadcastNestedLoopJoin",
+      s"duplicateSpans must stay an equi-join pipeline:\n$j"))
+    assert(all.exists { case j: BaseJoinExec => j.joinType == LeftSemi; case _ => false },
+      s"the duplicated-window restriction must be a semi join: ${all.map(_.nodeName)}")
   }
 
   test("corpus_admission_full: no cartesian anywhere in the composed DAG") {

@@ -38,6 +38,15 @@ class RaggedTrainingSpec extends AnyFunSuite {
         Similarity.topKPq(corpus, queries, "id", "v", 3, m = 2, nCodes = 4, kmeansIters = 0).collect()),
       "topKPq, 2 rounds" -> (() =>
         Similarity.topKPq(corpus, queries, "id", "v", 3, m = 2, nCodes = 4, kmeansIters = 2).collect()),
+      "ingestPq, 0 rounds" -> (() =>
+        Similarity.ingestPq(corpus, "id", "v", table, m = 2, nCodes = 4, kmeansIters = 0,
+          nBuckets = 2)),
+      "topKIvfPq, 0 rounds" -> (() =>
+        Similarity.topKIvfPq(corpus, queries, "id", "v", 3, nCentroids = 4, nProbe = 2,
+          m = 2, nCodes = 4, kmeansIters = 0).collect()),
+      "ingestIvfPq, 0 rounds" -> (() =>
+        Similarity.ingestIvfPq(corpus, "id", "v", table, nCentroids = 4, m = 2,
+          nCodes = 4, kmeansIters = 0, nBuckets = 2)),
       "topKIvfPq, 1 round" -> (() =>
         Similarity.topKIvfPq(corpus, queries, "id", "v", 3, nCentroids = 4, nProbe = 2,
           m = 2, nCodes = 4, kmeansIters = 1).collect()),
@@ -62,7 +71,7 @@ class RaggedTrainingSpec extends AnyFunSuite {
         assert(e.getMessage.contains(s"requires uniform $dim-dim vectors") &&
           s"\\b(${dim - 3}|${dim + 3})\\b".r.findFirstIn(e.getMessage).nonEmpty,
           s"$name: the message must name the expected and the ragged lengths: ${e.getMessage}")
-      } finally Seq("", "_vectors", "_centroids", "_cellbooks")
+      } finally Seq("", "_vectors", "_centroids", "_codebooks", "_cellbooks")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$table$t`"))
     }
     Partitioning.unpersistPins()

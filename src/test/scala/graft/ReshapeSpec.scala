@@ -67,13 +67,14 @@ class ReshapeSpec extends AnyFunSuite {
       .select("g", "id", "rk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(salted == plain && salted.size == 28)
-    // the shared helper over every caller's input shape: 1, 3 or 16
-    // salts; string tie ids salted by their hash; an ascending order
-    // salted by a raw long (the sketch's bottom-k); ties in the order
-    // column (five score values); a group with fewer than n rows
+    // the shared helper over every caller's input shape: 1, 3, 4, 8,
+    // 16 or 64 salts (64 is the auto rule's cap); string tie ids salted
+    // by their hash; an ascending order salted by a raw long (the
+    // sketch's bottom-k); ties in the order column (five score values);
+    // a group with fewer than n rows
     val mixed = ((1L to 200L).map(i => (i % 7, f"id$i%03d", (i % 5).toDouble, i * 7919L)) :+
       ((99L, "solo", 1.0, 0L))).toDF("g", "id", "score", "h")
-    for (nSalts <- Seq(1, 3, 16); asc <- Seq(false, true)) {
+    for (nSalts <- Seq(1, 3, 4, 8, 16, 64); asc <- Seq(false, true)) {
       val order = Seq(if (asc) col("score").asc else col("score").desc, col("id").asc)
       val salt = if (asc) col("h") else hash(col("id"))
       def rows(df: org.apache.spark.sql.DataFrame) = df.select("g", "id", "rk").collect()

@@ -250,8 +250,10 @@ class SketchSpec extends AnyFunSuite {
       Seq(merged, shards.head, merged), Seq("g"), k)
     assert(remerged.collect().map(_.toSeq).toSet ===
       oneShot.collect().map(_.toSeq).toSet, "overlap-safe merge broken")
-    // the salted and unsalted builds are bit-identical (pure scale shape)
-    val unsalted = Sketch.quantileSample(df, "id", "v", Seq("g"), k, nSalts = 1)
+    // the salted build is bit-identical to the unsalted one (pure scale
+    // shape): the merge's one-window bottom-k over every row's state
+    val unsalted = Sketch.quantileSampleMerge(Seq(df.select(col("g"),
+      Sketch.hash60(col("id")).as("h"), col("v").cast("double").as("v"))), Seq("g"), k)
     assert(unsalted.collect().map(_.toSeq).toSet ===
       oneShot.collect().map(_.toSeq).toSet)
   }
