@@ -342,7 +342,7 @@ class PlanSpec extends AnyFunSuite {
       "the scalar max must broadcast, not cartesian")
   }
 
-  test("duplicateSpans: every join the default call plans, checkpoints included, is an equi-join") {
+  test("duplicateSpans: all planned joins, checkpoints included, are equi-joins") {
     // the call materializes its window relation and its dup-candidate
     // slice eagerly, each truncating the final plan's lineage to Scan
     // ExistingRDD, and the checkpoints run outside any SQL execution —
